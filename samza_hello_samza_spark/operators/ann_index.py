@@ -43,7 +43,7 @@ from pyspark.sql.types import LongType
 
 from ..functions import binary_sig
 from ..functions import sq8 as sq8_codec
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 #: bump when the on-disk layout or hash family changes.
 LAYOUT_VERSION = 1
@@ -180,7 +180,7 @@ def probe_lsh_index(
     several bands → dedupe on vec_id before scoring.
     """
     codes = band_codes(qvec, planes, band_bits)
-    scan = spark.read.parquet(index_dir)
+    scan = read_parquet(spark, index_dir)
     hit = None
     for band, code in enumerate(codes):
         cond = (F.col("band") == band) & (F.col("code") == code)
@@ -237,7 +237,7 @@ def probe_lsh_index_multi(
     count while the index stays one table (the multi-TABLE
     alternative multiplies write amplification and ingest cost)."""
     probe = multiprobe_band_codes(qvec, planes, band_bits, n_flips)
-    scan = spark.read.parquet(index_dir)
+    scan = read_parquet(spark, index_dir)
     hit = None
     for band, codes in enumerate(probe):
         cond = (F.col("band") == band) & (
@@ -578,7 +578,7 @@ def append_ivf_index(spark: SparkSession, index_dir: str, vectors: DataFrame) ->
     """
     payload = [
         f.name
-        for f in spark.read.parquet(os.path.join(index_dir, "corpus")).schema
+        for f in read_parquet(spark, os.path.join(index_dir, "corpus")).schema
         if f.name != "list_id"
     ]
     named = _derived_col_map(index_dir)
@@ -591,7 +591,7 @@ def append_ivf_index(spark: SparkSession, index_dir: str, vectors: DataFrame) ->
             f"layout at {index_dir} stores {payload} per vector"
         )
     cent = sorted(
-        spark.read.parquet(_centroid_dir(index_dir)).collect(),
+        read_parquet(spark, _centroid_dir(index_dir)).collect(),
         key=lambda r: r.centroid_id,
     )
     cmat = np.stack([np.asarray(r.centroid) for r in cent])
@@ -638,7 +638,7 @@ def append_ivf_index(spark: SparkSession, index_dir: str, vectors: DataFrame) ->
 def _index_manifest_path(index_dir: str) -> str:
     # underscore-prefixed so Spark's file listing IGNORES it: the
     # manifest lives inside the corpus directory, and a raw
-    # ``spark.read.parquet(corpus_dir)`` must not trip over a JSON
+    # ``read_parquet(spark, corpus_dir)`` must not trip over a JSON
     # file when inferring schema/partitions (latent until a committed
     # layout was raw-probed; caught by the tombstone pytest).
     return os.path.join(index_dir, "_MANIFEST.json")
@@ -1118,12 +1118,12 @@ def _apply_tombstones(
     if tomb_files is not None:
         if not tomb_files:
             return df
-        t = spark.read.parquet(*tomb_files).select("vec_id").distinct()
+        t = read_parquet(spark, *tomb_files).select("vec_id").distinct()
         return df.join(F.broadcast(t), "vec_id", "left_anti")
     tomb = _tombstone_dir(index_dir)
     if not _is_built(tomb):
         return df
-    t = spark.read.parquet(tomb).select("vec_id").distinct()
+    t = read_parquet(spark, tomb).select("vec_id").distinct()
     return df.join(F.broadcast(t), "vec_id", "left_anti")
 
 
@@ -1139,7 +1139,7 @@ def compact_ivf_tombstones(spark: SparkSession, index_dir: str) -> int:
     tomb = _tombstone_dir(index_dir)
     if not _is_built(tomb):
         return 0
-    t = spark.read.parquet(tomb).select("vec_id").distinct().localCheckpoint()
+    t = read_parquet(spark, tomb).select("vec_id").distinct().localCheckpoint()
     live = snapshot_scan(spark, os.path.join(index_dir, "corpus")).select("vec_id")
     keep = t.join(live, "vec_id", "left_semi").localCheckpoint()
     dropped = t.count() - keep.count()
@@ -1195,7 +1195,7 @@ def upsert_ivf_vectors(spark: SparkSession, index_dir: str, vectors: DataFrame) 
     # so the COW rewrite can't run ahead of a doomed append)
     payload = [
         f.name
-        for f in spark.read.parquet(corpus_dir).schema
+        for f in read_parquet(spark, corpus_dir).schema
         if f.name != "list_id"
     ]
     derived = _derived_col_map(index_dir)
@@ -1223,8 +1223,7 @@ def upsert_ivf_vectors(spark: SparkSession, index_dir: str, vectors: DataFrame) 
     before = set(_list_parquet_files(corpus_dir))
     if touched:
         keep = (
-            spark.read.option("basePath", corpus_dir)
-            .parquet(*touched)
+            read_parquet(spark, *touched, basePath=corpus_dir)
             .join(F.broadcast(ids), "vec_id", "left_anti")
         )
         (
@@ -1240,7 +1239,7 @@ def upsert_ivf_vectors(spark: SparkSession, index_dir: str, vectors: DataFrame) 
     # the versioned mask captured by the commit below excludes them
     tomb = _tombstone_dir(index_dir)
     if _is_built(tomb):
-        t = spark.read.parquet(tomb).select("vec_id").distinct().localCheckpoint()
+        t = read_parquet(spark, tomb).select("vec_id").distinct().localCheckpoint()
         overlap = t.join(F.broadcast(ids), "vec_id", "left_semi").count()
         if overlap:
             survivors = (
@@ -1297,7 +1296,7 @@ def snapshot_scan(
         man = read_index_manifest(index_dir)
     if not man["files"]:
         raise FileNotFoundError(f"no committed snapshot in {index_dir}")
-    return spark.read.option("basePath", index_dir).parquet(*man["files"])
+    return read_parquet(spark, *man["files"], basePath=index_dir)
 
 
 def probe_lsh_snapshot(
@@ -1480,7 +1479,7 @@ def _load_codebooks(
     current one — the standard PQ live-index contract; a retrain
     writes a NEW versioned table and swaps the manifest pointer), so
     the raw read is snapshot-safe."""
-    books = spark.read.parquet(books_dir or _codebook_dir(index_dir)).collect()
+    books = read_parquet(spark, books_dir or _codebook_dir(index_dir)).collect()
     m = max(r.sub for r in books) + 1
     ksub = max(r.k for r in books) + 1
     dsub = len(books[0].centroid)
@@ -1529,7 +1528,7 @@ def probe_pq_index(
     exact re-rank by the caller.
     """
     books = _load_codebooks(spark, index_dir)
-    codes = spark.read.parquet(os.path.join(index_dir, "codes"))
+    codes = read_parquet(spark, os.path.join(index_dir, "codes"))
     return _apply_tombstones(
         spark, index_dir, _adc_rank(codes, books, qvec, n_candidates)
     )
@@ -1552,7 +1551,7 @@ def probe_pq_snapshot(
     if not man["files"]:
         raise FileNotFoundError(f"no committed snapshot in {codes_dir}")
     books = _load_codebooks(spark, index_dir, _codebook_dir(index_dir, man))
-    codes = spark.read.option("basePath", codes_dir).parquet(*man["files"])
+    codes = read_parquet(spark, *man["files"], basePath=codes_dir)
     return _apply_tombstones(
         spark,
         index_dir,
@@ -1731,7 +1730,7 @@ def _ivf_probe_lists(
     """The query's ``nprobe`` nearest centroid lists (driver-side over
     the nlist-row centroid table — a dim-table read)."""
     cent = sorted(
-        spark.read.parquet(_centroid_dir(index_dir, man)).collect(),
+        read_parquet(spark, _centroid_dir(index_dir, man)).collect(),
         key=lambda r: r.centroid_id,
     )  # parquet row order is not contractual; list choice must be stable
     cmat = np.stack([np.asarray(r.centroid) for r in cent])
@@ -1770,7 +1769,7 @@ def probe_ivf_index(
         corpus = snapshot_scan(spark, corpus_dir, man=man)
         tomb_files = man.get("tombstones")
     else:
-        corpus = spark.read.parquet(corpus_dir)
+        corpus = read_parquet(spark, corpus_dir)
         tomb_files = None
     scan = corpus.filter(F.col("list_id").isin(probe))
     if where is not None:
@@ -2020,7 +2019,7 @@ def rebalance_ivf_index(spark: SparkSession, index_dir: str) -> dict:
 
     old_cent = {
         r.centroid_id: np.asarray(r.centroid, dtype=float)
-        for r in spark.read.parquet(_centroid_dir(index_dir)).collect()
+        for r in read_parquet(spark, _centroid_dir(index_dir)).collect()
     }
     nlist = len(old_cent)
     imbalance_before = max(counts.values()) / (n_vec / nlist)
@@ -2227,7 +2226,7 @@ def probe_ivfpq_index(
     caller's job (same contract as ``probe_pq_index``).
     """
     cent = sorted(
-        spark.read.parquet(os.path.join(index_dir, "centroids")).collect(),
+        read_parquet(spark, os.path.join(index_dir, "centroids")).collect(),
         key=lambda r: r.centroid_id,
     )
     cmat = np.stack([np.asarray(r.centroid) for r in cent])
@@ -2242,7 +2241,7 @@ def probe_ivfpq_index(
     m, _ksub, dsub = books.shape
     luts = [books[sub] @ qvec[sub * dsub : (sub + 1) * dsub] for sub in range(m)]
 
-    codes = spark.read.parquet(os.path.join(index_dir, "codes")).filter(
+    codes = read_parquet(spark, os.path.join(index_dir, "codes")).filter(
         F.col("list_id").isin(probed)
     )
     base_expr = None
@@ -2278,7 +2277,7 @@ def append_ivfpq_index(spark: SparkSession, index_dir: str, vectors: DataFrame) 
     vectors are consumed at encode time and never land on disk.
     """
     cent = sorted(
-        spark.read.parquet(os.path.join(index_dir, "centroids")).collect(),
+        read_parquet(spark, os.path.join(index_dir, "centroids")).collect(),
         key=lambda r: r.centroid_id,
     )
     cmat = np.stack([np.asarray(r.centroid) for r in cent])

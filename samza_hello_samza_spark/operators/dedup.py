@@ -36,7 +36,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 N_PERMS = 24
@@ -1153,7 +1153,7 @@ def _components_cached(
         # our build lost the race → reclaim it now; stale crashed
         # builds from prior runs are age-gated inside
         gc_orphan_builds(root, man, own_build=build)
-    return spark.read.parquet(*man["files"])
+    return read_parquet(spark, *man["files"])
 
 
 #: hard cap on alternating star rounds — the algorithm converges in

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
 from .dedup import _SHINGLES_SQL, dedup_ngram_jaccard
 
 PR_ITERS = 10
@@ -98,7 +99,7 @@ def _pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         # our build lost the race → reclaim it now; stale crashed
         # builds from prior runs are age-gated inside
         gc_orphan_builds(root, man, own_build=build)
-    return spark.read.parquet(*man["files"])
+    return read_parquet(spark, *man["files"])
 
 
 def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, read_parquet
 from .text_analysis import BPE_TOKEN_REGEX
 from .text_filters import SEQ_BUDGET, sequence_packing
 
@@ -159,7 +159,7 @@ def read_packed_range(
     lo_shard = seq_lo // seqs_per_shard
     hi_shard = (seq_hi - 1) // seqs_per_shard
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter(F.col("_shard").between(lo_shard, hi_shard))
         .filter(F.col("seq_id").between(seq_lo, seq_hi - 1))
         .drop("_shard")
@@ -278,7 +278,7 @@ def read_packed_stage(
     lo_shard = seq_lo // seqs_per_shard
     hi_shard = (seq_hi - 1) // seqs_per_shard
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .filter((F.col("lang") == lang) & (F.col("stage") == stage))
         .filter(F.col("_shard").between(lo_shard, hi_shard))
         .filter(F.col("seq_id").between(seq_lo, seq_hi - 1))

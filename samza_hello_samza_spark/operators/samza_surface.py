@@ -389,9 +389,16 @@ def wikipedia_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per window: edits, bytes-added, unique-titles, flag counts; plus
     ``edits_all_time`` — the KeyValueStore-backed running total —
-    expressed as a cumulative sum over the (tiny) aggregated window
-    rows, not over raw events. ``ts`` rides along from the single
-    events scan (no join back, unlike a naive two-source plan).
+    expressed as a cumulative sum over the aggregated window rows, not
+    over raw events. ``ts`` rides along from the single events scan (no
+    join back, unlike a naive two-source plan).
+
+    The running total is one ``Window.orderBy`` over the windowed
+    aggregate, which runs in a single partition. That relation has one
+    row per 10 minutes of event time — at most 52,560 rows per year of
+    events, whatever the event volume — so the single task stays small
+    at any scale. The aggregate has one consumer, so the plan scans and
+    parses the events once with nothing materialised eagerly.
     """
     edits = _parsed_edits(spark, sf_dir, extra_cols=("ts",))
     windowed = edits.groupBy(
@@ -405,42 +412,10 @@ def wikipedia_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_bot_edit").alias("bot_edits"),
         F.sum("is_special").alias("special_edits"),
     )
-    # windows-sized relation consumed by THREE branches below (the
-    # cumulative sum, the bucket totals and the offset join). Column
-    # pruning makes the branches' agg subtrees differ, so exchange
-    # reuse never fires and the events scan + regex parse + window
-    # aggregation ran once PER BRANCH (plan-audited: 3 full scans).
-    # Materializing the tiny aggregate makes it one pass — at 100 TB
-    # the difference between one corpus read and three.
-    windowed = windowed.localCheckpoint()
-    # edits_all_time (the KeyValueStore running total) as a two-phase
-    # distributed prefix sum: cumulative sum inside day-sized buckets,
-    # plus each bucket's offset (total of all earlier buckets) from a
-    # triangular broadcast join over the tiny bucket-totals table. No
-    # single-partition global WindowExec anywhere in the plan — the
-    # naive Window.orderBy(...) form funnels every row through one
-    # task, which is the classic 100 TB bottleneck.
-    bucketed = windowed.withColumn(
-        "_bucket", F.floor(F.col("window_start_epoch") / F.lit(86400))
+    running = Window.orderBy("window_start_epoch").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    in_bucket = Window.partitionBy("_bucket").orderBy(
-        "window_start_epoch"
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    within = bucketed.withColumn("_cum_in", F.sum("edits").over(in_bucket))
-    totals = bucketed.groupBy("_bucket").agg(F.sum("edits").alias("_total"))
-    earlier = totals.select(
-        F.col("_bucket").alias("_b2"), F.col("_total").alias("_t2")
-    )
-    offsets = (
-        totals.join(F.broadcast(earlier), F.col("_b2") < F.col("_bucket"), "left")
-        .groupBy("_bucket")
-        .agg(F.coalesce(F.sum("_t2"), F.lit(0)).cast("long").alias("_offset"))
-    )
-    return (
-        within.join(F.broadcast(offsets), "_bucket")
-        .withColumn("edits_all_time", F.col("_cum_in") + F.col("_offset"))
-        .drop("_bucket", "_cum_in", "_offset")
-    )
+    return windowed.withColumn("edits_all_time", F.sum("edits").over(running))
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import binary_sig as _bsig
 from ..functions import sq8 as _sq8
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -1620,7 +1620,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ann_index.build_ivf_index(spark, sf_dir, IVF_NLIST)
     import os
 
-    corpus = spark.read.parquet(os.path.join(idx, "corpus")).select(
+    corpus = read_parquet(spark, os.path.join(idx, "corpus")).select(
         "list_id", "vec_id", "v", _norm(F.col("v")).alias("norm")
     )
     a = corpus.alias("a")
@@ -1959,7 +1959,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ann_index.build_ivf_index(spark, sf_dir, IVF_NLIST)
     import os
 
-    corpus = spark.read.parquet(os.path.join(idx, "corpus")).select(
+    corpus = read_parquet(spark, os.path.join(idx, "corpus")).select(
         "list_id", "vec_id", "v", _norm(F.col("v")).alias("norm")
     )
     a = corpus.alias("a")

@@ -668,10 +668,10 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Sequence building needs each doc's *global* token offset in
     doc_id order — a prefix sum, which naively is a single-partition
-    Window (the classic 100 TB bottleneck). Here it is the two-phase
-    distributed form (as in wikipedia_stats): exclusive cumsum inside
-    doc_id-range buckets + per-bucket offsets from a triangular
-    broadcast join over the tiny bucket-totals relation. A doc's
+    Window (the classic 100 TB bottleneck: one row per doc). Here it is
+    the two-phase distributed form: exclusive cumsum inside doc_id-range
+    buckets + per-bucket offsets from a triangular broadcast join over
+    the tiny bucket-totals relation. A doc's
     sequence is where its cumulative start falls:
     ``seq_id = floor(cum_before / budget)``.
     """
@@ -705,7 +705,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier = totals.select(F.col("_bucket").alias("_b2"), F.col("_total").alias("_t2"))
     # bucket-totals is bounded by construction (corpus_size /
     # PACK_BUCKET_DOCS rows) → forced broadcast is safe, same pattern
-    # as wikipedia_stats' running total.
+    # as parts_skyline's bucket maxima.
     offsets = (
         totals.join(F.broadcast(earlier), F.col("_b2") < F.col("_bucket"), "left")
         .groupBy("_bucket")

@@ -36,7 +36,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 HLL_LGK = 12
 MEASURES = ("n_events", "sum_value", "users_hll")
@@ -98,7 +98,7 @@ def refresh_mv(spark: SparkSession, out_dir: str, delta: DataFrame) -> list[int]
     days = [r.day for r in delta_grain.select("day").distinct().collect()]
     if not days:
         return []
-    existing = spark.read.parquet(out_dir).filter(F.col("day").isin(days))
+    existing = read_parquet(spark, out_dir).filter(F.col("day").isin(days))
     merged = (
         existing.unionByName(delta_grain)
         .groupBy("day", "event_type")
@@ -129,7 +129,7 @@ def serve_rollup(spark: SparkSession, out_dir: str, *group_cols: str) -> DataFra
     HLL-union estimate (the exact-distinct path needs the fact table
     by definition — that is the point of carrying the sketch).
     """
-    mv = spark.read.parquet(out_dir)
+    mv = read_parquet(spark, out_dir)
     grouped = mv.groupBy(*group_cols) if group_cols else mv.groupBy()
     return grouped.agg(
         F.sum("n_events").cast("long").alias("n_events"),

@@ -415,7 +415,7 @@ def parts_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     beaten on BOTH dimensions by any other. In 2-D the frontier is a
     running-max scan over (price asc, size desc) — but a GLOBAL
     ordered window is the single-partition anti-pattern, so this is
-    the two-phase distributed form (the wikipedia_stats prefix-sum
+    the two-phase distributed form (the sequence_packing prefix-sum
     pattern): price-range buckets each compute their local running
     max in parallel, the per-bucket maxima (a buckets-sized relation)
     triangular-broadcast-join into per-bucket "best size in any

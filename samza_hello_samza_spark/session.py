@@ -7,7 +7,7 @@ env for local runs:
   splitting, and dynamic join-strategy switching replace hand-tuning.
 - Arrow on: any Pandas-UDF operator (minhash, multimodal) moves
   columnar batches, not pickled rows.
-- ``spark.sql.shuffle.partitions`` defaults to 2×cores locally; on a
+- ``spark.sql.shuffle.partitions`` is max(cores, 16) locally; on a
   real cluster AQE coalesces from a deliberately high initial number.
 - Broadcast threshold raised: TPC-H-style dims (region, nation,
   customer, supplier, part) must broadcast, never shuffle.
@@ -15,9 +15,14 @@ env for local runs:
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: All tables the driver materializes per scale factor.
 TABLES = (
@@ -46,9 +51,10 @@ def get_spark(app_name: str = "samza-hello-samza-spark", cpus: int | None = None
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # local mode: one shuffle task per core (measured 2× faster
-        # than 2×cores at sf0.1 — scheduling overhead dominates tiny
-        # partitions). On a cluster, raise
+        # local mode: max(cores, 16) shuffle tasks — one per core from
+        # 16 cores up, 16 below that (one task per core measured 2×
+        # faster than 2×cores at sf0.1 — scheduling overhead dominates
+        # tiny partitions). On a cluster, raise
         # spark.sql.adaptive.coalescePartitions.initialPartitionNum
         # instead and let AQE coalesce down.
         .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
@@ -110,6 +116,113 @@ def cluster_conf(
     }
 
 
+#: SQL confs that change the schema parquet inference returns; their
+#: values are part of a memo entry's key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: Bound on the schema memo: one entry per path set, least recently
+#: used evicted first.
+_SCHEMA_MEMO_MAX = 1024
+
+#: path set -> (options + inference confs, schema JSON, file
+#: fingerprint). Plain data only: no DataFrame or JVM handle.
+_SCHEMA_MEMO: OrderedDict[tuple[str, ...], tuple[tuple, str, tuple]] = OrderedDict()
+#: streaming foreachBatch callbacks read from their own threads.
+_SCHEMA_MEMO_LOCK = threading.Lock()
+
+
+def _local_path(path: str) -> str | None:
+    """Normalised local path of an absolute path or ``file:`` URI (the
+    form ``input_file_name()`` returns); None for globs, other schemes
+    and relative paths (Spark resolves those against the JVM's working
+    directory, which this process may have left)."""
+    if any(c in path for c in "*?[{"):
+        return None
+    parts = urlsplit(path)
+    if parts.scheme == "file":
+        path = unquote(parts.path)
+    elif parts.scheme:
+        return None
+    return os.path.normpath(path) if os.path.isabs(path) else None
+
+
+def _fingerprint(paths: tuple[str, ...]) -> tuple | None:
+    """(name, size, mtime_ns) of every file under ``paths``; None when a
+    path is missing or holds no file (Spark then raises its own error)."""
+    out = []
+    try:
+        for p in paths:
+            if os.path.isfile(p):
+                st = os.stat(p)
+                out.append((p, st.st_size, st.st_mtime_ns))
+                continue
+            if not os.path.isdir(p):
+                return None
+            for dirpath, dirs, files in os.walk(p, followlinks=True):
+                dirs.sort()
+                for f in sorted(files):
+                    fp = os.path.join(dirpath, f)
+                    st = os.stat(fp)
+                    out.append((fp, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(out) or None
+
+
+def read_parquet(
+    spark: SparkSession,
+    *paths: str,
+    schema: StructType | str | None = None,
+    **options,
+) -> DataFrame:
+    """Batch parquet read; every batch read in the package goes here.
+
+    ``spark.read.parquet`` runs one Spark job per call just to infer the
+    schema from the footers. This helper keeps the schema Spark inferred,
+    keyed by the path set, the reader options and the SQL confs that
+    change inference, next to a fingerprint (name, size, ``mtime_ns``)
+    of every file under the paths. A later read whose key and
+    fingerprint both match passes the kept schema and runs no job.
+    Anything else — a miss, a changed file, a glob, a non-``file``
+    scheme, a missing or empty path — is a plain inferring read, so
+    errors are exactly Spark's. An explicit ``schema`` bypasses the memo.
+    """
+    reader = spark.read.options(**options)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    local = tuple(_local_path(p) for p in paths)
+    if not local or None in local:
+        return reader.parquet(*paths)
+    key = (
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS),
+    )
+    fp = _fingerprint(local)
+    with _SCHEMA_MEMO_LOCK:
+        hit = _SCHEMA_MEMO.get(local)
+        if hit is not None:
+            _SCHEMA_MEMO.move_to_end(local)
+    if fp is not None and hit is not None and hit[0] == key and hit[2] == fp:
+        return reader.schema(StructType.fromJson(json.loads(hit[1]))).parquet(*paths)
+    df = reader.parquet(*paths)
+    if fp is not None:
+        entry = (key, df.schema.json(), fp)
+        with _SCHEMA_MEMO_LOCK:
+            _SCHEMA_MEMO[local] = entry
+            _SCHEMA_MEMO.move_to_end(local)
+            while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.popitem(last=False)
+    return df
+
+
 #: columns stored as TIMESTAMP(NANOS) in the driver parquet, per table.
 _NANOS_TS_COLUMNS = {"events": ("ts",)}
 
@@ -168,9 +281,13 @@ def _n_parquet_files(path: str) -> int:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table.
 
-    A plain ``spark.read.parquet`` keeps the scan a v1 FileScan with
-    full predicate pushdown + column pruning; callers filter/select
-    directly on the result so Catalyst prunes at the source.
+    A plain parquet read (``read_parquet``) keeps the scan a v1
+    FileScan with full predicate pushdown + column pruning; callers
+    filter/select directly on the result so Catalyst prunes at the
+    source. A repeat load of an unchanged table reuses the schema
+    inferred the first time and starts no Spark job; the memo entry is
+    dropped as soon as any file under the table's path changes name,
+    size or ``mtime_ns``, or an inference conf or option differs.
 
     r12 scan-parallelism floor (guide §2.5 "input skew: one huge
     unsplittable file" + the r11-accepted ``similarity._spread_scan``
@@ -191,7 +308,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # setting it per-session here is safe and idempotent.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     for col in _NANOS_TS_COLUMNS.get(name, ()):
         df = normalize_nanos_ts(df, col)
     if name in _SPREAD_TABLES:

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import explode_nonempty
+from ..session import read_parquet
 
 BLOOM_SIDECAR_DIRNAME = "_file_blooms"
 FB_K = 3  # md5 hex slices per key — same family as functions/bloom
@@ -109,7 +110,7 @@ def build_file_blooms(spark: SparkSession, table_dir: str, col: str) -> str:
     """One-scan per-file Bloom build over every data file. Returns the
     sidecar dir. ``n_bits`` is derived from the observed rows/file and
     frozen in the sidecar's ``_META.json`` for the probe side."""
-    df = spark.read.parquet(table_dir)
+    df = read_parquet(spark, table_dir)
     n_files = max(1, len(df.inputFiles()))
     n_rows = df.count()  # parquet count(*) — metadata-only scan
     n_bits = _size_bits(n_rows / n_files)
@@ -135,18 +136,18 @@ def refresh_new_files(spark: SparkSession, table_dir: str) -> int:
     # derive one row per file from parquet metadata, no per-file rows
     # on the driver; the only collect is the delta file list
     listing = (
-        spark.read.parquet(table_dir)
+        read_parquet(spark, table_dir)
         .select(F.input_file_name().alias("_file"))
         .distinct()
     )
-    known = spark.read.parquet(_sidecar_dir(table_dir)).select("_file").distinct()
+    known = read_parquet(spark, _sidecar_dir(table_dir)).select("_file").distinct()
     new_files = [
         r._file for r in listing.join(known, "_file", "left_anti").collect()
     ]
     if not new_files:
         return 0
     fresh = _file_blooms(
-        spark.read.parquet(*new_files), meta["col"], meta["n_bits"]
+        read_parquet(spark, *new_files), meta["col"], meta["n_bits"]
     )
     fresh.write.mode("append").parquet(_sidecar_dir(table_dir))
     return len(new_files)
@@ -176,7 +177,7 @@ def refresh_merged_buckets(
         touched_col = c if touched_col is None else (touched_col | c)
     # materialize BEFORE the overwrite — the sink is the path this
     # very plan reads from.
-    kept = spark.read.parquet(out).filter(~touched_col).localCheckpoint()
+    kept = read_parquet(spark, out).filter(~touched_col).localCheckpoint()
     dirs = [
         os.path.join(table_dir, f"_bucket={b}")
         for b in buckets
@@ -184,8 +185,7 @@ def refresh_merged_buckets(
     ]
     if dirs:
         fresh = _file_blooms(
-            spark.read.option("basePath", table_dir)
-            .parquet(*dirs)
+            read_parquet(spark, *dirs, basePath=table_dir)
             .drop("_bucket"),
             meta["col"],
             meta["n_bits"],
@@ -228,7 +228,7 @@ def bloom_candidate_files(
     per_key = {k: _key_positions(k, meta["n_bits"]) for k in keys}
     words_needed = sorted({w for wb in per_key.values() for (w, _) in wb})
     rows = (
-        spark.read.parquet(_sidecar_dir(table_dir))
+        read_parquet(spark, _sidecar_dir(table_dir))
         .filter(F.col("word").isin(words_needed))
         .collect()
     )
@@ -253,10 +253,9 @@ def bloom_point_scan(
     which is what the registered key's DuckDB oracle computes)."""
     files = bloom_candidate_files(spark, table_dir, keys)
     if not files:
-        return spark.read.parquet(table_dir).filter(F.lit(False))
+        return read_parquet(spark, table_dir).filter(F.lit(False))
     return (
-        spark.read.option("basePath", table_dir)
-        .parquet(*files)
+        read_parquet(spark, *files, basePath=table_dir)
         .filter(F.col(col).isin(keys))
     )
 

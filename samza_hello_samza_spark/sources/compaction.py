@@ -22,6 +22,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from ..session import read_parquet
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 
 
@@ -54,7 +56,7 @@ def compact_parquet(
     before, _total, n_out = plan_compaction(spark, path, target_bytes)
     if before <= n_out:
         return before, before
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     out = (
         df.repartitionByRange(n_out, sort_col)
         if sort_col

@@ -21,6 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 #: mergeable state columns kept in the aggregate table.
 STATE_COLS = ("n_events", "sum_value")
 
@@ -47,7 +49,7 @@ def update_aggregate(
     """
     new_state = _partial_agg(delta, keys)
     if os.path.exists(state_path):
-        old = spark.read.parquet(state_path)
+        old = read_parquet(spark, state_path)
         new_state = (
             old.unionByName(new_state)
             .groupBy(*keys)
@@ -67,7 +69,7 @@ def update_aggregate(
 
 def read_aggregate(spark: SparkSession, state_path: str) -> DataFrame:
     """Finalize stored state into user-facing values (avg from sum/count)."""
-    state = spark.read.parquet(state_path)
+    state = read_parquet(spark, state_path)
     return state.select(
         *[c for c in state.columns if c not in STATE_COLS],
         F.col("n_events"),
@@ -101,7 +103,7 @@ def update_aggregate_signed(
         F.sum(F.col(sign_col) * F.col(value_col)).alias("sum_value"),
     )
     if os.path.exists(state_path):
-        old = spark.read.parquet(state_path)
+        old = read_parquet(spark, state_path)
         partial = (
             old.unionByName(partial)
             .groupBy(*keys)
@@ -146,7 +148,7 @@ def update_distinct_sketch(
         F.hll_sketch_agg(F.col(distinct_col).cast("string"), F.lit(lgk)).alias("sketch")
     )
     if os.path.exists(state_path):
-        old = spark.read.parquet(state_path)
+        old = read_parquet(spark, state_path)
         new_state = (
             old.unionByName(new_state)
             .groupBy(*keys)
@@ -163,7 +165,7 @@ def update_distinct_sketch(
 
 def read_distinct_estimate(spark: SparkSession, state_path: str) -> DataFrame:
     """Finalize sketch state into per-key distinct-count estimates."""
-    state = spark.read.parquet(state_path)
+    state = read_parquet(spark, state_path)
     return state.select(
         *[c for c in state.columns if c != "sketch"],
         F.hll_sketch_estimate("sketch").alias("n_distinct_est"),

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _words, explode_nonempty
+from ..session import read_parquet
 
 N_TBUCKETS = 64
 
@@ -163,7 +164,7 @@ def conjunctive_search(
     """Docs containing ALL ``terms``, via the posting-list layout:
     bucket-pruned scan → word filter → intersect-by-counting."""
     buckets = term_buckets(spark, terms)
-    postings = spark.read.parquet(index_dir).filter(
+    postings = read_parquet(spark, index_dir).filter(
         F.col("tbucket").isin(buckets)  # partition filter: lists ≤|terms| dirs
     )
     return (
@@ -257,7 +258,7 @@ def phrase_search_positional(
     phrase query reads postings, never documents.
     """
     buckets = term_buckets(spark, list(set(phrase)))
-    postings = spark.read.parquet(index_dir).filter(
+    postings = read_parquet(spark, index_dir).filter(
         F.col("tbucket").isin(buckets)  # partition filter: lists ≤|terms| dirs
     )
     slots = [(i, w) for i, w in enumerate(phrase)]
@@ -297,7 +298,7 @@ def proximity_search_positional(
     Returns (doc_id, n_pairs, min_dist).
     """
     buckets = term_buckets(spark, list({term_a, term_b}))
-    postings = spark.read.parquet(index_dir).filter(
+    postings = read_parquet(spark, index_dir).filter(
         F.col("tbucket").isin(buckets)
     )
     a = (
@@ -454,7 +455,7 @@ def _tier_col(avgdl: float) -> F.Column:
 
 
 def _impacts_dir(index_dir: str) -> str:
-    # leading underscore: invisible to spark.read.parquet(index_dir)
+    # leading underscore: invisible to read_parquet(spark, index_dir)
     return os.path.join(index_dir, "_impacts")
 
 
@@ -764,7 +765,7 @@ def bm25_topk_from_index(
         st = _json.load(fh)
     buckets = term_buckets(spark, list(set(terms)))
     p = (
-        spark.read.parquet(index_dir)
+        read_parquet(spark, index_dir)
         .filter(F.col("tbucket").isin(buckets))
         .filter(F.col("word").isin(*terms))
     )
@@ -963,8 +964,7 @@ def _wand_pricing_uncached(
     if not imp_paths:
         return None
     imp = (
-        spark.read.option("basePath", imp_dir)
-        .parquet(*imp_paths)
+        read_parquet(spark, *imp_paths, basePath=imp_dir)
         .filter(F.col("word").isin(*terms))
     )
     if attr_eq is None:
@@ -1187,8 +1187,7 @@ def bm25_wand_topk(
     p1_cond = pr["p1_cond"]
     qinfo = pr["qinfo"]
     contrib = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*p1_paths)
+        read_parquet(spark, *p1_paths, basePath=index_dir)
         .filter(p1_cond if where is None else (p1_cond & where))
         .join(F.broadcast(qinfo), "word")
         .select(
@@ -1270,8 +1269,7 @@ def bm25_wand_topk(
             spark.createDataFrame([(int(d),) for d in need], "doc_id LONG")
         )
         add = (
-            spark.read.option("basePath", index_dir)
-            .parquet(*pr["p2_paths"])
+            read_parquet(spark, *pr["p2_paths"], basePath=index_dir)
             .filter(
                 pr["p2_cond"] if where is None else (pr["p2_cond"] & where)
             )
@@ -1355,7 +1353,7 @@ def bm25_batch_from_index(
         )
     buckets = term_buckets(spark, union_terms)
     p = (
-        spark.read.parquet(index_dir)
+        read_parquet(spark, index_dir)
         .filter(F.col("tbucket").isin(buckets))
         .filter(F.col("word").isin(*union_terms))
     )
@@ -1584,7 +1582,7 @@ def _impacts_relation(spark: SparkSession, index_dir: str):
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(_impacts_dir(index_dir))
+        return read_parquet(spark, _impacts_dir(index_dir))
     except AnalysisException:
         return None
 
@@ -1770,8 +1768,7 @@ def bm25_batch_wand_topk(
         "query_id INT, word STRING",
     )
     contrib1 = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*pr["p1_paths"])
+        read_parquet(spark, *pr["p1_paths"], basePath=index_dir)
         .filter(pr["p1_cond"])
         .join(F.broadcast(qinfo), "word")
         .select(
@@ -1895,8 +1892,7 @@ def bm25_batch_wand_topk(
     # (p1_cond/p2_cond partition the (word, tier) space).
     if pr["p2_paths"] and (prunable or fallback):
         p2c = (
-            spark.read.option("basePath", index_dir)
-            .parquet(*pr["p2_paths"])
+            read_parquet(spark, *pr["p2_paths"], basePath=index_dir)
             .filter(pr["p2_cond"])
             .join(F.broadcast(qinfo), "word")
             .select(
@@ -2069,7 +2065,7 @@ def positional_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _md5_slice32 as _slice32
 
     index_dir = _documents_positional_incremental(spark, sf_dir)
-    idx = spark.read.parquet(index_dir)
+    idx = read_parquet(spark, index_dir)
     content = F.concat_ws(
         "|",
         F.col("word"),
@@ -2180,7 +2176,7 @@ def bm25_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = _documents_bm25_incremental(spark, sf_dir)
     with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
         st = _json.load(fh)
-    p = spark.read.parquet(index_dir)
+    p = read_parquet(spark, index_dir)
     content = F.concat_ws(
         "|",
         F.col("word"),
@@ -2189,7 +2185,7 @@ def bm25_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dl").cast("string"),
     )
     imp = (
-        spark.read.parquet(_impacts_dir(index_dir))
+        read_parquet(spark, _impacts_dir(index_dir))
         .agg(F.sum("n_postings").cast("long").alias("impacts_n_postings"))
     )
     return (
@@ -2434,12 +2430,11 @@ def wand_tier_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not paths:
         # degenerate corpus: none of the pinned query terms has a
         # posting bucket — return the typed empty decision table
-        # instead of letting spark.read.parquet() raise on zero paths
+        # instead of letting read_parquet raise on zero paths
         # (mirrors bm25_batch_from_index's empty-workload guard).
         return spark.createDataFrame([], _WAND_SWEEP_SCHEMA)
     post = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*paths)
+        read_parquet(spark, *paths, basePath=index_dir)
         .filter(F.col("word").isin(*terms))
         .select("word", "tf", "dl")
     )
@@ -2579,8 +2574,7 @@ def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not paths:
         return spark.createDataFrame([], _WAND_WORKLOAD_SWEEP_SCHEMA)
     post = (
-        spark.read.option("basePath", index_dir)
-        .parquet(*paths)
+        read_parquet(spark, *paths, basePath=index_dir)
         .filter(F.col("word").isin(*union_terms))
         .select("word", "tf", "dl")
     )

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
+from ..session import read_parquet
 
 
 class KVTable:
@@ -59,7 +60,7 @@ class KVTable:
         if not versions:
             raise ValueError(f"KVTable at {self.path} is empty")
         frames = [
-            self.spark.read.parquet(os.path.join(self.path, d)).withColumn(
+            read_parquet(self.spark, os.path.join(self.path, d)).withColumn(
                 "_v", F.lit(int(d.split("=", 1)[1]))
             )
             for d in versions

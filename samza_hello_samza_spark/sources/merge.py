@@ -45,6 +45,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import read_parquet
+
 DEFAULT_BUCKETS = 32
 
 
@@ -246,8 +248,7 @@ class MergeTable:
         # freeze the merged schema in a catalog instead and pass it
         # to .schema(...) — the bucket layout is unchanged either way.
         return (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(self.path)
+            read_parquet(self.spark, self.path, mergeSchema="true")
             .drop("_bucket")
         )
 
@@ -275,7 +276,7 @@ class MergeTable:
         # touched buckets with source-only rows and destroy the
         # matched target rows they failed to read.
         try:
-            full = self.spark.read.option("mergeSchema", "true").parquet(self.path)
+            full = read_parquet(self.spark, self.path, mergeSchema="true")
         except AnalysisException as e:
             marker = str(getattr(e, "getErrorClass", lambda: None)() or e)
             if "PATH_NOT_FOUND" in marker or "UNABLE_TO_INFER_SCHEMA" in marker:
@@ -424,8 +425,7 @@ class VersionedMergeTable:
         parts = []
         for m, bs in sorted(by_writer.items()):
             parts.append(
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self._data_dir(m))
+                read_parquet(self.spark, self._data_dir(m), mergeSchema="true")
                 .filter(F.col("_bucket").isin(bs))  # partition filter
             )
         if not parts:
@@ -446,7 +446,7 @@ class VersionedMergeTable:
         doomed = None
         for m, bs in sorted(by_dv.items()):
             part = (
-                self.spark.read.parquet(self._dv_dir(m))
+                read_parquet(self.spark, self._dv_dir(m))
                 .filter(F.col("_bucket").isin(bs))
                 .select(self.key_col)
             )
@@ -1636,7 +1636,7 @@ def orders_cdf_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["last_status"],
             value_col="last_orderkey",
         )
-    st = spark.read.parquet(state)
+    st = read_parquet(spark, state)
     return st.select(
         "last_status",
         F.col("n_events").cast("long").alias("n_customers"),

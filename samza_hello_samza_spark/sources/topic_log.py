@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import read_parquet
+
 #: wire schema, mirroring kafka source output (key/value as strings
 #: here; binary on a real broker — serde.py handles either).
 RECORD_SCHEMA = (
@@ -125,7 +127,7 @@ class TopicLog:
         batch.repartition("partition").write.mode("overwrite").parquet(out)
         # advance the high-water marks from what was actually written
         ends = (
-            self.spark.read.parquet(out)
+            read_parquet(self.spark, out)
             .groupBy("partition")
             .agg((F.max("offset") + 1).alias("end"))
             .collect()
@@ -139,9 +141,12 @@ class TopicLog:
     # -- consume ----------------------------------------------------------
 
     def read_all(self) -> DataFrame:
-        return self.spark.read.schema(StructType.fromDDL(RECORD_SCHEMA)).option(
-            "recursiveFileLookup", "true"
-        ).parquet(self._data_dir)
+        return read_parquet(
+            self.spark,
+            self._data_dir,
+            schema=StructType.fromDDL(RECORD_SCHEMA),
+            recursiveFileLookup="true",
+        )
 
     def read_from(self, offsets: dict[str, int]) -> DataFrame:
         """Records at or past explicit per-partition offsets — the seek
@@ -253,7 +258,7 @@ class TopicLog:
         if parquet_block_bytes:
             write = write.option("parquet.block.size", parquet_block_bytes)
         write.parquet(out)
-        n_after = self.spark.read.parquet(out).count()
+        n_after = read_parquet(self.spark, out).count()
         for d in old_dirs:
             shutil.rmtree(d)
         files_after = sum(

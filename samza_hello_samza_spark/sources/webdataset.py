@@ -51,6 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import read_parquet
+
 SAMPLES_PER_SHARD = 64
 
 
@@ -270,7 +272,7 @@ def seal_webdataset_shards(
     manifest is written last, so a crashed seal is re-run, never
     repaired.
     """
-    staged = spark.read.parquet(staging_path)
+    staged = read_parquet(spark, staging_path)
     counts = {
         int(r.shard_id): int(r.n)
         for r in staged.select(

@@ -20,7 +20,7 @@ Scale shape:
   100 TB; stored as parquet next to the data, re-read in one small
   scan per query.
 - prune: predicate ranges are evaluated against the stats table and
-  the surviving FILE LIST feeds ``spark.read.parquet(*files)`` — the
+  the surviving FILE LIST feeds ``read_parquet(spark, *files)`` — the
   cut happens at file listing, upstream of partition pruning,
   row-group stats, and column pruning, all of which still apply to
   the files that remain.
@@ -41,6 +41,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import read_parquet
 
 STATS_DIRNAME = "_zonemap"
 
@@ -83,7 +85,7 @@ def build_zonemap(
     domain both the build and the prune share); ``str_cols`` keep
     lexicographic string min/max. Returns the stats dir.
     """
-    df = spark.read.parquet(table_dir)
+    df = read_parquet(spark, table_dir)
     stats = _file_stats(df, cols, str_cols)
     out = _stats_dir(table_dir)
     stats.write.mode("overwrite").parquet(out)
@@ -120,17 +122,17 @@ def refresh_new_files(
     # bounded by the append, not the table. The known-file set is a
     # joined relation, never an `isin()` literal.
     listing = (
-        spark.read.parquet(table_dir)
+        read_parquet(spark, table_dir)
         .select(F.input_file_name().alias("_file"))
         .distinct()
     )
-    known = spark.read.parquet(out).select("_file")
+    known = read_parquet(spark, out).select("_file")
     new_files = [
         r._file for r in listing.join(known, "_file", "left_anti").collect()
     ]
     if not new_files:
         return 0
-    fresh = _file_stats(spark.read.parquet(*new_files), cols, str_cols)
+    fresh = _file_stats(read_parquet(spark, *new_files), cols, str_cols)
     n = fresh.count()
     if n:
         fresh.write.mode("append").parquet(out)
@@ -148,7 +150,7 @@ def pruned_files(
     The collect is the surviving file LIST: bounded by file count, the
     same driver-side quantity any scan's file listing already holds.
     """
-    stats = spark.read.parquet(_stats_dir(table_dir))
+    stats = read_parquet(spark, _stats_dir(table_dir))
     cond = F.lit(True)
     for c, (lo, hi) in ranges.items():
         overlap = ~(
@@ -171,7 +173,7 @@ def pruned_files_multi(
     caller re-applies the exact disjunction, so double-reads would
     also double-count).
     """
-    stats = spark.read.parquet(_stats_dir(table_dir))
+    stats = read_parquet(spark, _stats_dir(table_dir))
     any_cond = F.lit(False)
     for ranges in boxes:
         cond = F.lit(True)
@@ -196,8 +198,8 @@ def pruned_scan(
     qualifying row."""
     files = pruned_files_multi(spark, table_dir, boxes)
     if not files:
-        return spark.read.parquet(table_dir).filter(F.lit(False))
-    return spark.read.option("basePath", table_dir).parquet(*files)
+        return read_parquet(spark, table_dir).filter(F.lit(False))
+    return read_parquet(spark, *files, basePath=table_dir)
 
 
 # -- registered demo query: the zone map as a serving layout ---------------
@@ -299,7 +301,7 @@ def refresh_merged_buckets(
     for m in markers:
         c = F.col("_file").contains(m)
         touched_col = c if touched_col is None else (touched_col | c)
-    old = spark.read.parquet(out)
+    old = read_parquet(spark, out)
     # materialize BEFORE the overwrite below — the sink is the path
     # this very plan reads from.
     kept = old.filter(~touched_col).localCheckpoint()
@@ -310,7 +312,7 @@ def refresh_merged_buckets(
     ]
     if dirs:
         fresh = _file_stats(
-            spark.read.option("basePath", table_dir).parquet(*dirs).drop("_bucket"),
+            read_parquet(spark, *dirs, basePath=table_dir).drop("_bucket"),
             cols,
             str_cols,
         )
@@ -695,9 +697,9 @@ def zonemap_read(
     the composition exactly equal to the full-scan filter)."""
     files = pruned_files(spark, table_dir, ranges)
     if not files:
-        base = spark.read.parquet(table_dir)
+        base = read_parquet(spark, table_dir)
         return base.filter(F.lit(False))
-    df = spark.read.option("basePath", table_dir).parquet(*files)
+    df = read_parquet(spark, *files, basePath=table_dir)
     for c, (lo, hi) in ranges.items():
         domain = "string" if isinstance(lo, str) else "double"
         df = df.filter(

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ann_index import append_lsh_index
+from ..session import read_parquet
 from ..sources.incremental import update_aggregate, update_aggregate_signed
 from ..sources.topic_log import TopicLog
 
@@ -736,7 +737,7 @@ def fold_cms_cells(
     if man["version"] > 0:
         delta = (
             delta.unionByName(
-                spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+                read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
             )
             .groupBy("row", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
@@ -744,7 +745,7 @@ def fold_cms_cells(
     elif legacy:
         delta = (
             delta.unionByName(
-                spark.read.parquet(*legacy).select("row", "bucket", "cnt")
+                read_parquet(spark, *legacy).select("row", "bucket", "cnt")
             )
             .groupBy("row", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
@@ -818,9 +819,9 @@ def read_cms_cells(spark: SparkSession, state_path: str) -> DataFrame:
     if man["version"] == 0:
         legacy = _legacy_cms_files(state_path)
         if legacy:
-            return spark.read.parquet(*legacy).select("row", "bucket", "cnt")
+            return read_parquet(spark, *legacy).select("row", "bucket", "cnt")
         return spark.createDataFrame([], "row int, bucket bigint, cnt bigint")
-    return spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
 
 
 def cms_estimate(spark: SparkSession, state_path: str, keys: DataFrame, key_col: str) -> DataFrame:
@@ -905,8 +906,8 @@ def fold_kmv_sample(
     merged_in = batch.select("event_type", "event_id", "value")
     if man["version"] > 0:
         merged_in = merged_in.unionByName(
-            spark.read.parquet(
-                os.path.join(state_path, f"v{man['version']}")
+            read_parquet(
+                spark, os.path.join(state_path, f"v{man['version']}")
             ).select("event_type", "event_id", "value")
         )
     sample = _kmv_sample(merged_in)
@@ -938,7 +939,7 @@ def read_kmv_sample(spark: SparkSession, state_path: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, event_id bigint, value double, h bigint, rnk int"
         )
-    return spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
 
 
 def kmv_quantile_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1007,7 +1008,7 @@ def fold_audience_kmv(
     )
     if man["version"] > 0:
         delta = delta.unionByName(
-            spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
         )
     w = Window.partitionBy("event_type").orderBy("h", "user_id")
     sketch = (
@@ -1044,7 +1045,7 @@ def read_audience_kmv(spark: SparkSession, state_path: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, user_id bigint, h bigint"
         )
-    return spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
 
 
 class TxnView:
@@ -1160,7 +1161,7 @@ class TxnView:
         for p in partials[1:]:
             delta = delta.unionByName(p)
         if man["version"] > 0:
-            old = self.spark.read.parquet(self._state_dir(man["version"]))
+            old = read_parquet(self.spark, self._state_dir(man["version"]))
             delta = old.unionByName(delta)
         new_state = delta.groupBy(*self.keys, "topic").agg(
             F.sum("n_events").alias("n_events"),
@@ -1191,7 +1192,7 @@ class TxnView:
                 [], f"{', '.join(k + ' bigint' for k in self.keys)}, topic string, "
                 "n_events bigint, total_value double",
             )
-        state = self.spark.read.parquet(self._state_dir(man["version"]))
+        state = read_parquet(self.spark, self._state_dir(man["version"]))
         return state.select(
             *self.keys,
             "topic",
@@ -1277,7 +1278,7 @@ def fold_domain_wordcounts(
     )
     if man["version"] > 0:
         delta = (
-            spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
             .unionByName(delta)
             .groupBy("source", "word")
             .agg(F.sum("cnt").alias("cnt"))
@@ -1307,7 +1308,7 @@ def read_domain_wordcounts(spark: SparkSession, state_path: str) -> DataFrame:
     man = _dw_manifest(state_path)
     if man["version"] == 0:
         return spark.createDataFrame([], "source string, word string, cnt bigint")
-    return spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
 
 
 def window_fingerprint_updater(
@@ -1366,7 +1367,7 @@ def fold_window_fingerprints(
     )
     if man["version"] > 0:
         delta = (
-            spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
             .unionByName(delta)
             .groupBy("h")
             .agg(F.min("first_at").alias("first_at"))
@@ -1397,7 +1398,7 @@ def read_window_fingerprints(spark: SparkSession, state_path: str) -> DataFrame:
         return spark.createDataFrame(
             [], "h string, first_at struct<doc_id: bigint, pos: int>"
         )
-    return spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
 
 
 def substring_dedup_gate(
@@ -1533,7 +1534,7 @@ def fold_dsir_state(
     )
     if man["version"] > 0:
         delta = (
-            spark.read.parquet(os.path.join(state_path, f"v{man['version']}"))
+            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
             .unionByName(delta)
             .groupBy("b")
             .agg(F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t"))
@@ -1577,9 +1578,7 @@ def dsir_score_snapshot(
     man = _dw_manifest(state_path)
     if man["version"] == 0:
         raise FileNotFoundError(f"no committed DSIR state in {state_path}")
-    buckets_raw = spark.read.parquet(
-        os.path.join(state_path, f"v{man['version']}")
-    )
+    buckets_raw = read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
     n_t = buckets_raw.agg(F.sum("c_t").alias("n_t"))
     n_r = buckets_raw.agg(F.sum("c_r").alias("n_r"))
     b_mod = DSIR_BUCKETS
@@ -1693,8 +1692,8 @@ def fold_growth_accounting(
     spark = batch.sparkSession
     v = man["version"]
     if v > 0:
-        users = spark.read.parquet(os.path.join(state_path, f"users_v{v}"))
-        daily = spark.read.parquet(os.path.join(state_path, f"daily_v{v}"))
+        users = read_parquet(spark, os.path.join(state_path, f"users_v{v}"))
+        daily = read_parquet(spark, os.path.join(state_path, f"daily_v{v}"))
     else:
         users = spark.createDataFrame([], "user_id bigint, last_day bigint")
         daily = spark.createDataFrame(
@@ -1784,8 +1783,8 @@ def growth_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
             "day bigint, n_active bigint, n_new bigint, n_retained bigint, "
             "n_resurrected bigint, n_churned bigint",
         )
-    daily = spark.read.parquet(
-        os.path.join(state_path, f"daily_v{man['version']}")
+    daily = read_parquet(
+        spark, os.path.join(state_path, f"daily_v{man['version']}")
     ).withColumn(
         "n_active",
         F.col("n_new") + F.col("n_retained") + F.col("n_resurrected"),

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.wikipedia import parse_raw_line, synthesize_raw_line
+from ..session import read_parquet
 from .jobs import WATERMARK
 
 
@@ -103,7 +104,7 @@ def run_wikipedia_topology(
     q1.awaitTermination(timeout_sec)
 
     raw_stream = spark.readStream.schema(
-        spark.read.parquet(raw_topic).schema
+        read_parquet(spark, raw_topic).schema
     ).parquet(raw_topic)
     q2 = (
         parser_job(raw_stream)
@@ -117,6 +118,6 @@ def run_wikipedia_topology(
     q2.awaitTermination(timeout_sec)
 
     edits_stream = spark.readStream.schema(
-        spark.read.parquet(edits_topic).schema
+        read_parquet(spark, edits_topic).schema
     ).parquet(edits_topic)
     return stats_job(edits_stream)

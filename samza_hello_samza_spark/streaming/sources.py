@@ -32,7 +32,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,7 +43,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import normalize_nanos_ts
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     # file streaming sources need a directory; pathGlobFilter narrows
     # the listing to the events table within the sf dir.
     stream = (
@@ -58,7 +58,7 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-streaming source over the documents table — the live-ingest
     path of the curation pipeline (docs arrive, get gated and deduped
     continuously instead of in nightly batches)."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
+    schema = read_parquet(spark, os.path.join(sf_dir, "documents.parquet")).schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

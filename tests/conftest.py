@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import math
 import os
+import time
+import uuid
 
 import duckdb
 import pytest
@@ -91,3 +93,29 @@ def assert_matches_oracle(spark, duck, fn, sql, sf_dir=SF_DIR):
         (s, d) for s, d in zip(spark_rows, duck_rows) if s != d
     ]
     assert not mismatches, f"first value mismatches: {mismatches[:5]}"
+
+
+def jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through the status tracker by
+    job group. A sentinel job in a second group is waited for first:
+    the tracker is fed by the listener bus in event order, so once the
+    sentinel shows, every job ``fn`` started shows too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    sentinel = group + "-sentinel"
+    sc.setJobGroup(group, "jobs_started")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setJobGroup(sentinel, "jobs_started sentinel")
+    try:
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "sentinel job never reached the tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))

@@ -23,7 +23,7 @@ import re
 import pytest
 
 from samza_hello_samza_spark.registry import all_queries
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_started
 
 QUERIES = all_queries()
 
@@ -34,7 +34,6 @@ NONEQUI_OK = {
     "dedup_embedding",      # all-pairs cosine calibration baseline
     "q22_idle_customers",   # 1-row scalar-subquery broadcast
     "q11_important_parts",  # 1-row value-threshold scalar broadcast
-    "wikipedia_stats",      # triangular join over tiny bucket totals (prefix sum)
     "nation_revenue_share",  # 1-row global-total broadcast
     "customer_value_segments",  # 1-row quantile-thresholds broadcast
     "events_funnel",        # three 1-row stage counts broadcast-crossed
@@ -171,6 +170,14 @@ def test_no_unplanned_cartesian(spark, name):
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name} has an undeclared non-equi join"
         )
+
+
+def test_wikipedia_stats_builds_lazily(spark):
+    """The running total is one window over the windowed aggregate, so
+    building the DataFrame materialises nothing. The first build warms
+    the schema memo; the second must start no Spark job at all."""
+    QUERIES["wikipedia_stats"](spark, SF_DIR)
+    assert jobs_started(spark, lambda: QUERIES["wikipedia_stats"](spark, SF_DIR)) == 0
 
 
 @pytest.mark.parametrize("name", sorted(TOPK & set(QUERIES)))
