@@ -969,10 +969,12 @@ def hybrid_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches corpus text or raw-vector bytes beyond a constant-size
     rerank.
 
-    - lexical: ``bm25_wand_topk`` over the tiered BM25 posting layout
-      (impact-bound two-phase probe — the rare term's list read
-      whole, common terms' low tiers θ-pruned; telemetry in
-      ``bm25_wand_topk.last_stats``), top-20 by (bm25 DESC, doc_id);
+    - lexical: ``bm25_batch_wand_topk`` over the tiered BM25 posting
+      layout, the query as a batch of one (impact-bound two-phase
+      probe — the rare term's list read whole, common terms' low
+      tiers θ-pruned; telemetry in
+      ``bm25_batch_wand_topk.last_stats``), top-20 by (bm25 DESC,
+      doc_id);
     - vector: integer-ADC top-``SQ8_RERANK_M`` shortlist over the
       committed SQ8 code words (manifest-resolved snapshot, frozen
       bounds — DIM bytes/vector, the raw ``v`` column never in the
@@ -1036,13 +1038,13 @@ def hybrid_topk_from_layouts(
     both legs."""
     from pyspark.sql import Window
 
-    from ..sources.inverted import bm25_wand_topk
+    from ..sources.inverted import bm25_batch_wand_topk
     from .retrieval import BM25_TOP, HYBRID_TOP, RRF_K
     from . import ann_index
 
     lex = (
-        bm25_wand_topk(
-            spark, bm25_index_dir, list(terms), BM25_TOP, attr_eq=attr_eq
+        bm25_batch_wand_topk(
+            spark, bm25_index_dir, (tuple(terms),), BM25_TOP, attr_eq=attr_eq
         )
         .select("doc_id", "bm25")
         .withColumn(
@@ -1061,11 +1063,10 @@ def hybrid_topk_from_layouts(
     # hybrid probe should execute ONLY the WAND accumulator/candidate
     # actions plus the lazy final plan — pricing, query vector, codec
     # meta, and manifest all serve from restart-safe plain-data caches.
-    from ..sources.inverted import bm25_wand_topk as _wand
-
+    wand_stats = bm25_batch_wand_topk.last_stats
     hybrid_topk_from_layouts.last_stats = {
-        "wand_round_trips": _wand.last_stats.get("n_round_trips"),
-        "wand_pricing_cached": _wand.last_stats.get("pricing_cached"),
+        "wand_round_trips": wand_stats.get("n_round_trips"),
+        "wand_pricing_cached": wand_stats.get("pricing_cached"),
         "sq8_meta_cached": ann_index.read_sq8_meta.last_cached,
         "manifest_cached": (
             True if man_supplied else ann_index.read_index_manifest.last_cached
@@ -1128,15 +1129,16 @@ def hybrid_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     r10 #2). A post-filter of unfiltered top-k lists under-fills and
     mis-ranks; this ranks the filtered universe on each modality:
 
-    - lexical: ``bm25_wand_topk(attr_eq=("label", FILTER_LABEL))``
+    - lexical: ``bm25_batch_wand_topk(attr_eq=("label",
+      FILTER_LABEL))`` on the query as a batch of one,
       over the ATTRIBUTE-BEARING posting layout
       (``_documents_bm25_label_index`` — label denormalized onto
       every posting row at build time, so the equality pushes to the
       posting parquet scan, and the ``_impacts`` sidecar is
       SEGMENTED per label). The filter rides every read: phase 1
       (θ becomes the k-th best partial among ALLOWED docs), phase 2
-      completion, and the fallback — a filtered-out doc can never be
-      resurrected. Pricing reads the label's own sidecar segment:
+      completion, and the unpruned route — a filtered-out doc can
+      never be resurrected. Pricing reads the label's own sidecar segment:
       bounds/slack are maxima over the allowed subset (admissible for
       it, and tight enough to actually beat the filtered θ), and
       blocks holding no allowed posting leave the read set entirely —
@@ -1468,8 +1470,9 @@ def hybrid_batch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned read per modality for the WHOLE batch.
 
     - lexical: ``bm25_batch_wand_topk`` — per-query impact-bound
-      routing over the tiered posting layout (ONE phase-1 tier read
-      for the union terms), top-``BM25_BATCH_TOP`` per query;
+      routing over the tiered posting layout (ONE phase-1 and ONE
+      phase-2 tier read for the union terms, serving pruned and
+      unpruned queries alike), top-``BM25_BATCH_TOP`` per query;
     - vector: ONE committed-code scan scores all queries
       (``adc_batch_candidates`` GEMM kernel), per-query ADC
       top-``SQ8_RERANK_M``

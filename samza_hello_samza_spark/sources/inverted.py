@@ -409,10 +409,6 @@ def phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 WAND_TIERS = 3
 WAND_TIER_HI = 0.60  # s ≥ HI → tier 0
 WAND_TIER_MID = 0.45  # s ≥ MID → tier 1, else tier 2
-#: completion-phase cap: if more docs than this could still reach the
-#: top-k, the two-phase probe degrades to the full read (correct,
-#: just unpruned) instead of collecting an unbounded id list.
-WAND_CANDIDATE_CAP = 4096
 #: MaxScore essential-list rule: a term whose df ≤ this fraction of
 #: the corpus is read whole in phase 1 (short list, high idf — the
 #: postings that decide the top-k); commoner terms are tier-skipped.
@@ -727,96 +723,6 @@ def bm25_postings_updater(
     )
 
 
-def bm25_topk_from_index(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    top: int,
-    where: F.Column | None = None,
-) -> DataFrame:
-    """Okapi BM25 top-``top`` for ``terms`` served from the layout:
-    ≤|terms| of ``N_TBUCKETS`` bucket dirs listed, word filter pushed
-    to parquet, ``df`` counted from the pruned read itself, corpus
-    stats from the sidecar — identical scores to the scan path (same
-    expressions, same 4-dp round + doc_id tiebreak), with per-query
-    cost ∝ the query terms' postings, never the corpus.
-
-    ``where`` (r11): a metadata predicate over attr columns the
-    layout denormalizes (``build_bm25_index(attr_cols=...)``) —
-    filtered retrieval's "top-k among allowed docs". The Lucene
-    filter contract: scores are UNCHANGED (idf from corpus-wide df —
-    computed from the pruned read BEFORE the predicate — and sidecar
-    N/avgdl); only the ranked universe shrinks. A post-filter of an
-    unfiltered top-k would UNDER-fill; this ranks the filtered set."""
-    import json as _json
-
-    from ..functions.hints import maybe_broadcast
-    from ..operators.retrieval import BM25_B, BM25_K1
-
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        # empty query: the typed empty ranking — a streamed query with
-        # no terms must not crash the serving tier (isin() with zero
-        # args raises), it must contribute an empty lexical leg
-        return spark.createDataFrame(
-            [], "doc_id LONG, bm25 DOUBLE, n_terms_matched LONG"
-        )
-    with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
-        st = _json.load(fh)
-    buckets = term_buckets(spark, list(set(terms)))
-    p = (
-        read_parquet(spark, index_dir)
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("word").isin(*terms))
-    )
-    # corpus-wide df (score-identical to the unfiltered probe) —
-    # BEFORE the metadata predicate cuts the ranked universe. Read
-    # from the |vocab|-sized ``_impacts`` sidecar (``n_postings``
-    # sums to the exact df — the same fold WAND prices idf from, and
-    # summing across attr segments re-aggregates to the corpus-wide
-    # count) instead of a second pass over the pruned postings: one
-    # posting read per probe, not two (guide §2.1). Same integers →
-    # same idf, bit-for-bit. r11: the df values cache as plain floats
-    # per layout fingerprint (``_term_df_map``), so a warm probe's
-    # plan carries a LOCAL (word, df) relation — no sidecar scan in
-    # the serving path at all.
-    dfm = _term_df_map(spark, index_dir, terms)
-    if dfm is not None:
-        df = _df_relation(spark, dfm)
-    else:  # degenerate empty layout: keep the in-plan derivation
-        df = p.groupBy("word").agg(
-            F.count(F.lit(1)).cast("double").alias("df")
-        )
-    if where is not None:
-        p = p.filter(where)
-    scored = (
-        p.join(maybe_broadcast(df), "word")
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(st["n_docs"]) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                + 1.0
-            ),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (BM25_K1 + 1))
-            / (
-                F.col("tf")
-                + BM25_K1
-                * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(st["avgdl"]))
-            ),
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.round(F.sum("term_score"), 4).alias("bm25"),
-            F.count(F.lit(1)).alias("n_terms_matched"),
-        )
-    )
-    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(top)
-
-
 def _term_bucket_map(spark: SparkSession, terms: list[str]) -> dict[str, int]:
     """word → layout bucket, by the engine's own xxhash64 on a
     |terms|-row local relation (``term_buckets``' map-shaped twin)."""
@@ -897,29 +803,69 @@ def _wand_pricing(
         stats["pricing_cached"] = False
     if plain is None:
         return None
-    return {**plain, **_wand_session_objects(spark, plain)}
+    return {**plain, **_phase_conds(plain)}
 
 
-def _wand_session_objects(spark: SparkSession, plain: dict) -> dict:
-    """Build the session-bound probe objects (the broadcast query
-    relation and the phase filters) from a PLAIN pricing dict — per
-    call, cached or not: |terms|-row createDataFrame + pure Column
-    construction, negligible next to the pricing jobs it skips, and
-    it keeps the cache restart-safe (never a dead plan)."""
-    info, idf, wslack = plain["info"], plain["idf"], plain["wslack"]
+def _phase_conds(plain: dict) -> dict:
+    """The phase-1/phase-2 posting filters of a PLAIN pricing dict —
+    pure Column construction per call, cached or not, so the cache
+    stays restart-safe (never a dead plan)."""
     p1_tiers = plain["p1_tiers"]
     p1_cond = None
     p2_cond = None
-    for w in info:
+    for w in plain["info"]:
         c1 = (F.col("word") == w) & (F.col("tier").isin(sorted(p1_tiers[w])))
         p1_cond = c1 if p1_cond is None else (p1_cond | c1)
         c2 = (F.col("word") == w) & (~F.col("tier").isin(sorted(p1_tiers[w])))
         p2_cond = c2 if p2_cond is None else (p2_cond | c2)
-    qinfo = spark.createDataFrame(
-        [(w, idf[w], wslack[w]) for w in info],
-        "word STRING, idf DOUBLE, wslack DOUBLE",
-    )
-    return {"qinfo": qinfo, "p1_cond": p1_cond, "p2_cond": p2_cond}
+    return {"p1_cond": p1_cond, "p2_cond": p2_cond}
+
+
+def _maxscore_split(
+    info: dict[str, dict[int, tuple]],
+    dfreq: dict[str, float],
+    n_corpus: float,
+    avgdl: float,
+) -> tuple[dict, dict, dict, dict]:
+    """The MaxScore split of a term set's (word → tier → (max_tf,
+    min_dl, ...)) blocks — the one derivation the serving probe and
+    the tier sweeps share. Returns (idf, ub, p1_tiers, wslack):
+
+    - idf from the exact df (corpus-wide — the filter contract);
+    - ub: the admissible per-block upper bound idf·s(max_tf, min_dl)
+      under the CURRENT avgdl;
+    - p1_tiers: ESSENTIAL (rare, high-idf) terms' posting lists are
+      short — read them whole in phase 1, so every doc carrying a rare
+      term is priced exactly where it matters most. Common terms read
+      only their best-priced tier; their remaining tiers are the only
+      slack left, which is what makes θ beat it on the query class
+      impact-ordering exists for (rare+common mixes);
+    - wslack: per word, the best bound among its UNREAD tiers — a doc
+      missing w in phase 1 holds at most one posting there."""
+    import math
+
+    idf = {
+        w: math.log((n_corpus - dfreq[w] + 0.5) / (dfreq[w] + 0.5) + 1.0)
+        for w in info
+    }
+    ub = {
+        (w, t): idf[w] * _bm25_sat(v[0], v[1], avgdl)
+        for w, tiers in info.items()
+        for t, v in tiers.items()
+    }
+    p1_tiers = {
+        w: (
+            set(tiers)
+            if dfreq[w] <= WAND_ESSENTIAL_DF_FRAC * n_corpus
+            else {max(tiers, key=lambda t, _w=w: (ub[(_w, t)], -t))}
+        )
+        for w, tiers in info.items()
+    }
+    wslack = {
+        w: max((ub[(w, t)] for t in tiers if t not in p1_tiers[w]), default=0.0)
+        for w, tiers in info.items()
+    }
+    return idf, ub, p1_tiers, wslack
 
 
 def _wand_pricing_uncached(
@@ -933,14 +879,11 @@ def _wand_pricing_uncached(
 ) -> dict | None:
     """Price every (word, tier) block of ``terms`` from the
     ``_impacts`` sidecar alone — zero posting bytes: per-word df
-    (summed block n_postings — exact), idf, the admissible per-block
-    upper bound idf·s(max_tf, min_dl) under the CURRENT avgdl, the
-    MaxScore phase-1 split (ESSENTIAL rare terms read whole; common
-    terms read only their best-priced tier), the per-word unread-tier
-    slack, and the phase-1 paths/filter/relation. Shared by the
-    single-query and batch impact-bound probes; telemetry fields are
-    written into ``stats``. Returns None when no query term has any
-    block (nothing to price).
+    (summed block n_postings — exact), the MaxScore split of the
+    blocks (``_maxscore_split``: idf, bounds, phase-1 tiers, slack)
+    and the phase-1/phase-2 paths. Telemetry fields are written into
+    ``stats``. Returns None when no query term has any block (nothing
+    to price).
 
     ``attr_eq`` (r11, filtered retrieval over an attr-bearing layout
     with a SEGMENTED sidecar): df/idf stay corpus-wide (summed across
@@ -950,8 +893,6 @@ def _wand_pricing_uncached(
     blocks holding no allowed posting drop out of the read set
     entirely (no allowed doc has a posting there — skipping reads
     nothing an allowed doc's score needs)."""
-    import math
-
     bmap = _term_bucket_map(spark, terms)
     imp_dir = _impacts_dir(index_dir)
     imp_paths = sorted(
@@ -1003,35 +944,7 @@ def _wand_pricing_uncached(
         info = {w: tiers for w, tiers in info.items() if tiers}
         if not info:
             return None
-    idf = {
-        w: math.log((n_corpus - dfreq[w] + 0.5) / (dfreq[w] + 0.5) + 1.0)
-        for w in info
-    }
-    ub = {
-        (w, t): idf[w] * _bm25_sat(mx, mn, avgdl)
-        for w, tiers in info.items()
-        for t, (mx, mn, _n, _ns) in tiers.items()
-    }
-    # MaxScore split: ESSENTIAL (rare, high-idf) terms' posting lists
-    # are short — read them whole in phase 1, so every doc carrying a
-    # rare term is priced exactly where it matters most. Common terms
-    # read only their best-priced tier; their remaining tiers are the
-    # only slack left, which is what makes θ beat it on the query
-    # class impact-ordering exists for (rare+common mixes).
-    p1_tiers = {
-        w: (
-            set(tiers)
-            if dfreq[w] <= WAND_ESSENTIAL_DF_FRAC * n_corpus
-            else {max(tiers, key=lambda t: (ub[(w, t)], -t))}
-        )
-        for w, tiers in info.items()
-    }
-    # per-word slack: the best bound among the word's UNREAD tiers —
-    # a doc missing w in phase 1 holds at most one posting there
-    wslack = {
-        w: max((ub[(w, t)] for t in tiers if t not in p1_tiers[w]), default=0.0)
-        for w, tiers in info.items()
-    }
+    idf, ub, p1_tiers, wslack = _maxscore_split(info, dfreq, n_corpus, avgdl)
     # exact block sizes from the sidecar: the bytes-read claim in
     # numbers — phase 1 scores n_postings_p1 rows; the remaining
     # n_postings_deferred are never read at full width (skipped
@@ -1068,239 +981,16 @@ def _wand_pricing_uncached(
             )
         }
     )
-    # plain data only (cache-safe across session restarts): the
-    # qinfo frame and phase filter Columns are rebuilt per call by
-    # _wand_session_objects.
+    # plain data only (cache-safe across session restarts): the phase
+    # filter Columns are rebuilt per call by _phase_conds.
     return {
         "info": info,
-        "dfreq": dfreq,
         "idf": idf,
-        "ub": ub,
         "p1_tiers": p1_tiers,
         "wslack": wslack,
         "p1_paths": p1_paths,
-        "p2_pairs": p2_pairs,
         "p2_paths": p2_paths,
     }
-
-
-def bm25_wand_topk(
-    spark: SparkSession,
-    index_dir: str,
-    terms: list[str],
-    top: int,
-    attr_eq: tuple[str, object] | None = None,
-) -> DataFrame:
-    """Okapi BM25 top-``top`` via impact-bound two-phase pruning — the
-    WAND/MaxScore family adapted to the tiered posting layout. Same
-    relation as ``bm25_topk_from_index`` (same expressions, same 4-dp
-    round + doc_id tiebreak, SAME ORACLE — the bound is admissible, so
-    the top-k is exact), but the probe reads posting BLOCKS in two
-    phases instead of scoring every posting of every query term:
-
-    1. Price every (word, tier) block from the ``_impacts`` sidecar
-       alone (idf from summed block df, saturation bound from the
-       block's (max_tf, min_dl) under the CURRENT avgdl — admissible
-       because saturation is ↑ in tf, ↓ in dl). Read ONLY each term's
-       best-priced tier (structurally: the probe lists those tier
-       directories and no others) and aggregate per-doc partial
-       scores. A doc holds at most ONE posting per word, so a term
-       seen in phase 1 contributes EXACTLY — the remaining uncertainty
-       per doc is only over its unseen terms' other-tier bounds.
-    2. θ = the k-th best phase-1 partial (a lower bound on the true
-       k-th score). Docs with no phase-1 posting score ≤ the total
-       unseen-tier slack; when slack < θ they are skipped WITHOUT
-       READING THEIR BLOCKS — this is the WAND skip. Seen docs whose
-       partial + per-doc slack < θ are dropped too. The survivors
-       (≤ ``WAND_CANDIDATE_CAP``, else graceful full-read fallback)
-       are completed EXACTLY from the lower-tier blocks via a
-       broadcast semi-join on the candidate ids (the batch variant's
-       shape — never a growing ``IN`` literal), and the final rank
-       runs over completed scores only.
-
-    When the bound cannot prune (slack ≥ θ, fewer than k phase-1
-    docs, or an over-cap candidate set) the probe falls back to the
-    full pruned read — never wrong, just unpruned. Per-call telemetry
-    lands in ``bm25_wand_topk.last_stats`` (blocks read vs skipped,
-    θ, slack, candidate counts, fallback reason) and is asserted in
-    tests.
-
-    Scale: phase 1 reads the high-impact tier of each query term —
-    the fraction of each posting list that decides the top-k — and
-    phase 2 reads a candidate-pruned slice of the rest; at real query
-    volume over 100 TB this is the difference between a search tier
-    and a batch job. All driver-side state is bounded: |terms|·tiers
-    sidecar rows, the k-th score, ≤CAP candidate ids.
-
-    Reference: the per-word KeyValueStore serving contract of
-    WikipediaStatsStreamTask.java:30-75 at toy scale; Broder et al.
-    (CIKM'03) WAND and the MaxScore family for the bound discipline.
-
-    ``attr_eq`` (r11, filtered retrieval): an ``(attr, value)``
-    equality over a metadata column the layout denormalizes onto
-    postings AND segments the ``_impacts`` sidecar by
-    (``build_bm25_index(attr_cols=...)``). The predicate is applied
-    to EVERY posting read — phase 1 (so θ is the k-th best partial
-    AMONG ALLOWED DOCS), phase 2 completion, and the fallback — so a
-    filtered-out doc can never enter the accumulator, survive the θ
-    cut, or be resurrected by candidate completion. Pricing reads the
-    predicate's own sidecar SEGMENT: bounds/slack are maxima over the
-    allowed subset (admissible for it by definition, and TIGHT — a
-    corpus-wide bound would rarely beat the filtered θ), and blocks
-    with no allowed posting leave the read set entirely. Scores are
-    UNCHANGED from the unfiltered probe (idf from df summed across
-    all segments; sidecar N/avgdl — the Lucene filter contract);
-    only the ranked universe shrinks.
-    """
-    import json as _json
-    import math
-
-    eps = 1e-9
-    with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
-        st = _json.load(fh)
-    n_corpus = st["n_docs"]
-    avgdl = st["avgdl"] or 1.0
-    terms = list(dict.fromkeys(terms))
-    where = None if attr_eq is None else (F.col(attr_eq[0]) == F.lit(attr_eq[1]))
-
-    def _fallback(reason: str, stats: dict) -> DataFrame:
-        stats["fallback"] = reason
-        stats.setdefault(
-            "n_round_trips", stats.get("n_pricing_round_trips", 0)
-        )
-        bm25_wand_topk.last_stats = stats
-        return bm25_topk_from_index(spark, index_dir, terms, top, where=where)
-
-    stats: dict = {"fallback": None}
-    pr = _wand_pricing(
-        spark, index_dir, terms, avgdl, n_corpus, stats, attr_eq=attr_eq
-    )
-    if pr is None:
-        return _fallback("no_blocks", stats)
-    info, p1_tiers, wslack = pr["info"], pr["p1_tiers"], pr["wslack"]
-    total_slack = sum(wslack.values())
-    stats["total_slack"] = round(total_slack, 6)
-    p1_paths = pr["p1_paths"]
-    stats["p1_dirs"] = p1_paths
-    if not p1_paths:
-        return _fallback("no_p1_dirs", stats)
-    p1_cond = pr["p1_cond"]
-    qinfo = pr["qinfo"]
-    contrib = (
-        read_parquet(spark, *p1_paths, basePath=index_dir)
-        .filter(p1_cond if where is None else (p1_cond & where))
-        .join(F.broadcast(qinfo), "word")
-        .select(
-            "doc_id",
-            (F.col("idf") * _bm25_sat(F.col("tf"), F.col("dl"), avgdl)).alias("c"),
-            "wslack",
-        )
-    )
-    agg1 = contrib.groupBy("doc_id").agg(
-        F.sum("c").alias("partial"),
-        F.sum("wslack").alias("seen_slack"),
-        F.count(F.lit(1)).alias("n_seen"),
-    )
-    # θ AND the candidate survivors from ONE TakeOrdered job (r12,
-    # VERDICT r11 #6 — the probe previously spent an accumulator
-    # localCheckpoint plus a θ/candidate collect, i.e. two driver
-    # round-trips and a materialized block set, on the same decision).
-    # Order by the candidate criterion itself ("upper" = partial +
-    # unseen slack): every true top-k-by-partial row has upper ≥
-    # partial ≥ θ, so the top-(CAP+1) rows by upper contain (a) the
-    # whole top-k by partial — θ is computable in Python from the
-    # collected rows — and (b) EVERY candidate (any row above the θ
-    # cut outranks every row below it in upper), or else more than CAP
-    # survivors, which is exactly the over-cap fallback. Bounded
-    # driver state: ≤ CAP+1 rows, same cap as before.
-    upper = F.col("partial") + F.lit(total_slack) - F.col("seen_slack")
-    cand_rows = (
-        agg1.select("doc_id", "partial", "seen_slack", "n_seen")
-        .orderBy(upper.desc(), F.asc("doc_id"))
-        .limit(WAND_CANDIDATE_CAP + 1)
-        .collect()
-    )
-    # serving round-trip telemetry (r11, VERDICT r10 #6): pricing jobs
-    # (0 on a cache hit) + the fused θ/candidate TakeOrdered — the
-    # probe's total driver actions before the lazy final plan. The
-    # fallback paths inherit whatever ran before they bailed.
-    stats["n_round_trips"] = stats.get("n_pricing_round_trips", 0) + 1
-    if len(cand_rows) < top:
-        # fewer than k phase-1 docs: θ is not a valid k-th bound
-        return _fallback("under_k", stats)
-    # θ = the k-th best phase-1 partial — identical to the previous
-    # in-plan (orderBy partial DESC, doc_id ASC).limit(top).min():
-    # duplicates count, and the k-th largest VALUE needs no tiebreak.
-    theta = sorted((r.partial for r in cand_rows), reverse=True)[top - 1]
-    stats["theta"] = round(theta, 6)
-    if total_slack >= theta - (WAND_ROUND_MARGIN + eps):
-        # an entirely-unseen doc could still reach the (rounded)
-        # top-k: no block is provably skippable
-        return _fallback("slack_ge_theta", stats)
-    cand_rows = [
-        r
-        for r in cand_rows
-        if r.partial + total_slack - r.seen_slack
-        >= theta - (WAND_ROUND_MARGIN + eps)
-    ]
-    stats["n_candidates"] = len(cand_rows)
-    if len(cand_rows) > WAND_CANDIDATE_CAP:
-        return _fallback("over_cap", stats)
-    n_terms_avail = len(info)
-    need = sorted(r.doc_id for r in cand_rows if r.n_seen < n_terms_avail)
-    stats["n_need_completion"] = len(need)
-
-    # candidate relation: the collected rows themselves (r12 — the
-    # accumulator is no longer kept alive for the final plan; its
-    # surviving ≤CAP rows carry partial/n_seen already). Completion
-    # ids stay a broadcast SEMI-JOIN, the same shape as the batch
-    # variant — a ≤4096-element literal ``isin`` is the literal-bloat
-    # family the bloom work measured (codegen cost grows with the
-    # list), a ≤4096-row broadcast hash join does not.
-    cand_df = spark.createDataFrame(
-        [(int(r.doc_id), float(r.partial), int(r.n_seen)) for r in cand_rows],
-        "doc_id LONG, partial DOUBLE, n_seen LONG",
-    )
-
-    # ---- phase 2: complete ONLY the surviving docs ----
-    if need and pr["p2_paths"]:
-        stats["p2_dirs"] = pr["p2_paths"]
-        need_df = F.broadcast(
-            spark.createDataFrame([(int(d),) for d in need], "doc_id LONG")
-        )
-        add = (
-            read_parquet(spark, *pr["p2_paths"], basePath=index_dir)
-            .filter(
-                pr["p2_cond"] if where is None else (pr["p2_cond"] & where)
-            )
-            .join(need_df, "doc_id", "left_semi")
-            .join(F.broadcast(qinfo), "word")
-            .groupBy("doc_id")
-            .agg(
-                F.sum(
-                    F.col("idf") * _bm25_sat(F.col("tf"), F.col("dl"), avgdl)
-                ).alias("c2"),
-                F.count(F.lit(1)).alias("n2"),
-            )
-        )
-    else:
-        stats["p2_dirs"] = []
-        add = spark.createDataFrame([], "doc_id LONG, c2 DOUBLE, n2 LONG")
-    bm25_wand_topk.last_stats = stats
-
-    scored = cand_df.join(add, "doc_id", "left").select(
-        "doc_id",
-        F.round(
-            F.col("partial") + F.coalesce(F.col("c2"), F.lit(0.0)), 4
-        ).alias("bm25"),
-        (F.col("n_seen") + F.coalesce(F.col("n2"), F.lit(0)))
-        .cast("long")
-        .alias("n_terms_matched"),
-    )
-    return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(top)
-
-
-bm25_wand_topk.last_stats = {}
 
 
 #: pinned query batch for ranked batch retrieval: five queries over
@@ -1321,18 +1011,29 @@ def bm25_batch_from_index(
     index_dir: str,
     queries: tuple[tuple[str, ...], ...],
     top: int,
+    attr_eq: tuple[str, object] | None = None,
 ) -> DataFrame:
-    """Okapi BM25 top-``top`` for a BATCH of queries from ONE pruned
-    read — the lexical sibling of ``ann_batch_topk``: offline
-    retrieval (training-data curation, eval-set mining) never runs
-    queries one at a time, so the layout is probed once for the
-    UNION of all query terms (≤|union| of ``N_TBUCKETS`` dirs
-    listed), a broadcast (query_id, word) relation fans the postings
-    out to their queries, and per-query ranking is one window over
-    the scored rows. Per-batch cost ∝ the union terms' postings —
-    independent of both corpus size and query count's corpus scans.
-    At real query volume the window's ``query_id`` partitioning is
-    thousands-wide; skew per query is bounded by its terms' postings.
+    """Okapi BM25 top-``top`` per query, EXHAUSTIVE, for a batch of
+    queries from ONE pruned read — the reference ranking the θ-routed
+    ``bm25_batch_wand_topk`` must equal row-for-row, and the lexical
+    sibling of ``ann_batch_topk``. A single query is a batch of one,
+    ``(tuple(terms),)``; every query is a term SET (a repeated term
+    counts once). The layout is probed once for the UNION of all
+    query terms (≤|union| of ``N_TBUCKETS`` dirs listed, word filter
+    pushed to parquet), a broadcast (query_id, word) relation fans the
+    postings out to their queries, and per-query ranking is one window
+    over the scored rows: same expressions, same 4-dp round + doc_id
+    tiebreak as the scan path. Per-batch cost ∝ the union terms'
+    postings — independent of corpus size. At real query volume the
+    window's ``query_id`` partitioning is thousands-wide; skew per
+    query is bounded by its terms' postings.
+
+    ``attr_eq=(col, value)``: filtered retrieval over an attr-bearing
+    layout (``build_bm25_index(attr_cols=...)``) — "top-k among
+    allowed docs". The Lucene filter contract: scores are UNCHANGED
+    (idf from the corpus-wide df, sidecar N/avgdl); only the ranked
+    universe shrinks. A post-filter of an unfiltered top-k would
+    under-fill; this ranks the filtered set.
     """
     import json as _json
 
@@ -1343,10 +1044,12 @@ def bm25_batch_from_index(
 
     with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
         st = _json.load(fh)
+    queries = [tuple(dict.fromkeys(q)) for q in queries]
     union_terms = sorted({t for q in queries for t in q})
     if not union_terms:
         # empty workload (e.g. an empty/all-empty-text corpus seeds
-        # the wide generator): the empty relation, typed like the plan
+        # the wide generator, or a streamed query with no terms): the
+        # empty relation, typed like the plan
         return spark.createDataFrame(
             [],
             "query_id BIGINT, doc_id LONG, bm25 DOUBLE, n_terms_matched BIGINT",
@@ -1359,15 +1062,12 @@ def bm25_batch_from_index(
     )
     # per-term df from the |vocab|-sized ``_impacts`` sidecar instead
     # of a second pass over the pruned postings: ``n_postings`` rows
-    # SUM to the term's exact df by construction (the sidecar is the
-    # fold the WAND probe already prices idf from), so this removes a
-    # whole posting read + shuffle per batch call (guide §2.1 — the
-    # r11 plan audit showed the union-term postings scanned twice,
-    # once for df and once for scoring). Same integers → same idf.
-    # r11: cached as plain floats per layout fingerprint
-    # (``_term_df_map``) — a warm batch's plan broadcasts a LOCAL
-    # (word, df) relation instead of rebuilding the sidecar
-    # aggregation subtree inside every probe.
+    # SUM to the term's exact df by construction (summing across attr
+    # segments re-aggregates to the corpus-wide count), so this removes
+    # a whole posting read + shuffle per call (guide §2.1). Same
+    # integers → same idf. Cached as plain floats per layout
+    # fingerprint (``_term_df_map``) — a warm call's plan broadcasts a
+    # LOCAL (word, df) relation, no sidecar scan in the serving path.
     dfm = _term_df_map(spark, index_dir, union_terms)
     if dfm is not None:
         df_tbl = _df_relation(spark, dfm)
@@ -1375,6 +1075,9 @@ def bm25_batch_from_index(
         df_tbl = p.groupBy("word").agg(
             F.count(F.lit(1)).cast("double").alias("df")
         )
+    if attr_eq is not None:
+        # AFTER df: the predicate cuts the ranked universe, not idf
+        p = p.filter(F.col(attr_eq[0]) == F.lit(attr_eq[1]))
     qterms = spark.createDataFrame(
         [(i, t) for i, q in enumerate(queries) for t in q],
         "query_id INT, word STRING",
@@ -1415,6 +1118,15 @@ def bm25_batch_from_index(
             "bm25",
             "n_terms_matched",
         )
+    )
+
+
+def _ranked_one(batch: DataFrame, top: int) -> DataFrame:
+    """A batch-of-one result as the single-query ranking: query_id
+    dropped, ordered by (bm25 DESC, doc_id) — a TakeOrdered over at
+    most ``top`` rows."""
+    return (
+        batch.drop("query_id").orderBy(F.desc("bm25"), F.asc("doc_id")).limit(top)
     )
 
 
@@ -1704,82 +1416,111 @@ def bm25_batch_wand_topk(
     index_dir: str,
     queries: tuple[tuple[str, ...], ...],
     top: int,
-    collect_stats: bool | None = None,
+    attr_eq: tuple[str, object] | None = None,
 ) -> DataFrame:
-    """Per-query impact-bound pruning composed with the batch fanout —
-    ``bm25_wand_topk``'s discipline at query volume: ONE phase-1 read
-    of the union terms' chosen tiers scores (query_id, doc_id)
-    partials, a per-query window prices θ_q (the k-th partial), and
-    each query is then routed by ITS OWN bound: prunable queries
-    (slack_q < θ_q) keep only the candidates that can still reach
-    their top-k — the (query, doc) accumulator shuffle shrinks to the
-    candidate set, which is the stage that dominates batch ranking at
-    100 TB — and complete them exactly from the lower tiers via a
-    semi-join (no driver doc-id list at batch width); non-prunable
-    queries complete UNPRUNED from the SAME two reads (r12: their
-    exact score is the phase-1 partial ⊕ their full phase-2
-    contributions via a full outer join — pre-r12 each fallback
-    subset re-read ALL tiers of its terms through a second
-    ``bm25_batch_from_index`` scan). Every query's result is EXACT
-    (the admissible-bound argument applies per query; the fallback
-    sum covers every posting of every query term exactly once —
-    p1_cond/p2_cond partition the (word, tier) space), so the
-    relation equals ``bm25_batch_from_index`` row-for-row and
-    answers to the same oracle. Driver state stays bounded: the
-    |union|·tiers sidecar rows, one θ row per query, the
-    prunable/fallback id split — never a doc list. Telemetry in
-    ``last_stats``."""
+    """Okapi BM25 top-``top`` per query via impact-bound two-phase
+    pruning — the WAND/MaxScore family on the tiered posting layout —
+    for a batch of queries served from ONE phase-1 and ONE phase-2
+    posting read. A single query is a batch of one,
+    ``(tuple(terms),)``; every query is a term SET (a repeated term
+    counts once). The relation equals ``bm25_batch_from_index``
+    row-for-row and answers to the same oracles: the bound is
+    admissible, so every query's top-k is exact.
+
+    1. Price every (word, tier) block of the union terms from the
+       ``_impacts`` sidecar alone (``_wand_pricing`` — zero posting
+       bytes) and read ONLY the phase-1 tiers of the MaxScore split
+       (rare terms whole, common terms their best-priced tier),
+       summing (query_id, doc_id) partials. A doc holds at most one
+       posting per word, so a term seen in phase 1 contributes
+       EXACTLY; the remaining uncertainty per doc is only over its
+       unseen terms' other-tier bounds.
+    2. One window pass over the partials yields, per query, θ_q (the
+       k-th best partial — a lower bound on the true k-th score), the
+       accumulator rows and the θ-surviving candidate rows: the only
+       driver round-trip after pricing. Each query is then routed by
+       ITS OWN bound: when slack_q (its terms' summed unread-tier
+       bounds) < θ_q, docs whose partial + unseen slack cannot reach
+       θ_q are dropped and the survivors complete from the lower tiers
+       via a semi-join ("pruned"). Otherwise — fewer than k phase-1
+       docs ("under_k") or slack_q ≥ θ_q ("slack_ge_theta") — the
+       query completes UNPRUNED from the SAME two reads: phase-1
+       partial ⊕ all its phase-2 contributions (p1_cond/p2_cond
+       partition the (word, tier) space, so every posting counts
+       exactly once). Pruning keeps a doc unless it is provably below
+       θ_q − ``WAND_ROUND_MARGIN``, so exactness holds under the 4-dp
+       rounding of the ranked contract.
+
+    Driver state stays bounded: |union|·tiers sidecar rows and one row
+    per query — never a doc id list, so no candidate cap. Telemetry in
+    ``last_stats``: pricing (blocks/postings per phase, cache hit,
+    round-trips), the accumulator and candidate row counts, the
+    phase-1/phase-2 dirs, and per query its route, θ_q and slack_q.
+
+    ``attr_eq=(col, value)``: filtered retrieval over an attr-bearing
+    layout (``build_bm25_index(attr_cols=...)``). The equality rides
+    EVERY posting read — phase 1 (θ_q is the k-th best partial among
+    allowed docs), phase 2 and the unpruned completion — so a
+    filtered-out doc can never enter the result. Pricing reads the
+    value's own sidecar SEGMENT (tight, admissible bounds; blocks with
+    no allowed posting leave the read set), while scores keep the
+    Lucene filter contract: idf from the corpus-wide df, only the
+    ranked universe shrinks.
+
+    Reference: the per-word KeyValueStore serving contract of
+    WikipediaStatsStreamTask.java:30-75 at toy scale; Broder et al.
+    (CIKM'03) WAND and the MaxScore family for the bound discipline.
+    """
     import json as _json
 
-    if collect_stats is None:
-        # default ON (bench/tests pin the crossover telemetry); a
-        # latency-sensitive serving caller passes False (or sets the
-        # env) to skip the two extra count() actions per probe.
-        collect_stats = os.environ.get("SPARK_GRAFT_WAND_STATS", "1") != "0"
-    eps = 1e-9
+    from pyspark.sql import Window
+
+    from ..functions.hints import DEFAULT_BROADCAST_BUDGET
+
+    margin = WAND_ROUND_MARGIN + 1e-9
     with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
         st = _json.load(fh)
     n_corpus = st["n_docs"]
     avgdl = st["avgdl"] or 1.0
+    queries = [tuple(dict.fromkeys(q)) for q in queries]
     union_terms = sorted({t for q in queries for t in q})
-    stats: dict = {"n_queries": len(queries)}
+    where = None if attr_eq is None else (F.col(attr_eq[0]) == F.lit(attr_eq[1]))
+    per_query = [{"route": "no_blocks", "theta": None, "slack": None} for _ in queries]
+    stats: dict = {"n_queries": len(queries), "queries": per_query}
+    bm25_batch_wand_topk.last_stats = stats
 
     def _all_fallback() -> DataFrame:
-        stats.update(n_prunable=0, n_fallback=len(queries))
-        bm25_batch_wand_topk.last_stats = stats
-        return bm25_batch_from_index(spark, index_dir, queries, top)
+        stats.update(
+            n_prunable=0,
+            n_fallback=len(queries),
+            n_round_trips=stats.get("n_pricing_round_trips", 0),
+        )
+        return bm25_batch_from_index(spark, index_dir, queries, top, attr_eq=attr_eq)
 
     if not union_terms:
         return _all_fallback()
-    pr = _wand_pricing(spark, index_dir, union_terms, avgdl, n_corpus, stats)
+    pr = _wand_pricing(
+        spark, index_dir, union_terms, avgdl, n_corpus, stats, attr_eq=attr_eq
+    )
     if pr is None or not pr["p1_paths"]:
         return _all_fallback()
-    info, wslack, qinfo = pr["info"], pr["wslack"], pr["qinfo"]
-    qwords = {
-        qid: [w for w in dict.fromkeys(q) if w in info]
-        for qid, q in enumerate(queries)
-    }
-    slack_q = {qid: sum(wslack[w] for w in ws) for qid, ws in qwords.items()}
+    stats["p1_dirs"] = pr["p1_paths"]
+    info, idf, wslack = pr["info"], pr["idf"], pr["wslack"]
+    qwords = [[w for w in q if w in info] for q in queries]
+    slack_q = [sum(wslack[w] for w in ws) for ws in qwords]
 
-    from pyspark.sql import Window
-
+    # the broadcast (query_id, word) fanout, carrying each word's
+    # priced idf and unread-tier slack
     qterms = spark.createDataFrame(
-        [(qid, w) for qid, ws in qwords.items() for w in ws],
-        "query_id INT, word STRING",
+        [(qid, w, idf[w], wslack[w]) for qid, ws in enumerate(qwords) for w in ws],
+        "query_id INT, word STRING, idf DOUBLE, wslack DOUBLE",
     )
-    contrib1 = (
-        read_parquet(spark, *pr["p1_paths"], basePath=index_dir)
-        .filter(pr["p1_cond"])
-        .join(F.broadcast(qinfo), "word")
-        .select(
-            "doc_id",
-            "word",
-            (F.col("idf") * _bm25_sat(F.col("tf"), F.col("dl"), avgdl)).alias("c"),
-            "wslack",
-        )
-    )
+    score = (F.col("idf") * _bm25_sat(F.col("tf"), F.col("dl"), avgdl)).alias("c")
     agg1 = (
-        contrib1.join(F.broadcast(qterms), "word")
+        read_parquet(spark, *pr["p1_paths"], basePath=index_dir)
+        .filter(pr["p1_cond"] if where is None else (pr["p1_cond"] & where))
+        .join(F.broadcast(qterms), "word")
+        .select("query_id", "doc_id", score, "wslack")
         .groupBy("query_id", "doc_id")
         .agg(
             F.sum("c").alias("partial"),
@@ -1787,48 +1528,80 @@ def bm25_batch_wand_topk(
             F.count(F.lit(1)).alias("n_seen"),
         )
         # consumed by θ, candidates and the final. Recomputable disk
-        # persist, not an eager localCheckpoint (r12, VERDICT r11
-        # #3/#4): the (query, doc) accumulator is corpus-linear, and
-        # the lazy persist folds its materialization into the θ job
-        # below — one driver round-trip fewer per batch call.
+        # persist, not an eager localCheckpoint: the (query, doc)
+        # accumulator is corpus-linear, and the lazy persist folds its
+        # materialization into the θ job below.
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    # the candidate criterion, shared by the θ pass's count and the
+    # candidate filter itself (same doubles → same rows)
+    survives = (
+        F.col("partial") + F.col("qslack") - F.col("seen_slack")
+        >= F.col("theta") - margin
+    )
+    qslack = spark.createDataFrame(
+        [(qid, float(s)) for qid, s in enumerate(slack_q) if qwords[qid]],
+        "query_id INT, qslack DOUBLE",
+    )
     # θ ranks by partial ALONE (no doc_id tiebreak): θ = the k-th
-    # largest VALUE, k = min(top, group size) and n_rows = the group
-    # size are all tie-invariant, and dropping the tiebreak column
-    # narrows the window exchange to (query_id, partial) — the
-    # accumulator is the batch's biggest shuffle (guide §2.3).
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("partial"))
-    # θ per query AND the accumulator-size telemetry from ONE window
-    # pass (r12, VERDICT r11 #3 — previously a separate agg1.count()
-    # job): rn ≤ top aggregates to exactly the old
-    # limit(top)→min/count pair, and count(*) per query sums to the
-    # old whole-relation count.
+    # largest VALUE, k = min(top, group size) and the group size are
+    # all tie-invariant. Both windows share the query_id partitioning,
+    # so the pass is ONE exchange of (query_id, partial, seen_slack);
+    # rows aggregate to θ_q, k, the accumulator size and the candidate
+    # count (the rows a pruned route keeps).
+    in_top = F.col("rn") <= top
     theta_rows = (
-        agg1.select("query_id", "partial")
-        .withColumn("rn", F.row_number().over(w_rank))
+        agg1.select("query_id", "partial", "seen_slack")
+        .withColumn(
+            "rn",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(F.desc("partial"))
+            ),
+        )
+        .withColumn(
+            "theta",
+            F.min(F.when(in_top, F.col("partial"))).over(
+                Window.partitionBy("query_id")
+            ),
+        )
+        .join(F.broadcast(qslack), "query_id")
         .groupBy("query_id")
         .agg(
-            F.min(F.when(F.col("rn") <= top, F.col("partial"))).alias("theta"),
-            F.count(F.when(F.col("rn") <= top, F.lit(1))).alias("k"),
+            F.min("theta").alias("theta"),
+            F.count(F.when(in_top, F.lit(1))).alias("k"),
             F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(survives, F.lit(1))).alias("n_cand"),
         )
         .collect()
     )  # bounded: one row per query
-    theta_q = {r.query_id: (r.theta, r.k) for r in theta_rows}
+    stats["n_round_trips"] = stats.get("n_pricing_round_trips", 0) + 1
+    by_q = {r.query_id: r for r in theta_rows}
     prunable, fallback = [], []
-    for qid, ws in qwords.items():
+    for qid, ws in enumerate(qwords):
         if not ws:
-            continue  # no in-corpus terms → no rows, like the batch plan
-        th = theta_q.get(qid)
-        if th and th[1] >= top and slack_q[qid] < th[0] - (
-            WAND_ROUND_MARGIN + eps
-        ):
-            prunable.append(qid)
+            continue  # no in-layout term → no rows, like the exhaustive plan
+        r = by_q.get(qid)
+        if r is None or r.k < top:
+            route = "under_k"  # θ is not a valid k-th bound
+        elif slack_q[qid] >= r.theta - margin:
+            route = "slack_ge_theta"  # an unseen doc could still reach top-k
         else:
-            fallback.append(qid)
-    stats.update(n_prunable=len(prunable), n_fallback=len(fallback))
-    bm25_batch_wand_topk.last_stats = stats
+            route = "pruned"
+        (prunable if route == "pruned" else fallback).append(qid)
+        per_query[qid] = {
+            "route": route,
+            "theta": r.theta if r is not None else None,
+            "slack": slack_q[qid],
+        }
+    # the (query, doc) accumulator is THE stage that dominates batch
+    # ranking at 100 TB: its size before the θ cut (≈ Σ_q df(q)) and
+    # the pruned queries' candidate rows after it, measured per call
+    stats.update(
+        n_prunable=len(prunable),
+        n_fallback=len(fallback),
+        n_accumulator_rows=sum(r.n_rows for r in theta_rows),
+        n_candidate_rows=sum(by_q[qid].n_cand for qid in prunable),
+    )
 
     parts = []
     w_final = Window.partitionBy("query_id").orderBy(
@@ -1847,76 +1620,50 @@ def bm25_batch_wand_topk(
             )
         )
 
-    cand = None
+    cand = cand_ids = None
     if prunable:
         qmeta = spark.createDataFrame(
-            [(qid, float(theta_q[qid][0]), float(slack_q[qid])) for qid in prunable],
+            [(qid, float(by_q[qid].theta), float(slack_q[qid])) for qid in prunable],
             "query_id INT, theta DOUBLE, qslack DOUBLE",
         )
+        # priced once: candidates feed phase 2 AND the final.
+        # Recomputable persist: recomputing = re-filtering the
+        # already-persisted accumulator, so nothing needs a lineage cut.
         cand = (
             agg1.join(F.broadcast(qmeta), "query_id")
-            .filter(
-                F.col("partial") + F.col("qslack") - F.col("seen_slack")
-                >= F.col("theta") - (WAND_ROUND_MARGIN + eps)
-            )
-            # priced once: candidates feed phase 2 AND the final.
-            # Recomputable persist (r12): recomputing = re-filtering
-            # the already-persisted accumulator, so nothing here needs
-            # a lineage cut.
+            .filter(survives)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        # the crossover telemetry (VERDICT r09 #6): the (query, doc)
-        # accumulator is THE stage that dominates batch ranking at
-        # 100 TB — record its size before the θ cut (matches ≈
-        # Σ_q df(q)) and after (candidates ≈ k·queries + slack), so
-        # the shrink is a measured curve per scale point, not an
-        # argument. r12: the before-count now rides the θ window pass
-        # (Σ per-query n_rows — the same integer, one job fewer); the
-        # after-count stays a bounded count over the persisted
-        # candidates, still gated (ADVICE r10) so serving callers skip
-        # the extra action.
-        if collect_stats:
-            stats["n_accumulator_rows"] = sum(r.n_rows for r in theta_rows)
-            stats["n_candidate_rows"] = cand.count()
+        # the θ pass counted the candidates exactly, so the phase-2
+        # semi-join's build side is sized from that runtime count
+        # (≈32 B per (query_id, doc_id) hash-map row), not from
+        # Catalyst's estimate of an unmaterialized filter
+        cand_ids = cand.select("query_id", "doc_id")
+        if 32 * stats["n_candidate_rows"] <= DEFAULT_BROADCAST_BUDGET:
+            cand_ids = F.broadcast(cand_ids)
 
-    # ---- phase 2, ONE pruned read for BOTH routes (r12, VERDICT r11
-    # #3): per-(doc, word) lower-tier contributions fan out to every
-    # query via the broadcast (query_id, word) relation, then rows are
-    # routed — prunable queries keep only their θ-surviving candidates
-    # (the semi-join, as before), fallback queries keep everything.
-    # Pre-r12 each fallback subset re-read ALL tiers of its terms
-    # through a second bm25_batch_from_index scan; now a fallback
-    # query's exact score is partial (phase-1 read) ⊕ its unpruned
-    # phase-2 contributions — the same two posting reads serve the
-    # whole workload, and every posting row is read exactly once
-    # (p1_cond/p2_cond partition the (word, tier) space).
-    if pr["p2_paths"] and (prunable or fallback):
+    # ---- phase 2, ONE pruned read for BOTH routes: per-(doc, word)
+    # lower-tier contributions fan out to every query via the broadcast
+    # (query_id, word) relation, then rows are routed — pruned queries
+    # keep only their θ-surviving candidates (the semi-join), the
+    # others keep everything.
+    stats["p2_dirs"] = pr["p2_paths"]
+    if pr["p2_paths"]:
         p2c = (
             read_parquet(spark, *pr["p2_paths"], basePath=index_dir)
-            .filter(pr["p2_cond"])
-            .join(F.broadcast(qinfo), "word")
-            .select(
-                "doc_id",
-                "word",
-                (
-                    F.col("idf") * _bm25_sat(F.col("tf"), F.col("dl"), avgdl)
-                ).alias("c"),
-            )
+            .filter(pr["p2_cond"] if where is None else (pr["p2_cond"] & where))
             .join(F.broadcast(qterms), "word")
+            .select("query_id", "doc_id", score)
         )
         if prunable and fallback:
             fb_cond = F.col("query_id").isin([int(q) for q in fallback])
             p2c = p2c.join(
-                cand.select("query_id", "doc_id").withColumn("_c", F.lit(1)),
+                cand_ids.withColumn("_c", F.lit(1)),
                 ["query_id", "doc_id"],
                 "left",
             ).filter(F.col("_c").isNotNull() | fb_cond).drop("_c")
         elif prunable:
-            p2c = p2c.join(
-                cand.select("query_id", "doc_id"),
-                ["query_id", "doc_id"],
-                "left_semi",
-            )
+            p2c = p2c.join(cand_ids, ["query_id", "doc_id"], "left_semi")
         add = p2c.groupBy("query_id", "doc_id").agg(
             F.sum("c").alias("c2"), F.count(F.lit(1)).alias("n2")
         )
@@ -1939,11 +1686,8 @@ def bm25_batch_wand_topk(
         parts.append(_topk(scored))
     if fallback:
         # exact unpruned completion from the SAME two reads: a
-        # fallback (query, doc) pair may hold postings only in phase-1
-        # tiers, only in phase-2 tiers, or both — hence the full outer
-        # join. Scores are the identical term multiset the old
-        # re-read summed (every posting of every query term, each in
-        # exactly one tier), under the same 4-dp round.
+        # (query, doc) pair may hold postings only in phase-1 tiers,
+        # only in phase-2 tiers, or both — hence the full outer join.
         fb_ids = spark.createDataFrame(
             [(int(q),) for q in fallback], "query_id INT"
         )
@@ -1969,14 +1713,9 @@ def bm25_batch_wand_topk(
             .alias("n_terms_matched"),
         )
         parts.append(_topk(scored_fb))
-    if not parts:
-        return spark.createDataFrame(
-            [], "query_id BIGINT, doc_id LONG, bm25 DOUBLE, n_terms_matched BIGINT"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    # every query with an in-layout term took one of the two routes,
+    # and at least one has (pricing found its blocks)
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 bm25_batch_wand_topk.last_stats = {}
@@ -2253,18 +1992,22 @@ def bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``bm25_search``'s ranked top-20 served from the BM25 posting
     layout instead of a per-query corpus tokenize — the fourth member
     of the indexed-retrieval family (term / phrase / proximity /
-    ranked): ≤|terms| of 64 bucket dirs listed, word filter pushed to
-    parquet, tf and dl read off the postings, df counted from the
-    pruned read itself, (N, avgdl) from the build-time sidecar. Same
-    expressions, same 4-dp round + doc_id tiebreak — SAME ORACLE as
-    the scan path (the layout changes where postings come from, not
-    what the ranking means); the repeated-query cost at 100 TB is the
-    query terms' postings, never the corpus."""
+    ranked): ``SEARCH_TERMS`` as a batch of one through the exhaustive
+    ``bm25_batch_from_index`` (≤|terms| of 64 bucket dirs listed, word
+    filter pushed to parquet, tf and dl read off the postings, df and
+    (N, avgdl) from the sidecars). Same expressions, same 4-dp round +
+    doc_id tiebreak — SAME ORACLE as the scan path (the layout changes
+    where postings come from, not what the ranking means); the
+    repeated-query cost at 100 TB is the query terms' postings, never
+    the corpus."""
     from ..operators.retrieval import BM25_TOP
     from ..operators.text_analysis import SEARCH_TERMS
 
     index_dir = _documents_bm25_index(spark, sf_dir)
-    return bm25_topk_from_index(spark, index_dir, list(SEARCH_TERMS), BM25_TOP)
+    return _ranked_one(
+        bm25_batch_from_index(spark, index_dir, (tuple(SEARCH_TERMS),), BM25_TOP),
+        BM25_TOP,
+    )
 
 
 # the oracle is term_search's: the layout changes WHERE the postings
@@ -2346,8 +2089,8 @@ def _bm25_oracle_for(terms: tuple[str, ...], label: int | None = None) -> str:
 
 
 def bm25_search_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranked BM25 top-20 for ``WAND_QUERY_TERMS`` via the
-    impact-bound two-phase probe (``bm25_wand_topk``) over the tiered
+    """Ranked BM25 top-20 for ``WAND_QUERY_TERMS`` as a batch of one
+    through the θ-routed ``bm25_batch_wand_topk`` over the tiered
     posting layout — the WAND/MaxScore serving path: block bounds
     from the ``_impacts`` sidecar decide which posting tiers are read
     at all; the rare term's short list is read whole, the common
@@ -2356,18 +2099,21 @@ def bm25_search_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     the admissible bound — the oracle is the same first-principles
     DuckDB replay the scan path answers to, parameterized only by the
     term list; the relation never changes, only the bytes read to
-    produce it (block-skip asserted via ``bm25_wand_topk.last_stats``
-    in tests)."""
+    produce it (the "pruned" route and block-skip are asserted via
+    ``bm25_batch_wand_topk.last_stats`` in tests)."""
     from ..operators.retrieval import BM25_TOP
 
     index_dir = _documents_bm25_index(spark, sf_dir)
-    return bm25_wand_topk(spark, index_dir, list(WAND_QUERY_TERMS), BM25_TOP)
+    return _ranked_one(
+        bm25_batch_wand_topk(spark, index_dir, (WAND_QUERY_TERMS,), BM25_TOP),
+        BM25_TOP,
+    )
 
 
 ORACLES["bm25_search_wand"] = _bm25_oracle_for(WAND_QUERY_TERMS)
 
 
-#: tier-cut configurations swept by ``wand_tier_sweep`` — cuts are on
+#: tier-cut configurations swept by the tier sweeps — cuts are on
 #: the normalized saturation s/(k1+1) ∈ (0, 1), descending; () is the
 #: untiered layout (one block per term: nothing is skippable).
 #: "t3_60_45" IS the production layout (WAND_TIER_HI/MID).
@@ -2379,143 +2125,6 @@ WAND_SWEEP_CONFIGS = (
 )
 
 _WAND_SWEEP_SCHEMA = (
-    "config STRING, n_tiers INT, cfg_order INT, n_blocks INT, "
-    "n_blocks_p1 INT, n_postings_p1 BIGINT, n_postings_deferred BIGINT, "
-    "slack_micro BIGINT"
-)
-
-
-def wand_tier_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The impact-tier decision table — the ``lsh_band_sweep`` /
-    ``ann_recall_curve`` discipline applied to the LAST unmeasured
-    dial of the ranked-retrieval family: how many tiers, cut where?
-    For the pinned WAND query, each tier-cut configuration is
-    evaluated by re-deriving the per-(word, tier) block bounds
-    DIRECTLY from the layout's postings (one bucket-pruned read of
-    the query terms' postings — tier membership is a pure function of
-    (tf, dl, avgdl, cuts), so no alternative layout is built) and
-    replaying the production MaxScore pricing on them: essential
-    (rare) terms read whole, common terms' best-priced tier only.
-
-    Row per config: blocks total/phase-1, postings scored in phase 1
-    vs deferred behind the bound, and the total unread-tier slack
-    (micro-units) — the quantity θ must beat for the probe to prune
-    at all. The ``flat`` row is the counterfactual that justifies
-    tiering (everything phase-1, zero skippable); the production row
-    is pytest-pinned EQUAL to the served probe's own telemetry
-    (``bm25_wand_topk.last_stats``), so the sweep measures exactly
-    what serving executes. Driver state: ≤ |configs|·|terms|·tiers
-    bounded rows. Rows-only (the slack rides float idf·saturation;
-    the integer columns are exact).
-    """
-    import json as _json
-    import math
-
-    from ..operators.retrieval import BM25_K1
-
-    index_dir = _documents_bm25_index(spark, sf_dir)
-    with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
-        st = _json.load(fh)
-    n_corpus = st["n_docs"]
-    avgdl = st["avgdl"] or 1.0
-    terms = list(WAND_QUERY_TERMS)
-    bmap = _term_bucket_map(spark, terms)
-    paths = sorted(
-        {
-            p
-            for b in set(bmap.values())
-            if os.path.isdir(p := os.path.join(index_dir, f"tbucket={b}"))
-        }
-    )
-    if not paths:
-        # degenerate corpus: none of the pinned query terms has a
-        # posting bucket — return the typed empty decision table
-        # instead of letting read_parquet raise on zero paths
-        # (mirrors bm25_batch_from_index's empty-workload guard).
-        return spark.createDataFrame([], _WAND_SWEEP_SCHEMA)
-    post = (
-        read_parquet(spark, *paths, basePath=index_dir)
-        .filter(F.col("word").isin(*terms))
-        .select("word", "tf", "dl")
-    )
-    snorm = _bm25_sat(F.col("tf"), F.col("dl"), avgdl) / (BM25_K1 + 1)
-    per_config = []
-    for name, cuts in WAND_SWEEP_CONFIGS:
-        tier = F.lit(0)
-        for c in cuts:  # descending cuts: tier = #cuts above snorm
-            tier = tier + F.when(snorm < F.lit(float(c)), 1).otherwise(0)
-        per_config.append(
-            post.withColumn("cfg", F.lit(name)).withColumn(
-                "tier", tier.cast("int")
-            )
-        )
-    allp = per_config[0]
-    for p in per_config[1:]:
-        allp = allp.unionByName(p)
-    rows = (
-        allp.groupBy("cfg", "word", "tier")
-        .agg(
-            F.max("tf").alias("max_tf"),
-            F.min("dl").alias("min_dl"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    )  # bounded: |configs| * |terms| * tiers
-
-    out = []
-    order = {name: i for i, (name, _) in enumerate(WAND_SWEEP_CONFIGS)}
-    by_cfg: dict[str, dict] = {}
-    for r in rows:
-        by_cfg.setdefault(r.cfg, {}).setdefault(r.word, {})[r.tier] = (
-            r.max_tf,
-            r.min_dl,
-            r.n,
-        )
-    for name, cuts in WAND_SWEEP_CONFIGS:
-        info = by_cfg.get(name, {})
-        dfreq = {w: float(sum(t[2] for t in ts.values())) for w, ts in info.items()}
-        idf = {
-            w: math.log((n_corpus - dfreq[w] + 0.5) / (dfreq[w] + 0.5) + 1.0)
-            for w in info
-        }
-        ub = {
-            (w, t): idf[w] * _bm25_sat(mx, mn, avgdl)
-            for w, ts in info.items()
-            for t, (mx, mn, _) in ts.items()
-        }
-        # the production MaxScore split, verbatim
-        p1_tiers: dict[str, set] = {}
-        for w, ts in info.items():
-            if dfreq[w] <= WAND_ESSENTIAL_DF_FRAC * n_corpus:
-                p1_tiers[w] = set(ts)
-            else:
-                p1_tiers[w] = {
-                    max(ts, key=lambda t, _w=w: (ub[(_w, t)], -t))
-                }
-        wslack = {
-            w: max(
-                (ub[(w, t)] for t in ts if t not in p1_tiers[w]), default=0.0
-            )
-            for w, ts in info.items()
-        }
-        n_p1 = sum(info[w][t][2] for w, ts in p1_tiers.items() for t in ts)
-        total = int(sum(dfreq.values()))
-        out.append(
-            (
-                name,
-                len(cuts) + 1,
-                int(order[name]),
-                len(ub),
-                sum(len(ts) for ts in p1_tiers.values()),
-                int(n_p1),
-                int(total - n_p1),
-                int(sum(wslack.values()) * 1_000_000),
-            )
-        )
-    return spark.createDataFrame(out, _WAND_SWEEP_SCHEMA)
-
-
-_WAND_WORKLOAD_SWEEP_SCHEMA = (
     "config STRING, n_tiers INT, cfg_order INT, n_queries INT, "
     "n_blocks INT, n_blocks_p1 INT, n_postings_p1 BIGINT, "
     "n_postings_deferred BIGINT, workload_slack_micro BIGINT, "
@@ -2523,46 +2132,42 @@ _WAND_WORKLOAD_SWEEP_SCHEMA = (
 )
 
 
-def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tier-cut decision table priced against the WORKLOAD (r11,
-    VERDICT r10 #5): ``wand_tier_sweep`` prices configs for ONE
-    pinned query, but real tier cuts are chosen against a query MIX —
-    so this sweeps the same configs over the 240-query mixed-
-    vocabulary workload ``bm25_batch_wand`` actually serves
-    (``_mixed_vocab`` head+tail × ``_wide_queries``), replaying the
-    batch probe's own pricing structure per config:
+def _tier_sweep(
+    spark: SparkSession, index_dir: str, queries: tuple[tuple[str, ...], ...]
+) -> DataFrame:
+    """The impact-tier decision table for a query workload — the
+    ``lsh_band_sweep`` / ``ann_recall_curve`` discipline applied to
+    the ranked-retrieval family's layout dial: how many tiers, cut
+    where? Each ``WAND_SWEEP_CONFIGS`` entry is priced by re-deriving
+    the per-(word, tier) block bounds DIRECTLY from the layout's
+    postings (one bucket-pruned read of the union terms — tier
+    membership is a pure function of (tf, dl, avgdl, cuts), so no
+    alternative layout is built) and running the serving probe's own
+    ``_maxscore_split`` on them, over the UNION vocabulary exactly as
+    ``bm25_batch_wand_topk``'s shared phase-1 read prices it.
 
-    - union-level (the batch plan reads phase 1 ONCE for the union
-      vocabulary): blocks total / phase-1, postings scored in phase 1
-      vs deferred — for the production config these integers are
-      pytest-pinned EQUAL to the served ``bm25_batch_wand``
-      telemetry, so the sweep prices exactly what serving executes;
-    - per-query: Σ_q slack_q (micro-units — the pressure each
-      query's θ_q must beat; lower ⇒ more of the workload prunes)
-      and the count of zero-slack queries (all-essential term sets —
-      prunable whenever they fill their top-k, regardless of θ).
-
-    One bucket-pruned posting read of the union vocabulary prices
-    every config (tier membership re-derived in-query, no alternative
-    layouts built); driver state ≤ |configs|·|union|·tiers rows plus
-    the 240 query slack sums. Rows-only like ``wand_tier_sweep``
-    (slack rides float idf·saturation; the integer columns are
-    exact)."""
+    Row per config: blocks total / phase-1 and postings scored in
+    phase 1 vs deferred behind the bound (for the production config
+    these equal the served probe's telemetry), Σ_q slack_q in
+    micro-units (the pressure each query's θ_q must beat; lower ⇒ more
+    of the workload prunes) and the zero-slack queries (all-essential
+    term sets — prunable whenever they fill their top-k). Driver state
+    ≤ |configs|·|union|·tiers rows plus one slack sum per query.
+    Rows-only (the slack rides float idf·saturation; the integer
+    columns are exact). An empty workload, or one with no posting
+    bucket, yields the typed empty table."""
     import json as _json
-    import math
 
     from ..operators.retrieval import BM25_K1
 
-    index_dir = _documents_bm25_index(spark, sf_dir)
+    empty = spark.createDataFrame([], _WAND_SWEEP_SCHEMA)
     with open(os.path.join(index_dir, "_bm25_stats.json")) as fh:
         st = _json.load(fh)
     n_corpus = st["n_docs"]
     avgdl = st["avgdl"] or 1.0
-    vocab = _mixed_vocab(spark, index_dir)
-    queries = _wide_queries(vocab)
     union_terms = sorted({t for q in queries for t in q})
     if not union_terms:
-        return spark.createDataFrame([], _WAND_WORKLOAD_SWEEP_SCHEMA)
+        return empty
     bmap = _term_bucket_map(spark, union_terms)
     paths = sorted(
         {
@@ -2572,7 +2177,7 @@ def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
     if not paths:
-        return spark.createDataFrame([], _WAND_WORKLOAD_SWEEP_SCHEMA)
+        return empty
     post = (
         read_parquet(spark, *paths, basePath=index_dir)
         .filter(F.col("word").isin(*union_terms))
@@ -2582,7 +2187,7 @@ def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_config = []
     for name, cuts in WAND_SWEEP_CONFIGS:
         tier = F.lit(0)
-        for c in cuts:
+        for c in cuts:  # descending cuts: tier = #cuts above snorm
             tier = tier + F.when(snorm < F.lit(float(c)), 1).otherwise(0)
         per_config.append(
             post.withColumn("cfg", F.lit(name)).withColumn(
@@ -2609,47 +2214,21 @@ def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
             r.min_dl,
             r.n,
         )
-    order = {name: i for i, (name, _) in enumerate(WAND_SWEEP_CONFIGS)}
     out = []
-    for name, cuts in WAND_SWEEP_CONFIGS:
+    for order, (name, cuts) in enumerate(WAND_SWEEP_CONFIGS):
         info = by_cfg.get(name, {})
         dfreq = {w: float(sum(t[2] for t in ts.values())) for w, ts in info.items()}
-        idf = {
-            w: math.log((n_corpus - dfreq[w] + 0.5) / (dfreq[w] + 0.5) + 1.0)
-            for w in info
-        }
-        ub = {
-            (w, t): idf[w] * _bm25_sat(mx, mn, avgdl)
-            for w, ts in info.items()
-            for t, (mx, mn, _) in ts.items()
-        }
-        # the production MaxScore split over the UNION vocabulary —
-        # exactly what bm25_batch_wand's shared phase-1 read prices
-        p1_tiers: dict[str, set] = {}
-        for w, ts in info.items():
-            if dfreq[w] <= WAND_ESSENTIAL_DF_FRAC * n_corpus:
-                p1_tiers[w] = set(ts)
-            else:
-                p1_tiers[w] = {
-                    max(ts, key=lambda t, _w=w: (ub[(_w, t)], -t))
-                }
-        wslack = {
-            w: max(
-                (ub[(w, t)] for t in ts if t not in p1_tiers[w]), default=0.0
-            )
-            for w, ts in info.items()
-        }
+        _idf, ub, p1_tiers, wslack = _maxscore_split(info, dfreq, n_corpus, avgdl)
         n_p1 = sum(info[w][t][2] for w, ts in p1_tiers.items() for t in ts)
         total = int(sum(dfreq.values()))
         slack_q = [
-            sum(wslack[w] for w in dict.fromkeys(q) if w in info)
-            for q in queries
+            sum(wslack[w] for w in dict.fromkeys(q) if w in info) for q in queries
         ]
         out.append(
             (
                 name,
                 len(cuts) + 1,
-                int(order[name]),
+                order,
                 len(queries),
                 len(ub),
                 sum(len(ts) for ts in p1_tiers.values()),
@@ -2659,7 +2238,40 @@ def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sum(1 for s in slack_q if s == 0.0),
             )
         )
-    return spark.createDataFrame(out, _WAND_WORKLOAD_SWEEP_SCHEMA)
+    return spark.createDataFrame(out, _WAND_SWEEP_SCHEMA)
+
+
+def wand_tier_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tier-cut decision table for the pinned WAND query
+    (``WAND_QUERY_TERMS``) — ``_tier_sweep`` over a workload of one.
+    The ``flat`` row is the counterfactual that justifies tiering
+    (everything phase-1, zero skippable); the production row is
+    pytest-pinned EQUAL to ``bm25_search_wand``'s own pricing
+    telemetry, so the sweep measures exactly what serving executes.
+    ``slack_micro`` is the query's unread-tier slack — the quantity θ
+    must beat for the probe to prune at all."""
+    index_dir = _documents_bm25_index(spark, sf_dir)
+    return _tier_sweep(spark, index_dir, (WAND_QUERY_TERMS,)).select(
+        "config",
+        "n_tiers",
+        "cfg_order",
+        "n_blocks",
+        "n_blocks_p1",
+        "n_postings_p1",
+        "n_postings_deferred",
+        F.col("workload_slack_micro").alias("slack_micro"),
+    )
+
+
+def wand_tier_sweep_workload(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tier-cut decision table priced against the WORKLOAD: real
+    tier cuts are chosen against a query MIX, so this is
+    ``_tier_sweep`` over the 240-query mixed-vocabulary workload
+    ``bm25_batch_wand`` actually serves (``_mixed_vocab`` head+tail ×
+    ``_wide_queries``); its production row's union-level integers are
+    pytest-pinned EQUAL to the served batch's telemetry."""
+    index_dir = _documents_bm25_index(spark, sf_dir)
+    return _tier_sweep(spark, index_dir, _wide_queries(_mixed_vocab(spark, index_dir)))
 
 
 def bm25_batch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2737,10 +2349,10 @@ def bm25_batch_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The impact-bound BATCH: 240 generated queries over the MIXED
     head+tail vocabulary (``_mixed_vocab`` — df head + df tail, so
     queries carry idf contrast like real workloads), routed per query
-    by the WAND bound (``bm25_batch_wand_topk``): prunable queries
+    by the WAND bound (``bm25_batch_wand_topk``): pruned queries
     shrink the (query, doc) accumulator shuffle to their candidate
-    sets; the rest fall back to the plain batch plan for exactly
-    their subset. EXACT per query — ORACLE-CHECKED end to end (the
+    sets; the rest complete unpruned from the same two posting reads.
+    EXACT per query — ORACLE-CHECKED end to end (the
     DuckDB twin regenerates the mixed vocabulary, the query relation
     and the scores from raw documents; prune-vs-fallback routing is
     invisible in the relation, which is the point)."""

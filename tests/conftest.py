@@ -119,3 +119,12 @@ def jobs_started(spark, fn) -> int:
         assert time.monotonic() < deadline, "sentinel job never reached the tracker"
         time.sleep(0.05)
     return len(tracker.getJobIdsForGroup(group))
+
+
+def bm25_one(engine, spark, index_dir, terms, top, **kw) -> list[tuple]:
+    """One query through a BM25 batch engine as a batch of one: its
+    ranked (doc_id, bm25, n_terms_matched) rows."""
+    from samza_hello_samza_spark.sources.inverted import _ranked_one
+
+    out = engine(spark, index_dir, (tuple(terms),), top, **kw)
+    return [tuple(r) for r in _ranked_one(out, top).collect()]

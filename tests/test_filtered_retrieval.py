@@ -15,7 +15,9 @@ import pytest
 from samza_hello_samza_spark.operators import similarity
 from samza_hello_samza_spark.sources import inverted
 from pyspark.sql import functions as F
-from tests.conftest import SF_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, assert_matches_oracle, bm25_one
+
+WAND, EXHAUSTIVE = inverted.bm25_batch_wand_topk, inverted.bm25_batch_from_index
 
 
 def test_hybrid_filtered_matches_oracle_and_label_contract(
@@ -83,27 +85,15 @@ def test_filtered_wand_equals_filtered_scan_on_real_corpus(
     idx = inverted._documents_bm25_label_index(spark, SF_DIR)
     terms = list(inverted.WAND_QUERY_TERMS)
     attr = ("label", similarity.FILTER_LABEL)
-    got = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, idx, terms, BM25_TOP, attr_eq=attr
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, terms, BM25_TOP, where=F.col("label") == attr[1]
-        ).collect()
-    ]
+    got = bm25_one(WAND, spark, idx, terms, BM25_TOP, attr_eq=attr)
+    want = bm25_one(EXHAUSTIVE, spark, idx, terms, BM25_TOP, attr_eq=attr)
     assert got == want and len(got) > 0
 
     # Lucene filter contract: an allowed doc's score is its
     # unfiltered score — the filter shrinks the universe, not idf
     unfiltered = {
-        r.doc_id: r.bm25
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, terms, 10**6
-        ).collect()
+        doc_id: bm25
+        for doc_id, bm25, _n in bm25_one(EXHAUSTIVE, spark, idx, terms, 10**6)
     }
     for doc_id, bm25, _n in got:
         assert unfiltered[doc_id] == bm25
@@ -141,23 +131,14 @@ def test_filtered_wand_prunes_with_segment_bounds(spark, tmp_path):
     idx = _build_majority_label_corpus(spark, str(tmp_path / "idx"))
     terms = ["dup", "join", "window"]
     top = 5
-    got = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, idx, terms, top, attr_eq=("label", 2)
-        ).collect()
-    ]
-    st = dict(inverted.bm25_wand_topk.last_stats)
-    want = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, terms, top, where=F.col("label") == 2
-        ).collect()
-    ]
+    got = bm25_one(WAND, spark, idx, terms, top, attr_eq=("label", 2))
+    st = dict(WAND.last_stats)
+    want = bm25_one(EXHAUSTIVE, spark, idx, terms, top, attr_eq=("label", 2))
     assert got == want and len(got) == top
-    assert st["fallback"] is None, st
+    q = st["queries"][0]
+    assert q["route"] == "pruned", st
     assert st["n_blocks_p1"] < st["n_blocks_total"]
-    assert st["theta"] > st["total_slack"]
+    assert q["theta"] > q["slack"]
 
 
 def test_filtered_wand_skips_segment_empty_blocks(spark, tmp_path):
@@ -167,19 +148,15 @@ def test_filtered_wand_skips_segment_empty_blocks(spark, tmp_path):
     equals the segment's true postings, not the block totals."""
     idx = _build_majority_label_corpus(spark, str(tmp_path / "idx"))
     # label 3 docs are the 10% minority: i % 10 == 9, none carry 'dup'
-    got = inverted.bm25_wand_topk(
-        spark, idx, ["dup", "join"], 3, attr_eq=("label", 3)
-    ).collect()
-    st = dict(inverted.bm25_wand_topk.last_stats)
-    want = inverted.bm25_topk_from_index(
-        spark, idx, ["dup", "join"], 3, where=F.col("label") == 3
-    ).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    got = bm25_one(WAND, spark, idx, ["dup", "join"], 3, attr_eq=("label", 3))
+    st = dict(WAND.last_stats)
+    want = bm25_one(EXHAUSTIVE, spark, idx, ["dup", "join"], 3, attr_eq=("label", 3))
+    assert got == want
     # 'dup' has no label-3 posting: it cannot appear in the priced set
-    if st.get("fallback") is None:
+    if st["queries"][0]["route"] == "pruned":
         assert all("dup" not in p for p in st.get("p1_dirs", []))
     # every returned doc is allowed (no resurrection through 'dup')
-    assert all(r.doc_id % 10 == 9 for r in got)
+    assert all(doc_id % 10 == 9 for doc_id, _b, _n in got)
 
 
 def test_segmented_sidecar_reaggregates_to_unfiltered_exactly(
@@ -194,20 +171,14 @@ def test_segmented_sidecar_reaggregates_to_unfiltered_exactly(
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
     terms = list(inverted.WAND_QUERY_TERMS)
     plain = inverted._documents_bm25_index(spark, SF_DIR)
-    got_plain = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(spark, plain, terms, BM25_TOP).collect()
-    ]
-    st_plain = dict(inverted.bm25_wand_topk.last_stats)
+    got_plain = bm25_one(WAND, spark, plain, terms, BM25_TOP)
+    st_plain = dict(WAND.last_stats)
     lab = inverted._documents_bm25_label_index(spark, SF_DIR)
-    got_lab = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(spark, lab, terms, BM25_TOP).collect()
-    ]
-    st_lab = dict(inverted.bm25_wand_topk.last_stats)
+    got_lab = bm25_one(WAND, spark, lab, terms, BM25_TOP)
+    st_lab = dict(WAND.last_stats)
     assert got_plain == got_lab
     for k in ("n_blocks_total", "n_blocks_p1", "n_postings_p1",
-              "n_postings_deferred", "theta", "total_slack"):
+              "n_postings_deferred", "queries"):
         assert st_plain[k] == st_lab[k], (k, st_plain[k], st_lab[k])
 
 
@@ -217,21 +188,21 @@ def test_filtered_wand_pricing_cache_keyed_per_segment(spark, tmp_path):
     a repeat call hits its own segment's entry."""
     idx = _build_majority_label_corpus(spark, str(tmp_path / "idx"))
     terms = ["dup", "join", "window"]
-    inverted.bm25_wand_topk(spark, idx, terms, 3, attr_eq=("label", 2)).collect()
-    st2 = dict(inverted.bm25_wand_topk.last_stats)
-    inverted.bm25_wand_topk(spark, idx, terms, 3, attr_eq=("label", 3)).collect()
-    st3 = dict(inverted.bm25_wand_topk.last_stats)
+    bm25_one(WAND, spark, idx, terms, 3, attr_eq=("label", 2))
+    st2 = dict(WAND.last_stats)
+    bm25_one(WAND, spark, idx, terms, 3, attr_eq=("label", 3))
+    st3 = dict(WAND.last_stats)
     assert st3["pricing_cached"] is False  # not served label 2's entry
     assert st2["n_postings_p1"] != st3["n_postings_p1"]
-    inverted.bm25_wand_topk(spark, idx, terms, 3, attr_eq=("label", 2)).collect()
-    assert inverted.bm25_wand_topk.last_stats["pricing_cached"] is True
+    bm25_one(WAND, spark, idx, terms, 3, attr_eq=("label", 2))
+    assert WAND.last_stats["pricing_cached"] is True
 
 
 def test_empty_term_query_serves_typed_empty_not_crash(
     spark, tmp_path, monkeypatch
 ):
     """r11 hardening: a query with NO terms must yield the typed
-    empty lexical relation through both probes (isin() with zero args
+    empty lexical relation through both engines (isin() with zero args
     raises — a streamed empty query must not crash the serving tier),
     and the hybrid serving job must answer it with a vec-only fused
     list."""
@@ -243,11 +214,10 @@ def test_empty_term_query_serves_typed_empty_not_crash(
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     idx = inverted._documents_bm25_index(spark, SF_DIR)
-    cols = ["doc_id", "bm25", "n_terms_matched"]
-    flat = inverted.bm25_topk_from_index(spark, idx, [], 10)
-    assert flat.collect() == [] and flat.columns == cols
-    wand = inverted.bm25_wand_topk(spark, idx, [], 10)
-    assert wand.collect() == [] and wand.columns == cols
+    cols = ["query_id", "doc_id", "bm25", "n_terms_matched"]
+    for engine in (EXHAUSTIVE, WAND):
+        out = engine(spark, idx, ((),), 10)
+        assert out.collect() == [] and out.columns == cols, engine.__name__
 
     sq8_idx = similarity._sq8_index(spark, SF_DIR)
     qvec = similarity._query_vector(spark, SF_DIR)

@@ -41,8 +41,8 @@ def test_hybrid_indexed_prunes_both_legs(spark, tmp_path, monkeypatch):
     df = similarity.hybrid_search_indexed(spark, SF_DIR)
 
     # lexical leg: the impact-bound probe that built this plan pruned
-    st = inverted.bm25_wand_topk.last_stats
-    assert st["fallback"] is None
+    st = inverted.bm25_batch_wand_topk.last_stats
+    assert st["queries"][0]["route"] == "pruned"
     assert st["n_blocks_p1"] < st["n_blocks_total"]
 
     spark.conf.set("spark.sql.maxMetadataStringLength", "4000")
@@ -100,8 +100,8 @@ def test_hybrid_batch_indexed_matches_oracle_and_fuses_per_query(
 
 def test_hybrid_indexed_survives_wand_fallback_corpus(spark, tmp_path, monkeypatch):
     """Degenerate-path discipline: on a corpus SMALLER than the
-    lexical top-k, θ is not a valid k-th bound — bm25_wand_topk falls
-    back (under_k) to the full pruned read — and the hybrid must
+    lexical top-k, θ is not a valid k-th bound — the query routes
+    under_k (completed unpruned from the same reads) — and the hybrid must
     still serve the correct fused relation (the fallback is
     relation-invisible by contract)."""
     import numpy as np
@@ -131,8 +131,8 @@ def test_hybrid_indexed_survives_wand_fallback_corpus(spark, tmp_path, monkeypat
     # embeddings-file fingerprint, so this fresh corpus dir can never
     # be served a stale vector (the r10 footgun, ADVICE-fixed in r11).
     rows = similarity.hybrid_search_indexed(spark, sf).collect()
-    st = inverted.bm25_wand_topk.last_stats
-    assert st["fallback"] is not None  # the bound really could not prune
+    st = inverted.bm25_batch_wand_topk.last_stats
+    assert st["queries"][0]["route"] == "under_k"  # the bound could not prune
     assert 0 < len(rows) <= 10
     for r in rows:
         assert r.lex_rank >= 1 or r.vec_rank >= 1

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from samza_hello_samza_spark.operators.text_analysis import SEARCH_TERMS, term_search
 from samza_hello_samza_spark.sources import inverted
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, bm25_one
 
 
 def test_conjunctive_search_equals_scan_plan(spark):
@@ -497,18 +497,9 @@ def test_append_bm25_two_batch_equals_full_rebuild(spark, tmp_path):
 
     assert stats(incr) == stats(full)
 
-    got = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, incr, list(SEARCH_TERMS), BM25_TOP
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, full, list(SEARCH_TERMS), BM25_TOP
-        ).collect()
-    ]
+    exhaustive = inverted.bm25_batch_from_index
+    got = bm25_one(exhaustive, spark, incr, SEARCH_TERMS, BM25_TOP)
+    want = bm25_one(exhaustive, spark, full, SEARCH_TERMS, BM25_TOP)
     assert got == want and len(got) == BM25_TOP
 
     # a pre-r08b sidecar (no total_dl) folds via the derived total
@@ -651,48 +642,30 @@ def test_wand_equals_flat_probe_and_skips_blocks(spark, duck, tmp_path, monkeypa
     )
 
     idx = inverted._documents_bm25_index(spark, SF_DIR)
-    got = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, idx, list(inverted.WAND_QUERY_TERMS), BM25_TOP
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, list(inverted.WAND_QUERY_TERMS), BM25_TOP
-        ).collect()
-    ]
+    wand, exhaustive = inverted.bm25_batch_wand_topk, inverted.bm25_batch_from_index
+    terms = inverted.WAND_QUERY_TERMS
+    got = bm25_one(wand, spark, idx, terms, BM25_TOP)
+    st = wand.last_stats
+    want = bm25_one(exhaustive, spark, idx, terms, BM25_TOP)
     assert got == want and len(got) == BM25_TOP
 
-    st = inverted.bm25_wand_topk.last_stats
-    assert st["fallback"] is None
+    q = st["queries"][0]
+    assert q["route"] == "pruned"
     # the block-skip claim: phase 1 reads strictly fewer blocks than
     # exist, every phase-1 path is a single tier dir of the layout,
     # and phase 2 paths are disjoint from phase 1
     assert st["n_blocks_p1"] < st["n_blocks_total"]
-    assert st["theta"] > st["total_slack"]
+    assert q["theta"] > q["slack"]
     for p in st["p1_dirs"]:
         assert "/tier=" in p and p.startswith(idx)
     assert set(st["p1_dirs"]).isdisjoint(st["p2_dirs"])
-    assert st["n_candidates"] <= inverted.WAND_CANDIDATE_CAP
-    assert st["n_need_completion"] <= st["n_candidates"]
+    # the θ cut keeps a subset of the accumulator
+    assert 0 < st["n_candidate_rows"] <= st["n_accumulator_rows"]
 
     # all-common query: slack cannot beat θ — honest fallback, same rows
-    got_c = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, idx, list(SEARCH_TERMS), BM25_TOP
-        ).collect()
-    ]
-    want_c = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, list(SEARCH_TERMS), BM25_TOP
-        ).collect()
-    ]
-    assert got_c == want_c
-    assert inverted.bm25_wand_topk.last_stats["fallback"] == "slack_ge_theta"
+    got_c = bm25_one(wand, spark, idx, SEARCH_TERMS, BM25_TOP)
+    assert wand.last_stats["queries"][0]["route"] == "slack_ge_theta"
+    assert got_c == bm25_one(exhaustive, spark, idx, SEARCH_TERMS, BM25_TOP)
 
 
 def test_wand_impacts_sidecar_is_exact(spark, tmp_path, monkeypatch):
@@ -740,26 +713,20 @@ def test_wand_impacts_sidecar_is_exact(spark, tmp_path, monkeypatch):
     )
     check(incr)
     # the wand probe over the appended layout serves the rebuild's rows
-    got = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, incr, list(inverted.WAND_QUERY_TERMS), 20
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, full, list(inverted.WAND_QUERY_TERMS), 20
-        ).collect()
-    ]
-    assert got == want
+    wand, terms = inverted.bm25_batch_wand_topk, inverted.WAND_QUERY_TERMS
+    assert bm25_one(wand, spark, incr, terms, 20) == bm25_one(
+        wand, spark, full, terms, 20
+    )
 
 
 def test_wand_edge_paths_small_corpus(spark, tmp_path):
-    """Edge discipline on a crafted corpus: a query term absent from
-    the corpus is ignored; top-k larger than the candidate pool falls
-    back (under_k) and still matches the flat probe; an all-absent
-    query returns empty."""
+    """Edge discipline on a crafted corpus, for BOTH batch engines: a
+    query term absent from the corpus is ignored; top-k larger than
+    the candidate pool routes under_k and still matches the
+    exhaustive engine; an all-absent query returns empty; a query is
+    a term SET (a repeated term counts once); and a batch of N equals
+    the union of its N batches of one, each under its own query_id
+    and route — per-query routing never depends on batch companions."""
     docs = spark.createDataFrame(
         [
             (1, "apple banana cherry"),
@@ -771,26 +738,53 @@ def test_wand_edge_paths_small_corpus(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     inverted.build_bm25_index(spark, docs, idx)
+    wand, exhaustive = inverted.bm25_batch_wand_topk, inverted.bm25_batch_from_index
 
-    got = [
-        tuple(r)
-        for r in inverted.bm25_wand_topk(
-            spark, idx, ["apple", "zzz-missing"], 10
-        ).collect()
-    ]
-    want = [
-        tuple(r)
-        for r in inverted.bm25_topk_from_index(
-            spark, idx, ["apple", "zzz-missing"], 10
-        ).collect()
-    ]
+    got = bm25_one(wand, spark, idx, ["apple", "zzz-missing"], 10)
+    assert wand.last_stats["queries"][0]["route"] == "under_k"
+    want = bm25_one(exhaustive, spark, idx, ["apple", "zzz-missing"], 10)
     assert got == want and len(got) == 3  # docs 1,2,3 carry apple
-    assert inverted.bm25_wand_topk.last_stats["fallback"] == "under_k"
 
-    assert (
-        inverted.bm25_wand_topk(spark, idx, ["zzz", "qqq"], 5).count() == 0
-    )
-    assert inverted.bm25_wand_topk.last_stats["fallback"] == "no_blocks"
+    assert bm25_one(wand, spark, idx, ["zzz", "qqq"], 5) == []
+    assert wand.last_stats["queries"][0]["route"] == "no_blocks"
+
+    # term sets: the duplicate-term query IS the set query, and the
+    # two engines agree on it
+    dup = (("apple", "apple", "banana"), ("apple", "banana"))
+    by_engine = []
+    for engine in (wand, exhaustive):
+        rows = sorted(map(tuple, engine(spark, idx, dup, 2).collect()))
+        as_dup = [r[1:] for r in rows if r[0] == 0]
+        assert as_dup == [r[1:] for r in rows if r[0] == 1] and as_dup
+        assert max(r[2] for r in as_dup) == 2  # distinct terms matched
+        by_engine.append(rows)
+    assert by_engine[0] == by_engine[1]
+
+    # a batch of N == N batches of one, on both engines: a pruned, an
+    # under_k, an all-absent and an empty query in one batch
+    mix = (("apple", "banana"), ("cherry",), ("zzz", "qqq"), ())
+    routes = ["pruned", "under_k", "no_blocks", "no_blocks"]
+    by_engine = []
+    for engine in (wand, exhaustive):
+        batch = sorted(map(tuple, engine(spark, idx, mix, 2).collect()))
+        if engine is wand:
+            assert [q["route"] for q in wand.last_stats["queries"]] == routes
+        singles = []
+        for qid, q in enumerate(mix):
+            one = engine(spark, idx, (q,), 2).collect()
+            if engine is wand:
+                assert wand.last_stats["queries"][0]["route"] == routes[qid]
+            singles += [(qid, *tuple(r)[1:]) for r in one]
+        assert batch == sorted(singles), engine.__name__
+        assert {r[0] for r in batch} == {0, 1}
+        by_engine.append(batch)
+    assert by_engine[0] == by_engine[1]
+
+    # an empty batch is the typed empty relation
+    for engine in (wand, exhaustive):
+        out = engine(spark, idx, (), 2)
+        assert out.columns == ["query_id", "doc_id", "bm25", "n_terms_matched"]
+        assert out.count() == 0
 
 
 def test_bm25_batch_wide_oracle_and_single_query_parity(spark, duck, tmp_path, monkeypatch):
@@ -833,12 +827,9 @@ def test_bm25_batch_wide_oracle_and_single_query_parity(spark, duck, tmp_path, m
             .orderBy(F.desc("bm25"), F.asc("doc_id"))
             .collect()
         ]
-        want = [
-            tuple(r)
-            for r in inverted.bm25_topk_from_index(
-                spark, idx, list(queries[qid]), inverted.WIDE_TOP
-            ).collect()
-        ]
+        want = bm25_one(
+            inverted.bm25_batch_from_index, spark, idx, queries[qid], inverted.WIDE_TOP
+        )
         assert got == want, f"query {qid}: batch != single"
 
 
@@ -967,21 +958,21 @@ def test_wand_pricing_cache_hits_and_invalidates_on_ingest(spark, tmp_path):
     idx = str(tmp_path / "idx")
     inverted.build_bm25_index(spark, docs.filter(F.col("doc_id") % 2 == 0), idx)
 
-    terms = list(inverted.WAND_QUERY_TERMS)
-    first = [tuple(r) for r in inverted.bm25_wand_topk(spark, idx, terms, 10).collect()]
-    assert inverted.bm25_wand_topk.last_stats["pricing_cached"] is False
-    again = [tuple(r) for r in inverted.bm25_wand_topk(spark, idx, terms, 10).collect()]
-    assert inverted.bm25_wand_topk.last_stats["pricing_cached"] is True
+    wand, terms = inverted.bm25_batch_wand_topk, inverted.WAND_QUERY_TERMS
+    first = bm25_one(wand, spark, idx, terms, 10)
+    assert wand.last_stats["pricing_cached"] is False
+    again = bm25_one(wand, spark, idx, terms, 10)
+    assert wand.last_stats["pricing_cached"] is True
     assert again == first
 
     inverted.append_documents_bm25(
         spark, idx, docs.filter(F.col("doc_id") % 2 == 1)
     )
-    after = [tuple(r) for r in inverted.bm25_wand_topk(spark, idx, terms, 10).collect()]
-    assert inverted.bm25_wand_topk.last_stats["pricing_cached"] is False
+    after = bm25_one(wand, spark, idx, terms, 10)
+    assert wand.last_stats["pricing_cached"] is False
     full = str(tmp_path / "full")
     inverted.build_bm25_index(spark, docs, full)
-    want = [tuple(r) for r in inverted.bm25_wand_topk(spark, full, terms, 10).collect()]
+    want = bm25_one(wand, spark, full, terms, 10)
     assert after == want  # post-append pricing is corpus-true
 
 
@@ -1021,9 +1012,10 @@ def test_bm25_ingest_audit_oracle_replay_and_crash_recovery(spark, duck, tmp_pat
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     inverted.build_bm25_index(spark, docs, full)
-    for probe in (inverted.bm25_topk_from_index, inverted.bm25_wand_topk):
-        got = [tuple(r) for r in probe(spark, incr, list(inverted.WAND_QUERY_TERMS), 20).collect()]
-        want = [tuple(r) for r in probe(spark, full, list(inverted.WAND_QUERY_TERMS), 20).collect()]
+    terms = inverted.WAND_QUERY_TERMS
+    for probe in (inverted.bm25_batch_from_index, inverted.bm25_batch_wand_topk):
+        got = bm25_one(probe, spark, incr, terms, 20)
+        want = bm25_one(probe, spark, full, terms, 20)
         assert got == want, probe.__name__
 
     # crash mid-append: wip sentinel down, marker gone → rebuild path
@@ -1071,14 +1063,15 @@ docs = spark.createDataFrame(
     "doc_id long, text string",
 )
 inverted.build_bm25_index(spark, docs, idx)
-terms = ["alpha", "gamma"]
-r1 = [tuple(r) for r in inverted.bm25_wand_topk(spark, idx, terms, 5).collect()]
-c1 = inverted.bm25_wand_topk.last_stats["pricing_cached"]
+queries = (("alpha", "gamma"),)
+wand = inverted.bm25_batch_wand_topk
+r1 = sorted(tuple(r) for r in wand(spark, idx, queries, 5).collect())
+c1 = wand.last_stats["pricing_cached"]
 spark.stop()
 
 spark2 = mk("restart")
-r2 = [tuple(r) for r in inverted.bm25_wand_topk(spark2, idx, terms, 5).collect()]
-c2 = inverted.bm25_wand_topk.last_stats["pricing_cached"]
+r2 = sorted(tuple(r) for r in wand(spark2, idx, queries, 5).collect())
+c2 = wand.last_stats["pricing_cached"]
 spark2.stop()
 print("RESULT " + json.dumps({{"r1": r1, "c1": c1, "r2": r2, "c2": c2}}))
 """
@@ -1111,7 +1104,7 @@ def test_wand_cache_holds_no_session_objects(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     inverted.build_bm25_index(spark, docs, idx)
-    inverted.bm25_wand_topk(spark, idx, ["red", "blue"], 5).collect()
+    inverted.bm25_batch_wand_topk(spark, idx, (("red", "blue"),), 5).collect()
 
     def flat(v):
         if isinstance(v, dict):
@@ -1185,17 +1178,15 @@ def test_wand_tier_sweep_production_row_equals_served_pricing(spark, tmp_path, m
         assert rows[c].n_postings_deferred > 0, c
 
     # production row == the served probe's own telemetry
-    idx = inverted._documents_bm25_index(spark, SF_DIR)
-    inverted.bm25_wand_topk(
-        spark, idx, list(inverted.WAND_QUERY_TERMS), 10
-    ).collect()
-    st = inverted.bm25_wand_topk.last_stats
+    inverted.bm25_search_wand(spark, SF_DIR).collect()
+    st = inverted.bm25_batch_wand_topk.last_stats
     prod = rows["t3_60_45"]
     assert prod.n_blocks == st["n_blocks_total"]
     assert prod.n_blocks_p1 == st["n_blocks_p1"]
     assert prod.n_postings_p1 == st["n_postings_p1"]
     assert prod.n_postings_deferred == st["n_postings_deferred"]
-    assert abs(prod.slack_micro - round(st["total_slack"] * 1_000_000)) <= 1
+    slack = st["queries"][0]["slack"]
+    assert abs(prod.slack_micro - round(slack * 1_000_000)) <= 1
 
 
 def test_wand_tier_sweep_empty_corpus_returns_typed_empty(spark, tmp_path, monkeypatch):
@@ -1219,44 +1210,6 @@ def test_wand_tier_sweep_empty_corpus_returns_typed_empty(spark, tmp_path, monke
         "config", "n_tiers", "cfg_order", "n_blocks", "n_blocks_p1",
         "n_postings_p1", "n_postings_deferred", "slack_micro",
     ]
-
-
-def test_batch_wand_stats_gate_skips_counts_same_relation(spark, tmp_path, monkeypatch):
-    """r11 (ADVICE r10): the crossover-telemetry counts are two extra
-    count() jobs per probe — a latency-sensitive serving caller passes
-    collect_stats=False (or SPARK_GRAFT_WAND_STATS=0) and must get the
-    IDENTICAL relation with the accumulator/candidate keys absent."""
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    idx = inverted._documents_bm25_index(spark, SF_DIR)
-    queries = inverted.BM25_BATCH_QUERIES
-
-    on = sorted(
-        map(tuple, inverted.bm25_batch_wand_topk(spark, idx, queries, 10).collect())
-    )
-    st_on = dict(inverted.bm25_batch_wand_topk.last_stats)
-
-    off = sorted(
-        map(
-            tuple,
-            inverted.bm25_batch_wand_topk(
-                spark, idx, queries, 10, collect_stats=False
-            ).collect(),
-        )
-    )
-    st_off = dict(inverted.bm25_batch_wand_topk.last_stats)
-
-    assert on == off  # the gate is telemetry-only, relation-invisible
-    if st_on.get("n_prunable", 0) > 0:
-        assert "n_accumulator_rows" in st_on and "n_candidate_rows" in st_on
-    assert "n_accumulator_rows" not in st_off
-    assert "n_candidate_rows" not in st_off
-    # routing telemetry (cheap driver ints) stays in both modes
-    assert st_off["n_prunable"] + st_off["n_fallback"] == len(queries)
-
-    # env toggle path: SPARK_GRAFT_WAND_STATS=0 defaults the gate off
-    monkeypatch.setenv("SPARK_GRAFT_WAND_STATS", "0")
-    inverted.bm25_batch_wand_topk(spark, idx, queries, 10).collect()
-    assert "n_accumulator_rows" not in inverted.bm25_batch_wand_topk.last_stats
 
 
 def test_wand_workload_sweep_production_row_equals_batch_pricing(
@@ -1285,6 +1238,8 @@ def test_wand_workload_sweep_production_row_equals_batch_pricing(
     assert prod.n_blocks_p1 == st["n_blocks_p1"]
     assert prod.n_postings_p1 == st["n_postings_p1"]
     assert prod.n_postings_deferred == st["n_postings_deferred"]
+    slack = sum(q["slack"] for q in st["queries"])
+    assert abs(prod.workload_slack_micro - round(slack * 1_000_000)) <= 1
 
     flat = out["flat"]
     assert flat.n_postings_deferred == 0

@@ -1,0 +1,53 @@
+#!/usr/bin/env python3
+"""Dump `.explain("formatted")` for the named registry keys.
+
+Usage: dump_plans.py TAG SUFFIX KEY [KEY ...]
+  Writes plans/<TAG>/<KEY>_<SUFFIX>.txt under the checkout this tool
+  lives in. SUFFIX is usually "before" or "after": take the "before"
+  dumps by running this file from a checkout of the parent commit.
+  Plans are captured at the package's DEFAULT_SF_DIR
+  ($SPARK_GRAFT_SF_DIR, the bench tier) so PushedFilters / partition
+  counts match what the bench executes.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+
+from samza_hello_samza_spark.registry import all_queries  # noqa: E402
+from samza_hello_samza_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+
+
+def main() -> None:
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    tag, suffix, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out = os.path.join(HERE, "plans", tag)
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark(f"dump-plans-{tag}")
+    spark.sparkContext.setLogLevel("ERROR")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    queries = all_queries()
+    for k in keys:
+        fn = queries.get(k)
+        if fn is None:
+            print(f"skip {k}: not registered", file=sys.stderr)
+            continue
+        try:
+            df = fn(spark, DEFAULT_SF_DIR)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as exc:
+            plan = f"ERROR: {exc}"
+        with open(os.path.join(out, f"{k}_{suffix}.txt"), "w") as fh:
+            fh.write(plan)
+        print(f"dumped {tag}/{k}_{suffix}.txt ({len(plan)} chars)", file=sys.stderr)
+
+
+if __name__ == "__main__":
+    main()
