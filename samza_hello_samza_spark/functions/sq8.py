@@ -23,6 +23,17 @@ constant shortlist recovers true cosine order.
 All packing/unpacking is JVM-side integer arithmetic inside
 whole-stage codegen — no Python, no floats in the ranking path.
 
+Batch fan-out kernels, measured (240-query scoring, one warm JVM,
+min of 3 passes): hoisting the byte unpack out of the per-pair
+expression (one centered int column per code byte, then one
+multiply-add per dimension per pair against an ``array<int>`` query)
+was SLOWER than the packed per-pair kernel, 30.5 s vs 27.2 s on the
+10× tier — the ``element_at`` bounds/null checks and the 8×-wider
+stream row outweigh the saved extraction. Both per-pair JVM shapes
+lost to the Arrow GEMM kernel ``adc_batch_candidates`` (0.84 s on the
+same tier), which is what the batch operators call; the hoisted
+variant was removed, so do not re-try it.
+
 Reference parity note: the reference (hello-samza) ships no vector
 ops; this belongs to the beyond-reference training-data surface
 (brief § "similarity search").
@@ -162,58 +173,6 @@ def pack_words_py(codes: list[int]) -> list[int]:
     return out
 
 
-def unpack_centered_cols(dim: int) -> list[F.Column]:
-    """One centered int column per code byte, extracted from the
-    packed word columns: ``_b{d} = lane_byte(s_w) − 128``.
-
-    DECISION RECORD, not a production path (ADVICE r11): this
-    "hoist the unpack out of the per-pair expression" JVM kernel was
-    A/B'd against the packed kernel in r11 (tools/adc_ab_probe.py:
-    30.5 s vs 27.2 s on the 10× tier — SLOWER, the element_at
-    bounds/null checks and 8×-wider stream row outweigh the saved
-    extraction) and both were then superseded by the Arrow GEMM
-    kernel ``adc_batch_candidates``, which is what the batch
-    operators call. Kept, with its test, so the losing shape is not
-    re-tried; bit-for-bit the same score as the packed kernel."""
-    cols: list[F.Column] = []
-    for w in range(n_words(dim)):
-        word = F.col(f"s{w}")
-        for lane in range(LANES):
-            cols.append(
-                (
-                    F.shiftrightunsigned(word, 8 * lane).bitwiseAND(F.lit(255))
-                    - F.lit(128)
-                )
-                .cast("int")
-                .alias(f"_b{w * LANES + lane}")
-            )
-    return cols
-
-
-def centered_codes_py(codes: list[int]) -> list[int]:
-    """Driver-side query twin of ``unpack_centered_cols`` (same
-    decision-record status — see its docstring): the plain centered
-    byte list (code − 128) that rejected kernel's query relation
-    would carry as ``array<int>`` instead of packed words."""
-    return [c - 128 for c in codes]
-
-
-def adc_score_unpacked_col(dim: int, qbytes: F.Column) -> F.Column:
-    """The rejected hoisted-unpack kernel's scoring half (same
-    decision-record status as ``unpack_centered_cols`` — see its
-    docstring): Σ _b{d} · qbytes[d] over pre-unpacked centered doc
-    bytes and a centered query byte array — one multiply-add per
-    dimension per (doc, query) pair, no per-pair bit extraction.
-    Integer-exact equal to ``adc_score_batch_col`` (same centered
-    products, integer addition reassociates freely)."""
-    score: F.Column = F.lit(0).cast("long")
-    for d in range(dim):
-        score = score + (
-            F.col(f"_b{d}") * F.element_at(qbytes, d + 1)
-        ).cast("long")
-    return score.cast("long")
-
-
 def adc_score_batch_col(dim: int, qwords: F.Column) -> F.Column:
     """``adc_score_col`` with the QUERY side as a column — the batch
     fanout shape: the query's packed words ride a broadcast relation
@@ -257,7 +216,7 @@ def adc_batch_candidates(
     guide-§4.2 kernel for the query-fanout keys: instead of |codes| ×
     |queries| per-pair shift/mask/multiply-add expression trees in
     JVM codegen (measured 27.2 s for the 240-query scoring stage on
-    the 10× tier, tools/adc_ab_probe.py), each ``mapInArrow`` batch
+    the 10× tier), each ``mapInArrow`` batch
     unpacks its packed words ONCE via a little-endian byte view and
     scores every (doc, query) pair as a dense matrix product, then
     keeps only the per-batch top-``k`` candidates per query.

@@ -6,8 +6,8 @@ model/WikipediaParser.java:46-80 — a regex over raw IRC lines
 title/user/flags/diff-bytes/diff-url/summary plus derived boolean
 flags (is-minor/new/unpatrolled/bot-edit/special/talk).
 
-Here the parse is a pure column expression (``regexp_extract``), so
-it stays inside whole-stage codegen — no Python in the hot path. The
+Here the parse is a pure column expression (one ``regexp_replace``),
+so it stays inside whole-stage codegen — no Python in the hot path. The
 driver's testdata has no IRC lines, so :func:`synthesize_raw_line`
 deterministically builds reference-format lines from the ``events``
 table; parsing then recovers structure exactly as the reference does.
@@ -62,31 +62,35 @@ def synthesize_raw_line(event_id: Column, user_id: Column, event_type: Column, v
     )
 
 
-def parse_raw_line(raw: Column) -> dict[str, Column]:
-    """Parse a raw edit line into the reference's output fields.
+def parse_raw_line(raw: Column) -> Column:
+    """Parse a raw edit line into its six regex groups, as array<string>.
 
     One regex pass: ``regexp_replace`` rewrites the matched line into a
     ``\\x01``-delimited record which a plain ``split`` fans out — one
     regex evaluation per row instead of six ``regexp_extract`` calls
     (same pattern, same groups, same Java regex engine, so extracted
-    values are identical on matching lines).
+    values are identical on matching lines). An unparseable line (the
+    reference logs-and-drops it, WikipediaParser.java:39) passes
+    through ``regexp_replace`` unchanged, so its record has one element
+    instead of six; a NULL line gives a NULL record.
+
+    Project the record as a column once and gate on ``size(rec) = 6``
+    before reading it with :func:`edit_fields`: an expression that
+    repeats the parse repeats the regex.
     """
     sep = "\x01"
-    rec0 = F.split(
+    return F.split(
         F.regexp_replace(raw, WIKI_EDIT_REGEX, sep.join(f"${g}" for g in range(1, 7))),
         sep,
     )
-    # An unparseable line (the reference logs-and-drops it,
-    # WikipediaParser.java:39) passes through regexp_replace unchanged
-    # → a 1-element array: gate every field on the 6-field shape so
-    # malformed feed lines yield NULLs (and `matched` false) instead of
-    # leaking the raw line into `title` or throwing under ANSI.
-    matched = F.size(rec0) == 6
-    rec = F.when(matched, rec0)
+
+
+def edit_fields(rec: Column) -> dict[str, Column]:
+    """The reference's output fields of a six-group record from
+    :func:`parse_raw_line`, plus its derived boolean flags."""
     title = F.try_element_at(rec, F.lit(1))
     flags = F.try_element_at(rec, F.lit(2))
     return {
-        "matched": matched,
         "title": title,
         "unparsed_flags": flags,
         "diff_url": F.try_element_at(rec, F.lit(3)),

@@ -1,9 +1,15 @@
 """Batch analogs of every samza-hello-samza cookbook/SQL operator.
 
-Each function takes ``(spark, sf_dir)`` and returns a DataFrame; the
+Each key takes ``(spark, sf_dir)`` and returns a DataFrame; the
 module-level ``ORACLES`` dict holds the equivalent DuckDB SQL. Column
 names are aliased identically on both sides (driver hashes values
 after sorting columns by name).
+
+A job the reference also runs as a stream is written once, as a
+``DataFrame -> DataFrame`` function: ``valid_events``,
+``tumbling_counts``, ``enrich_events`` here and the Wikipedia feed →
+parser → stats stages in ``streaming.pipelines``. The key applies it to
+``load_table``; a stream applies the same function to ``readStream``.
 
 Scale notes (100 TB target):
 - Dim joins (`customer`, `nation`) are explicit ``broadcast()`` —
@@ -22,31 +28,34 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.wikipedia import parse_raw_line, synthesize_raw_line
 from ..functions.hints import maybe_broadcast
 from ..session import load_table
+from ..streaming.pipelines import WATERMARK, feed_job, parser_job, stats_job
 
 SESSION_GAP_MIN = 30  # batch analog of SessionWindowExample's 10s gap
 JOIN_WINDOW_MIN = 3  # JoinExample.java: Duration.ofMinutes(3)
 
 
+def valid_events(events: DataFrame) -> DataFrame:
+    """FilterExample.java:59-61 — drop invalid users, forward the rest."""
+    return events.filter(
+        F.col("user_id").isNotNull() & (F.col("event_type") != "error")
+    ).select(
+        "event_id",
+        F.unix_timestamp("ts").alias("ts_epoch"),
+        "user_id",
+        "event_type",
+        "value",
+    )
+
+
 def filter_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FilterExample.java:59-61 — drop invalid users, forward the rest.
+    """``valid_events`` over the events table.
 
     The filter is a pushed-down parquet predicate (check
     `PushedFilters` in .explain): no row ever leaves the scan.
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.filter((F.col("user_id").isNotNull()) & (F.col("event_type") != "error"))
-        .select(
-            "event_id",
-            F.unix_timestamp("ts").alias("ts_epoch"),
-            "user_id",
-            "event_type",
-            "value",
-        )
-    )
+    return valid_events(load_table(spark, sf_dir, "events"))
 
 
 def project_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -80,16 +89,28 @@ def groupby_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("event_type").agg(F.count("*").alias("views"))
 
 
-def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TumblingWindowExample.java:64-70 — per-user counts per 5-min window."""
-    ev = load_table(spark, sf_dir, "events")
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """TumblingWindowExample.java:64-70 — per-user counts per 5-min window.
+
+    Grouping on the window struct itself lets a stream expire a
+    window's state once the watermark passes it; a batch plan drops
+    the watermark.
+    """
     return (
-        ev.groupBy(
-            F.col("user_id"),
-            F.unix_timestamp(F.window("ts", "5 minutes").start).alias("window_start_epoch"),
-        )
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "5 minutes").alias("win"), "user_id")
         .agg(F.count("*").alias("views"))
+        .select(
+            F.unix_timestamp("win.start").alias("window_start_epoch"),
+            "user_id",
+            "views",
+        )
     )
+
+
+def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``tumbling_counts`` over the events table."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,24 +279,28 @@ def stream_stream_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
     """StreamTableJoinExample.java:95-99 — enrich events from the customer dim.
 
-    The dim is explicitly broadcast: the fact stream is never
+    The dim is broadcast when it fits: the fact stream is never
     shuffled, matching the RocksDB-local-lookup semantics of the
     reference at cluster scale.
     """
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        ev.join(maybe_broadcast(cust), ev.user_id == cust.c_custkey, "inner")
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.col("c_name").alias("company"),
-            F.col("c_mktsegment").alias("segment"),
-        )
+    return events.join(
+        maybe_broadcast(customer), events.user_id == customer.c_custkey, "inner"
+    ).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.col("c_name").alias("company"),
+        F.col("c_mktsegment").alias("segment"),
+    )
+
+
+def stream_table_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``enrich_events`` over the events and customer tables."""
+    return enrich_events(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
 
 
@@ -342,56 +367,24 @@ def merge_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _parsed_edits(spark: SparkSession, sf_dir: str, extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Shared parse pipeline: synthesize raw line → regex-extract fields.
-
-    ``extra_cols`` (e.g. ts) ride along from the scan so consumers
-    never need a join back to events — one scan, zero shuffles.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    raw = ev.select(
-        "event_id",
-        *extra_cols,
-        synthesize_raw_line(
-            F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("value")
-        ).alias("raw"),
-    )
-    parsed = parse_raw_line(F.col("raw"))
-    return raw.select(
-        "event_id",
-        *extra_cols,
-        parsed["title"].alias("title"),
-        parsed["user"].alias("edit_user"),
-        parsed["diff_bytes"].alias("diff_bytes"),
-        parsed["diff_url"].alias("diff_url"),
-        parsed["summary"].alias("summary"),
-        parsed["is_minor"].cast("int").alias("is_minor"),
-        parsed["is_new"].cast("int").alias("is_new"),
-        parsed["is_unpatrolled"].cast("int").alias("is_unpatrolled"),
-        parsed["is_bot_edit"].cast("int").alias("is_bot_edit"),
-        parsed["is_special"].cast("int").alias("is_special"),
-        parsed["is_talk"].cast("int").alias("is_talk"),
-    )
-
-
 def wikipedia_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WikipediaParser.java:46-80 — regex parse of raw edit lines.
 
-    Raw lines are synthesized deterministically from events (the
-    container has no IRC feed), then parsed back with the reference's
-    regex — all inside whole-stage codegen.
+    The topology's feed and parser stages over the events table: raw
+    lines are synthesized deterministically from events (the container
+    has no IRC feed), then parsed back with the reference's regex — all
+    inside whole-stage codegen.
     """
-    return _parsed_edits(spark, sf_dir)
+    return parser_job(feed_job(load_table(spark, sf_dir, "events"))).drop("ts")
 
 
 def wikipedia_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WikipediaStatsStreamTask.java:30-75 — 10-min-window edit stats.
 
-    Per window: edits, bytes-added, unique-titles, flag counts; plus
+    The topology's three stages over the events table, plus
     ``edits_all_time`` — the KeyValueStore-backed running total —
     expressed as a cumulative sum over the aggregated window rows, not
-    over raw events. ``ts`` rides along from the single events scan (no
-    join back, unlike a naive two-source plan).
+    over raw events.
 
     The running total is one ``Window.orderBy`` over the windowed
     aggregate, which runs in a single partition. That relation has one
@@ -400,22 +393,11 @@ def wikipedia_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale. The aggregate has one consumer, so the plan scans and
     parses the events once with nothing materialised eagerly.
     """
-    edits = _parsed_edits(spark, sf_dir, extra_cols=("ts",))
-    windowed = edits.groupBy(
-        F.unix_timestamp(F.window("ts", "10 minutes").start).alias("window_start_epoch")
-    ).agg(
-        F.count("*").alias("edits"),
-        F.sum("diff_bytes").alias("bytes_added"),
-        F.countDistinct("title").alias("unique_titles"),
-        F.sum("is_minor").alias("minor_edits"),
-        F.sum("is_new").alias("new_edits"),
-        F.sum("is_bot_edit").alias("bot_edits"),
-        F.sum("is_special").alias("special_edits"),
-    )
     running = Window.orderBy("window_start_epoch").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    return windowed.withColumn("edits_all_time", F.sum("edits").over(running))
+    edits = parser_job(feed_job(load_table(spark, sf_dir, "events")))
+    return stats_job(edits).withColumn("edits_all_time", F.sum("edits").over(running))
 
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:

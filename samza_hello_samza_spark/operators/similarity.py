@@ -1445,7 +1445,7 @@ def ann_sq8_batch_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = _spread_scan(spark, codes)
     # r11 kernel swap (guide §4.2): 240-query GEMM scoring with
     # in-kernel partial top-k — the 27 s JVM per-pair scoring stage
-    # (tools/adc_ab_probe.py, 10× tier) becomes one exact matrix
+    # (10× tier) becomes one exact matrix
     # product per Arrow batch; rows/order/hash unchanged.
     cand = _sq8.adc_batch_candidates(
         codes, meta["dim"], qcands, BATCH_TOP_K

@@ -1,11 +1,24 @@
-"""Streaming jobs: each Samza example as a DataFrame→DataFrame transform.
+"""Stream-only jobs: Samza examples whose streaming form has no batch twin.
 
-Every job is a pure transformation over a (streaming or batch)
-DataFrame — the same declarative plan serves both executions, which
-is how Structured Streaming's incrementalizer is meant to be used
-(SIGMOD'18 Structured Streaming paper, §4). Tests run the identical
-transform on the batch frame and assert equality with the streamed
-results.
+A job that runs the same way in batch and in stream is written once,
+as a ``DataFrame -> DataFrame`` function, and lives next to its batch
+key: filter, tumbling window and enrich in
+``operators/samza_surface.py``, the Wikipedia feed → parser → stats
+stages in ``pipelines.py`` (SIGMOD'18 Structured Streaming paper, §4:
+one declarative plan, two executions). What remains here uses a
+streaming-only operator or algorithm:
+
+- ``session_counts_job`` / ``sessionize_job``: ``session_window`` and a
+  timer-driven sessionizer (the batch keys use lag + cumulative sum);
+- ``view_click_join_job``: a watermarked interval join (the batch key
+  joins on time buckets);
+- ``dedup_events_job``, ``curation_job``, ``decontamination_job``,
+  ``fuzzy_decontamination_job``, ``dau_approx_job``: ingest-side
+  stages with no registry key of the same definition;
+- ``stateful_totals_job``, ``scd2_job``, ``user_profile_tws_job``:
+  arbitrary state across micro-batches. ``stateful_totals_job`` keeps
+  per-user event totals; no job here keeps the reference's all-time
+  edit count (``wikipedia_stats``'s ``edits_all_time`` is batch-only).
 
 Watermarks: 10 minutes of allowed lateness everywhere — the dial for
 state size at scale. State-store growth is bounded by
@@ -31,31 +44,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.hints import maybe_broadcast
-from ..functions.wikipedia import parse_raw_line, synthesize_raw_line
-
-WATERMARK = "10 minutes"
-
-
-def filter_events_job(events: DataFrame) -> DataFrame:
-    """FilterExample.java:59-61 — same predicate as the batch operator."""
-    return events.filter(
-        (F.col("user_id").isNotNull()) & (F.col("event_type") != "error")
-    )
-
-
-def tumbling_counts_job(events: DataFrame) -> DataFrame:
-    """TumblingWindowExample.java:64-70 — per-user counts per 5-min window."""
-    return (
-        events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "5 minutes").alias("win"), F.col("user_id"))
-        .agg(F.count("*").alias("views"))
-        .select(
-            F.unix_timestamp("win.start").alias("window_start_epoch"),
-            "user_id",
-            "views",
-        )
-    )
+from .pipelines import WATERMARK
 
 
 def session_counts_job(events: DataFrame) -> DataFrame:
@@ -113,62 +102,6 @@ def view_click_join_job(events: DataFrame) -> DataFrame:
         "click_id",
         F.unix_timestamp("view_ts").alias("view_ts_epoch"),
         F.unix_timestamp("click_ts").alias("click_ts_epoch"),
-    )
-
-
-def enrich_job(events: DataFrame, customer: DataFrame) -> DataFrame:
-    """StreamTableJoinExample.java:95-99 — stream ⋈ broadcast static dim."""
-    return events.join(
-        maybe_broadcast(customer), events.user_id == customer.c_custkey, "inner"
-    ).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.col("c_name").alias("company"),
-        F.col("c_mktsegment").alias("segment"),
-    )
-
-
-def wikipedia_stats_job(events: DataFrame) -> DataFrame:
-    """WikipediaApplication.java:150-210 — parse + 10-min window stats.
-
-    ``size(collect_set(title))`` replaces countDistinct (unsupported
-    in streaming aggregation); per-window state is one set per window,
-    bounded by the watermark. ``edits_all_time`` (the reference's
-    KeyValueStore running total) lives in stateful_totals_job instead
-    — a windowed agg can't see across windows.
-    """
-    raw = events.select(
-        "ts",
-        synthesize_raw_line(
-            F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("value")
-        ).alias("raw"),
-    )
-    p = parse_raw_line(F.col("raw"))
-    parsed = raw.select(
-        "ts",
-        p["title"].alias("title"),
-        p["diff_bytes"].alias("diff_bytes"),
-        p["is_minor"].cast("int").alias("is_minor"),
-        p["is_new"].cast("int").alias("is_new"),
-        p["is_bot_edit"].cast("int").alias("is_bot_edit"),
-        p["is_special"].cast("int").alias("is_special"),
-    )
-    return (
-        parsed.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "10 minutes").alias("win"))
-        .agg(
-            F.count("*").alias("edits"),
-            F.sum("diff_bytes").alias("bytes_added"),
-            F.size(F.collect_set("title")).cast("long").alias("unique_titles"),
-            F.sum("is_minor").alias("minor_edits"),
-            F.sum("is_new").alias("new_edits"),
-            F.sum("is_bot_edit").alias("bot_edits"),
-            F.sum("is_special").alias("special_edits"),
-        )
-        .select(F.unix_timestamp("win.start").alias("window_start_epoch"), "edits",
-                "bytes_added", "unique_titles", "minor_edits", "new_edits",
-                "bot_edits", "special_edits")
     )
 
 

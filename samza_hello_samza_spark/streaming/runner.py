@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row
 
 
 def run_stream_to_memory(
@@ -40,10 +40,6 @@ def last_update_per_key(rows: list[Row], key_cols: list[str]) -> dict:
     for r in rows:
         out[tuple(r[k] for k in key_cols)] = r
     return out
-
-
-def describe_active_streams(spark: SparkSession) -> list[str]:
-    return [q.name or q.id for q in spark.streams.active]
 
 
 def watermark_drops(query) -> int:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import load_table, read_parquet
+from .pipelines import feed_job
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,23 +92,15 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
 
 
 def wikipedia_live_feed(spark: SparkSession, rows_per_second: int = 500) -> DataFrame:
-    """LIVE ingest of the wikipedia feed shape: an unbounded rate source
-    emitting reference-format raw edit lines as they are generated.
+    """LIVE ingest of the wikipedia feed: ``pipelines.feed_job`` over an
+    unbounded rate source, emitting reference-format raw edit lines as
+    they are generated.
 
     The in-container analog of the reference's IRC consumer
     (wikipedia/system/WikipediaConsumer.java): a push source producing
     raw lines in real time, feeding the SAME parser → stats chain as
-    the replayable file path (``pipelines.parser_job`` /
-    ``stats_job``). On a cluster the rate source swaps for the
-    socket/Kafka feed; everything downstream is unchanged.
+    the replayable file path and the batch keys. On a cluster the rate
+    source swaps for the socket/Kafka feed; everything downstream is
+    unchanged.
     """
-    from ..functions.wikipedia import synthesize_raw_line
-
-    ev = rate_stream(spark, rows_per_second)
-    return ev.select(
-        "event_id",
-        "ts",
-        synthesize_raw_line(
-            F.col("event_id"), F.col("user_id"), F.col("event_type"), F.col("value")
-        ).alias("raw"),
-    )
+    return feed_job(rate_stream(spark, rows_per_second))

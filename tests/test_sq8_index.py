@@ -442,46 +442,6 @@ def test_adc_batch_col_equals_literal_col_incl_sign_lane(spark):
         assert lit_scores[vid] == want, vid
 
 
-def test_adc_unpacked_col_equals_literal_col_incl_sign_lane(spark):
-    """r11 batch-fanout kernel: the hoisted-unpack scorer (doc bytes
-    extracted once per doc row via unpack_centered_cols, query as a
-    centered int array) must equal the single-query literal scorer for
-    every vector — including codes ≥ 128 in lane 7 where the packed
-    word's sign bit is set."""
-    dim = 16  # 2 words — lane 7 of each word exercises the sign bit
-    corpus_codes = [
-        [0] * dim,
-        [255] * dim,
-        [128] * dim,
-        [(7 * i + 3) % 256 for i in range(dim)],
-        [255 if i % 8 == 7 else 0 for i in range(dim)],  # sign lanes hot
-    ]
-    qcodes = [(11 * i + 200) % 256 for i in range(dim)]  # q lane-7 ≥ 128
-    rows = [
-        (vid, *sq8.pack_words_py(c)) for vid, c in enumerate(corpus_codes)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id LONG, " + ", ".join(f"s{w} LONG" for w in range(dim // 8))
-    )
-    lit_scores = {
-        r.vec_id: r.s
-        for r in df.withColumn("s", sq8.adc_score_col(qcodes)).collect()
-    }
-    qb = sq8.centered_codes_py(qcodes)
-    unpacked = df.select("vec_id", *sq8.unpack_centered_cols(dim))
-    # the unpacked doc bytes themselves must be the centered codes
-    for r in unpacked.collect():
-        want_bytes = sq8.centered_codes_py(corpus_codes[r.vec_id])
-        assert [r[f"_b{d}"] for d in range(dim)] == want_bytes, r.vec_id
-    batch = unpacked.crossJoin(
-        F.broadcast(
-            spark.createDataFrame([(0, qb)], "query_id LONG, qb ARRAY<INT>")
-        )
-    ).withColumn("s", sq8.adc_score_unpacked_col(dim, F.col("qb")))
-    batch_scores = {r.vec_id: r.s for r in batch.collect()}
-    assert batch_scores == lit_scores
-
-
 def test_adc_batch_candidates_kernel(spark):
     """r11 GEMM kernel (guide §4.2): adc_batch_candidates + the
     serving window must return bit-identical rows to the JVM packed

@@ -1,27 +1,33 @@
-"""Streaming twins produce the same results as their batch analogs.
+"""Streaming jobs produce the same results as their batch analogs.
 
 Mirrors the reference's test strategy (TestSamzaCookBookExamples.java:
 bounded in-memory streams, assert on collected output): each job runs
 on a bounded file stream with availableNow, and the collected sink
-contents are compared against the identical transform applied to the
-batch DataFrame.
+contents are compared against the batch key's DuckDB oracle or against
+the same transform applied to the batch DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+from pathlib import Path
 
 import pytest
 
+import samza_hello_samza_spark
 from samza_hello_samza_spark.operators import samza_surface
 from samza_hello_samza_spark.session import load_table, normalize_nanos_ts
 from samza_hello_samza_spark.streaming import jobs, sources
+from samza_hello_samza_spark.streaming.pipelines import feed_job, parser_job, stats_job
 from samza_hello_samza_spark.streaming.runner import (
     last_update_per_key,
     run_stream_to_memory,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _norm
+
+PACKAGE = Path(samza_hello_samza_spark.__file__).parent
 
 
 @pytest.fixture(scope="module")
@@ -36,21 +42,6 @@ def stream_events(spark):
 
 def _rows_set(rows, cols):
     return sorted(tuple(r[c] for c in cols) for r in rows)
-
-
-def test_filter_stream_matches_batch(spark, batch_events, stream_events):
-    got = run_stream_to_memory(
-        jobs.filter_events_job(stream_events).select("event_id"), mode="append"
-    )
-    want = jobs.filter_events_job(batch_events).select("event_id").collect()
-    assert _rows_set(got, ["event_id"]) == _rows_set(want, ["event_id"])
-
-
-def test_tumbling_stream_matches_batch(spark, batch_events, stream_events):
-    cols = ["window_start_epoch", "user_id", "views"]
-    got = run_stream_to_memory(jobs.tumbling_counts_job(stream_events), mode="update")
-    want = jobs.tumbling_counts_job(batch_events).collect()
-    assert _rows_set(got, cols) == _rows_set(want, cols)
 
 
 def test_session_stream_matches_batch_sessionization(spark, batch_events, stream_events):
@@ -109,25 +100,65 @@ def test_join_stream_matches_batch(spark, batch_events, stream_events):
     assert _rows_set(got, cols) == _rows_set(want, cols)
 
 
-def test_enrich_stream_matches_batch(spark, batch_events, stream_events):
-    cols = ["event_id", "company"]
-    cust = sources.customer_table(spark, SF_DIR)
-    got = run_stream_to_memory(jobs.enrich_job(stream_events, cust), mode="append")
-    want = samza_surface.stream_table_join(spark, SF_DIR).collect()
-    assert _rows_set(got, cols) == _rows_set(want, cols)
+#: (registry key, the key's frame function over a stream, output mode,
+#: oracle columns the stream cannot produce). The running total over
+#: all windows is a batch-only window function.
+STREAM_DEFS = [
+    ("filter_events", lambda spark, ev: samza_surface.valid_events(ev), "append", ()),
+    ("tumbling_window", lambda spark, ev: samza_surface.tumbling_counts(ev), "update", ()),
+    (
+        "stream_table_join",
+        lambda spark, ev: samza_surface.enrich_events(ev, sources.customer_table(spark, SF_DIR)),
+        "append",
+        (),
+    ),
+    ("wikipedia_parse", lambda spark, ev: parser_job(feed_job(ev)).drop("ts"), "append", ()),
+    (
+        "wikipedia_stats",
+        lambda spark, ev: stats_job(parser_job(feed_job(ev))),
+        "update",
+        ("edits_all_time",),
+    ),
+]
 
 
-def test_wikipedia_stats_stream_matches_batch(spark, stream_events):
-    cols = [
-        "window_start_epoch",
-        "edits",
-        "bytes_added",
-        "unique_titles",
-        "minor_edits",
-    ]
-    got = run_stream_to_memory(jobs.wikipedia_stats_job(stream_events), mode="update")
-    want = samza_surface.wikipedia_stats(spark, SF_DIR).collect()
-    assert _rows_set(got, cols) == _rows_set(want, cols)
+@pytest.mark.parametrize(
+    "key,build,mode,batch_only", STREAM_DEFS, ids=[d[0] for d in STREAM_DEFS]
+)
+def test_stream_matches_oracle(spark, duck, stream_events, key, build, mode, batch_only):
+    """The definition a registry key applies to ``load_table``, run over
+    a file stream, equals the key's DuckDB oracle on every column the
+    stream produces."""
+    df = build(spark, stream_events)
+    assert df.isStreaming
+    want = duck.execute(samza_surface.ORACLES[key]).df()
+    cols = sorted(df.columns)
+    assert sorted(set(want.columns) - set(cols)) == sorted(batch_only)
+    got = sorted(
+        tuple(_norm(r[c]) for c in cols) for r in run_stream_to_memory(df, mode=mode)
+    )
+    expected = sorted(
+        tuple(_norm(v) for v in row) for row in want[cols].itertuples(index=False, name=None)
+    )
+    assert got and got == expected
+
+
+#: a call (not the ``def``) of a Wikipedia raw-line helper
+_WIKI_CALL = re.compile(r"(?<!def )\b(synthesize_raw_line|parse_raw_line|edit_fields)\(")
+
+
+def test_wikipedia_line_helpers_called_once_in_pipelines():
+    """The feed line and the parse are written once, in the topology's
+    stages; every batch key and live source reuses those stages."""
+    calls = {}
+    for p in sorted(PACKAGE.rglob("*.py")):
+        for m in _WIKI_CALL.finditer(p.read_text()):
+            calls.setdefault(m.group(1), []).append(str(p.relative_to(PACKAGE)))
+    assert calls == {
+        "synthesize_raw_line": ["streaming/pipelines.py"],
+        "parse_raw_line": ["streaming/pipelines.py"],
+        "edit_fields": ["streaming/pipelines.py"],
+    }
 
 
 def test_dau_stream_matches_batch_sketch(spark, stream_events):

@@ -150,14 +150,16 @@ def test_real_feed_per_line_parser_parity(spark):
     the reference parser's groups through the Spark column parse."""
     from pyspark.sql import functions as F
 
-    from samza_hello_samza_spark.functions.wikipedia import parse_raw_line
+    from samza_hello_samza_spark.functions.wikipedia import edit_fields, parse_raw_line
 
     raws = [r for r, _ in _load_fixture_lines() if r is not None]
-    df = spark.createDataFrame([(r,) for r in raws], "raw string")
-    p = parse_raw_line(F.col("raw"))
+    df = spark.createDataFrame([(r,) for r in raws], "raw string").select(
+        "raw", parse_raw_line(F.col("raw")).alias("rec")
+    )
+    p = edit_fields(F.col("rec"))
     rows = df.select(
         "raw",
-        p["matched"].alias("matched"),
+        (F.size("rec") == 6).alias("matched"),
         p["title"].alias("title"),
         p["unparsed_flags"].alias("flags"),
         p["diff_url"].alias("diff_url"),

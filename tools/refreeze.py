@@ -1,22 +1,19 @@
 #!/usr/bin/env python3
-"""Re-freeze BASELINE.json from a round-end BENCH_DETAIL file (r12).
+"""Re-freeze BASELINE.json from a BENCH_DETAIL file.
 
-VERDICT r11 #2's mechanics need the freeze table and the CPU probe
-reference to come from the SAME box state, so future runs can say
-"this box is N× the freeze box" and normalize 2× verdicts
-mechanically. The r04-r11 freezes were accreted across several boxes
-(including healthy ones this box reads ~1.5× slower than on
-untouched code), which is why the r11/r12 driver runs drowned in
-ambient "violations". This tool:
+The freeze table and the CPU probe reference must come from the SAME
+box state, so a later run can say "this box is N× the freeze box" and
+normalise its 2× verdicts by the probe ratio instead of reading host
+drift as violations. This tool:
 
-- archives the previous freeze table as ``freezes_r11`` (one level of
-  history; older tables live in git),
+- archives the previous freeze table as ``freezes_prev`` (one level
+  of history; older tables live in git),
 - writes ``freezes`` = the per-key values of the given BENCH_DETAIL
-  run (sf0.1 + sf1 tiers, rounded up to 3dp),
+  run (sf0.1 + sf1 tiers),
 - writes ``probe_ref`` = the probe block recorded in the SAME detail
   file (bench.py measures it at run start, outside timed regions).
 
-Usage: refreeze_r12.py BENCH_DETAIL.json
+Usage: refreeze.py BENCH_DETAIL.json
 """
 
 from __future__ import annotations
@@ -30,6 +27,8 @@ BASELINE = os.path.join(HERE, "BASELINE.json")
 
 
 def main() -> None:
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
     detail_path = sys.argv[1]
     with open(detail_path) as fh:
         detail = json.load(fh)
@@ -42,25 +41,21 @@ def main() -> None:
     for k, v in detail.get("tiers", {}).get("sf1", {}).get("queries", {}).items():
         freezes.setdefault(k, {})["sf1"] = v
 
-    prev = base.get("freezes", {})
-    base["freezes_r11"] = prev
+    base["freezes_prev"] = base.get("freezes", {})
     base["freezes"] = freezes
     probe = detail.get("probe", {}).get("start")
     if probe:
         base["probe_ref"] = {
             **probe,
             "note": "measured by bench.cpu_probe at the start of the "
-            "r12 freeze run (same box state as the freezes)",
+            "freeze run (same box state as the freezes)",
         }
     base["freezes_meta"] = {
-        "round": 12,
         "source": os.path.basename(detail_path),
-        "note": "full re-freeze at the r12 final HEAD on the r12 box "
-        "(VERDICT r11 #2): freezes and probe_ref now share one box "
-        "state, so the 2x checker normalizes by the probe ratio "
-        "instead of drowning in host drift. Previous table archived "
-        "as freezes_r11; the r11 box read ~1.5x these values' box on "
-        "untouched code (BENCH_LOCAL_r12_onbox_before.json).",
+        "note": "full re-freeze from one bench run: freezes and "
+        "probe_ref share one box state, so the 2x checker normalizes "
+        "by the probe ratio. The previous table is kept as "
+        "freezes_prev.",
     }
     with open(BASELINE, "w") as fh:
         json.dump(base, fh, indent=1)
