@@ -62,81 +62,3 @@ def maybe_broadcast(df: DataFrame, max_bytes: int = DEFAULT_BROADCAST_BUDGET) ->
     if size is not None and size <= max_bytes:
         return F.broadcast(df)
     return df
-
-
-def maybe_broadcast_counted(
-    df: DataFrame,
-    max_bytes: int = DEFAULT_BROADCAST_BUDGET,
-    probe_rows: int = 1_000_000,
-    est_row_bytes: int = 256,
-) -> DataFrame:
-    """Cost-based escalation of ``maybe_broadcast``: when Catalyst has
-    NO usable estimate (aggregates and joins propagate Long.MaxValue-ish
-    sentinels), measure instead of guessing.
-
-    The probe is ``df.limit(probe_rows + 1).count()`` — a bounded job
-    that early-terminates the scan after ``probe_rows + 1`` rows, so
-    an over-budget frame costs one short partial scan, never a full
-    materialization. If the observed count stays under the row budget
-    implied by ``max_bytes / est_row_bytes``, the frame is provably
-    small RIGHT NOW (runtime truth, the same signal AQE uses from
-    shuffle stats) and gets the hint; otherwise strategy is left to
-    the planner + AQE.
-
-    Use on derived frames that are *usually* dimension-sized but whose
-    bound isn't structural — e.g. a filtered dim, a distinct-key set.
-    Structurally bounded frames (1-row aggregates, nation) should keep
-    using ``maybe_broadcast``/``F.broadcast`` — no probe job needed.
-    """
-    size = plan_size_bytes(df)
-    if size is not None:
-        return F.broadcast(df) if size <= max_bytes else df
-    row_budget = min(probe_rows, max(1, max_bytes // est_row_bytes))
-    observed = df.limit(row_budget + 1).count()
-    if observed <= row_budget:
-        return F.broadcast(df)
-    return df
-
-
-def maybe_broadcast_runtime(
-    df: DataFrame,
-    max_bytes: int = DEFAULT_BROADCAST_BUDGET,
-    keep_if_big: bool = False,
-) -> DataFrame:
-    """Decide from the OBSERVED size, not Catalyst's estimate.
-
-    ``maybe_broadcast_counted``'s limit-probe is still a pre-execution
-    guess (rows × assumed row width); this is the runtime path: the
-    frame is persisted and materialized once, and the decision reads
-    the actual cached-batch byte size through the plan's
-    ``InMemoryRelation`` statistics — the same runtime-truth signal
-    class AQE reads from shuffle stage stats, surfaced through
-    QueryExecution instead of a guess. Catalyst being wrong in EITHER
-    direction is corrected: an over-estimated tiny frame (filtered
-    dim the optimizer assumes unselective) still gets its broadcast,
-    and an under-estimated blowup (generator/explode output estimated
-    at input size) is NOT shipped to every executor.
-
-    Storage contract: on the BROADCAST path the frame stays cached —
-    the pin is bounded by ``max_bytes`` and the hint's build side
-    reads the materialized batches. On the too-big / stats-unavailable
-    path the cache is RELEASED by default (``keep_if_big=False``):
-    the measurement already happened and holding an arbitrarily large
-    frame in executor storage for the session lifetime would leak.
-    Pass ``keep_if_big=True`` only when the caller reuses the frame
-    across further actions and owns the eventual ``unpersist()``. The
-    stats must be read through a FRESH QueryExecution
-    (``select("*")``) — a DataFrame whose plan was analyzed before
-    ``persist`` keeps its pre-cache estimate.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()  # materialize → InMemoryRelation carries actual bytes
-    fresh = cached.select("*")
-    size = plan_size_bytes(fresh)
-    if size is not None and size <= max_bytes:
-        return F.broadcast(fresh)
-    if not keep_if_big:
-        cached.unpersist()
-    return fresh

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 import numpy as np
 import pandas as pd
@@ -43,17 +42,14 @@ from pyspark.sql.types import LongType
 
 from ..functions import binary_sig
 from ..functions import sq8 as sq8_codec
-from ..session import load_table, read_parquet
+from ..session import index_base_dir, load_table, read_parquet, write_json_atomic
 
 #: bump when the on-disk layout or hash family changes.
 LAYOUT_VERSION = 1
 
 
 def _index_root() -> str:
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir()),
-        f"spark_graft_ann_index_v{LAYOUT_VERSION}",
-    )
+    return os.path.join(index_base_dir(), f"spark_graft_ann_index_v{LAYOUT_VERSION}")
 
 
 def _tag(sf_dir: str) -> str:
@@ -282,15 +278,11 @@ def read_sig_meta(index_dir: str) -> dict | None:
 
 
 def _write_sig_meta(index_dir: str, dim: int) -> None:
-    import json
-
     os.makedirs(index_dir, exist_ok=True)
-    tmp = _sig_meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"sig_cols": binary_sig.sig_col_names(dim), "dim": dim}, f
-        )
-    os.replace(tmp, _sig_meta_path(index_dir))
+    write_json_atomic(
+        _sig_meta_path(index_dir),
+        {"sig_cols": binary_sig.sig_col_names(dim), "dim": dim},
+    )
 
 
 def _sq8_meta_path(index_dir: str) -> str:
@@ -358,21 +350,17 @@ read_sq8_meta.last_cached = False
 def _write_sq8_meta(
     index_dir: str, dim: int, mins: list[float], maxs: list[float]
 ) -> None:
-    import json
 
     os.makedirs(index_dir, exist_ok=True)
-    tmp = _sq8_meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "sq8_cols": sq8_codec.sq8_col_names(dim),
-                "dim": dim,
-                "mins": mins,
-                "maxs": maxs,
-            },
-            f,
-        )
-    os.replace(tmp, _sq8_meta_path(index_dir))
+    write_json_atomic(
+        _sq8_meta_path(index_dir),
+        {
+            "sq8_cols": sq8_codec.sq8_col_names(dim),
+            "dim": dim,
+            "mins": mins,
+            "maxs": maxs,
+        },
+    )
 
 
 def _mrl_meta_path(index_dir: str) -> str:
@@ -401,13 +389,8 @@ def read_mrl_meta(index_dir: str) -> dict | None:
 
 
 def _write_mrl_meta(index_dir: str, dim_pre: int) -> None:
-    import json
-
     os.makedirs(index_dir, exist_ok=True)
-    tmp = _mrl_meta_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"mrl_col": "v_pre", "dim_pre": dim_pre}, f)
-    os.replace(tmp, _mrl_meta_path(index_dir))
+    write_json_atomic(_mrl_meta_path(index_dir), {"mrl_col": "v_pre", "dim_pre": dim_pre})
 
 
 def _derived_col_map(index_dir: str) -> dict[str, F.Column]:
@@ -644,17 +627,10 @@ def _index_manifest_path(index_dir: str) -> str:
     return os.path.join(index_dir, "_MANIFEST.json")
 
 
-def _legacy_manifest_path(index_dir: str) -> str:
+def _create_once_manifest_path(index_dir: str) -> str:
+    # ``publish_create_once`` layouts (the edge and component tables)
+    # commit under this name; ``read_index_manifest`` falls back to it.
     return os.path.join(index_dir, "MANIFEST.json")
-
-
-def _drop_legacy_manifest(index_dir: str) -> None:
-    """A commit under the new name supersedes any pre-rename manifest;
-    removing it keeps raw directory reads clean on old cached dirs."""
-    try:
-        os.remove(_legacy_manifest_path(index_dir))
-    except FileNotFoundError:
-        pass
 
 
 def _list_parquet_files(index_dir: str) -> list[str]:
@@ -732,6 +708,45 @@ def gc_orphan_builds(
         except OSError:
             continue  # concurrent GC / racing builder — leave it
     return removed
+
+
+def publish_create_once(spark: SparkSession, root: str, build) -> DataFrame:
+    """Corpus state built once under ``root`` and read back as parquet.
+
+    The first caller runs ``build()`` (a DataFrame), writes it into a
+    writer-private ``build-<uuid>`` dir and publishes it with a
+    FIRST-WRITER-WINS commit: ``os.link`` of a uniquely named manifest
+    fails if the manifest already exists. Concurrent first callers may
+    all build, but exactly one commits; each loser reclaims its build
+    and reads the winner's. Readers resolve files ONLY through the
+    manifest, so a half-written build dir is invisible. An
+    ``os.replace`` would let a second committer re-publish a different
+    build of the same state, so this commit stays separate from
+    ``session.write_json_atomic``. Builds a crashed or racing writer
+    left behind are reclaimed by ``gc_orphan_builds`` (age-gated).
+    """
+    import json
+    import uuid
+
+    man = read_index_manifest(root)
+    if man["files"]:
+        gc_orphan_builds(root, man)
+    else:
+        own = os.path.join(root, f"build-{uuid.uuid4().hex}")
+        build().write.mode("overwrite").parquet(own)
+        manifest = _create_once_manifest_path(root)
+        tmp = manifest + f".tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump({"version": 1, "files": _list_parquet_files(own)}, f)
+        try:
+            os.link(tmp, manifest)
+        except FileExistsError:
+            pass  # lost the race — the committed build wins
+        finally:
+            os.remove(tmp)
+        man = read_index_manifest(root)
+        gc_orphan_builds(root, man, own_build=own)
+    return read_parquet(spark, *man["files"])
 
 
 def _sidecar_tombstone_files(data_dir: str) -> list[str]:
@@ -830,8 +845,6 @@ def restore_index_version(index_dir: str, version: int) -> dict:
     retired files a vacuum already reclaimed fails at probe time.
     Single-maintainer op like the rest of the maintenance surface.
     """
-    import json
-
     cur = read_index_manifest(index_dir)
     target = read_index_manifest(index_dir, version=version)
     if int(target["version"]) == int(cur["version"]):
@@ -860,10 +873,7 @@ def restore_index_version(index_dir: str, version: int) -> dict:
         "retired": retired,
         "retired_tombstones": retired_tombs,
     }
-    tmp = _index_manifest_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, _index_manifest_path(index_dir))  # the atomic commit
+    write_json_atomic(_index_manifest_path(index_dir), new_man)  # the atomic commit
     _record_history(index_dir, new_man)
     return new_man
 
@@ -885,13 +895,8 @@ def index_tags(index_dir: str) -> dict[str, int]:
 
 
 def _write_tags(index_dir: str, tags: dict[str, int]) -> None:
-    import json
-
     os.makedirs(_history_dir(index_dir), exist_ok=True)
-    tmp = _tags_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(tags, f)
-    os.replace(tmp, _tags_path(index_dir))
+    write_json_atomic(_tags_path(index_dir), tags)
 
 
 def tag_index_version(
@@ -937,14 +942,9 @@ def delete_index_tag(index_dir: str, name: str) -> None:
 
 
 def _record_history(index_dir: str, man: dict) -> None:
-    import json
-
     hist = _history_dir(index_dir)
     os.makedirs(hist, exist_ok=True)
-    tmp = os.path.join(hist, f"v{man['version']}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, os.path.join(hist, f"v{man['version']}.json"))
+    write_json_atomic(os.path.join(hist, f"v{man['version']}.json"), man)
 
 
 def read_index_manifest(
@@ -974,9 +974,9 @@ def read_index_manifest(
         data, hit = _cached_sidecar_json(path)
         read_index_manifest.last_cached = hit
         return data
-    legacy = _legacy_manifest_path(index_dir)  # pre-rename cached dirs
-    if os.path.exists(legacy):
-        data, hit = _cached_sidecar_json(legacy)
+    create_once = _create_once_manifest_path(index_dir)
+    if os.path.exists(create_once):
+        data, hit = _cached_sidecar_json(create_once)
         read_index_manifest.last_cached = hit
         return data
     read_index_manifest.last_cached = False
@@ -994,8 +994,6 @@ def commit_index_snapshot(index_dir: str) -> dict:
     files written but not yet committed are invisible to manifest
     readers. Returns the new manifest.
     """
-    import json
-
     man = read_index_manifest(index_dir)
     # files a rebalance superseded ("retired") stay on disk for pinned
     # readers but must never re-enter a listing-based commit; any other
@@ -1018,14 +1016,10 @@ def commit_index_snapshot(index_dir: str) -> dict:
             if t not in set(man.get("retired_tombstones", []))
         ],
     }
-    tmp = _index_manifest_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, _index_manifest_path(index_dir))  # the atomic commit
+    write_json_atomic(_index_manifest_path(index_dir), man)  # the atomic commit
     _record_history(index_dir, man)  # time-travel copy (post-commit:
     # a crash here loses at most this version's history entry, never
     # the commit itself)
-    _drop_legacy_manifest(index_dir)
     return man
 
 
@@ -1037,8 +1031,6 @@ def commit_index_files(
     readers pinned to older manifests, but leave the manifest (and are
     recorded under ``retired`` so later listing-based commits don't
     resurrect them; ``vacuum_index`` reclaims the space)."""
-    import json
-
     man = read_index_manifest(index_dir)
     man = {**man, "version": man["version"] + 1, "files": sorted(files),
            "tombstones": [
@@ -1047,12 +1039,8 @@ def commit_index_files(
                if t not in set(man.get("retired_tombstones", []))
            ],
            **(extra or {})}
-    tmp = _index_manifest_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, _index_manifest_path(index_dir))
+    write_json_atomic(_index_manifest_path(index_dir), man)
     _record_history(index_dir, man)
-    _drop_legacy_manifest(index_dir)
     return man
 
 
@@ -1264,8 +1252,6 @@ def vacuum_index(index_dir: str) -> int:
     pre-rebalance manifest (the same grace-period contract as
     Delta VACUUM); the current snapshot is untouched. Returns the
     number of files removed."""
-    import json
-
     man = read_index_manifest(index_dir)
     removed = 0
     for f in man.get("retired", []):
@@ -1275,10 +1261,7 @@ def vacuum_index(index_dir: str) -> int:
         except FileNotFoundError:
             pass
     man = {**man, "retired": []}
-    tmp = _index_manifest_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    os.replace(tmp, _index_manifest_path(index_dir))
+    write_json_atomic(_index_manifest_path(index_dir), man)
     return removed
 
 

@@ -36,7 +36,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table, read_parquet
+from ..session import load_table
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 N_PERMS = 24
@@ -1103,57 +1103,30 @@ def _components_cached(
     identical rows. The pair input comes from the SAME materialized
     edge table the graph family shares — one shingle self-join per
     corpus serves pagerank, k-core, LPA, triangles AND clustering."""
-    import json
     import os
-    import tempfile
-    import uuid
 
-    from .ann_index import (
-        _list_parquet_files,
-        gc_orphan_builds,
-        read_index_manifest,
-    )
+    from ..session import index_base_dir
+    from .ann_index import publish_create_once
 
-    root = os.path.join(
-        os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir()),
-        "samza_spark_components",
-        sf_dir.strip("/").replace("/", "_"),
-        algorithm,
-    )
-    manifest = os.path.join(root, "MANIFEST.json")
-    man = read_index_manifest(root)
-    if man["files"]:
-        # reclaim builds a crashed/racing writer left behind (age-gated
-        # inside — an in-flight concurrent build is never touched)
-        gc_orphan_builds(root, man)
-    else:
+    def build() -> DataFrame:
         from .graph import _pairs_cached
 
         pairs = _pairs_cached(spark, sf_dir)
         if algorithm == "twostar":
-            comp = star_components(pairs).select(
+            return star_components(pairs).select(
                 F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
             )
-        elif algorithm == "minlabel":
-            comp = _minlabel_components(pairs)
-        else:  # pragma: no cover - caller bug
-            raise ValueError(f"unknown components algorithm: {algorithm}")
-        build = os.path.join(root, f"build-{uuid.uuid4().hex}")
-        comp.write.mode("overwrite").parquet(build)
-        tmp = manifest + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": 1, "files": _list_parquet_files(build)}, f)
-        try:
-            os.link(tmp, manifest)
-        except FileExistsError:
-            pass  # lost the race — the committed build wins
-        finally:
-            os.remove(tmp)
-        man = read_index_manifest(root)
-        # our build lost the race → reclaim it now; stale crashed
-        # builds from prior runs are age-gated inside
-        gc_orphan_builds(root, man, own_build=build)
-    return read_parquet(spark, *man["files"])
+        if algorithm == "minlabel":
+            return _minlabel_components(pairs)
+        raise ValueError(f"unknown components algorithm: {algorithm}")  # pragma: no cover
+
+    root = os.path.join(
+        index_base_dir(),
+        "samza_spark_components",
+        sf_dir.strip("/").replace("/", "_"),
+        algorithm,
+    )
+    return publish_create_once(spark, root, build)
 
 
 #: hard cap on alternating star rounds — the algorithm converges in

@@ -31,7 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_parquet
 from .dedup import _SHINGLES_SQL, dedup_ngram_jaccard
 
 PR_ITERS = 10
@@ -50,56 +49,19 @@ def _pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     design, and byte-deterministic (the pair join is exact), so cached
     and fresh runs return identical results.
     """
-    import json
     import os
-    import tempfile
-    import uuid
 
-    from .ann_index import (
-        _list_parquet_files,
-        gc_orphan_builds,
-        read_index_manifest,
-    )
+    from ..session import index_base_dir
+    from .ann_index import publish_create_once
 
     root = os.path.join(
-        os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir()),
-        "samza_spark_edges",
-        sf_dir.strip("/").replace("/", "_"),
+        index_base_dir(), "samza_spark_edges", sf_dir.strip("/").replace("/", "_")
     )
-    manifest = os.path.join(root, "MANIFEST.json")
-    man = read_index_manifest(root)
-    if man["files"]:
-        # reclaim builds a crashed/racing writer left behind (age-gated
-        # inside — an in-flight concurrent build is never touched)
-        gc_orphan_builds(root, man)
-    else:
-        # Build into a writer-private subdir, then publish it with a
-        # FIRST-WRITER-WINS atomic commit (os.link fails if the
-        # manifest already exists). Concurrent first-queries may both
-        # build, but exactly one commits; the loser discards its build
-        # and reads the winner's. Readers resolve files ONLY through
-        # the manifest, so a half-written build dir is invisible —
-        # same snapshot design as ann_index/TxnView, specialized to
-        # create-once corpus state (an os.replace would let a second
-        # committer double-publish the edge set).
-        build = os.path.join(root, f"build-{uuid.uuid4().hex}")
-        dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").write.mode(
-            "overwrite"
-        ).parquet(build)
-        tmp = manifest + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"version": 1, "files": _list_parquet_files(build)}, f)
-        try:
-            os.link(tmp, manifest)
-        except FileExistsError:
-            pass  # lost the race — the committed build wins
-        finally:
-            os.remove(tmp)
-        man = read_index_manifest(root)
-        # our build lost the race → reclaim it now; stale crashed
-        # builds from prior runs are age-gated inside
-        gc_orphan_builds(root, man, own_build=build)
-    return read_parquet(spark, *man["files"])
+    return publish_create_once(
+        spark,
+        root,
+        lambda: dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b"),
+    )
 
 
 def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, read_parquet
+from ..session import index_base_dir, load_table, read_parquet
 from .text_analysis import BPE_TOKEN_REGEX
 from .text_filters import SEQ_BUDGET, sequence_packing
 
@@ -348,15 +348,10 @@ def _packed_wds_dir(sf_dir: str) -> str:
     """Content-addressed tar-export cache, one per (layout, sf) —
     the ``ann_index._index_root`` discipline for the loader tars."""
     import os
-    import tempfile
 
     from .ann_index import _tag
 
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir()),
-        "spark_graft_packed_wds_v1",
-        _tag(sf_dir),
-    )
+    return os.path.join(index_base_dir(), "spark_graft_packed_wds_v1", _tag(sf_dir))
 
 
 def packed_webdataset_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,22 +31,18 @@ FROM THE MV, and the DuckDB oracle aggregates the raw table directly
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table, read_parquet
+from ..session import index_base_dir, load_table, read_parquet
 
 HLL_LGK = 12
 MEASURES = ("n_events", "sum_value", "users_hll")
 
 
 def _mv_root() -> str:
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir()),
-        "samza_spark_matview",
-    )
+    return os.path.join(index_base_dir(), "samza_spark_matview")
 
 
 def _grain(events: DataFrame) -> DataFrame:

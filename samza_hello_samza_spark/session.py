@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import threading
+import uuid
 from collections import OrderedDict
 from urllib.parse import unquote, urlsplit
 
@@ -152,6 +154,25 @@ def _local_path(path: str) -> str | None:
     elif parts.scheme:
         return None
     return os.path.normpath(path) if os.path.isabs(path) else None
+
+
+def write_json_atomic(path: str, obj, indent: int | None = None) -> None:
+    """Replace the JSON file at ``path`` in one step: readers see the old
+    content or the new, never a truncated file. The temp name is unique
+    per call, so concurrent writers never share one; the last
+    ``os.replace`` wins. No fsync: durability against power loss is
+    not covered."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=indent)
+    os.replace(tmp, path)
+
+
+def index_base_dir() -> str:
+    """Directory that holds every cached corpus-derived layout (ANN and
+    BM25 indexes, edge and component tables, materialized views):
+    ``SPARK_GRAFT_INDEX_DIR``, else the system temp dir."""
+    return os.environ.get("SPARK_GRAFT_INDEX_DIR", tempfile.gettempdir())
 
 
 def _fingerprint(paths: tuple[str, ...]) -> tuple | None:

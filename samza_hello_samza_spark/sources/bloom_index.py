@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import explode_nonempty
-from ..session import read_parquet
+from ..session import read_parquet, write_json_atomic
 
 BLOOM_SIDECAR_DIRNAME = "_file_blooms"
 FB_K = 3  # md5 hex slices per key — same family as functions/bloom
@@ -118,8 +118,7 @@ def build_file_blooms(spark: SparkSession, table_dir: str, col: str) -> str:
     sidecar = _file_blooms(df, col, n_bits)
     out = _sidecar_dir(table_dir)
     sidecar.write.mode("overwrite").parquet(out)
-    with open(_meta_path(table_dir), "w") as f:
-        json.dump({"col": col, "n_bits": n_bits, "k": FB_K}, f)
+    write_json_atomic(_meta_path(table_dir), {"col": col, "n_bits": n_bits, "k": FB_K})
     return out
 
 
@@ -197,8 +196,7 @@ def refresh_merged_buckets(
         kept.write.mode("overwrite").parquet(out)
     # the overwrite cleared the sidecar dir — restore the frozen meta
     # (same n_bits: probe positions must stay file-independent).
-    with open(_meta_path(table_dir), "w") as f:
-        json.dump(meta, f)
+    write_json_atomic(_meta_path(table_dir), meta)
     return n
 
 

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _words, explode_nonempty
-from ..session import read_parquet
+from ..session import read_parquet, write_json_atomic
 
 N_TBUCKETS = 64
 
@@ -578,7 +578,6 @@ def _write_bm25_stats(
     engines' avg-of-integer-dl to the double — and the sidecar folds
     exactly under ingest (counts add; a recomputed average would
     drift with float association order)."""
-    import json as _json
     import uuid as _uuid
 
     stats = {
@@ -601,10 +600,7 @@ def _write_bm25_stats(
         # that a later read could silently drop or null out).
         "attr_cols": list(attr_cols),
     }
-    tmp = os.path.join(index_dir, "_bm25_stats.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(stats, fh)
-    os.replace(tmp, os.path.join(index_dir, "_bm25_stats.json"))
+    write_json_atomic(os.path.join(index_dir, "_bm25_stats.json"), stats)
 
 
 def append_documents_bm25(

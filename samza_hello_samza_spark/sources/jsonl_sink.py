@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import write_json_atomic
+
 SAMPLES_PER_SHARD = 256
 
 _MANIFEST_SCHEMA = StructType(
@@ -155,10 +157,7 @@ def write_jsonl_shards(
             for r in sorted(stats, key=lambda r: r.shard_id)
         },
     }
-    tmp = os.path.join(path, f"_manifest.json.tmp-{uuid.uuid4().hex[:12]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(path, "_manifest.json"))
+    write_json_atomic(os.path.join(path, "_manifest.json"), manifest, indent=1)
     return manifest
 
 

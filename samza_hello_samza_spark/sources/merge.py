@@ -45,7 +45,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_parquet
+from ..session import read_parquet, write_json_atomic
 
 DEFAULT_BUCKETS = 32
 
@@ -381,12 +381,7 @@ class VersionedMergeTable:
         return {"current": 0, "snapshots": {}}
 
     def _swap_manifest(self, man: dict) -> None:
-        import json
-
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path())  # THE commit point
+        write_json_atomic(self._manifest_path(), man)  # THE commit point
 
     def versions(self) -> list[int]:
         return sorted(int(v) for v in self.manifest()["snapshots"])
@@ -834,7 +829,6 @@ class VersionedMergeTable:
         the same design is expressed as manifest file-references
         instead of hardlinks; the commit protocol is unchanged.
         """
-        import json
         import shutil
 
         man = self.manifest()
@@ -866,10 +860,7 @@ class VersionedMergeTable:
             n_buckets=self.n_buckets,
             constraints=self.constraints,
         )
-        tmp = clone._manifest_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(man, fh)
-        os.replace(tmp, clone._manifest_path())
+        write_json_atomic(clone._manifest_path(), man)
         return clone
 
     def history(self) -> DataFrame:
@@ -1604,17 +1595,23 @@ def orders_cdf_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a plain GROUP BY over the table's FINAL snapshot, which is what
     the DuckDB oracle computes by replaying the three versions from
     raw orders. Cycles are cursor-gated (``publish_cdf``) and
-    offset-committed (``fold_cdf_from_topic``), so re-running the key
-    publishes and folds nothing — the same state returns every time.
+    offset-committed (``fold_cdf_from_topic``, whose commit-version
+    watermark lives in the state store's manifest), so re-running the
+    key publishes and folds nothing — the same state returns every
+    time.
     """
     import os as _os
 
     from ..operators.ann_index import _index_root, _tag
     from ..streaming.maintenance import fold_cdf_from_topic, publish_cdf
+    from .incremental import VersionedState
     from .topic_log import TopicLog
 
     tbl = _cdf_orders_table(spark, sf_dir)
-    root = _os.path.join(_index_root(), _tag(sf_dir), "cdf_downstream")
+    # "_v2": the state layout is the VersionedState store; a root left
+    # by the earlier flat layout would hold an "all done" cursor and
+    # offsets next to state the store cannot read.
+    root = _os.path.join(_index_root(), _tag(sf_dir), "cdf_downstream_v2")
     topic = TopicLog(spark, _os.path.join(root, "topic"), n_partitions=4)
     cursor = _os.path.join(root, "cursor.json")
     state = _os.path.join(root, "state")
@@ -1636,7 +1633,7 @@ def orders_cdf_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["last_status"],
             value_col="last_orderkey",
         )
-    st = read_parquet(spark, state)
+    st = VersionedState(spark, state).read()
     return st.select(
         "last_status",
         F.col("n_events").cast("long").alias("n_customers"),

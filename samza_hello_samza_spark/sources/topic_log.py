@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..session import read_parquet
+from ..session import read_parquet, write_json_atomic
 
 #: wire schema, mirroring kafka source output (key/value as strings
 #: here; binary on a real broker — serde.py handles either).
@@ -67,10 +67,7 @@ class TopicLog:
         return {str(p): 0 for p in range(self.n_partitions)}
 
     def _write_next_offsets(self, offsets: dict[str, int]) -> None:
-        tmp = self._offsets_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(offsets, f)
-        os.replace(tmp, self._offsets_file)  # atomic on POSIX
+        write_json_atomic(self._offsets_file, offsets)
 
     def _group_file(self, group: str) -> str:
         return os.path.join(self._meta_dir, "groups", f"{group}.json")
@@ -87,10 +84,7 @@ class TopicLog:
         merged = self.committed(group)
         for p, o in offsets.items():
             merged[str(p)] = max(merged.get(str(p), 0), int(o))
-        tmp = self._group_file(group) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, self._group_file(group))
+        write_json_atomic(self._group_file(group), merged)
 
     # -- produce ----------------------------------------------------------
 

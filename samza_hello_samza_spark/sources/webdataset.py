@@ -51,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import read_parquet
+from ..session import read_parquet, write_json_atomic
 
 SAMPLES_PER_SHARD = 64
 
@@ -186,10 +186,7 @@ def write_webdataset_shards(
         },
     }
     if write_manifest:
-        tmp = os.path.join(path, "_manifest.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, os.path.join(path, "_manifest.json"))
+        write_json_atomic(os.path.join(path, "_manifest.json"), manifest, indent=1)
     return manifest
 
 
@@ -313,10 +310,7 @@ def seal_webdataset_shards(
     )
     # merge: rebuilt shards' fresh entries over the carried-over rest
     man["shards"].update(new_man["shards"])
-    tmp = os.path.join(out_path, "_manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(man, f, indent=1)
-    os.replace(tmp, os.path.join(out_path, "_manifest.json"))
+    write_json_atomic(os.path.join(out_path, "_manifest.json"), man, indent=1)
     return {"rebuilt": sorted(touched), "manifest": man}
 
 

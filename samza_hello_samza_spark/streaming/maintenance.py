@@ -8,7 +8,7 @@ src/main/java/samza/examples/wikipedia/task/WikipediaStatsStreamTask.java
 and cookbook/StreamTableJoinExample.java). At warehouse scale the same
 need appears as *index and view maintenance*: new vectors must become
 searchable and aggregate views must fold in deltas without re-scanning
-history. Both jobs here are thin foreachBatch / consumer-loop drivers
+history. The jobs here are thin foreachBatch / consumer-loop drivers
 over the batch primitives, so the update path IS the tested batch path:
 
 - ``lsh_index_updater``: Structured Streaming sink that appends each
@@ -16,13 +16,15 @@ over the batch primitives, so the update path IS the tested batch path:
   (``ann_index.append_lsh_index``) — cost ∝ |batch| × n_bands, files
   of existing partitions never rewritten, probes pick up new vectors
   on their next (partition-pruned) read.
-- ``maintain_view_from_topic``: consume a ``TopicLog`` as a consumer
-  group, fold each batch into mergeable aggregate state
-  (``incremental.update_aggregate``), commit offsets only after the
-  state write lands — at-least-once delivery on top of an idempotent
-  merge keyed by offset ranges would be exactly-once; here replay
-  safety comes from committing *after* the state swap, matching the
-  reference's changelog+checkpoint ordering.
+- the sketch and view folds (``fold_*``, ``TxnView``,
+  ``fold_cdf_from_topic``): every one keeps its state in ONE store,
+  ``incremental.VersionedState``, and commits state and input
+  position (batch id, offsets per topic, commit-version watermark)
+  in its single manifest replace — the reference's changelog flush
+  and checkpoint as one atomic step, so a crash leaves readers on
+  exactly the pre- or the post-state and a replay folds nothing
+  twice. Each ``fold_*`` is its merge expression; each ``*_updater``
+  runs it per micro-batch through ``_fold_stream``.
 """
 
 from __future__ import annotations
@@ -33,9 +35,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ann_index import append_lsh_index
-from ..session import read_parquet
-from ..sources.incremental import update_aggregate, update_aggregate_signed
+from ..session import write_json_atomic
+from ..sources.incremental import VersionedState, update_aggregate_signed
 from ..sources.topic_log import TopicLog
+
+
+def _fold_stream(stream: DataFrame, checkpoint_dir: str, fold) -> StreamingQuery:
+    """Run ``fold(batch, batch_id)`` on every non-empty micro-batch of
+    ``stream`` — the foreachBatch driver every sink job here shares;
+    the Spark checkpoint at ``checkpoint_dir`` resumes it."""
+
+    def _batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            fold(batch, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .start()
+    )
 
 
 def lsh_index_updater(
@@ -53,17 +72,12 @@ def lsh_index_updater(
     at-least-once is semantically harmless here — the classic
     idempotent-consumer shape).
     """
-
-    def _fold(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        append_lsh_index(index_dir, batch.select("vec_id", "v"), planes, band_bits)
-
-    return (
-        vectors_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        vectors_stream,
+        checkpoint_dir,
+        lambda batch, _id: append_lsh_index(
+            index_dir, batch.select("vec_id", "v"), planes, band_bits
+        ),
     )
 
 
@@ -137,7 +151,7 @@ def mv_refresh_job(
     id), so a restarted query resumes exactly where the Spark
     checkpoint says. The remaining crash window (merge finished,
     marker not yet written) is the same one every non-transactional
-    sink has; the manifest-swap upgrade that closes it completely is
+    sink has; the single-commit store that closes it completely is
     ``TxnView`` — use that when folding multiple sources atomically.
     """
     import os
@@ -187,8 +201,6 @@ def cdc_apply_job(
     from pyspark.sql import Window
 
     def _apply(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         w = Window.partitionBy("key").orderBy(F.desc("offset"))
         latest = (
             batch.withColumn("_rn", F.row_number().over(w))
@@ -201,12 +213,10 @@ def cdc_apply_job(
         )
         table.merge(latest, delete_cond=F.col("s._tombstone") == 1)
 
-    return (
-        topic.read_stream(max_files_per_trigger=max_files_per_trigger)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        topic.read_stream(max_files_per_trigger=max_files_per_trigger),
+        checkpoint_dir,
+        _apply,
     )
 
 
@@ -236,19 +246,13 @@ def versioned_merge_sink(
     clause).
     """
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cond = (
-            F.col(f"s.{delete_col}") == 1 if delete_col is not None else None
-        )
-        table.merge(batch, delete_cond=cond, txn=(app_id, int(batch_id)))
-
-    return (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    cond = F.col(f"s.{delete_col}") == 1 if delete_col is not None else None
+    return _fold_stream(
+        stream,
+        checkpoint_dir,
+        lambda batch, batch_id: table.merge(
+            batch, delete_cond=cond, txn=(app_id, int(batch_id))
+        ),
     )
 
 
@@ -291,17 +295,7 @@ def windowed_topk_job(
         )
     )
 
-    def _fold(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.merge(batch)
-
-    return (
-        counts.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(counts, checkpoint_dir, lambda batch, _id: table.merge(batch))
 
 
 def windowed_topk_snapshot(spark: SparkSession, table, k: int = 3) -> DataFrame:
@@ -390,8 +384,6 @@ def ann_serving_job(
     )
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         queries = batch.select("query_id", "v").collect()  # micro-batch-sized
         per_query = []
@@ -426,12 +418,7 @@ def ann_serving_job(
             )
         _write_results_idempotent(per_query, out_dir, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(query_stream, checkpoint_dir, _serve)
 
 
 def hybrid_serving_job(
@@ -471,8 +458,6 @@ def hybrid_serving_job(
     from ..operators.similarity import hybrid_topk_from_layouts
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         queries = batch.select("query_id", "terms", "v").collect()
         # one manifest read per batch: snapshot isolation for the
@@ -496,12 +481,7 @@ def hybrid_serving_job(
             )
         _write_results_idempotent(per_query, out_dir, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(query_stream, checkpoint_dir, _serve)
 
 
 def ivf_serving_job(
@@ -524,8 +504,6 @@ def ivf_serving_job(
     from ..operators.ann_index import probe_ivf_snapshot
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         per_query = []
         for q in batch.select("query_id", "v").collect():  # micro-batch-sized
@@ -553,12 +531,7 @@ def ivf_serving_job(
             )
         _write_results_idempotent(per_query, out_dir, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(query_stream, checkpoint_dir, _serve)
 
 
 def pq_serving_job(
@@ -588,8 +561,6 @@ def pq_serving_job(
     from ..operators.ann_index import probe_pq_snapshot
 
     def _serve(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         queries = batch.select("query_id", "v").collect()  # micro-batch-sized
         per_query = []
@@ -621,12 +592,7 @@ def pq_serving_job(
             )
         _write_results_idempotent(per_query, out_dir, batch_id)
 
-    return (
-        query_stream.writeStream.foreachBatch(_serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(query_stream, checkpoint_dir, _serve)
 
 
 def cms_updater(
@@ -642,37 +608,20 @@ def cms_updater(
     queries over the WHOLE stream history in O(D×W) space — the
     unbounded-key-space answer the exact groupBy can't give.
 
-    r07 hardening: the fold commits through the snapshot-manifest
-    batch gate (``fold_cms_cells``) like every other maintainer in
-    this module. Counter addition — unlike the k-min folds — is NOT
-    replay-idempotent, so here the gate IS the exactly-once
-    mechanism: the pre-r07 ``.staging``/rename fold double-counted a
-    batch replayed after a crash between the state swap and the
-    checkpoint commit (at-least-once window).
+    Counter addition — unlike the k-min folds — is NOT
+    replay-idempotent, so the store's batch-id gate IS the exactly-once
+    mechanism: a batch replayed after a crash between the state commit
+    and the Spark checkpoint commit folds nothing.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_cms_cells(batch, state_path, key_col, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        stream,
+        checkpoint_dir,
+        lambda batch, i: fold_cms_cells(batch, state_path, key_col, batch_id=i),
     )
 
 
-def _legacy_cms_files(state_path: str) -> list[str]:
-    """Pre-r07 ``cms_updater`` state: cell parquet written FLAT at
-    ``state_path`` (no ``v{N}`` snapshot dirs, no manifest). The
-    manifest layout would otherwise read version 0 there and silently
-    restart counts from zero on an upgraded stream."""
-    import glob
-    import os
-
-    return sorted(glob.glob(os.path.join(state_path, "*.parquet")))
+#: the committed D×W count-min cell table.
+_CMS_CELLS = "row int, bucket bigint, cnt bigint"
 
 
 def fold_cms_cells(
@@ -682,44 +631,11 @@ def fold_cms_cells(
     batch_id: int | None = None,
 ) -> bool:
     """Add one delta's (row, bucket) counts into the committed CMS
-    cell table (snapshot-manifest commit, see ``fold_kmv_sample``;
-    the batch gate is mandatory here — counters double on replay).
-
-    Legacy migration: the first fold over a pre-manifest state dir
-    (flat cell parquet at the root, the pre-r07 ``cms_updater``
-    layout) folds those root-level cells into v1 alongside the
-    delta — an upgraded stream keeps its whole-history counts —
-    and removes the migrated flat files after the manifest commit.
-    The migrating fold leaves a ``_FLAT_MIGRATED`` marker NAMING the
-    migrated files (r10); flat files found at version > 0 are deleted
-    ONLY when the marker names them (crash orphans of a prior
-    migrating fold's cleanup). Any other flat — no marker, a pre-r10
-    name-less marker, or a name not in the set (e.g. a still-running
-    pre-manifest writer dropped new cells AFTER the migration) — was
-    never folded, so deleting it would destroy the only copy of its
-    counts; we warn and leave it."""
-    import json
-    import os
-    import shutil
-    import warnings
-
+    cell table. Returns True iff the delta was folded; an applied
+    batch id folds nothing (counters would double on replay)."""
     from ..operators.sketches import CMS_D, _cms_bucket
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
-    # at version 0 flat files are unmigrated legacy state (fold them);
-    # at version > 0 they are EITHER orphans of a crash between a
-    # prior migrating fold's manifest commit and its cleanup (the
-    # _FLAT_MIGRATED marker says so — already folded, safe to remove)
-    # OR never-folded legacy cells under a version advanced by
-    # pre-migration fold code (no marker — removing them would be the
-    # only copy of those counts; warn and leave in place).
-    flat = _legacy_cms_files(state_path)
-    legacy = flat if man["version"] == 0 else []
-    migrated_marker = os.path.join(state_path, "_FLAT_MIGRATED")
+    store = VersionedState(batch.sparkSession, state_path, state=_CMS_CELLS)
     pairs = F.array(
         *[
             F.struct(
@@ -734,94 +650,19 @@ def fold_cms_cells(
         .groupBy(F.col("p.row").alias("row"), F.col("p.bucket").alias("bucket"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if man["version"] > 0:
-        delta = (
-            delta.unionByName(
-                read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
-            )
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": delta.unionByName(store.read())
             .groupBy("row", "bucket")
             .agg(F.sum("cnt").alias("cnt"))
-        )
-    elif legacy:
-        delta = (
-            delta.unionByName(
-                read_parquet(spark, *legacy).select("row", "bucket", "cnt")
-            )
-            .groupBy("row", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-    new_version = man["version"] + 1
-    delta.write.mode("overwrite").parquet(
-        os.path.join(state_path, f"v{new_version}")
+        },
     )
-    new_man = {
-        "version": new_version,
-        "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-    }
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    if legacy:
-        # marker BEFORE the commit: a crash in between leaves version 0
-        # + marker, and the next fold simply re-runs the migration (the
-        # v1 write never landed as current); a crash AFTER the commit
-        # leaves marker + folded flats, which the next fold deletes.
-        # The marker records the EXACT migrated filenames (r10): it
-        # proves THESE flats were folded, not that any future flat is
-        # — a still-running pre-manifest writer dropping new cells
-        # after the migration must never have them silently deleted.
-        mtmp = migrated_marker + ".tmp"
-        with open(mtmp, "w") as mf:
-            json.dump(sorted(os.path.basename(p) for p in legacy), mf)
-        os.replace(mtmp, migrated_marker)
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    if flat:
-        migrated_names: set[str] = set()
-        if os.path.exists(migrated_marker):
-            try:
-                with open(migrated_marker) as mf:
-                    migrated_names = set(json.load(mf))
-            except ValueError:
-                # pre-r10 empty marker: it proves SOME past flats were
-                # folded, not WHICH — scope to nothing (conservative)
-                migrated_names = set()
-        leftovers = []
-        for f in flat:
-            if os.path.basename(f) in migrated_names:
-                if os.path.exists(f):  # migrated (now or by a crashed
-                    os.remove(f)  # prior fold) — safe to reclaim
-            else:
-                leftovers.append(f)
-        if leftovers:
-            warnings.warn(
-                f"{state_path}: flat CMS cells present at manifest "
-                f"version {new_version} that no _FLAT_MIGRATED entry "
-                "names — never folded by this code; left in place "
-                "(fold them manually or rebuild the stream state): "
-                f"{[os.path.basename(p) for p in leftovers]}",
-                stacklevel=2,
-            )
-    for v in range(1, new_version - 1):  # keep current + previous
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
 
 
 def read_cms_cells(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed D×W cell table at the manifest version. A
-    pre-manifest state dir (flat legacy cells, no fold yet) reads its
-    root-level cells directly, so estimates stay correct before AND
-    after the first migrating fold."""
-    import os
-
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        legacy = _legacy_cms_files(state_path)
-        if legacy:
-            return read_parquet(spark, *legacy).select("row", "bucket", "cnt")
-        return spark.createDataFrame([], "row int, bucket bigint, cnt bigint")
-    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    """The committed D×W cell table."""
+    return VersionedState(spark, state_path, state=_CMS_CELLS).read()
 
 
 def cms_estimate(spark: SparkSession, state_path: str, keys: DataFrame, key_col: str) -> DataFrame:
@@ -867,79 +708,40 @@ def kmv_updater(
     union → k-min again. The stored sample answers quantile queries
     over the WHOLE stream history in O(K·groups) space.
     """
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_kmv_sample(batch, state_path, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        stream,
+        checkpoint_dir,
+        lambda batch, i: fold_kmv_sample(batch, state_path, batch_id=i),
     )
+
+
+#: the committed per-group k-min sample (``sketches._kmv_sample`` rows).
+_KMV_SAMPLE = "event_type string, event_id bigint, value double, h bigint, rnk int"
 
 
 def fold_kmv_sample(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
-    """Merge one events delta into the per-group k-min sample state.
-
-    Same snapshot-manifest commit as ``fold_domain_wordcounts``: the
-    merged sample lands in an immutable ``v{N+1}`` directory and ONE
-    atomic MANIFEST.json replace records {version, applied_batch} —
-    crash before the swap leaves v{N} committed and the batch unmarked
-    (clean re-fold); a redelivered batch id ≤ applied_batch no-ops.
-    Returns True iff the delta was folded.
-    """
-    import json
-    import os
-    import shutil
-
+    """Merge one events delta into the per-group k-min sample state:
+    the k-min sample of (delta ∪ committed sample). Returns True iff
+    the delta was folded."""
     from ..operators.sketches import _kmv_sample
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)  # same {version, applied_batch} shape
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
-    merged_in = batch.select("event_type", "event_id", "value")
-    if man["version"] > 0:
-        merged_in = merged_in.unionByName(
-            read_parquet(
-                spark, os.path.join(state_path, f"v{man['version']}")
-            ).select("event_type", "event_id", "value")
-        )
-    sample = _kmv_sample(merged_in)
-    new_version = man["version"] + 1
-    sample.write.mode("overwrite").parquet(
-        os.path.join(state_path, f"v{new_version}")
+    store = VersionedState(batch.sparkSession, state_path, state=_KMV_SAMPLE)
+    cols = ("event_type", "event_id", "value")
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": _kmv_sample(
+                batch.select(*cols).unionByName(store.read().select(*cols))
+            )
+        },
     )
-    new_man = {
-        "version": new_version,
-        "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-    }
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    for v in range(1, new_version - 1):  # keep current + previous
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
 
 
 def read_kmv_sample(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed per-group k-min sample at the manifest version."""
-    import os
-
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        return spark.createDataFrame(
-            [], "event_type string, event_id bigint, value double, h bigint, rnk int"
-        )
-    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    """The committed per-group k-min sample."""
+    return VersionedState(spark, state_path, state=_KMV_SAMPLE).read()
 
 
 def kmv_quantile_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
@@ -971,112 +773,69 @@ def audience_kmv_updater(
     (``audience_kmv_setops``'s usk stage) without touching the events
     history.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_audience_kmv(batch, state_path, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        stream,
+        checkpoint_dir,
+        lambda batch, i: fold_audience_kmv(batch, state_path, batch_id=i),
     )
+
+
+#: the committed per-type audience sketch: K smallest user hashes.
+_AUDIENCE_KMV = "event_type string, user_id bigint, h bigint"
 
 
 def fold_audience_kmv(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
-    """Merge one events delta into the per-type audience k-min sketch
-    (snapshot-manifest commit, see ``fold_kmv_sample``)."""
-    import json
-    import os
-    import shutil
-
+    """Merge one events delta into the per-type audience k-min sketch."""
     from pyspark.sql import Window
 
     from ..operators.sketches import KMV_SET_K, _user_hash
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
+    store = VersionedState(batch.sparkSession, state_path, state=_AUDIENCE_KMV)
     delta = batch.select(
         "event_type", "user_id", _user_hash(F.col("user_id")).alias("h")
     )
-    if man["version"] > 0:
-        delta = delta.unionByName(
-            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
-        )
     w = Window.partitionBy("event_type").orderBy("h", "user_id")
-    sketch = (
-        delta.distinct()  # same user re-arriving collapses pre-rank
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= KMV_SET_K)
-        .drop("rnk")
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": delta.unionByName(store.read())
+            .distinct()  # same user re-arriving collapses pre-rank
+            .withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= KMV_SET_K)
+            .drop("rnk")
+        },
     )
-    new_version = man["version"] + 1
-    sketch.write.mode("overwrite").parquet(
-        os.path.join(state_path, f"v{new_version}")
-    )
-    new_man = {
-        "version": new_version,
-        "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-    }
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    for v in range(1, new_version - 1):  # keep current + previous
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
 
 
 def read_audience_kmv(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed per-type audience sketch at the manifest version."""
-    import os
-
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        return spark.createDataFrame(
-            [], "event_type string, user_id bigint, h bigint"
-        )
-    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    """The committed per-type audience sketch."""
+    return VersionedState(spark, state_path, state=_AUDIENCE_KMV).read()
 
 
 class TxnView:
     """Multi-topic transactionally-maintained view: exactly-once folds.
 
-    The single-topic path above has an at-least-once window between the
-    state swap and the offset commit; with TWO input topics the naive
-    version has a worse failure mode — one topic committed, the other
+    With TWO input topics, a maintainer that folds and then commits each
+    topic's offsets can fail half-way — one topic committed, the other
     not — leaving the view *internally inconsistent* (e.g. clicks
-    folded, views not). This maintainer closes both gaps with the
-    classic snapshot-manifest design (the pattern behind Iceberg/Delta
-    commits and Kafka's transactional consume-transform-produce):
-
-    - state lives in immutable versioned snapshots ``state/v{N}``;
-    - a single ``MANIFEST.json`` holds {version, offsets-per-topic} and
-      is swapped with an atomic ``os.replace``;
-    - a cycle reads every topic FROM THE MANIFEST's offsets (not group
-      state), folds all deltas into version N+1, then swaps the
-      manifest once.
+    folded, views not). Here the offsets per topic are the store's
+    ``applied`` value: a cycle reads every topic FROM the committed
+    offsets (not group state), folds all deltas into version N+1, and
+    ``VersionedState.commit`` publishes the state and every topic's new
+    offsets in one manifest replace (the pattern behind Iceberg/Delta
+    commits and Kafka's transactional consume-transform-produce).
 
     Crash anywhere ⇒ the manifest still points at version N with the
-    old offsets for BOTH topics: the half-written ``v{N+1}`` dir is
-    invisible and the next cycle re-drains exactly the same deltas —
-    exactly-once across all inputs, by atomicity of the single swap.
+    old offsets for EVERY topic, and the next cycle re-drains exactly
+    the same deltas — exactly-once across all inputs. A one-topic view
+    is the single-source case of the same commit.
 
     State is long-form mergeable partials keyed by (keys..., topic):
     union + re-aggregate per cycle, cost ∝ |delta| + |state keys| —
     history is never re-scanned.
     """
-
-    KEEP_VERSIONS = 2  # current + previous for in-flight readers
 
     def __init__(
         self,
@@ -1085,54 +844,25 @@ class TxnView:
         topics: dict[str, TopicLog],
         keys: tuple[str, ...] = ("user_id",),
     ):
-        import os
-
-        self.spark = spark
-        self.root = root
         self.topics = topics
         self.keys = list(keys)
-        self._manifest_path = os.path.join(root, "MANIFEST.json")
-        os.makedirs(os.path.join(root, "state"), exist_ok=True)
-
-    # -- manifest ---------------------------------------------------------
-
-    def manifest(self) -> dict:
-        import json
-        import os
-
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {"version": 0, "offsets": {name: {} for name in self.topics}}
-
-    def _swap_manifest(self, man: dict) -> None:
-        import json
-        import os
-
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path)  # THE commit point
-
-    def _state_dir(self, version: int) -> str:
-        import os
-
-        return os.path.join(self.root, "state", f"v{version}")
-
-    # -- maintenance cycle ------------------------------------------------
+        self.store = VersionedState(
+            spark,
+            root,
+            state=", ".join(f"{k} bigint" for k in self.keys)
+            + ", topic string, n_events bigint, sum_value double",
+        )
 
     def cycle(self) -> int:
-        """Drain every topic from the manifest offsets, fold, commit once.
+        """Drain every topic from the committed offsets, fold, commit once.
 
         Returns total records folded (0 ⇒ no state version written)."""
-        import os
-
-        man = self.manifest()
+        offsets = self.store.manifest()["applied"] or {}
         partials = []
         new_offsets: dict[str, dict[str, int]] = {}
         total = 0
         for name, topic in self.topics.items():
-            batch = topic.read_from(man["offsets"].get(name, {})).cache()
+            batch = topic.read_from(offsets.get(name, {})).cache()
             n = batch.count()
             total += n
             ends = {
@@ -1141,9 +871,7 @@ class TxnView:
                 .agg((F.max("offset") + 1).alias("end"))
                 .collect()
             }
-            merged = dict(man["offsets"].get(name, {}))
-            merged.update(ends)
-            new_offsets[name] = merged
+            new_offsets[name] = {**offsets.get(name, {}), **ends}
             if n:
                 partials.append(
                     parse_events_json(batch)
@@ -1157,43 +885,19 @@ class TxnView:
             batch.unpersist()
         if total == 0:
             return 0
-        delta = partials[0]
-        for p in partials[1:]:
+        delta = self.store.read()
+        for p in partials:
             delta = delta.unionByName(p)
-        if man["version"] > 0:
-            old = read_parquet(self.spark, self._state_dir(man["version"]))
-            delta = old.unionByName(delta)
         new_state = delta.groupBy(*self.keys, "topic").agg(
             F.sum("n_events").alias("n_events"),
             F.sum("sum_value").alias("sum_value"),
         )
-        new_version = man["version"] + 1
-        new_state.write.mode("overwrite").parquet(self._state_dir(new_version))
-        self._swap_manifest({"version": new_version, "offsets": new_offsets})
-        self._gc(new_version)
+        self.store.commit({"state": new_state}, new_offsets)
         return total
 
-    def _gc(self, current: int) -> None:
-        import os
-        import shutil
-
-        for v in range(1, current - self.KEEP_VERSIONS + 1):
-            d = self._state_dir(v)
-            if os.path.exists(d):
-                shutil.rmtree(d)
-
-    # -- read -------------------------------------------------------------
-
     def read_view(self) -> DataFrame:
-        """The committed view (manifest version), finalized per (keys, topic)."""
-        man = self.manifest()
-        if man["version"] == 0:
-            return self.spark.createDataFrame(
-                [], f"{', '.join(k + ' bigint' for k in self.keys)}, topic string, "
-                "n_events bigint, total_value double",
-            )
-        state = read_parquet(self.spark, self._state_dir(man["version"]))
-        return state.select(
+        """The committed view, finalized per (keys, topic)."""
+        return self.store.read().select(
             *self.keys,
             "topic",
             F.col("n_events").cast("long").alias("n_events"),
@@ -1211,104 +915,51 @@ def domain_wordcount_updater(
     counts are MERGEABLE state (sums add), so each micro-batch folds at
     delta-vocabulary cost — union with the stored state, re-aggregate —
     and history is never re-tokenized. Crash-atomicity and replay
-    safety both ride on ``TxnView``'s manifest-swap discipline: each
-    fold writes a NEW immutable ``v{N}`` state directory and commits by
-    atomically replacing one MANIFEST.json that records {version,
-    applied_batch} in the SAME write. A crash anywhere before the swap
-    leaves the manifest at version N (the half-written v{N+1} is
-    invisible, never deleted state); a crash after the swap but before
-    Spark checkpoints means the redelivered batch id ≤ applied_batch
-    and folds as a no-op — no double count, no lost history.
+    safety come from the store's single commit, which records the new
+    version and the applied batch id in one manifest replace: a crash
+    before it leaves version N committed and the batch unapplied (a
+    clean re-fold), a crash after it makes the redelivered batch a
+    no-op — no double count, no lost history.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_domain_wordcounts(batch, state_path, batch_id=batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        docs_stream,
+        checkpoint_dir,
+        lambda batch, i: fold_domain_wordcounts(batch, state_path, batch_id=i),
     )
 
 
-def _dw_manifest(state_path: str) -> dict:
-    import json
-    import os
-
-    p = os.path.join(state_path, "MANIFEST.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return {"version": 0, "applied_batch": -1}
+#: the committed (source, word, cnt) counts.
+_DOMAIN_WORDCOUNTS = "source string, word string, cnt bigint"
 
 
 def fold_domain_wordcounts(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
     """Merge one documents delta into the (source, word, cnt) state.
-
-    Same snapshot-manifest commit as ``TxnView``: the new state version
-    is written to an immutable ``v{N+1}`` directory, then ONE atomic
-    ``os.replace`` of MANIFEST.json records both the new version and
-    the applied batch id. There is no window in which a crash can lose
-    or double-apply history: before the swap, the manifest still points
-    at v{N} (prior counts intact, batch not marked applied → clean
-    re-fold); the swap itself is the single commit point for state AND
-    the idempotence marker. Returns True iff the delta was folded
-    (False = already-applied batch id, a redelivery no-op).
-    """
-    import json
-    import os
-    import shutil
-
+    Returns True iff the delta was folded (False = already-applied
+    batch id, a redelivery no-op)."""
     from ..operators.dedup import _words, explode_nonempty
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
+    store = VersionedState(batch.sparkSession, state_path, state=_DOMAIN_WORDCOUNTS)
     delta = (
         explode_nonempty(batch, ["source"], _words(F.col("text")), "word")
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if man["version"] > 0:
-        delta = (
-            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": store.read()
             .unionByName(delta)
             .groupBy("source", "word")
             .agg(F.sum("cnt").alias("cnt"))
-        )
-    new_version = man["version"] + 1
-    delta.write.mode("overwrite").parquet(os.path.join(state_path, f"v{new_version}"))
-    new_man = {
-        "version": new_version,
-        "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-    }
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    # GC: keep current + previous for in-flight readers (TxnView rule).
-    for v in range(1, new_version - 1):
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
+        },
+    )
 
 
 def read_domain_wordcounts(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed (source, word, cnt) state at the manifest version."""
-    import os
-
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        return spark.createDataFrame([], "source string, word string, cnt bigint")
-    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    """The committed (source, word, cnt) state."""
+    return VersionedState(spark, state_path, state=_DOMAIN_WORDCOUNTS).read()
 
 
 def window_fingerprint_updater(
@@ -1325,38 +976,27 @@ def window_fingerprint_updater(
     equi-joining its windows against this table (any hit whose winner
     is another doc ⇒ duplicated span — the same probe shape as
     ``dedup_incremental``). Crash-atomicity and replay safety ride the
-    same snapshot-manifest commit as ``fold_domain_wordcounts``.
+    same store commit as ``fold_domain_wordcounts``.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_window_fingerprints(batch, state_path, batch_id=batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        docs_stream,
+        checkpoint_dir,
+        lambda batch, i: fold_window_fingerprints(batch, state_path, batch_id=i),
     )
+
+
+#: the committed winner table h → first (doc_id, pos).
+_WINDOW_WINNERS = "h string, first_at struct<doc_id: bigint, pos: int>"
 
 
 def fold_window_fingerprints(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
     """Merge one documents delta into the h → first (doc_id, pos)
-    winner table (manifest-swap commit, see fold_domain_wordcounts)."""
-    import json
-    import os
-    import shutil
-
+    winner table (min of mins)."""
     from ..operators.dedup import _words, window_fingerprints
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
+    store = VersionedState(batch.sparkSession, state_path, state=_WINDOW_WINNERS)
     words = batch.select("doc_id", _words(F.col("text")).alias("words")).filter(
         F.size("words") > 0
     )
@@ -1365,40 +1005,20 @@ def fold_window_fingerprints(
         .groupBy("h")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first_at"))
     )
-    if man["version"] > 0:
-        delta = (
-            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": store.read()
             .unionByName(delta)
             .groupBy("h")
             .agg(F.min("first_at").alias("first_at"))
-        )
-    new_version = man["version"] + 1
-    delta.write.mode("overwrite").parquet(os.path.join(state_path, f"v{new_version}"))
-    new_man = {
-        "version": new_version,
-        "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-    }
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_man, f)
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    for v in range(1, new_version - 1):
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
+        },
+    )
 
 
 def read_window_fingerprints(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed winner table at the manifest version."""
-    import os
-
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        return spark.createDataFrame(
-            [], "h string, first_at struct<doc_id: bigint, pos: int>"
-        )
-    return read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    """The committed winner table."""
+    return VersionedState(spark, state_path, state=_WINDOW_WINNERS).read()
 
 
 def substring_dedup_gate(
@@ -1433,8 +1053,6 @@ def substring_dedup_gate(
     from ..operators.dedup import _words, window_fingerprints
 
     def _screen_then_fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         words = batch.select("doc_id", _words(F.col("text")).alias("words")).filter(
             F.size("words") > 0
@@ -1467,12 +1085,7 @@ def substring_dedup_gate(
         )
         fold_window_fingerprints(batch, state_path, batch_id=batch_id)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_screen_then_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _fold_stream(docs_stream, checkpoint_dir, _screen_then_fold)
 
 
 def dsir_state_updater(
@@ -1484,41 +1097,30 @@ def dsir_state_updater(
     The hashed-bigram bucket counts (per bucket: raw count + target
     count) are sum-mergeable state bounded by B = DSIR_BUCKETS rows,
     folded per micro-batch at |batch-bigrams| cost under the usual
-    snapshot-manifest commit. ``dsir_score_snapshot`` then scores any
+    store commit. ``dsir_score_snapshot`` then scores any
     relation against the CURRENT committed distributions — the
     production shape: the importance model updates slowly as corpus
     lands; scoring rides each batch as a B-row broadcast join.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_dsir_state(batch, state_path, batch_id=batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        docs_stream,
+        checkpoint_dir,
+        lambda batch, i: fold_dsir_state(batch, state_path, batch_id=i),
     )
+
+
+#: the committed per-bucket raw and target bigram counts.
+_DSIR_BUCKETS = "b bigint, c_r bigint, c_t bigint"
 
 
 def fold_dsir_state(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
     """Merge one documents delta's hashed-bigram bucket counts."""
-    import json
-    import os
-    import shutil
-
     from ..operators.dedup import _shingles, _words, explode_nonempty
     from ..operators.sampling import DSIR_BUCKETS, DSIR_TARGET_LANG, _md5_bucket
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
+    store = VersionedState(batch.sparkSession, state_path, state=_DSIR_BUCKETS)
     tok = batch.select(
         (F.col("lang") == DSIR_TARGET_LANG).cast("int").alias("is_target"),
         _words(F.col("text")).alias("words"),
@@ -1532,30 +1134,15 @@ def fold_dsir_state(
             F.sum("is_target").cast("long").alias("c_t"),
         )
     )
-    if man["version"] > 0:
-        delta = (
-            read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    return store.fold(
+        batch_id,
+        lambda: {
+            "state": store.read()
             .unionByName(delta)
             .groupBy("b")
             .agg(F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t"))
-        )
-    nv = man["version"] + 1
-    delta.write.mode("overwrite").parquet(os.path.join(state_path, f"v{nv}"))
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": nv,
-                "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    for v in range(1, nv - 1):
-        d = os.path.join(state_path, f"v{v}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return True
+        },
+    )
 
 
 def dsir_score_snapshot(
@@ -1567,18 +1154,15 @@ def dsir_score_snapshot(
     (add-one smoothing, integer micro-nat truncation, integer per-doc
     sums) — so state folded from the whole corpus reproduces the
     batch operator's log-weights EXACTLY (pytest-asserted). Output
-    schema matches the batch operator.
+    schema matches the batch operator. Raises ``FileNotFoundError``
+    when no state is committed yet.
     """
-    import os
-
     from ..operators.dedup import _shingles, _words, explode_nonempty
     from ..operators.sampling import DSIR_BUCKETS, DSIR_TARGET_LANG, _md5_bucket
 
     spark = docs.sparkSession
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        raise FileNotFoundError(f"no committed DSIR state in {state_path}")
-    buckets_raw = read_parquet(spark, os.path.join(state_path, f"v{man['version']}"))
+    # no declared schema: FileNotFoundError before the first fold
+    buckets_raw = VersionedState(spark, state_path).read()
     n_t = buckets_raw.agg(F.sum("c_t").alias("n_t"))
     n_r = buckets_raw.agg(F.sum("c_r").alias("n_r"))
     b_mod = DSIR_BUCKETS
@@ -1643,7 +1227,7 @@ def growth_accounting_updater(
     ``behavior.growth_accounting``.
 
     State (two relations, ONE manifest commit — crash-atomic across
-    both, same snapshot discipline as ``fold_domain_wordcounts``):
+    both, the same store commit as ``fold_domain_wordcounts``):
 
     - ``users``: per-user last-active day — the ONLY per-user state
       classification needs, because a user's next active day is new /
@@ -1661,110 +1245,77 @@ def growth_accounting_updater(
     ``growth_snapshot`` serves the finished decomposition (with churn
     derived exactly as the batch op derives it) from days-sized state.
     """
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        fold_growth_accounting(batch, state_path, batch_id=batch_id)
-
-    return (
-        events_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _fold_stream(
+        events_stream,
+        checkpoint_dir,
+        lambda batch, i: fold_growth_accounting(batch, state_path, batch_id=i),
     )
+
+
+#: the two growth-accounting tables, committed in one version.
+_GROWTH = {
+    "users": "user_id bigint, last_day bigint",
+    "daily": "day bigint, n_new bigint, n_retained bigint, n_resurrected bigint",
+}
 
 
 def fold_growth_accounting(
     batch: DataFrame, state_path: str, batch_id: int | None = None
 ) -> bool:
-    """Fold one events delta into the growth-accounting state."""
-    import json
-    import os
-    import shutil
-
+    """Fold one events delta into the growth-accounting state; its
+    ``users`` and ``daily`` tables commit in one store version."""
     from pyspark.sql import Window
 
-    os.makedirs(state_path, exist_ok=True)
-    man = _dw_manifest(state_path)
-    if batch_id is not None and batch_id <= man["applied_batch"]:
-        return False
-    spark = batch.sparkSession
-    v = man["version"]
-    if v > 0:
-        users = read_parquet(spark, os.path.join(state_path, f"users_v{v}"))
-        daily = read_parquet(spark, os.path.join(state_path, f"daily_v{v}"))
-    else:
-        users = spark.createDataFrame([], "user_id bigint, last_day bigint")
-        daily = spark.createDataFrame(
-            [],
-            "day bigint, n_new bigint, n_retained bigint, n_resurrected bigint",
+    store = VersionedState(batch.sparkSession, state_path, **_GROWTH)
+
+    def merge() -> dict[str, DataFrame]:
+        users = store.read("users")
+        batch_days = (
+            batch.select(
+                "user_id",
+                F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
+            )
+            .distinct()
+            .join(users, "user_id", "left")
+            .filter((F.col("last_day").isNull()) | (F.col("day") > F.col("last_day")))
         )
-    batch_days = (
-        batch.select(
+        w = Window.partitionBy("user_id").orderBy("day")
+        prev = F.coalesce(F.lag("day").over(w), F.col("last_day"))
+        classified = batch_days.select(
             "user_id",
-            F.floor(F.unix_timestamp("ts") / 86400).cast("long").alias("day"),
+            "day",
+            F.when(prev.isNull(), F.lit("new"))
+            .when(prev == F.col("day") - 1, F.lit("retained"))
+            .otherwise(F.lit("resurrected"))
+            .alias("kind"),
+        ).localCheckpoint()  # consumed by both folds below
+        delta_daily = classified.groupBy("day").agg(
+            F.sum((F.col("kind") == "new").cast("long")).alias("n_new"),
+            F.sum((F.col("kind") == "retained").cast("long")).alias("n_retained"),
+            F.sum((F.col("kind") == "resurrected").cast("long")).alias(
+                "n_resurrected"
+            ),
         )
-        .distinct()
-        .join(users, "user_id", "left")
-        .filter((F.col("last_day").isNull()) | (F.col("day") > F.col("last_day")))
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    prev = F.coalesce(F.lag("day").over(w), F.col("last_day"))
-    classified = batch_days.select(
-        "user_id",
-        "day",
-        F.when(prev.isNull(), F.lit("new"))
-        .when(prev == F.col("day") - 1, F.lit("retained"))
-        .otherwise(F.lit("resurrected"))
-        .alias("kind"),
-    ).localCheckpoint()  # consumed by both folds below
-    delta_daily = classified.groupBy("day").agg(
-        F.sum((F.col("kind") == "new").cast("long")).alias("n_new"),
-        F.sum((F.col("kind") == "retained").cast("long")).alias("n_retained"),
-        F.sum((F.col("kind") == "resurrected").cast("long")).alias(
-            "n_resurrected"
-        ),
-    )
-    new_daily = (
-        daily.unionByName(delta_daily)
-        .groupBy("day")
-        .agg(
-            F.sum("n_new").alias("n_new"),
-            F.sum("n_retained").alias("n_retained"),
-            F.sum("n_resurrected").alias("n_resurrected"),
+        daily = (
+            store.read("daily")
+            .unionByName(delta_daily)
+            .groupBy("day")
+            .agg(
+                F.sum("n_new").alias("n_new"),
+                F.sum("n_retained").alias("n_retained"),
+                F.sum("n_resurrected").alias("n_resurrected"),
+            )
         )
-    )
-    new_users = (
-        users.unionByName(
-            classified.groupBy("user_id").agg(F.max("day").alias("last_day"))
+        users = (
+            users.unionByName(
+                classified.groupBy("user_id").agg(F.max("day").alias("last_day"))
+            )
+            .groupBy("user_id")
+            .agg(F.max("last_day").alias("last_day"))
         )
-        .groupBy("user_id")
-        .agg(F.max("last_day").alias("last_day"))
-    )
-    nv = v + 1
-    new_daily.write.mode("overwrite").parquet(
-        os.path.join(state_path, f"daily_v{nv}")
-    )
-    new_users.write.mode("overwrite").parquet(
-        os.path.join(state_path, f"users_v{nv}")
-    )
-    tmp = os.path.join(state_path, "MANIFEST.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "version": nv,
-                "applied_batch": batch_id if batch_id is not None else man["applied_batch"],
-            },
-            f,
-        )
-    os.replace(tmp, os.path.join(state_path, "MANIFEST.json"))  # THE commit
-    for old in range(1, nv - 1):
-        for pref in ("daily_v", "users_v"):
-            d = os.path.join(state_path, f"{pref}{old}")
-            if os.path.exists(d):
-                shutil.rmtree(d)
-    return True
+        return {"daily": daily, "users": users}
+
+    return store.fold(batch_id, merge)
 
 
 def growth_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
@@ -1772,20 +1323,9 @@ def growth_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
     identical schema/semantics to ``behavior.growth_accounting``,
     computed from days-sized state (churn = active(d−1) − retained(d)
     on adjacent calendar days, exactly the batch derivation)."""
-    import os
-
     from pyspark.sql import Window
 
-    man = _dw_manifest(state_path)
-    if man["version"] == 0:
-        return spark.createDataFrame(
-            [],
-            "day bigint, n_active bigint, n_new bigint, n_retained bigint, "
-            "n_resurrected bigint, n_churned bigint",
-        )
-    daily = read_parquet(
-        spark, os.path.join(state_path, f"daily_v{man['version']}")
-    ).withColumn(
+    daily = VersionedState(spark, state_path, **_GROWTH).read("daily").withColumn(
         "n_active",
         F.col("n_new") + F.col("n_retained") + F.col("n_resurrected"),
     )
@@ -1831,38 +1371,6 @@ def domain_drift_snapshot(spark: SparkSession, state_path: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-def maintain_view_from_topic(
-    spark: SparkSession,
-    topic: TopicLog,
-    group: str,
-    state_path: str,
-    keys: list[str] | None = None,
-) -> int:
-    """One maintenance cycle: drain, fold, commit. Returns rows folded.
-
-    Cost is ∝ the uncommitted delta (offset-filtered topic read +
-    state-sized merge), never ∝ topic history. Crash between the state
-    swap and the commit ⇒ the batch replays into a state that already
-    contains it — the same at-least-once window Samza has between
-    changelog flush and checkpoint; callers needing exactness key the
-    state by (partition, offset) ranges, which ``update_aggregate``'s
-    union-merge supports by construction.
-    """
-    keys = keys or ["user_id"]
-    batch = topic.read_batch(group).cache()
-    n = batch.count()
-    if n:
-        update_aggregate(spark, state_path, parse_events_json(batch), keys=keys)
-        # commit exactly what was read (not the topic's current end:
-        # records produced since read_batch must replay next cycle).
-        ends = (
-            batch.groupBy("partition").agg((F.max("offset") + 1).alias("end")).collect()
-        )
-        topic.commit(group, {str(r.partition): int(r.end) for r in ends})
-    batch.unpersist()
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -1918,24 +1426,8 @@ def publish_cdf(table, topic: TopicLog, cursor_path: str, key_col: str) -> dict:
     )
     n = payload.count()
     topic.produce(payload, "k", "v")
-    with open(cursor_path, "w") as fh:
-        _json.dump({"version": published_to}, fh)
+    write_json_atomic(cursor_path, {"version": published_to})
     return {"published": n, "from": cur, "to": published_to}
-
-
-def _cdf_watermark_path(state_path: str) -> str:
-    return state_path.rstrip("/") + ".watermark.json"
-
-
-def _cdf_watermark(state_path: str) -> int:
-    import json as _json
-    import os as _os
-
-    p = _cdf_watermark_path(state_path)
-    if _os.path.exists(p):
-        with open(p) as fh:
-            return _json.load(fh)["version"]
-    return 0
 
 
 def fold_cdf_from_topic(
@@ -1948,11 +1440,10 @@ def fold_cdf_from_topic(
     value_col: str,
 ) -> int:
     """One downstream maintenance cycle: drain the group's uncommitted
-    CDF records, fold the signed deltas into the aggregate state,
-    commit offsets AFTER the state swap (``maintain_view_from_topic``'s
-    ordering). Inserts and update postimages weigh +1, deletes and
-    update preimages -1 — so updates retract their old contribution
-    and the state tracks the table exactly.
+    CDF records, fold the signed deltas into the aggregate state, then
+    commit the topic offsets. Inserts and update postimages weigh +1,
+    deletes and update preimages -1 — so updates retract their old
+    contribution and the state tracks the table exactly.
 
     Exactly-once against BOTH replay modes: the offset commit dedupes
     re-CONSUMPTION of the same records, and a COMMIT-VERSION
@@ -1961,17 +1452,18 @@ def fold_cdf_from_topic(
     same versions as fresh records (``publish_cdf`` is at-least-once
     by design), which offsets alone would double-fold. Versions are
     monotone per table and ``publish_cdf`` ships whole versions per
-    produce, so filtering to ``_commit_version > watermark`` and
-    advancing the watermark after the state swap makes duplicated
-    publishes fold nothing (pytest simulates the cursor-loss crash).
-    Returns records folded (pre-watermark-filter drain size).
+    produce, so filtering to ``_commit_version > watermark`` makes
+    duplicated publishes fold nothing (pytest simulates the
+    cursor-loss crash). The watermark is the state store's ``applied``
+    value, published in the same manifest replace as the state, so a
+    crash between the fold and the offset commit re-drains records the
+    watermark already covers. Returns records folded
+    (pre-watermark-filter drain size).
     """
-    import json as _json
-
     batch = topic.read_batch(group).cache()
     n = batch.count()
     if n:
-        wm = _cdf_watermark(state_path)
+        wm = VersionedState(spark, state_path).manifest()["applied"] or 0
         # a re-publication drained in the SAME batch as the original
         # sits above the watermark too; a version's rows are unique on
         # (key, change_type), so an exact row dedupe collapses the
@@ -1992,10 +1484,13 @@ def fold_cdf_from_topic(
                 ).otherwise(F.lit(-1)),
             )
             update_aggregate_signed(
-                spark, state_path, signed, keys=keys, value_col=value_col
+                spark,
+                state_path,
+                signed,
+                keys=keys,
+                value_col=value_col,
+                batch_id=int(new_wm),
             )
-            with open(_cdf_watermark_path(state_path), "w") as fh:
-                _json.dump({"version": int(new_wm)}, fh)
         ends = (
             batch.groupBy("partition").agg((F.max("offset") + 1).alias("end")).collect()
         )

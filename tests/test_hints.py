@@ -37,108 +37,3 @@ def test_unknown_size_is_declined(spark):
     # budget 0 — the contract is "decline unless provably small".
     df = spark.range(10).toDF("id")
     assert maybe_broadcast(df, max_bytes=0) is df
-
-
-def test_counted_probe_broadcasts_provably_small_derived_frame(spark):
-    """A groupBy output has no usable Catalyst estimate; the bounded
-    runtime probe measures it small and attaches the hint."""
-    from samza_hello_samza_spark.functions.hints import maybe_broadcast_counted
-
-    dim = (
-        load_table(spark, SF_DIR, "orders")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    hinted = maybe_broadcast_counted(dim)
-    plan = (
-        load_table(spark, SF_DIR, "orders")
-        .join(hinted, "o_orderpriority")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan
-
-
-def test_counted_probe_declines_when_over_row_budget(spark):
-    from samza_hello_samza_spark.functions.hints import maybe_broadcast_counted
-
-    big = (
-        load_table(spark, SF_DIR, "events")
-        .groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # row budget implied by max_bytes/est_row_bytes = 4 rows — the
-    # probe must observe 5 and decline.
-    out = maybe_broadcast_counted(big, max_bytes=1024, est_row_bytes=256)
-    assert out is big
-
-
-def test_runtime_hint_corrects_catalyst_both_ways(spark):
-    """maybe_broadcast_runtime must invert BOTH Catalyst mistakes
-    (VERDICT r04 #5): a frame the optimizer OVER-estimates (selective
-    modulo filter, estimate = full input size ≫ budget, actual 2
-    rows) still gets the broadcast, and a frame it UNDER-estimates
-    (explode of a sequence from one row — estimate ≈ input bytes,
-    actual millions of rows) is declined."""
-    from samza_hello_samza_spark.functions.hints import (
-        maybe_broadcast_runtime,
-        plan_size_bytes,
-    )
-
-    budget = 64 * 1024
-
-    over = (
-        spark.range(0, 2_000_000)
-        .withColumn("pad", F.concat(F.lit("x" * 100), F.col("id").cast("string")))
-        .filter(F.col("id") % 1_000_000 == 7)  # 2 rows actual
-    )
-    est = plan_size_bytes(over)
-    assert est is not None and est > budget  # Catalyst says too big
-    hinted = maybe_broadcast_runtime(over, max_bytes=budget)
-    probe = spark.range(0, 10).withColumnRenamed("id", "k")
-    plan = (
-        probe.join(hinted, probe.k == hinted.id)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastHashJoin" in plan and "InMemoryTableScan" in plan
-    over.unpersist()
-
-    under = (
-        spark.range(1)
-        .select(F.explode(F.sequence(F.lit(0), F.lit(3_000_000))).alias("v"))
-        .withColumn("pad", F.concat(F.lit("y" * 60), F.col("v").cast("string")))
-    )
-    est = plan_size_bytes(under)
-    assert est is not None and est <= budget  # Catalyst says tiny
-    declined = maybe_broadcast_runtime(under, max_bytes=budget, keep_if_big=True)
-    # no broadcast hint attached: the logical plan carries no hint node
-    assert "ResolvedHint" not in declined._jdf.queryExecution().logical().toString()
-    assert plan_size_bytes(declined) > budget  # observed truth
-    under.unpersist()
-
-
-def test_runtime_hint_releases_cache_on_declined_path(spark):
-    """ADVICE r05: the default decline path must NOT pin the measured
-    frame in executor storage for the session lifetime — the cache is
-    released once the decision is made (keep_if_big=True opts out for
-    callers that reuse the frame and own the unpersist)."""
-    from samza_hello_samza_spark.functions.hints import maybe_broadcast_runtime
-
-    big = (
-        spark.range(1)
-        .select(F.explode(F.sequence(F.lit(0), F.lit(500_000))).alias("v"))
-        .withColumn("pad", F.concat(F.lit("z" * 60), F.col("v").cast("string")))
-    )
-    maybe_broadcast_runtime(big, max_bytes=1024)
-    lvl = big.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)  # released
-
-    small = spark.range(5)
-    hinted = maybe_broadcast_runtime(small, max_bytes=64 * 1024)
-    # broadcast path keeps the bounded cache the hint's build side reads
-    assert small.storageLevel.useMemory or small.storageLevel.useDisk
-    assert "Hint" in hinted._jdf.queryExecution().analyzed().toString()
-    small.unpersist()

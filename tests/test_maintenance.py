@@ -2,19 +2,38 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
+from unittest import mock
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from samza_hello_samza_spark.operators import ann_index, similarity
-from samza_hello_samza_spark.sources.incremental import read_aggregate
+from samza_hello_samza_spark.sources.incremental import VersionedState
 from samza_hello_samza_spark.sources.topic_log import TopicLog
 from samza_hello_samza_spark.streaming import maintenance
 from tests.conftest import SF_DIR
 
 NEW_VEC_ID = 999_999
+
+
+@contextlib.contextmanager
+def commit_point_fails():
+    """A crash at the state store's only commit point: the manifest
+    replace inside ``session.write_json_atomic`` raises, after the new
+    version's snapshots were written."""
+
+    def crash(*_a, **_k):
+        raise OSError("simulated crash at the manifest replace")
+
+    with mock.patch.object(os, "replace", crash):
+        yield
+
+
+def _manifest(spark, state: str) -> dict:
+    return VersionedState(spark, state).manifest()
 
 
 def _file_snapshot(root: str) -> dict[str, int]:
@@ -154,23 +173,24 @@ def _produce_events(spark, topic: TopicLog, rows):
     topic.produce(payload, key_col="k", value_col="v")
 
 
-def test_maintain_view_from_topic_matches_full_recompute(spark, tmp_path):
+def test_one_topic_txn_view_matches_full_recompute(spark, tmp_path):
     topic = TopicLog(spark, str(tmp_path / "topic"), n_partitions=2)
-    state = str(tmp_path / "state")
-    group = "viewer"
+    tv = maintenance.TxnView(spark, str(tmp_path / "state"), {"events": topic})
+
+    def view():
+        return {
+            r.user_id: (r.n_events, r.total_value) for r in tv.read_view().collect()
+        }
 
     _produce_events(spark, topic, [(1, "view", 10.0), (2, "click", 5.0), (1, "view", 2.5)])
-    assert maintenance.maintain_view_from_topic(spark, topic, group, state) == 3
+    assert tv.cycle() == 3
 
     # two more batches land; one cycle folds both deltas
     _produce_events(spark, topic, [(1, "purchase", 100.0), (3, "view", 1.0)])
     _produce_events(spark, topic, [(2, "view", 7.0)])
-    assert maintenance.maintain_view_from_topic(spark, topic, group, state) == 3
+    assert tv.cycle() == 3
 
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in read_aggregate(spark, state).collect()
-    }
+    got = view()
     full = {
         r.user_id: (r.n_events, r.total_value)
         for r in (
@@ -186,12 +206,8 @@ def test_maintain_view_from_topic_matches_full_recompute(spark, tmp_path):
     assert got == full
 
     # drained topic → no-op cycle, state unchanged
-    assert maintenance.maintain_view_from_topic(spark, topic, group, state) == 0
-    again = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in read_aggregate(spark, state).collect()
-    }
-    assert again == got
+    assert tv.cycle() == 0
+    assert view() == got
 
 
 def test_txn_view_folds_two_topics_atomically(spark, tmp_path):
@@ -230,42 +246,38 @@ def test_txn_view_folds_two_topics_atomically(spark, tmp_path):
 
 
 def test_txn_view_crash_before_commit_replays_exactly_once(spark, tmp_path):
-    """Simulated crash between the state write and the manifest swap:
-    restoring the old manifest makes the next cycle re-drain BOTH
-    topics' deltas, and the committed view ends identical — no loss,
-    no double count (exactly-once by single-swap atomicity)."""
-    import json
-    import shutil
-
+    """Crash between the state write and the manifest replace: readers
+    stay on the pre-state, the next cycle re-drains BOTH topics'
+    deltas, and the committed view ends exact — no loss, no double
+    count (exactly-once by single-commit atomicity)."""
     views = TopicLog(spark, str(tmp_path / "views"), n_partitions=2)
     clicks = TopicLog(spark, str(tmp_path / "clicks"), n_partitions=2)
-    root = str(tmp_path / "tv")
-    tv = maintenance.TxnView(spark, root, {"views": views, "clicks": clicks})
+    tv = maintenance.TxnView(spark, str(tmp_path / "tv"), {"views": views, "clicks": clicks})
+
+    def view():
+        return {
+            (r.user_id, r.topic): (r.n_events, r.total_value)
+            for r in tv.read_view().collect()
+        }
 
     _produce_events(spark, views, [(1, "view", 1.0), (2, "view", 1.0)])
     _produce_events(spark, clicks, [(1, "click", 0.5)])
     assert tv.cycle() == 3
-    manifest_v1 = json.dumps(tv.manifest())
+    v1 = view()
 
     _produce_events(spark, views, [(3, "view", 1.0), (1, "view", 1.0)])
     _produce_events(spark, clicks, [(2, "click", 0.25)])
-    assert tv.cycle() == 3
-    want = {
-        (r.user_id, r.topic): (r.n_events, r.total_value)
-        for r in tv.read_view().collect()
-    }
-
-    # crash simulation: state v2 landed but the manifest swap "didn't" —
-    # roll the manifest back and delete nothing else.
-    with open(os.path.join(root, "MANIFEST.json"), "w") as f:
-        f.write(manifest_v1)
-    # the orphaned v2 dir may exist; the maintainer must overwrite it
+    with commit_point_fails(), pytest.raises(OSError):
+        tv.cycle()
+    assert view() == v1  # the v2 snapshot written before the crash is invisible
     assert tv.cycle() == 3  # re-drains the same deltas from both topics
-    got = {
-        (r.user_id, r.topic): (r.n_events, r.total_value)
-        for r in tv.read_view().collect()
+    assert view() == {
+        (1, "views"): (2, 2.0),
+        (2, "views"): (1, 1.0),
+        (3, "views"): (1, 1.0),
+        (1, "clicks"): (1, 0.5),
+        (2, "clicks"): (1, 0.25),
     }
-    assert got == want
 
 
 def test_txn_view_gc_keeps_bounded_versions(spark, tmp_path):
@@ -274,9 +286,7 @@ def test_txn_view_gc_keeps_bounded_versions(spark, tmp_path):
     for i in range(4):
         _produce_events(spark, views, [(i, "view", 1.0)])
         assert tv.cycle() == 1
-    state_root = os.path.join(str(tmp_path / "tv"), "state")
-    versions = sorted(os.listdir(state_root))
-    assert versions == ["v3", "v4"]  # KEEP_VERSIONS = 2
+    assert tv.store.versions() == [3, 4]  # current + previous
 
 
 def test_cms_updater_stream_matches_batch_sketch(spark, tmp_path):
@@ -666,8 +676,8 @@ except ImportError:  # pragma: no cover
 
 if _HYP:
     # an action: ('a'|'b', rows) = produce to that topic; 'cycle';
-    # 'crash' = roll the manifest back to its pre-latest-cycle value
-    # (simulating dying between the state write and the swap).
+    # 'crash' = a cycle that dies at the manifest replace, after its
+    # state write.
     _rows_st = st.lists(
         st.tuples(st.integers(0, 4), st.sampled_from(["view", "click"])),
         min_size=1,
@@ -692,7 +702,6 @@ if _HYP:
         """For ANY interleaving of produces, cycles, and crash-rollbacks,
         a final cycle must leave the view equal to a full recompute of
         both topic logs — nothing lost, nothing double-counted."""
-        import json
         import os
         import tempfile
 
@@ -704,8 +713,6 @@ if _HYP:
         tv = maintenance.TxnView(
             spark, os.path.join(root, "tv"), {"a": ta, "b": tb}
         )
-        manifest_path = os.path.join(root, "tv", "MANIFEST.json")
-        prev_manifest = json.dumps(tv.manifest())
         produced: list[tuple[str, int, str]] = []
 
         for kind, payload in actions:
@@ -717,11 +724,13 @@ if _HYP:
                 )
                 produced.extend((name, uid, et) for uid, et in payload)
             elif kind == "cycle":
-                prev_manifest = json.dumps(tv.manifest())
                 tv.cycle()
-            else:  # crash: undo the latest manifest swap, keep all files
-                with open(manifest_path, "w") as f:
-                    f.write(prev_manifest)
+            else:  # crash: the cycle's state lands, its commit does not
+                with commit_point_fails():
+                    try:
+                        tv.cycle()
+                    except OSError:
+                        pass  # the simulated crash; an empty drain commits nothing
 
         tv.cycle()  # recovery cycle drains whatever the manifest says is unread
         got = {
@@ -819,7 +828,7 @@ def test_domain_drift_updater_matches_batch_kl(spark, tmp_path):
     before = sorted(
         map(tuple, maintenance.read_domain_wordcounts(spark, state).collect())
     )
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     stream2 = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
@@ -830,7 +839,7 @@ def test_domain_drift_updater_matches_batch_kl(spark, tmp_path):
         map(tuple, maintenance.read_domain_wordcounts(spark, state).collect())
     )
     assert after == before
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
 
 def test_fold_domain_wordcounts_crash_atomic(spark, tmp_path):
@@ -844,17 +853,13 @@ def test_fold_domain_wordcounts_crash_atomic(spark, tmp_path):
 
     assert maintenance.fold_domain_wordcounts(docs, state, batch_id=0)
     v1 = sorted(map(tuple, maintenance.read_domain_wordcounts(spark, state).collect()))
-    assert v1 and maintenance._dw_manifest(state) == {
-        "version": 1,
-        "applied_batch": 0,
-    }
+    assert v1 and _manifest(spark, state) == {"version": 1, "applied": 0}
 
-    # crash mid-fold: v2 data directory exists but the manifest swap
-    # never happened (write the orphan exactly as a killed fold would)
-    spark.createDataFrame(
-        [("s", "w", 1)], "source string, word string, cnt bigint"
-    ).write.mode("overwrite").parquet(os.path.join(state, "v2"))
-    assert maintenance._dw_manifest(state)["version"] == 1  # v2 invisible
+    # crash mid-fold: the v2 snapshot is written, the manifest replace
+    # never happens
+    with commit_point_fails(), pytest.raises(OSError):
+        maintenance.fold_domain_wordcounts(docs, state, batch_id=1)
+    assert _manifest(spark, state)["version"] == 1  # v2 invisible
     assert (
         sorted(map(tuple, maintenance.read_domain_wordcounts(spark, state).collect()))
         == v1
@@ -870,7 +875,7 @@ def test_fold_domain_wordcounts_crash_atomic(spark, tmp_path):
     assert doubled == {(s, w): 2 * c for (s, w, c) in v1}
     # redelivery of an applied batch id is a no-op
     assert not maintenance.fold_domain_wordcounts(docs, state, batch_id=1)
-    assert maintenance._dw_manifest(state)["version"] == 2
+    assert _manifest(spark, state)["version"] == 2
 
 
 def test_window_fingerprint_updater_matches_batch_winners(spark, tmp_path):
@@ -925,14 +930,14 @@ def test_window_fingerprint_updater_matches_batch_winners(spark, tmp_path):
     assert got == want and got
 
     # restart replay: manifest marker makes it a no-op
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     stream2 = (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
     q2 = maintenance.window_fingerprint_updater(stream2, state, ck)
     q2.processAllAvailable()
     q2.stop()
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
 
 def test_substring_dedup_gate_flags_cross_batch_spans(spark, tmp_path):
@@ -1044,7 +1049,7 @@ def test_growth_accounting_updater_matches_batch(spark, tmp_path):
     want = sorted(map(tuple, growth_accounting(spark, SF_DIR).collect()))
     assert got == want and got
 
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     stream2 = (
         spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
@@ -1053,7 +1058,7 @@ def test_growth_accounting_updater_matches_batch(spark, tmp_path):
     )
     q2.processAllAvailable()
     q2.stop()
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
 
 def test_dsir_state_updater_reproduces_batch_scores(spark, tmp_path):
@@ -1095,14 +1100,14 @@ def test_dsir_state_updater_reproduces_batch_scores(spark, tmp_path):
     want = sorted(map(tuple, sampling.dsir_importance(spark, SF_DIR).collect()))
     assert got == want and got
 
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     stream2 = (
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(flat)
     )
     q2 = maintenance.dsir_state_updater(stream2, state, str(tmp_path / "ck"))
     q2.processAllAvailable()
     q2.stop()
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
 
 def test_ivf_snapshot_isolates_uncommitted_appends(spark, tmp_path):
@@ -1416,9 +1421,9 @@ def test_kmv_updater_stream_fold_equals_batch_sample(spark, tmp_path):
     assert got_sample == want_sample
 
     # replayed batch ids no-op (crash-after-commit redelivery)
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     assert maintenance.fold_kmv_sample(events, state, batch_id=0) is False
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
     est = {
         r.event_type: (r.n_sample, r.est_p50, r.est_p90)
@@ -1548,7 +1553,7 @@ def test_cdf_topic_fold_tracks_table_at_every_version(spark, tmp_path):
     def state_now():
         return {
             r.grp: (r.n_events, round(r.sum_value, 6))
-            for r in spark.read.parquet(state).collect()
+            for r in VersionedState(spark, state).read().collect()
         }
 
     def recompute():
@@ -1862,9 +1867,9 @@ def test_audience_kmv_updater_stream_fold_equals_batch_sketch(spark, tmp_path):
     }
     assert got == want
 
-    man_before = maintenance._dw_manifest(state)
+    man_before = _manifest(spark, state)
     assert maintenance.fold_audience_kmv(events, state, batch_id=0) is False
-    assert maintenance._dw_manifest(state) == man_before
+    assert _manifest(spark, state) == man_before
 
 
 def test_cms_fold_is_replay_gated_and_equals_batch_cells(spark, tmp_path):
@@ -1887,14 +1892,14 @@ def test_cms_fold_is_replay_gated_and_equals_batch_cells(spark, tmp_path):
         is True
     )
     # crash-replay of batch 0: MUST fold nothing (counters would double)
-    man_mid = maintenance._dw_manifest(state)
+    man_mid = _manifest(spark, state)
     assert (
         maintenance.fold_cms_cells(
             events.filter(F.col("event_id") % 2 == 0), state, batch_id=0
         )
         is False
     )
-    assert maintenance._dw_manifest(state) == man_mid
+    assert _manifest(spark, state) == man_mid
     assert (
         maintenance.fold_cms_cells(
             events.filter(F.col("event_id") % 2 == 1), state, batch_id=1
@@ -2049,7 +2054,7 @@ def test_restore_flows_through_cdc_consumer_exactly_once(spark, tmp_path):
     def folded():
         return {
             r.g: (r.n_events, r.sum_value)
-            for r in spark.read.parquet(state).collect()
+            for r in VersionedState(spark, state).read().collect()
         }
 
     def expected():
@@ -2088,146 +2093,6 @@ def test_restore_flows_through_cdc_consumer_exactly_once(spark, tmp_path):
         jsonmod.dump({"version": t.manifest()["current"] - 1}, fh)
     cycle()
     assert folded() == v1_state
-
-
-def test_cms_legacy_flat_state_migrates_on_first_fold(spark, tmp_path):
-    """ADVICE r08: a pre-manifest CMS state dir (flat cell parquet at
-    the root, the pre-r07 cms_updater layout) must keep its
-    whole-history counts across the layout upgrade — readable before
-    any fold, folded into v1 by the first fold, flat files reclaimed
-    after the commit."""
-    from samza_hello_samza_spark.operators import sketches
-    from samza_hello_samza_spark.operators.dedup import explode_nonempty
-
-    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    old = events.filter(F.col("event_id") % 2 == 0)
-    new = events.filter(F.col("event_id") % 2 == 1)
-    state = str(tmp_path / "cms_state")
-
-    def cells(df):
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(row).alias("row"),
-                    sketches._cms_bucket(F.col("user_id"), row).alias("bucket"),
-                )
-                for row in range(sketches.CMS_D)
-            ]
-        )
-        return (
-            explode_nonempty(df, [], pairs, "p")
-            .groupBy(F.col("p.row").alias("row"), F.col("p.bucket").alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    # simulate the old layout: cells written flat at state_path
-    cells(old).coalesce(1).write.mode("overwrite").parquet(state)
-    import glob as _glob
-
-    flat_before = _glob.glob(os.path.join(state, "*.parquet"))
-    assert flat_before  # the legacy layout is really there
-
-    # pre-migration read: the legacy cells serve, not an empty sketch
-    got_legacy = {
-        (r.row, r.bucket, r.cnt)
-        for r in maintenance.read_cms_cells(spark, state).collect()
-    }
-    assert got_legacy == {
-        (r.row, r.bucket, r.cnt) for r in cells(old).collect()
-    }
-
-    # first manifest fold migrates legacy + delta into v1
-    assert maintenance.fold_cms_cells(new, state, batch_id=0) is True
-    got = {
-        (r.row, r.bucket, r.cnt)
-        for r in maintenance.read_cms_cells(spark, state).collect()
-    }
-    want = {(r.row, r.bucket, r.cnt) for r in cells(events).collect()}
-    assert got == want
-    # flat files reclaimed post-commit; manifest at v1
-    assert not _glob.glob(os.path.join(state, "*.parquet"))
-    assert maintenance._dw_manifest(state)["version"] == 1
-
-    # replay of the migrating batch folds nothing (counters would double)
-    assert maintenance.fold_cms_cells(new, state, batch_id=0) is False
-    got2 = {
-        (r.row, r.bucket, r.cnt)
-        for r in maintenance.read_cms_cells(spark, state).collect()
-    }
-    assert got2 == want
-
-
-def test_cms_unmarked_flat_cells_at_v_gt_0_survive(spark, tmp_path):
-    """ADVICE r09: flat cell parquet found at manifest version > 0
-    WITHOUT the _FLAT_MIGRATED marker is a fold history that never
-    ran the migration code — those cells were never folded, and the
-    fold must warn and leave them in place (deleting would destroy
-    the only copy of their counts). WITH the marker they are crash
-    orphans of a prior migrating fold's cleanup and ARE reclaimed."""
-    import glob as _glob
-    import shutil as _sh
-
-    events = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    a = events.filter(F.col("event_id") % 3 == 0)
-    b = events.filter(F.col("event_id") % 3 == 1)
-    c = events.filter(F.col("event_id") % 3 == 2)
-
-    # simulate the r07-era history: a manifest fold advanced the
-    # version while never-folded legacy flats sit at the root
-    state = str(tmp_path / "cms_unmarked")
-    assert maintenance.fold_cms_cells(a, state, batch_id=0) is True
-    legacy_dir = str(tmp_path / "legacy_cells")
-    spark.createDataFrame(
-        [(0, 7, 123)], "row int, bucket bigint, cnt bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(legacy_dir)
-    for i, f in enumerate(_glob.glob(os.path.join(legacy_dir, "*.parquet"))):
-        _sh.copy(f, os.path.join(state, f"legacy-{i}.parquet"))
-    assert _glob.glob(os.path.join(state, "*.parquet"))
-
-    with pytest.warns(UserWarning, match="_FLAT_MIGRATED"):
-        assert maintenance.fold_cms_cells(b, state, batch_id=1) is True
-    # the unmarked flats survive the fold
-    assert _glob.glob(os.path.join(state, "*.parquet"))
-
-    # r10 (ADVICE r09): the marker is scoped to the NAMED file set —
-    # a marker that does not name these flats (pre-r10 empty marker,
-    # or a marker from an earlier migration of OTHER files) leaves
-    # them in place with a warning; only named flats are reclaimed.
-    import json as _json
-
-    open(os.path.join(state, "_FLAT_MIGRATED"), "w").close()  # pre-r10
-    with pytest.warns(UserWarning, match="_FLAT_MIGRATED"):
-        assert maintenance.fold_cms_cells(c, state, batch_id=2) is True
-    assert _glob.glob(os.path.join(state, "*.parquet"))
-
-    with open(os.path.join(state, "_FLAT_MIGRATED"), "w") as mf:
-        _json.dump(["some-other-file.parquet"], mf)
-    d = events.filter(F.col("event_id") % 3 == 2).limit(0)
-    with pytest.warns(UserWarning, match="_FLAT_MIGRATED"):
-        assert maintenance.fold_cms_cells(d, state, batch_id=3) is True
-    assert _glob.glob(os.path.join(state, "*.parquet"))
-
-    # with the marker NAMING them (crash-orphan case) the next fold
-    # reclaims them — and the committed counts never included them
-    names = [
-        os.path.basename(p)
-        for p in _glob.glob(os.path.join(state, "*.parquet"))
-    ]
-    with open(os.path.join(state, "_FLAT_MIGRATED"), "w") as mf:
-        _json.dump(names, mf)
-    assert maintenance.fold_cms_cells(d, state, batch_id=4) is True
-    assert not _glob.glob(os.path.join(state, "*.parquet"))
-    total = (
-        maintenance.read_cms_cells(spark, state)
-        .agg(F.sum("cnt").alias("s"))
-        .collect()[0]
-        .s
-    )
-    # every event contributes CMS_D cells; the 123-count flat row
-    # must never have been folded in
-    from samza_hello_samza_spark.operators.sketches import CMS_D
-
-    assert total == events.count() * CMS_D
 
 
 def test_restore_flows_through_join_mv_applier_exactly_once(spark, tmp_path):

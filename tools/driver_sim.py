@@ -6,7 +6,7 @@ Usage: driver_sim.py [--json OUT.json] [KEY ...]
   --json writes the per-key results as a committed artifact
   (CORRECTNESS_LOCAL_rN.json) so full-surface evidence is durable,
   not a private run. With no KEY args, every registered query runs."""
-import hashlib, json as _json, math, sys
+import hashlib, json as _json, math, os, sys
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -17,7 +17,8 @@ spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.session.timeZone", "UTC")
          .getOrCreate())
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it was copied to
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
 
 # 1. smoke: entry()
