@@ -18,12 +18,20 @@ key NOW" need is served by file skipping, not a full scan.
 
 Design:
 
-- Build is ONE scan, entirely JVM-side: per row, the md5-slice32 hash
+- Build job shape: one sorted layout write (``_date_clustered_orders``),
+  one sidecar aggregate, and no schema-inference or ``count()`` job.
+  The sidecar aggregate is JVM-side: per row, the md5-slice32 hash
   family (the repo's engine-portable discipline) yields K=3 bit
   positions; positions group by ``(input_file_name, pos >> 6)`` with a
   ``bit_or`` of single-bit masks — the sidecar is (file, word, bits)
   rows, i.e. the sparse nonzero words of each file's bit array. No
-  Python touches the data path.
+  Python touches the data path. Row counts come from the parquet
+  footers on the driver, and the layout's schema is recorded in
+  ``_META.json`` next to ``n_bits``, so every later read of the layout
+  (candidate files, empty result) and of the sidecar (a fixed schema)
+  passes its schema instead of inferring it. A ``_META.json`` without
+  a schema (a layout written before schemas were recorded) is read
+  through ``read_parquet``'s inferring path.
 - The probe hashes its keys DRIVER-side (same md5 slices — Python and
   the JVM agree on md5 by definition), reads only the ≤ 3·|keys|
   needed sidecar words (predicate pushed to the sidecar scan), and
@@ -53,8 +61,10 @@ import json
 import math
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..operators.dedup import explode_nonempty
 from ..session import read_parquet, write_json_atomic
@@ -64,6 +74,8 @@ FB_K = 3  # md5 hex slices per key — same family as functions/bloom
 FB_MIN_BITS = 1 << 16
 FB_MAX_BITS = 1 << 22
 FB_BITS_PER_KEY = 16
+#: the sidecar's rows, as ``_file_blooms`` writes them
+SIDECAR_SCHEMA = "_file string, word int, bits long"
 
 
 def _sidecar_dir(table_dir: str) -> str:
@@ -72,6 +84,45 @@ def _sidecar_dir(table_dir: str) -> str:
 
 def _meta_path(table_dir: str) -> str:
     return os.path.join(_sidecar_dir(table_dir), "_META.json")
+
+
+def _data_files(path: str) -> list[str]:
+    """Data files Spark's file index lists under ``path`` (a file or a
+    table dir): names starting with ``_`` or ``.`` are skipped —
+    ``_file_blooms/``, ``_SUCCESS``, ``.crc``, ``_temporary`` — except
+    ``name=value`` partition dirs such as ``_bucket=3``."""
+    if os.path.isfile(path):
+        return [path]
+    out = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = sorted(
+            d
+            for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        )
+        out += [
+            os.path.join(dirpath, f)
+            for f in sorted(files)
+            if not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Row count of parquet ``files`` from their footers (driver-side,
+    no Spark job)."""
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _layout_schema(meta: dict) -> StructType | None:
+    """The layout schema recorded in ``_META.json``; None for a layout
+    written before schemas were recorded (its reads infer)."""
+    return StructType.fromJson(meta["schema"]) if "schema" in meta else None
+
+
+def _read_meta(table_dir: str) -> dict:
+    with open(_meta_path(table_dir)) as f:
+        return json.load(f)
 
 
 def _size_bits(rows_per_file: float) -> int:
@@ -106,19 +157,25 @@ def _file_blooms(df: DataFrame, col: str, n_bits: int) -> DataFrame:
     )
 
 
-def build_file_blooms(spark: SparkSession, table_dir: str, col: str) -> str:
-    """One-scan per-file Bloom build over every data file. Returns the
-    sidecar dir. ``n_bits`` is derived from the observed rows/file and
-    frozen in the sidecar's ``_META.json`` for the probe side."""
-    df = read_parquet(spark, table_dir)
-    n_files = max(1, len(df.inputFiles()))
-    n_rows = df.count()  # parquet count(*) — metadata-only scan
-    n_bits = _size_bits(n_rows / n_files)
+def build_file_blooms(
+    spark: SparkSession, table_dir: str, col: str, schema: StructType | None = None
+) -> str:
+    """One-aggregate per-file Bloom build over every data file. Returns
+    the sidecar dir. ``n_bits`` is derived from the footers' rows/file;
+    it and the layout's read schema (``schema`` when the caller just
+    wrote the layout, else inferred once here) are frozen in the
+    sidecar's ``_META.json`` for the probe side."""
+    df = read_parquet(spark, table_dir, schema=schema)
+    files = _data_files(table_dir)
+    n_bits = _size_bits(_footer_rows(files) / max(1, len(files)))
 
     sidecar = _file_blooms(df, col, n_bits)
     out = _sidecar_dir(table_dir)
     sidecar.write.mode("overwrite").parquet(out)
-    write_json_atomic(_meta_path(table_dir), {"col": col, "n_bits": n_bits, "k": FB_K})
+    write_json_atomic(
+        _meta_path(table_dir),
+        {"col": col, "n_bits": n_bits, "k": FB_K, "schema": df.schema.jsonValue()},
+    )
     return out
 
 
@@ -128,25 +185,31 @@ def refresh_new_files(spark: SparkSession, table_dir: str) -> int:
     frozen in ``_META.json`` (probe positions stay file-independent),
     so an append scans ONLY the new files — cost ∝ delta, never
     O(table). Returns the number of files added."""
-    with open(_meta_path(table_dir)) as f:
-        meta = json.load(f)
+    meta = _read_meta(table_dir)
+    schema = _layout_schema(meta)
     # distributed listing-diff (the zonemap.refresh_new_files r07
     # shape): input_file_name() over an empty projection — executors
     # derive one row per file from parquet metadata, no per-file rows
     # on the driver; the only collect is the delta file list
     listing = (
-        read_parquet(spark, table_dir)
+        read_parquet(spark, table_dir, schema=schema)
         .select(F.input_file_name().alias("_file"))
         .distinct()
     )
-    known = read_parquet(spark, _sidecar_dir(table_dir)).select("_file").distinct()
+    known = (
+        read_parquet(spark, _sidecar_dir(table_dir), schema=SIDECAR_SCHEMA)
+        .select("_file")
+        .distinct()
+    )
     new_files = [
         r._file for r in listing.join(known, "_file", "left_anti").collect()
     ]
     if not new_files:
         return 0
     fresh = _file_blooms(
-        read_parquet(spark, *new_files), meta["col"], meta["n_bits"]
+        read_parquet(spark, *new_files, schema=schema),
+        meta["col"],
+        meta["n_bits"],
     )
     fresh.write.mode("append").parquet(_sidecar_dir(table_dir))
     return len(new_files)
@@ -166,8 +229,7 @@ def refresh_merged_buckets(
     the number of refreshed files."""
     if not buckets:  # no touched buckets → the sidecar is current
         return 0
-    with open(_meta_path(table_dir)) as f:
-        meta = json.load(f)
+    meta = _read_meta(table_dir)
     out = _sidecar_dir(table_dir)
     markers = [f"/_bucket={b}/" for b in buckets]
     touched_col = None
@@ -176,7 +238,11 @@ def refresh_merged_buckets(
         touched_col = c if touched_col is None else (touched_col | c)
     # materialize BEFORE the overwrite — the sink is the path this
     # very plan reads from.
-    kept = read_parquet(spark, out).filter(~touched_col).localCheckpoint()
+    kept = (
+        read_parquet(spark, out, schema=SIDECAR_SCHEMA)
+        .filter(~touched_col)
+        .localCheckpoint()
+    )
     dirs = [
         os.path.join(table_dir, f"_bucket={b}")
         for b in buckets
@@ -184,8 +250,9 @@ def refresh_merged_buckets(
     ]
     if dirs:
         fresh = _file_blooms(
-            read_parquet(spark, *dirs, basePath=table_dir)
-            .drop("_bucket"),
+            read_parquet(
+                spark, *dirs, schema=_layout_schema(meta), basePath=table_dir
+            ).drop("_bucket"),
             meta["col"],
             meta["n_bits"],
         )
@@ -195,7 +262,8 @@ def refresh_merged_buckets(
         n = 0
         kept.write.mode("overwrite").parquet(out)
     # the overwrite cleared the sidecar dir — restore the frozen meta
-    # (same n_bits: probe positions must stay file-independent).
+    # (same n_bits: probe positions must stay file-independent; same
+    # layout schema: a merge rewrites buckets, never the columns).
     write_json_atomic(_meta_path(table_dir), meta)
     return n
 
@@ -221,12 +289,11 @@ def bloom_candidate_files(
     distinct words; the ``isin`` prunes at the sidecar scan). A key's
     word with no sidecar row means no row of that file ever set a bit
     there — the key is definitively absent (no false negatives)."""
-    with open(_meta_path(table_dir)) as f:
-        meta = json.load(f)
+    meta = _read_meta(table_dir)
     per_key = {k: _key_positions(k, meta["n_bits"]) for k in keys}
     words_needed = sorted({w for wb in per_key.values() for (w, _) in wb})
     rows = (
-        read_parquet(spark, _sidecar_dir(table_dir))
+        read_parquet(spark, _sidecar_dir(table_dir), schema=SIDECAR_SCHEMA)
         .filter(F.col("word").isin(words_needed))
         .collect()
     )
@@ -249,11 +316,12 @@ def bloom_point_scan(
     candidate files with the equality predicate re-applied (removes
     Bloom false positives — the result equals the full-scan filter,
     which is what the registered key's DuckDB oracle computes)."""
+    schema = _layout_schema(_read_meta(table_dir))
     files = bloom_candidate_files(spark, table_dir, keys)
     if not files:
-        return read_parquet(spark, table_dir).filter(F.lit(False))
+        return read_parquet(spark, table_dir, schema=schema).filter(F.lit(False))
     return (
-        read_parquet(spark, *files, basePath=table_dir)
+        read_parquet(spark, *files, schema=schema, basePath=table_dir)
         .filter(F.col(col).isin(keys))
     )
 
@@ -265,27 +333,46 @@ def bloom_point_scan(
 #: count). At sf0.001 the two largest fall outside the table and
 #: correctly return nothing, same as the oracle.
 LOOKUP_KEYS = (1000, 5000, 14983)
+#: date-ordered files in the layout (the "< ¼ of files read" pin)
 _FB_FILES = 32
+#: on-disk input bytes per range partition of the layout write — the
+#: scan split size, so the sort runs on about as many tasks as the scan
+_FB_RANGE_BYTES = 128 << 20
 
 
 def _date_clustered_orders(spark: SparkSession, sf_dir: str) -> str:
     """Orders range-clustered by o_orderdate — the natural ingest
     layout (time-partitioned), which is exactly the layout on which
     an orderkey zone map CANNOT prune (every file's key interval
-    spans ~the whole domain) and the Bloom sidecar can."""
+    spans ~the whole domain) and the Bloom sidecar can.
+
+    One sorted pass: a range partition per ``_FB_RANGE_BYTES`` of input
+    (one at bench scale, so no sampling job), sorted by date within
+    it, cut into ~``_FB_FILES`` files by ``maxRecordsPerFile`` — the
+    row count comes from the source footers."""
     from ..operators.ann_index import _index_root, _is_built, _tag
     from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "orders_bydate")
+    schema = None
     if not _is_built(out):
+        src = _data_files(os.path.join(sf_dir, "orders.parquet"))
+        n_ranges = math.ceil(sum(map(os.path.getsize, src)) / _FB_RANGE_BYTES)
+        per_file = math.ceil(_footer_rows(src) / _FB_FILES)
+        orders = load_table(spark, sf_dir, "orders")
         (
-            load_table(spark, sf_dir, "orders")
-            .repartitionByRange(_FB_FILES, "o_orderdate")
+            orders.repartitionByRange(max(1, n_ranges), "o_orderdate")
+            .sortWithinPartitions("o_orderdate")
             .write.mode("overwrite")
+            .option("maxRecordsPerFile", max(1, per_file))
             .parquet(out)
         )
+        # a parquet write stores every column nullable
+        schema = StructType(
+            [StructField(f.name, f.dataType, True, f.metadata) for f in orders.schema]
+        )
     if not os.path.exists(_meta_path(out)):
-        build_file_blooms(spark, out, "o_orderkey")
+        build_file_blooms(spark, out, "o_orderkey", schema)
     return out
 
 

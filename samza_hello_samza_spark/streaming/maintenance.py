@@ -1461,41 +1461,45 @@ def fold_cdf_from_topic(
     (pre-watermark-filter drain size).
     """
     batch = topic.read_batch(group).cache()
-    n = batch.count()
-    if n:
-        wm = VersionedState(spark, state_path).manifest()["applied"] or 0
-        # a re-publication drained in the SAME batch as the original
-        # sits above the watermark too; a version's rows are unique on
-        # (key, change_type), so an exact row dedupe collapses the
-        # duplicates without touching legitimate changes.
-        changes = (
-            batch.select(F.from_json(F.col("value"), change_schema).alias("c"))
-            .select("c.*")
-            .filter(F.col("_commit_version") > wm)
-            .dropDuplicates()
-        )
-        new_wm = changes.agg(F.max("_commit_version")).first()[0]
-        if new_wm is not None:
-            signed = changes.withColumn(
-                "_sign",
-                F.when(
-                    F.col("_change_type").isin("insert", "update_postimage"),
-                    F.lit(1),
-                ).otherwise(F.lit(-1)),
+    try:
+        n = batch.count()
+        if n:
+            wm = VersionedState(spark, state_path).manifest()["applied"] or 0
+            # a re-publication drained in the SAME batch as the original
+            # sits above the watermark too; a version's rows are unique on
+            # (key, change_type), so an exact row dedupe collapses the
+            # duplicates without touching legitimate changes.
+            changes = (
+                batch.select(F.from_json(F.col("value"), change_schema).alias("c"))
+                .select("c.*")
+                .filter(F.col("_commit_version") > wm)
+                .dropDuplicates()
             )
-            update_aggregate_signed(
-                spark,
-                state_path,
-                signed,
-                keys=keys,
-                value_col=value_col,
-                batch_id=int(new_wm),
+            new_wm = changes.agg(F.max("_commit_version")).first()[0]
+            if new_wm is not None:
+                signed = changes.withColumn(
+                    "_sign",
+                    F.when(
+                        F.col("_change_type").isin("insert", "update_postimage"),
+                        F.lit(1),
+                    ).otherwise(F.lit(-1)),
+                )
+                update_aggregate_signed(
+                    spark,
+                    state_path,
+                    signed,
+                    keys=keys,
+                    value_col=value_col,
+                    batch_id=int(new_wm),
+                )
+            ends = (
+                batch.groupBy("partition")
+                .agg((F.max("offset") + 1).alias("end"))
+                .collect()
             )
-        ends = (
-            batch.groupBy("partition").agg((F.max("offset") + 1).alias("end")).collect()
-        )
-        topic.commit(group, {str(r.partition): int(r.end) for r in ends})
-    batch.unpersist()
+            topic.commit(group, {str(r.partition): int(r.end) for r in ends})
+    finally:
+        batch.unpersist()
     return n
 
 
@@ -1540,42 +1544,46 @@ def apply_cdf_to_join_mv(
     from pyspark.sql import Window
 
     batch = topic.read_batch(group).cache()
-    n = batch.count()
-    if n:
-        changes = (
-            batch.select(F.from_json(F.col("value"), change_schema).alias("c"))
-            .select("c.*")
-            .filter(F.col("_change_type") != "update_preimage")
-            .dropDuplicates()  # re-published versions in the same drain
-        )
-        w = Window.partitionBy(key_col).orderBy(F.col("_commit_version").desc())
-        net = (
-            changes.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .localCheckpoint()
-        )
-        vmax = net.agg(F.max("_commit_version")).first()[0]
-        payload = [
-            c
-            for c in net.columns
-            if c not in ("_change_type", "_commit_version", "_rn")
-        ]
-        ups = net.filter(F.col("_change_type") != "delete").select(*payload)
-        dels = net.filter(F.col("_change_type") == "delete").select(*payload)
-        mv_table.merge(
-            dim_df.join(F.broadcast(ups), key_col),
-            txn=(f"{group}:ups", int(vmax)),
-        )
-        mv_table.merge(
-            dim_df.join(F.broadcast(dels), key_col),
-            delete_cond=F.lit(True),
-            txn=(f"{group}:dels", int(vmax)),
-        )
-        ends = (
-            batch.groupBy("partition").agg((F.max("offset") + 1).alias("end")).collect()
-        )
-        topic.commit(group, {str(r.partition): int(r.end) for r in ends})
-    batch.unpersist()
+    try:
+        n = batch.count()
+        if n:
+            changes = (
+                batch.select(F.from_json(F.col("value"), change_schema).alias("c"))
+                .select("c.*")
+                .filter(F.col("_change_type") != "update_preimage")
+                .dropDuplicates()  # re-published versions in the same drain
+            )
+            w = Window.partitionBy(key_col).orderBy(F.col("_commit_version").desc())
+            net = (
+                changes.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1)
+                .localCheckpoint()
+            )
+            vmax = net.agg(F.max("_commit_version")).first()[0]
+            payload = [
+                c
+                for c in net.columns
+                if c not in ("_change_type", "_commit_version", "_rn")
+            ]
+            ups = net.filter(F.col("_change_type") != "delete").select(*payload)
+            dels = net.filter(F.col("_change_type") == "delete").select(*payload)
+            mv_table.merge(
+                dim_df.join(F.broadcast(ups), key_col),
+                txn=(f"{group}:ups", int(vmax)),
+            )
+            mv_table.merge(
+                dim_df.join(F.broadcast(dels), key_col),
+                delete_cond=F.lit(True),
+                txn=(f"{group}:dels", int(vmax)),
+            )
+            ends = (
+                batch.groupBy("partition")
+                .agg((F.max("offset") + 1).alias("end"))
+                .collect()
+            )
+            topic.commit(group, {str(r.partition): int(r.end) for r in ends})
+    finally:
+        batch.unpersist()
     return n
 
 

@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from samza_hello_samza_spark.sources import bloom_index
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_started
 
 
 def _unclustered_table(spark, path, n=60_000, files=32):
@@ -181,16 +183,18 @@ def test_bloom_refresh_merged_buckets_composes_with_merge(spark, tmp_path):
     assert got == want and len(got) == len(keys)
 
 
-def test_registered_lookup_matches_full_scan(spark):
-    got = sorted(
-        tuple(r)
-        for r in bloom_index.orders_point_lookup_bloom(spark, SF_DIR).collect()
+def _lookup_rows(spark, sf):
+    return sorted(
+        tuple(r) for r in bloom_index.orders_point_lookup_bloom(spark, sf).collect()
     )
+
+
+def _full_scan_rows(spark, sf):
     from samza_hello_samza_spark.session import load_table
 
-    want = sorted(
+    return sorted(
         tuple(r)
-        for r in load_table(spark, SF_DIR, "orders")
+        for r in load_table(spark, sf, "orders")
         .filter(F.col("o_orderkey").isin(list(bloom_index.LOOKUP_KEYS)))
         .select(
             "o_orderkey",
@@ -200,7 +204,10 @@ def test_registered_lookup_matches_full_scan(spark):
         )
         .collect()
     )
-    assert got == want
+
+
+def test_registered_lookup_matches_full_scan(spark):
+    assert _lookup_rows(spark, SF_DIR) == _full_scan_rows(spark, SF_DIR)
 
 
 def test_registered_lookup_prunes_files(spark):
@@ -216,3 +223,73 @@ def test_registered_lookup_prunes_files(spark):
         spark, table_dir, list(bloom_index.LOOKUP_KEYS)
     )
     assert len(cand) < n_files / 4
+
+
+def _fresh_orders(tmp_path, monkeypatch) -> str:
+    """A copy of the test orders in a fresh data dir, with a fresh index
+    root, so the Bloom layout is built cold."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "orders.parquet"), sf / "orders.parquet")
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "index"))
+    return str(sf)
+
+
+def test_registered_lookup_job_budget(spark, tmp_path, monkeypatch):
+    """A cold lookup starts only the jobs its data needs: the source
+    schema, the sorted layout write, the sidecar aggregate and the
+    sidecar-word collect; no inference of what it wrote, no count().
+    A warm lookup starts one, the sidecar-word collect."""
+    sf = _fresh_orders(tmp_path, monkeypatch)
+    cold = jobs_started(spark, lambda: bloom_index.orders_point_lookup_bloom(spark, sf))
+    warm = jobs_started(spark, lambda: bloom_index.orders_point_lookup_bloom(spark, sf))
+    assert cold <= 6
+    assert warm == 1
+
+
+def test_recorded_schema_and_footer_rows_are_exact(spark, tmp_path, monkeypatch):
+    """What the build skips is exact: the schema recorded in _META.json
+    is the one Spark infers for the layout, and the footer row count is
+    count() for a plain and a ``_bucket=``-partitioned table."""
+    from samza_hello_samza_spark.sources.merge import MergeTable
+
+    sf = _fresh_orders(tmp_path, monkeypatch)
+    layout = bloom_index._date_clustered_orders(spark, sf)
+    with open(bloom_index._meta_path(layout)) as f:
+        meta = json.load(f)
+    assert StructType.fromJson(meta["schema"]) == spark.read.parquet(layout).schema
+
+    t = MergeTable(spark, str(tmp_path / "mt"), "k", n_buckets=4)
+    t.write_full(
+        spark.createDataFrame([(i, i * 10) for i in range(3000)], "k long, v long")
+    )
+    for path in (layout, t.path):
+        files = bloom_index._data_files(path)
+        assert len(files) == len(spark.read.parquet(path).inputFiles())
+        assert bloom_index._footer_rows(files) == spark.read.parquet(path).count()
+    assert any("/_bucket=" in f for f in bloom_index._data_files(t.path))
+
+    # a partitioned layout records its partition column, and the
+    # post-merge sidecar refresh carries the schema over
+    bloom_index.build_file_blooms(spark, t.path, "k")
+    want = spark.read.parquet(t.path).schema
+    assert "_bucket" in want.fieldNames()
+    stats = t.merge(spark.createDataFrame([(7, 1), (9_999, 2)], "k long, v long"))
+    assert bloom_index.refresh_merged_buckets(spark, t.path, stats["buckets"]) > 0
+    with open(bloom_index._meta_path(t.path)) as f:
+        assert StructType.fromJson(json.load(f)["schema"]) == want
+
+
+def test_layout_meta_without_schema_still_exact(spark, tmp_path, monkeypatch):
+    """A layout whose _META.json holds no schema (written before schemas
+    were recorded) is probed through the inferring read, and returns
+    the exact full-scan rows."""
+    sf = _fresh_orders(tmp_path, monkeypatch)
+    want = _lookup_rows(spark, sf)
+    layout = bloom_index._date_clustered_orders(spark, sf)
+    with open(bloom_index._meta_path(layout)) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(bloom_index._meta_path(layout), "w") as f:
+        json.dump(meta, f)
+    assert _lookup_rows(spark, sf) == want == _full_scan_rows(spark, sf)

@@ -168,8 +168,11 @@ def test_crash_replay_matrix(spark, tmp_path, case):
     assert man_a["version"] == 1
 
     # 2. crash at the commit point while folding B: readers stay on post-A
+    # and the fold leaves nothing cached in the session
+    spark.catalog.clearCache()
     with commit_point_fails(), pytest.raises(OSError):
         fold_b()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert store.manifest() == man_a
     assert _rows(spark, store.root, names) == post_a
 

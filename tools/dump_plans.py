@@ -7,7 +7,10 @@ Usage: dump_plans.py TAG SUFFIX KEY [KEY ...]
   dumps by running this file from a checkout of the parent commit.
   Plans are captured at the package's DEFAULT_SF_DIR
   ($SPARK_GRAFT_SF_DIR, the bench tier) so PushedFilters / partition
-  counts match what the bench executes.
+  counts match what the bench executes. The index dir, the data dir's
+  index tag and the data dir are written as <index_dir>, <sf_tag> and
+  <sf_dir>, so dumps from two checkouts or two index dirs differ only
+  where the plans differ.
 """
 
 from __future__ import annotations
@@ -18,8 +21,26 @@ import sys
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+from samza_hello_samza_spark.operators.ann_index import _tag  # noqa: E402
 from samza_hello_samza_spark.registry import all_queries  # noqa: E402
-from samza_hello_samza_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from samza_hello_samza_spark.session import (  # noqa: E402
+    DEFAULT_SF_DIR,
+    get_spark,
+    index_base_dir,
+)
+
+
+def scrub_paths(plan: str) -> str:
+    """``plan`` with the machine's paths replaced by placeholders,
+    longest first, so a path that contains another is replaced whole."""
+    subs = {
+        os.path.abspath(index_base_dir()): "<index_dir>",
+        _tag(DEFAULT_SF_DIR): "<sf_tag>",
+        os.path.abspath(DEFAULT_SF_DIR): "<sf_dir>",
+    }
+    for path in sorted(subs, key=len, reverse=True):
+        plan = plan.replace(path, subs[path])
+    return plan
 
 
 def main() -> None:
@@ -44,6 +65,7 @@ def main() -> None:
             )
         except Exception as exc:
             plan = f"ERROR: {exc}"
+        plan = scrub_paths(plan)
         with open(os.path.join(out, f"{k}_{suffix}.txt"), "w") as fh:
             fh.write(plan)
         print(f"dumped {tag}/{k}_{suffix}.txt ({len(plan)} chars)", file=sys.stderr)
