@@ -1914,6 +1914,8 @@ def probe_mrl_snapshot(
     """
     import math
 
+    from .similarity import _dot, _norm
+
     meta = read_mrl_meta(index_dir)
     if meta is None:
         raise FileNotFoundError(
@@ -1934,16 +1936,9 @@ def probe_mrl_snapshot(
     col = meta["mrl_col"]
     qpre = F.array(*[F.lit(float(x)) for x in qvec_prefix])
     qnorm = float(math.sqrt(sum(float(x) * float(x) for x in qvec_prefix)))
-    dot = F.aggregate(
-        F.zip_with(F.col(col), qpre, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = F.sqrt(
-        F.aggregate(F.col(col), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
     cand = scan.select("vec_id", col).withColumn(
-        "prefix_cosine", F.round(dot / (nrm * F.lit(qnorm)), 6)
+        "prefix_cosine",
+        F.round(_dot(F.col(col), qpre) / (_norm(F.col(col)) * F.lit(qnorm)), 6),
     )
     return _apply_tombstones(
         spark,

@@ -341,8 +341,8 @@ def session_order_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The interval×interval question (did the user come back while an
     order was in flight?) that a nested-loop overlap join cannot
-    answer at scale. Sessions use the exact ``session_window`` break
-    rule (≥30-min silence); each order opens a 3-day closed window
+    answer at scale. Sessions are ``samza_surface.sessionized`` (a
+    ≥30-min silence breaks one); each order opens a 3-day closed window
     placed deterministically inside the events month (see
     EVENTS_EPOCH0 note); the overlap join is
     ``bucketed_interval_join`` on (user, day-bucket) — an equi-join
@@ -350,21 +350,15 @@ def session_order_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per overlapping (session, order) with the overlap
     length in seconds.
     """
-    from .samza_surface import SESSION_GAP_MIN
+    from .samza_surface import sessionized
 
-    ev = load_table(spark, sf_dir, "events")
-    by_user = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    with_breaks = ev.withColumn(
-        "is_break",
-        (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(by_user))
-            >= F.lit(gap_us)
-        ).cast("int"),
-    ).withColumn("session_id", F.coalesce(F.sum("is_break").over(by_user), F.lit(0)))
-    sessions = with_breaks.groupBy("user_id", "session_id").agg(
-        F.unix_timestamp(F.min("ts")).alias("s_start"),
-        F.unix_timestamp(F.max("ts")).alias("s_end"),
+    sessions = (
+        sessionized(load_table(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_id")
+        .agg(
+            F.unix_timestamp(F.min("ts")).alias("s_start"),
+            F.unix_timestamp(F.max("ts")).alias("s_end"),
+        )
     )
     w_start = (
         F.lit(EVENTS_EPOCH0)
@@ -379,8 +373,7 @@ def session_order_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bucketed_interval_join(
             sessions, "s_start", "s_end", orders, "w_start", "w_end",
-            # bucket width == the order-window length (r12, guide §2.3
-            # — shuffle/probe fewer rows): the EXPLODED volume is the
+            # bucket width == the order-window length: the EXPLODED volume is the
             # join's cost driver, and the heavy side (orders, 10×
             # sessions) explodes into ⌈len/width⌉+1 buckets, so a
             # 1-day bucket blew every 3-day order window into 4 rows

@@ -988,21 +988,18 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ 0.45).
 
     All-pairs baseline for calibration; the 100 TB path is LSH
-    bucketing (similarity.ann_lsh_topk). Dot products are JVM-side
-    ``zip_with``/``aggregate`` folds over array<double>.
+    bucketing (similarity.ann_lsh_topk). Dot products are the JVM-side
+    ``similarity._dot``/``_norm`` folds over array<double>.
     """
+    from .similarity import _dot, _norm
+
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    norm = F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    e = emb.withColumn("norm", norm)
+    e = emb.withColumn("norm", _norm(F.col("v")))
     a = e.alias("a")
     b = e.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("a.v"), F.col("b.v"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .withColumn("cosine", F.round(dot / (F.col("a.norm") * F.col("b.norm")), 6))

@@ -143,27 +143,19 @@ def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import numpy as np
 
+    from .similarity import _dot, _norm
+
     qrow = e.filter(F.col("vec_id") == 0).collect()[0]
     qvec = np.asarray(qrow.v, dtype=float)
     qv = F.array(*[F.lit(float(x)) for x in qvec])
     qnorm = float(np.linalg.norm(qvec))
-    dot = F.aggregate(
-        F.zip_with(F.col("v"), qv, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("v"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     vec = (
         e.filter(F.col("vec_id") != 0)
         .select(
             F.col("vec_id").alias("doc_id"),
-            F.round(dot / (norm * F.lit(qnorm)), 6).alias("cosine"),
+            F.round(
+                _dot(F.col("v"), qv) / (_norm(F.col("v")) * F.lit(qnorm)), 6
+            ).alias("cosine"),
         )
         .orderBy(F.desc("cosine"), F.asc("doc_id"))
         .limit(BM25_TOP)

@@ -32,7 +32,9 @@ from ..functions.hints import maybe_broadcast
 from ..session import load_table
 from ..streaming.pipelines import WATERMARK, feed_job, parser_job, stats_job
 
-SESSION_GAP_MIN = 30  # batch analog of SessionWindowExample's 10s gap
+#: the session gap of every sessionizer, batch and stream (the batch
+#: analog of SessionWindowExample's 10s gap).
+SESSION_GAP_MIN = 30
 JOIN_WINDOW_MIN = 3  # JoinExample.java: Duration.ofMinutes(3)
 
 
@@ -113,57 +115,51 @@ def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
-def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SessionWindowExample.java:66-74 — gap-based per-user sessions.
+def sessionized(events: DataFrame) -> DataFrame:
+    """``events`` plus ``is_break`` and ``session_id``: a session break
+    is a silence of at least ``SESSION_GAP_MIN`` since the user's
+    previous event, and the running sum of breaks is the session id.
 
-    Batch sessionization: a session break is a >30-min silence; the
-    running sum of breaks is the session id. One shuffle on user_id
-    (window partition), then a cheap groupBy on the same key — Spark
-    reuses the partitioning, no second exchange.
+    Micros and ``>=`` match streaming ``F.session_window`` exactly (an
+    event at precisely last+gap starts a NEW session: half-open
+    session intervals), with no floor-to-seconds boundary artifacts.
+    One shuffle on user_id (the window partition); a later groupBy on
+    user_id reuses it, no second exchange.
     """
-    ev = load_table(spark, sf_dir, "events")
     by_user = Window.partitionBy("user_id").orderBy("ts")
     gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    # micros + >= : matches streaming F.session_window exactly (a new
-    # event at precisely last+gap starts a NEW session — half-open
-    # session intervals), with no floor-to-seconds boundary artifacts.
-    with_breaks = ev.withColumn(
-        "is_break",
-        (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(by_user))
-            >= F.lit(gap_us)
-        )
-        .cast("int"),
-    ).withColumn("session_id", F.coalesce(F.sum("is_break").over(by_user), F.lit(0)))
-    return with_breaks.groupBy("user_id", "session_id").agg(
-        F.unix_timestamp(F.min("ts")).alias("session_start_epoch"),
-        F.count("*").alias("views"),
-    )
-
-
-def session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-grain conversion analytics over the same sessionization.
-
-    The question session analytics exists to answer: which sessions
-    convert (contain a purchase) and how much do they spend? Same
-    gap-based sessionization as ``session_window`` (identical break
-    rule → identical session ids), then the per-session rollup adds
-    conditional aggregates — converted flag, purchases, session value.
-    One user_id shuffle feeds both the window and the groupBy; no
-    second exchange.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    by_user = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    with_breaks = ev.withColumn(
+    return events.withColumn(
         "is_break",
         (
             F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(by_user))
             >= F.lit(gap_us)
         ).cast("int"),
     ).withColumn("session_id", F.coalesce(F.sum("is_break").over(by_user), F.lit(0)))
+
+
+def session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SessionWindowExample.java:66-74 — gap-based per-user sessions:
+    ``sessionized`` events rolled up per session."""
+    return sessionized(load_table(spark, sf_dir, "events")).groupBy(
+        "user_id", "session_id"
+    ).agg(
+        F.unix_timestamp(F.min("ts")).alias("session_start_epoch"),
+        F.count("*").alias("views"),
+    )
+
+
+def session_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-grain conversion analytics over ``sessionized`` events.
+
+    The question session analytics exists to answer: which sessions
+    convert (contain a purchase) and how much do they spend? The
+    per-session rollup adds conditional aggregates — converted flag,
+    purchases, session value — on the same user_id exchange.
+    """
     is_purchase = (F.col("event_type") == "purchase").cast("int")
-    return with_breaks.groupBy("user_id", "session_id").agg(
+    return sessionized(load_table(spark, sf_dir, "events")).groupBy(
+        "user_id", "session_id"
+    ).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(is_purchase).cast("long").alias("n_purchases"),
         F.max(is_purchase).cast("int").alias("converted"),

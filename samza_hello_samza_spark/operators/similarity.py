@@ -131,8 +131,9 @@ def _query_vector(spark: SparkSession, sf_dir: str) -> np.ndarray:
 _query_vector.last_cached = False
 
 
-def _rerank(cand: DataFrame, qvec: np.ndarray) -> DataFrame:
-    """Exact cosine re-rank of a candidate set against a literal query.
+def _cosine_topk(cand: DataFrame, qvec: np.ndarray, k: int) -> DataFrame:
+    """(vec_id, cosine) of the ``k`` candidates nearest ``qvec``: exact
+    cosine rounded to 6 dp, ties broken by vec_id.
 
     The query vector is inlined as an array literal (it IS a constant
     of the query), so scoring is a single pruned scan — no join at all.
@@ -140,12 +141,17 @@ def _rerank(cand: DataFrame, qvec: np.ndarray) -> DataFrame:
     qv = F.array(*[F.lit(float(x)) for x in qvec])
     qnorm = float(np.linalg.norm(qvec))
     return (
-        cand.filter(F.col("vec_id") != QUERY_VEC_ID)
-        .withColumn("cosine", F.round(_dot(F.col("v"), qv) / (_norm(F.col("v")) * F.lit(qnorm)), 6))
+        cand.withColumn("cosine", F.round(_dot(F.col("v"), qv) / (_norm(F.col("v")) * F.lit(qnorm)), 6))
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(TOP_K)
+        .limit(k)
         .select("vec_id", "cosine")
     )
+
+
+def _rerank(cand: DataFrame, qvec: np.ndarray) -> DataFrame:
+    """Exact cosine top-``TOP_K`` of a candidate set, the query itself
+    excluded."""
+    return _cosine_topk(cand.filter(F.col("vec_id") != QUERY_VEC_ID), qvec, TOP_K)
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1628,11 +1634,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = corpus.alias("a")
     b = corpus.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("a.v"), F.col("b.v"))
     pairs = (
         a.join(
             b,
@@ -1967,11 +1969,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = corpus.alias("a")
     b = corpus.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("a.v"), F.col("b.v"))
     pairs = a.join(
         b,
         (F.col("a.list_id") == F.col("b.list_id"))

@@ -57,26 +57,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
+from ..operators.samza_surface import sessionized
 from ..session import load_table
 
-SESSION_GAP_MIN = 30
 PATH_LEN = 5
 TOP_PATHS = 20
 RANK_NTILES = 4
-
-
-def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events + session_id under session_window's exact break rule."""
-    ev = load_table(spark, sf_dir, "events")
-    by_user = Window.partitionBy("user_id").orderBy("ts")
-    gap_us = SESSION_GAP_MIN * 60 * 1_000_000
-    return ev.withColumn(
-        "is_break",
-        (
-            F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(by_user))
-            >= F.lit(gap_us)
-        ).cast("int"),
-    ).withColumn("session_id", F.coalesce(F.sum("is_break").over(by_user), F.lit(0)))
 
 
 def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +75,7 @@ def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds at most PATH_LEN structs per session, sorted in-array for
     deterministic order regardless of shuffle arrival.
     """
-    sess = _sessionized(spark, sf_dir)
+    sess = sessionized(load_table(spark, sf_dir, "events"))
     w_sess = Window.partitionBy("user_id", "session_id").orderBy(
         F.unix_micros("ts"), "event_id"
     )

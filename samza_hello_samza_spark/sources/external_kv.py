@@ -31,6 +31,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from ..streaming.sinks import fold_stream
+
 _SCHEMA = "CREATE TABLE IF NOT EXISTS kv (k TEXT PRIMARY KEY, v TEXT)"
 
 
@@ -136,13 +138,10 @@ class SqliteKVTable:
         df.select(key_col, value_col).foreachPartition(write_partition)
 
     def write_stream(self, stream: DataFrame, key_col: str, value_col: str, checkpoint: str):
-        """Streaming ``sendTo``: foreachBatch of idempotent upserts."""
-
-        def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            self.write_batch(batch_df, key_col, value_col)
-
-        return (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        """Streaming ``sendTo``: idempotent upserts per micro-batch."""
+        return fold_stream(
+            stream,
+            checkpoint,
+            lambda batch, _id: self.write_batch(batch, key_col, value_col),
+            output_mode="append",
         )

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import _words, explode_nonempty
 from ..session import read_parquet, write_json_atomic
+from ..streaming.sinks import applied_once, fold_stream
 
 N_TBUCKETS = 64
 
@@ -118,32 +119,16 @@ def append_documents(spark: SparkSession, index_dir: str, docs: DataFrame) -> in
 
 def postings_updater(docs_stream: DataFrame, index_dir: str, checkpoint_dir: str):
     """Keep the posting layout current from a stream of (doc_id, text)
-    rows — the ``mv_refresh_job`` idempotent-consumer shape: each
-    micro-batch folds through ``append_documents`` and writes an
-    applied-batch marker AFTER the append lands, so a redelivered
-    batch folds nothing (replay pytest). The remaining crash window
-    (append landed, marker not yet written) re-appends duplicate
-    posting rows on restart — semantically harmless to the probe
-    (count_distinct), reclaimed by the next full rebuild."""
-    import os as _os
+    rows: each micro-batch folds through ``append_documents`` behind
+    ``sinks.applied_once``, so a redelivered batch folds nothing
+    (replay pytest). A batch refolded in the gate's seam duplicates
+    posting rows — harmless to the probe (count_distinct), reclaimed
+    by the next full rebuild."""
 
-    marker_dir = _os.path.join(checkpoint_dir, "_applied")
-    _os.makedirs(marker_dir, exist_ok=True)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        marker = _os.path.join(marker_dir, f"batch-{batch_id}")
-        if _os.path.exists(marker) or batch.isEmpty():
-            return
+    def fold(batch: DataFrame, _batch_id: int) -> None:
         append_documents(batch.sparkSession, index_dir, batch)
-        with open(marker, "w") as fh:
-            fh.write("applied")
 
-    return (
-        docs_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return fold_stream(docs_stream, checkpoint_dir, applied_once(checkpoint_dir, fold))
 
 
 def term_buckets(spark: SparkSession, terms: list[str]) -> list[int]:
@@ -688,35 +673,15 @@ def bm25_postings_updater(
     docs_stream: DataFrame, index_dir: str, checkpoint_dir: str
 ):
     """Keep the BM25 layout current from a stream of (doc_id, text)
-    rows — the ``postings_updater`` idempotent-consumer shape with
-    the stricter gate the ranked layout REQUIRES: here replay
-    protection is correctness, not hygiene (a re-appended batch
-    double-counts tf rows AND the sidecar's n_docs/total_dl, which
-    skews every subsequent IDF/avgdl), so each micro-batch folds
-    through ``append_documents_bm25`` only if its applied-batch
-    marker is absent, and the marker is written AFTER the append +
-    sidecar publish land (a crash inside the window re-runs the
-    batch — the one at-least-once seam, same contract as the
-    positional updater, reclaimed by the next full rebuild)."""
-    import os as _os
+    rows: each micro-batch folds through ``append_documents_bm25``
+    behind ``sinks.applied_once``. Here the gate is correctness, not
+    hygiene: a re-appended batch double-counts tf rows AND the
+    sidecar's n_docs/total_dl, which skews every later IDF/avgdl."""
 
-    marker_dir = _os.path.join(checkpoint_dir, "_applied")
-    _os.makedirs(marker_dir, exist_ok=True)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        marker = _os.path.join(marker_dir, f"batch-{batch_id}")
-        if _os.path.exists(marker) or batch.isEmpty():
-            return
+    def fold(batch: DataFrame, _batch_id: int) -> None:
         append_documents_bm25(batch.sparkSession, index_dir, batch)
-        with open(marker, "w") as fh:
-            fh.write("applied")
 
-    return (
-        docs_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return fold_stream(docs_stream, checkpoint_dir, applied_once(checkpoint_dir, fold))
 
 
 def _term_bucket_map(spark: SparkSession, terms: list[str]) -> dict[str, int]:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
 from ..session import read_parquet
+from ..streaming.sinks import fold_stream
 
 
 class KVTable:
@@ -103,16 +104,7 @@ class KVTable:
 
 
 def stream_to_table(stream: DataFrame, table: KVTable, checkpoint: str):
-    """Streaming sendTo(table): upsert each micro-batch (foreachBatch)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.take(1):
-            table.upsert(batch_df)
-
-    return (
-        stream.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming sendTo(table): upsert each non-empty micro-batch."""
+    return fold_stream(
+        stream, checkpoint, lambda batch, _id: table.upsert(batch), available_now=True
     )

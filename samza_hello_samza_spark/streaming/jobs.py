@@ -9,7 +9,8 @@ one declarative plan, two executions). What remains here uses a
 streaming-only operator or algorithm:
 
 - ``session_counts_job`` / ``sessionize_job``: ``session_window`` and a
-  timer-driven sessionizer (the batch keys use lag + cumulative sum);
+  timer-driven sessionizer (the batch keys use
+  ``samza_surface.sessionized``; all three share ``SESSION_GAP_MIN``);
 - ``view_click_join_job``: a watermarked interval join (the batch key
   joins on time buckets);
 - ``dedup_events_job``, ``curation_job``, ``decontamination_job``,
@@ -44,19 +45,24 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.samza_surface import SESSION_GAP_MIN
 from .pipelines import WATERMARK
 
 
 def session_counts_job(events: DataFrame) -> DataFrame:
-    """SessionWindowExample.java:66-74 — native session_window (30-min gap).
+    """SessionWindowExample.java:66-74 — native session_window
+    (``SESSION_GAP_MIN`` gap).
 
-    Streaming-native gap-merge sessionization; the batch analog in
-    operators/samza_surface.py computes the same sessions via
+    Streaming-native gap-merge sessionization; the batch analog,
+    ``samza_surface.sessionized``, computes the same sessions via
     lag + cumulative sum.
     """
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", "30 minutes").alias("win"), F.col("user_id"))
+        .groupBy(
+            F.session_window("ts", f"{SESSION_GAP_MIN} minutes").alias("win"),
+            F.col("user_id"),
+        )
         .agg(F.count("*").alias("views"))
         .select(
             F.unix_timestamp("win.start").alias("session_start_epoch"),
@@ -332,7 +338,7 @@ def stateful_totals_job(events: DataFrame) -> DataFrame:
     )
 
 
-SESSION_GAP_SEC = 1800  # matches the batch session ops (30-min gap)
+SESSION_GAP_SEC = SESSION_GAP_MIN * 60
 
 SESSIONIZE_SCHEMA = StructType(
     [

@@ -8,14 +8,16 @@ src/main/java/samza/examples/wikipedia/task/WikipediaStatsStreamTask.java
 and cookbook/StreamTableJoinExample.java). At warehouse scale the same
 need appears as *index and view maintenance*: new vectors must become
 searchable and aggregate views must fold in deltas without re-scanning
-history. The jobs here are thin foreachBatch / consumer-loop drivers
-over the batch primitives, so the update path IS the tested batch path:
+history. Every streaming job here is a fold handed to
+``sinks.fold_stream``, the package's one foreachBatch driver, over the
+batch primitives, so the update path IS the tested batch path:
 
-- ``lsh_index_updater``: Structured Streaming sink that appends each
-  micro-batch of vectors into the band-partitioned LSH index
-  (``ann_index.append_lsh_index``) — cost ∝ |batch| × n_bands, files
-  of existing partitions never rewritten, probes pick up new vectors
-  on their next (partition-pruned) read.
+- ``lsh_index_updater``: appends each micro-batch of vectors into the
+  band-partitioned LSH index (``ann_index.append_lsh_index``) — cost
+  ∝ |batch| × n_bands, files of existing partitions never rewritten,
+  probes pick up new vectors on their next (partition-pruned) read.
+- ``ivf_index_updater`` and ``mv_refresh_job`` fold behind
+  ``sinks.applied_once``, the one applied-batch marker gate.
 - the sketch and view folds (``fold_*``, ``TxnView``,
   ``fold_cdf_from_topic``): every one keeps its state in ONE store,
   ``incremental.VersionedState``, and commits state and input
@@ -24,7 +26,10 @@ over the batch primitives, so the update path IS the tested batch path:
   and checkpoint as one atomic step, so a crash leaves readers on
   exactly the pre- or the post-state and a replay folds nothing
   twice. Each ``fold_*`` is its merge expression; each ``*_updater``
-  runs it per micro-batch through ``_fold_stream``.
+  runs it per micro-batch.
+- the four serving jobs share one loop, ``_serve_batches``: collect
+  the batch's queries, answer each against the committed snapshot,
+  write all answers in one batch-id-idempotent write.
 """
 
 from __future__ import annotations
@@ -38,23 +43,7 @@ from ..operators.ann_index import append_lsh_index
 from ..session import write_json_atomic
 from ..sources.incremental import VersionedState, update_aggregate_signed
 from ..sources.topic_log import TopicLog
-
-
-def _fold_stream(stream: DataFrame, checkpoint_dir: str, fold) -> StreamingQuery:
-    """Run ``fold(batch, batch_id)`` on every non-empty micro-batch of
-    ``stream`` — the foreachBatch driver every sink job here shares;
-    the Spark checkpoint at ``checkpoint_dir`` resumes it."""
-
-    def _batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.isEmpty():
-            fold(batch, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+from .sinks import applied_once, fold_stream
 
 
 def lsh_index_updater(
@@ -72,7 +61,7 @@ def lsh_index_updater(
     at-least-once is semantically harmless here — the classic
     idempotent-consumer shape).
     """
-    return _fold_stream(
+    return fold_stream(
         vectors_stream,
         checkpoint_dir,
         lambda batch, _id: append_lsh_index(
@@ -92,47 +81,27 @@ def ivf_index_updater(
 
     Each micro-batch quantizes against the frozen centroids, lands as
     appended files, and ONE ``commit_index_snapshot`` makes it
-    visible — probes pinned to earlier manifests are untouched
-    (torn-append-proof, unlike the LSH updater whose at-least-once
-    duplicates are probe-deduped: a corpus layout must not hold
-    duplicate vec_id rows, so this job is EXACTLY-once). Replay
-    safety is the ``mv_refresh_job`` marker discipline: an
-    applied-batch marker written after the commit makes redelivery a
-    no-op; the marker-not-yet-written crash window re-appends a batch
-    whose files were never committed, and the listing-based commit
-    then publishes both copies — the single-maintainer contract says
-    run one updater per index, and the recovery for that window is
-    ``upsert_ivf_vectors`` (idempotent by id) from the staged batch.
+    visible — probes pinned to earlier manifests are untouched. A
+    corpus layout must not hold duplicate vec_id rows, so the fold
+    runs behind ``sinks.applied_once``; run one updater per index, and
+    recover a batch refolded in the gate's seam with
+    ``upsert_ivf_vectors`` (idempotent by id).
 
     On a signature-bearing layout (``build_ivf_index(sigs=True)``)
     the append derives the packed sign-bit words for every arriving
     vector (derived-column recompute in ``append_ivf_index``), so the
-    binary Hamming probe serves streamed vectors with no extra step —
-    the streaming signature upkeep of the materialized binary-ANN
-    path.
+    binary Hamming probe serves streamed vectors with no extra step.
     """
     import os
 
     from ..operators.ann_index import append_ivf_index, commit_index_snapshot
 
-    corpus_dir = os.path.join(index_dir, "corpus")
-    marker_dir = os.path.join(checkpoint_dir, "_applied")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker) or batch.isEmpty():
-            return
+    def _fold(batch: DataFrame, _batch_id: int) -> None:
         append_ivf_index(batch.sparkSession, index_dir, batch)
-        commit_index_snapshot(corpus_dir)
-        with open(marker, "w") as fh:
-            fh.write("applied")
+        commit_index_snapshot(os.path.join(index_dir, "corpus"))
 
-    return (
-        vectors_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return fold_stream(
+        vectors_stream, checkpoint_dir, applied_once(checkpoint_dir, _fold)
     )
 
 
@@ -144,39 +113,23 @@ def mv_refresh_job(
 
     Each micro-batch is folded into the MV at delta cost (grain
     aggregate + partition-pruned merge + dynamic overwrite of touched
-    days). ``refresh_mv`` is a MERGE, not an overwrite, so replayed
-    batches must not fold twice: an applied-batch marker file
-    (written after the merge lands) makes redelivery a no-op — the
-    idempotent-consumer shape. The marker is per (checkpoint, batch
-    id), so a restarted query resumes exactly where the Spark
-    checkpoint says. The remaining crash window (merge finished,
-    marker not yet written) is the same one every non-transactional
-    sink has; the single-commit store that closes it completely is
-    ``TxnView`` — use that when folding multiple sources atomically.
+    days). ``refresh_mv`` is a MERGE, not an overwrite, so the fold
+    runs behind ``sinks.applied_once``: a redelivered batch folds
+    nothing, and a restarted query resumes where its checkpoint says.
+    ``TxnView`` folds several sources in one atomic commit.
     """
     import os
 
-    marker_dir = os.path.join(checkpoint_dir, "_applied")
-    os.makedirs(marker_dir, exist_ok=True)
+    from ..plans.matview import build_mv, refresh_mv
 
-    def _fold(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(marker_dir, f"batch-{batch_id}")
-        if os.path.exists(marker) or batch.isEmpty():
-            return
-        from ..plans.matview import build_mv, refresh_mv
-
+    def _fold(batch: DataFrame, _batch_id: int) -> None:
         if os.path.exists(os.path.join(mv_dir, "_SUCCESS")):
             refresh_mv(batch.sparkSession, mv_dir, batch)
         else:
             build_mv(batch.sparkSession, batch, mv_dir)
-        with open(marker, "w") as fh:
-            fh.write("applied")
 
-    return (
-        events_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return fold_stream(
+        events_stream, checkpoint_dir, applied_once(checkpoint_dir, _fold)
     )
 
 
@@ -213,7 +166,7 @@ def cdc_apply_job(
         )
         table.merge(latest, delete_cond=F.col("s._tombstone") == 1)
 
-    return _fold_stream(
+    return fold_stream(
         topic.read_stream(max_files_per_trigger=max_files_per_trigger),
         checkpoint_dir,
         _apply,
@@ -247,7 +200,7 @@ def versioned_merge_sink(
     """
 
     cond = F.col(f"s.{delete_col}") == 1 if delete_col is not None else None
-    return _fold_stream(
+    return fold_stream(
         stream,
         checkpoint_dir,
         lambda batch, batch_id: table.merge(
@@ -295,7 +248,7 @@ def windowed_topk_job(
         )
     )
 
-    return _fold_stream(counts, checkpoint_dir, lambda batch, _id: table.merge(batch))
+    return fold_stream(counts, checkpoint_dir, lambda batch, _id: table.merge(batch))
 
 
 def windowed_topk_snapshot(spark: SparkSession, table, k: int = 3) -> DataFrame:
@@ -324,16 +277,10 @@ def parse_events_json(batch: DataFrame) -> DataFrame:
 def _write_results_idempotent(
     per_query: list[DataFrame], out_dir: str, batch_id: int
 ) -> None:
-    """Exactly-once result sink for the serving trilogy.
-
-    foreachBatch is at-least-once: a crash-and-replay re-runs the
-    micro-batch, and a bare ``mode('append')`` would duplicate every
-    (query_id, vec_id) row. Writing the batch's unioned results into
-    a ``_batch_id={N}`` partition with DYNAMIC partition overwrite
-    makes the replay overwrite its own partition and nothing else —
-    the same idempotence-by-partition discipline as ``mv_refresh_job``
-    — and collapses the per-query appends into ONE job per batch.
-    """
+    """The serving jobs' result sink: the batch's unioned results land
+    in its ``_batch_id={N}`` partition by DYNAMIC partition overwrite,
+    so a replayed batch overwrites its own partition and nothing else,
+    in ONE write job per batch."""
     import functools
 
     results = functools.reduce(DataFrame.unionByName, per_query)
@@ -344,6 +291,45 @@ def _write_results_idempotent(
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch_id")
         .parquet(out_dir)
+    )
+
+
+def _serve_batches(out_dir: str, cols: tuple[str, ...], answerer):
+    """The serving loop, as a micro-batch fold: collect the batch's
+    (query_id, *cols) rows (micro-batch-sized by definition), answer
+    each, and write the answers tagged with their query_id through
+    ``_write_results_idempotent``. ``answerer(spark)`` runs once per
+    batch, so every query of the batch reads the snapshot it resolves,
+    and returns the per-query ``Row -> DataFrame`` function."""
+
+    def _serve(batch: DataFrame, batch_id: int) -> None:
+        answer = answerer(batch.sparkSession)
+        per_query = [
+            answer(q).select(F.lit(int(q.query_id)).alias("query_id"), "*")
+            for q in batch.select("query_id", *cols).collect()
+        ]
+        _write_results_idempotent(per_query, out_dir, batch_id)
+
+    return _serve
+
+
+def _vector_serving_job(
+    query_stream: DataFrame, out_dir: str, checkpoint_dir: str, top_k: int, probe
+) -> StreamingQuery:
+    """Serve a stream of (query_id, v) rows: ``probe(spark, qvec)``
+    returns the query's (vec_id, v) candidates from the committed
+    snapshot, and ``similarity._cosine_topk`` re-ranks them."""
+    from ..operators.similarity import _cosine_topk
+
+    def answerer(spark):
+        def answer(q):
+            qvec = np.asarray(q.v)
+            return _cosine_topk(probe(spark, qvec), qvec, top_k)
+
+        return answer
+
+    return fold_stream(
+        query_stream, checkpoint_dir, _serve_batches(out_dir, ("v",), answerer)
     )
 
 
@@ -361,64 +347,36 @@ def ann_serving_job(
 
     The query side of the live-index story: ``lsh_index_updater``
     appends vectors, ``commit_index_snapshot`` publishes them, and this
-    job answers a stream of (query_id, v) rows — each micro-batch
-    resolves the CURRENT committed snapshot (manifest read per batch:
-    queries never see a torn append), probes the pruned (band, code)
-    partitions per query, exact-cosine re-ranks, and writes
+    job answers a stream of (query_id, v) rows — each query resolves
+    the CURRENT committed snapshot (manifest read per probe: queries
+    never see a torn append), probes the pruned (band, code)
+    partitions, exact-cosine re-ranks, and writes
     (query_id, vec_id, cosine) results to a parquet sink, exactly
     once under replay (``_write_results_idempotent``). Per-batch
-    driver work is one manifest read + per-query band-code hashes —
+    driver work is the manifest reads + per-query band-code hashes —
     query vectors are micro-batch-sized by definition.
 
-    ``n_flips`` > 0 serves MULTI-PROBE (r10, VERDICT r09 #2): each
-    band probes its own bucket plus the n_flips lowest-|margin|
-    bit-flip buckets in the pinned ``multiprobe_band_codes`` order —
-    the recall dial the batch path measured (0.30 → 0.70 recall@10 at
-    sf0.1 for 2.5× candidates) extended to the tombstone-aware
-    snapshot read, so the streaming tier buys recall with probe
-    partitions of the SAME committed table, never extra tables.
+    ``n_flips`` > 0 serves MULTI-PROBE: each band probes its own
+    bucket plus the n_flips lowest-|margin| bit-flip buckets in the
+    pinned ``multiprobe_band_codes`` order — the recall dial the batch
+    path measured (0.30 → 0.70 recall@10 at sf0.1 for 2.5× candidates)
+    extended to the tombstone-aware snapshot read, so the streaming
+    tier buys recall with probe partitions of the SAME committed
+    table, never extra tables.
     """
     from ..operators.ann_index import (
         probe_lsh_snapshot,
         probe_lsh_snapshot_multi,
     )
 
-    def _serve(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        queries = batch.select("query_id", "v").collect()  # micro-batch-sized
-        per_query = []
-        for q in queries:
-            qvec = np.asarray(q.v)
-            qnorm = float(np.linalg.norm(qvec))
-            cand = (
-                probe_lsh_snapshot_multi(
-                    spark, index_dir, qvec, planes, band_bits, n_flips
-                )
-                if n_flips > 0
-                else probe_lsh_snapshot(spark, index_dir, qvec, planes, band_bits)
+    def probe(spark, qvec):
+        if n_flips > 0:
+            return probe_lsh_snapshot_multi(
+                spark, index_dir, qvec, planes, band_bits, n_flips
             )
-            qv = F.array(*[F.lit(float(x)) for x in qvec])
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), qv, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            norm = F.sqrt(
-                F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)
-            )
-            per_query.append(
-                cand.withColumn("cosine", F.round(dot / (norm * F.lit(qnorm)), 6))
-                .orderBy(F.desc("cosine"), F.asc("vec_id"))
-                .limit(top_k)
-                .select(
-                    F.lit(int(q.query_id)).alias("query_id"),
-                    "vec_id",
-                    "cosine",
-                )
-            )
-        _write_results_idempotent(per_query, out_dir, batch_id)
+        return probe_lsh_snapshot(spark, index_dir, qvec, planes, band_bits)
 
-    return _fold_stream(query_stream, checkpoint_dir, _serve)
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
 
 
 def hybrid_serving_job(
@@ -431,18 +389,17 @@ def hybrid_serving_job(
 ) -> StreamingQuery:
     """Serve HYBRID (lexical + vector) queries from a stream against
     the CURRENT committed layouts — the streaming twin of
-    ``similarity.hybrid_search_indexed`` (r11, VERDICT r10 #3) and the
-    enrich-at-query-time contract of the reference's
-    StreamTableJoinExample (cookbook/StreamTableJoinExample.java):
-    each streamed (query_id, terms, v) row is answered by joining it
-    against committed index state, never by scanning the corpus.
+    ``similarity.hybrid_search_indexed`` and the enrich-at-query-time
+    contract of the reference's StreamTableJoinExample
+    (cookbook/StreamTableJoinExample.java): each streamed
+    (query_id, terms, v) row is answered by joining it against
+    committed index state, never by scanning the corpus.
 
     Per micro-batch: resolve the SQ8 corpus manifest ONCE (every
     query in the batch reads one committed snapshot — a mid-batch
-    commit is invisible until the next batch, the trilogy's
-    snapshot-isolation discipline), then serve each query through
-    ``similarity.hybrid_topk_from_layouts`` — the SAME function the
-    batch keys call, so batch-parity is structural: the WAND
+    commit is invisible until the next batch), then serve each query
+    through ``similarity.hybrid_topk_from_layouts`` — the SAME function
+    the batch keys call, so batch-parity is structural: the WAND
     tier-pruned BM25 leg (layout_version-keyed pricing cache makes
     repeat vocabularies cheap across batches AND restarts), the SQ8
     ADC shortlist + exact snapshot rerank, rank-only RRF. Results
@@ -457,31 +414,23 @@ def hybrid_serving_job(
     from ..operators.ann_index import read_index_manifest
     from ..operators.similarity import hybrid_topk_from_layouts
 
-    def _serve(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        queries = batch.select("query_id", "terms", "v").collect()
-        # one manifest read per batch: snapshot isolation for the
-        # whole micro-batch (same contract as ivf/pq serving)
+    def answerer(spark):
         man = read_index_manifest(f"{sq8_index_dir}/corpus")
-        per_query = []
-        for q in queries:
-            fused = hybrid_topk_from_layouts(
-                spark,
-                bm25_index_dir,
-                sq8_index_dir,
-                [str(t) for t in q.terms],
-                np.asarray(q.v, dtype=float),
-                attr_eq=attr_eq,
-                man=man,
-            )
-            per_query.append(
-                fused.select(
-                    F.lit(int(q.query_id)).alias("query_id"), "*"
-                )
-            )
-        _write_results_idempotent(per_query, out_dir, batch_id)
+        return lambda q: hybrid_topk_from_layouts(
+            spark,
+            bm25_index_dir,
+            sq8_index_dir,
+            [str(t) for t in q.terms],
+            np.asarray(q.v, dtype=float),
+            attr_eq=attr_eq,
+            man=man,
+        )
 
-    return _fold_stream(query_stream, checkpoint_dir, _serve)
+    return fold_stream(
+        query_stream,
+        checkpoint_dir,
+        _serve_batches(out_dir, ("terms", "v"), answerer),
+    )
 
 
 def ivf_serving_job(
@@ -503,35 +452,10 @@ def ivf_serving_job(
     """
     from ..operators.ann_index import probe_ivf_snapshot
 
-    def _serve(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        per_query = []
-        for q in batch.select("query_id", "v").collect():  # micro-batch-sized
-            qvec = np.asarray(q.v)
-            qnorm = float(np.linalg.norm(qvec))
-            cand = probe_ivf_snapshot(spark, index_dir, qvec, nprobe)
-            qv = F.array(*[F.lit(float(x)) for x in qvec])
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), qv, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            norm = F.sqrt(
-                F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)
-            )
-            per_query.append(
-                cand.withColumn("cosine", F.round(dot / (norm * F.lit(qnorm)), 6))
-                .orderBy(F.desc("cosine"), F.asc("vec_id"))
-                .limit(top_k)
-                .select(
-                    F.lit(int(q.query_id)).alias("query_id"),
-                    "vec_id",
-                    "cosine",
-                )
-            )
-        _write_results_idempotent(per_query, out_dir, batch_id)
+    def probe(spark, qvec):
+        return probe_ivf_snapshot(spark, index_dir, qvec, nprobe)
 
-    return _fold_stream(query_stream, checkpoint_dir, _serve)
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
 
 
 def pq_serving_job(
@@ -546,53 +470,24 @@ def pq_serving_job(
     """Serve ANN queries from a stream via the PQ/ADC route.
 
     The memory-bound twin of ``ann_serving_job``: instead of probing
-    LSH band partitions, each micro-batch ADC-ranks the committed
-    codes snapshot (codes-only columns, a few bytes per corpus vector
-    — ``ann_index.probe_pq_snapshot``), then exact-cosine re-ranks
+    LSH band partitions, each query ADC-ranks the committed codes
+    snapshot (codes-only columns, a few bytes per corpus vector —
+    ``ann_index.probe_pq_snapshot``), then exact-cosine re-ranks
     only the ``n_candidates`` finalists against the full ``vectors``
     relation via a broadcast semi-join on vec_id — the same
     candidates→re-rank shape as batch ``similarity.ann_pq_topk``.
-    Snapshot isolation per batch: the manifest is resolved at probe
-    time, so an in-flight ``append_pq_index`` is invisible until its
-    ``commit_index_snapshot``. Per-batch driver work is one codebook
-    read (m×ksub rows) + per-query lookup tables — micro-batch-sized
-    by construction.
+    The manifest is resolved at probe time, so an in-flight
+    ``append_pq_index`` is invisible until its
+    ``commit_index_snapshot``. Per-query driver work is one codebook
+    read (m×ksub rows) + the query's lookup tables.
     """
     from ..operators.ann_index import probe_pq_snapshot
 
-    def _serve(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        queries = batch.select("query_id", "v").collect()  # micro-batch-sized
-        per_query = []
-        for q in queries:
-            qvec = np.asarray(q.v)
-            qnorm = float(np.linalg.norm(qvec))
-            cand_ids = probe_pq_snapshot(
-                spark, index_dir, qvec, n_candidates
-            ).select("vec_id")
-            cand = vectors.join(F.broadcast(cand_ids), "vec_id", "left_semi")
-            qv = F.array(*[F.lit(float(x)) for x in qvec])
-            dot = F.aggregate(
-                F.zip_with(F.col("v"), qv, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            norm = F.sqrt(
-                F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)
-            )
-            per_query.append(
-                cand.withColumn("cosine", F.round(dot / (norm * F.lit(qnorm)), 6))
-                .orderBy(F.desc("cosine"), F.asc("vec_id"))
-                .limit(top_k)
-                .select(
-                    F.lit(int(q.query_id)).alias("query_id"),
-                    "vec_id",
-                    "cosine",
-                )
-            )
-        _write_results_idempotent(per_query, out_dir, batch_id)
+    def probe(spark, qvec):
+        ids = probe_pq_snapshot(spark, index_dir, qvec, n_candidates).select("vec_id")
+        return vectors.join(F.broadcast(ids), "vec_id", "left_semi")
 
-    return _fold_stream(query_stream, checkpoint_dir, _serve)
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
 
 
 def cms_updater(
@@ -613,7 +508,7 @@ def cms_updater(
     mechanism: a batch replayed after a crash between the state commit
     and the Spark checkpoint commit folds nothing.
     """
-    return _fold_stream(
+    return fold_stream(
         stream,
         checkpoint_dir,
         lambda batch, i: fold_cms_cells(batch, state_path, key_col, batch_id=i),
@@ -708,7 +603,7 @@ def kmv_updater(
     union → k-min again. The stored sample answers quantile queries
     over the WHOLE stream history in O(K·groups) space.
     """
-    return _fold_stream(
+    return fold_stream(
         stream,
         checkpoint_dir,
         lambda batch, i: fold_kmv_sample(batch, state_path, batch_id=i),
@@ -773,7 +668,7 @@ def audience_kmv_updater(
     (``audience_kmv_setops``'s usk stage) without touching the events
     history.
     """
-    return _fold_stream(
+    return fold_stream(
         stream,
         checkpoint_dir,
         lambda batch, i: fold_audience_kmv(batch, state_path, batch_id=i),
@@ -921,7 +816,7 @@ def domain_wordcount_updater(
     clean re-fold), a crash after it makes the redelivered batch a
     no-op — no double count, no lost history.
     """
-    return _fold_stream(
+    return fold_stream(
         docs_stream,
         checkpoint_dir,
         lambda batch, i: fold_domain_wordcounts(batch, state_path, batch_id=i),
@@ -978,7 +873,7 @@ def window_fingerprint_updater(
     ``dedup_incremental``). Crash-atomicity and replay safety ride the
     same store commit as ``fold_domain_wordcounts``.
     """
-    return _fold_stream(
+    return fold_stream(
         docs_stream,
         checkpoint_dir,
         lambda batch, i: fold_window_fingerprints(batch, state_path, batch_id=i),
@@ -1085,7 +980,7 @@ def substring_dedup_gate(
         )
         fold_window_fingerprints(batch, state_path, batch_id=batch_id)
 
-    return _fold_stream(docs_stream, checkpoint_dir, _screen_then_fold)
+    return fold_stream(docs_stream, checkpoint_dir, _screen_then_fold)
 
 
 def dsir_state_updater(
@@ -1102,7 +997,7 @@ def dsir_state_updater(
     production shape: the importance model updates slowly as corpus
     lands; scoring rides each batch as a B-row broadcast join.
     """
-    return _fold_stream(
+    return fold_stream(
         docs_stream,
         checkpoint_dir,
         lambda batch, i: fold_dsir_state(batch, state_path, batch_id=i),
@@ -1245,7 +1140,7 @@ def growth_accounting_updater(
     ``growth_snapshot`` serves the finished decomposition (with churn
     derived exactly as the batch op derives it) from days-sized state.
     """
-    return _fold_stream(
+    return fold_stream(
         events_stream,
         checkpoint_dir,
         lambda batch, i: fold_growth_accounting(batch, state_path, batch_id=i),

@@ -1,26 +1,80 @@
-"""Exactly-once file sink: idempotent foreachBatch writes.
+"""How a micro-batch is applied: the one foreachBatch driver, the one
+applied-batch gate, and the idempotent file sinks built on them.
 
 Samza's delivery contract is at-least-once (duplicate processing after
 a container restart is expected; see the reference's stateful tasks,
 e.g. WikipediaStatsStreamTask's counters, which tolerate replays).
-Structured Streaming can upgrade that to effective exactly-once for
-file outputs: the checkpoint names each micro-batch with a stable
-``batch_id``, so a sink that writes *by batch id* with dynamic
-partition overwrite makes replays land on top of their own previous
-output instead of appending duplicates.
+Structured Streaming upgrades that to effective exactly-once when each
+micro-batch is applied once however often it is replayed: the
+checkpoint names every micro-batch with a stable ``batch_id``, and the
+fold keys its effect on that id.
 
-At 100 TB this matters twice over: restarts are routine at that
-scale, and dedup-after-the-fact over petabyte outputs is exactly the
-job you never want to run.
+- ``fold_stream`` is the package's only ``writeStream.foreachBatch``:
+  it runs ``fold(batch, batch_id)`` on every non-empty micro-batch, and
+  the Spark checkpoint resumes it. Its only knobs are the output mode
+  and the ``availableNow`` trigger.
+- A fold is replay-safe in one of three ways. It overwrites by batch
+  id (the parquet sinks here, the serving results), it is idempotent
+  by construction (absolute upserts, the versioned stores' own
+  batch-id gate), or it is wrapped in ``applied_once``: skip if
+  ``<checkpoint>/_applied/batch-<id>`` exists, else fold, then write
+  that marker.
+- The one at-least-once seam left is ``applied_once``'s: the fold has
+  landed but its marker is not yet written. A crash there refolds the
+  batch on restart. Folds that cannot tolerate that commit the batch
+  id with their state instead (``incremental.VersionedState``,
+  ``merge.VersionedMergeTable``'s ``txn``).
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 BATCH_COL = "batch_id"
+
+
+def fold_stream(
+    stream: DataFrame,
+    checkpoint: str,
+    fold,
+    output_mode: str = "update",
+    available_now: bool = False,
+) -> StreamingQuery:
+    """Start ``stream``, applying ``fold(batch, batch_id)`` to every
+    non-empty micro-batch; the Spark checkpoint at ``checkpoint``
+    resumes it."""
+
+    def _batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            fold(batch, batch_id)
+
+    writer = stream.writeStream.foreachBatch(_batch).outputMode(output_mode)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.option("checkpointLocation", checkpoint).start()
+
+
+def applied_once(checkpoint: str, fold):
+    """``fold`` behind the applied-batch marker gate: a batch id whose
+    marker exists folds nothing; otherwise the fold runs and its marker
+    is written after it returns, so a fold that raises leaves none. The
+    markers live under the query's checkpoint and survive its restarts."""
+    marker_dir = os.path.join(checkpoint, "_applied")
+    os.makedirs(marker_dir, exist_ok=True)
+
+    def _once(batch: DataFrame, batch_id: int) -> None:
+        marker = os.path.join(marker_dir, f"batch-{batch_id}")
+        if os.path.exists(marker):
+            return
+        fold(batch, batch_id)
+        with open(marker, "w") as fh:
+            fh.write("applied")
+
+    return _once
 
 
 def write_batch_idempotent(df: DataFrame, batch_id: int, path: str) -> None:
@@ -46,20 +100,17 @@ def idempotent_parquet_sink(
     available_now: bool = True,
 ) -> StreamingQuery:
     """Start a stream writing exactly-once parquet batches to ``path``."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, bid, path)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+
+    def fold(df: DataFrame, batch_id: int) -> None:
+        write_batch_idempotent(df, batch_id, path)
+
+    return fold_stream(
+        stream, checkpoint, fold, output_mode="append", available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
-# validated sink: CHECK constraints + dead-letter quarantine (r06)
+# validated sink: CHECK constraints + dead-letter quarantine
 # ---------------------------------------------------------------------------
 #
 # The streaming twin of sources/merge's CHECK constraints. A batch job
@@ -130,15 +181,10 @@ def validated_parquet_sink(
     """Start a stream writing constraint-validated exactly-once parquet
     batches: clean rows to ``path``, violations (tagged ``_violated``)
     to ``quarantine_path``."""
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: write_batch_validated(
-                df, bid, path, quarantine_path, constraints
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+
+    def fold(df: DataFrame, batch_id: int) -> None:
+        write_batch_validated(df, batch_id, path, quarantine_path, constraints)
+
+    return fold_stream(
+        stream, checkpoint, fold, output_mode="append", available_now=available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -16,12 +16,16 @@ def test_oracle_match(spark, duck, name):
 
 def test_session_paths_agree_with_session_window(spark):
     """Path sessions and session_window sessions are the SAME sessions:
-    identical break rule ⇒ identical (user, session) count."""
-    from samza_hello_samza_spark.operators.samza_surface import session_window
+    one sessionizer ⇒ identical (user, session) count."""
+    from samza_hello_samza_spark.operators.samza_surface import (
+        session_window,
+        sessionized,
+    )
+    from samza_hello_samza_spark.session import load_table
 
     n_sessions_sw = session_window(spark, SF_DIR).count()
     n_sessions_paths = (
-        behavior._sessionized(spark, SF_DIR)
+        sessionized(load_table(spark, SF_DIR, "events"))
         .select("user_id", "session_id")
         .distinct()
         .count()
