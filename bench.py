@@ -19,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from samza_hello_samza_spark.registry import all_queries
-from samza_hello_samza_spark.session import DEFAULT_SF_DIR, get_spark
+from samza_hello_samza_spark.session import DEFAULT_SF_DIR, get_spark, released
 
 #: Headliners: the scale-sensitive plans (scans, shuffles, joins,
 #: windows, dedup, ANN) — not the trivially tiny ones.
@@ -559,88 +559,35 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
-    # JVM/codegen warmup (uncounted). The ANN warmup also builds the
-    # materialized LSH index if absent, so the timed run measures the
-    # steady-state probe (pruned index read), not the one-time build.
-    queries["groupby_count"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["ann_lsh_topk"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["ann_pq_topk"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # builds the continuous-aggregate MV if absent: the timed run then
-    # measures MV *serving* (the steady state), like the ANN probes.
-    queries["mv_event_type_stats"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # materializes the near-dup edge table (corpus state shared by the
-    # graph family) so pagerank/triangles time graph work, not the
-    # one-time shingle join.
+    from samza_hello_samza_spark.operators.dedup import _components_cached
     from samza_hello_samza_spark.operators.graph import _pairs_cached
 
-    _pairs_cached(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # materializes the near-dup components relation (corpus state
-    # shared by the cluster keys and leakage_safe_split) so the timed
-    # split measures split math, not the one-time clustering.
-    from samza_hello_samza_spark.operators.dedup import _components_cached
-
-    _components_cached(spark, sf_dir, "twostar").write.mode("overwrite").format("noop").save()
-    # builds the z-ordered + zone-mapped lineitem layouts if absent, so
-    # the timed pruned-scan probes measure steady-state serving.
-    queries["lineitem_pruned_scan"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["q6_pruned_scan"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["q19_pruned_scan"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["returned_items_pruned_scan"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["embedding_box_scan"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # builds the Bloom sidecars / posting lists / CDF table if absent.
-    queries["orders_point_lookup_bloom"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["term_search_indexed"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    queries["orders_cdf_changes"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # builds the attr-bearing IVF layout for filtered search if absent.
-    queries["ann_filtered_ivf_topk"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # builds the JSONL shard export if absent (corpus state, like the
-    # index layouts): the timed run measures the byte-audit scan.
-    queries["jsonl_export_audit"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # builds the composed IVFPQ layout if absent.
-    queries["ann_ivfpq_topk"](spark, sf_dir).write.mode("overwrite").format("noop").save()
-
-    def _release_blocks() -> None:
-        """Free every persistent RDD block between timed passes (r11
-        measurement-hygiene fix, documented in OPTIMIZATION_r11.md).
-
-        Query plans materialize bounded intermediates via
-        ``localCheckpoint()``; each bench pass creates fresh ones and
-        nothing ever referenced a previous pass's blocks — but the
-        blocks stayed pinned in the 8 GB local-mode BlockManager, so a
-        full two-tier run accumulated hundreds of dead relations and
-        the storage/execution memory squeeze inflated every key timed
-        late in the run (the r11b diagnostic run read untouched keys
-        like ann_sq8_topk at 10× their freeze purely from run
-        position). Cross-key corpus state is all ON DISK (parquet
-        layouts under the index root), so dropping in-memory blocks
-        between keys only isolates measurements — it cannot evict
-        anything a later key serves from. Runs OUTSIDE the timed
-        region.
-
-        INVARIANT (ADVICE r11): every module-level cache in the
-        package must hold PLAIN DATA ONLY (floats/strings/paths —
-        the pricing/vocab/df caches all do). This release destroys
-        every persistent RDD block between keys, and a cached
-        localCheckpoint'd DataFrame is UNRECOVERABLE once its blocks
-        are unpersisted (lineage truncated) — a future DataFrame-
-        holding cache would be silently corrupted here. It also uses
-        the private _jsc handle because PySpark exposes no public
-        enumeration of persistent RDDs; if that breaks on a Spark
-        upgrade, spark.catalog.clearCache() covers DataFrame persist()
-        blocks and only the raw-RDD localCheckpoint blocks need a new
-        route."""
-        # r12: corpus-linear subtrees now use recomputable persist()
-        # instead of localCheckpoint (VERDICT r11 #4) — clear the
-        # CacheManager first so (a) its entry list does not grow for
-        # the whole run (every cached-plan lookup scans it) and (b)
-        # the entries' blocks are actually released, then...
-        spark.catalog.clearCache()
-        # ...blocking=True: the removal must COMPLETE outside the
-        # timed region — an async unpersist drains block-removal work
-        # into the next timed pass (observed as order-dependent 5-10×
-        # inflation of whichever key follows a checkpoint-heavy one).
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)
+    # JVM/codegen warmup (uncounted). The ANN warmups also build the
+    # materialized LSH and PQ indexes if absent, so the timed run
+    # measures the steady-state probe (pruned index read), not the
+    # one-time build. The others build the corpus state the timed run
+    # then serves: the continuous-aggregate MV; the near-dup edge table
+    # (pagerank/triangles time graph work, not the one-time shingle
+    # join) and components relation (the timed split measures split
+    # math, not the one-time clustering); the z-ordered + zone-mapped
+    # lineitem layouts; the Bloom sidecars / posting lists / CDF table;
+    # the attr-bearing IVF layout; the JSONL shard export; the
+    # composed IVFPQ layout.
+    warmups = [
+        *(queries[q] for q in ("groupby_count", "ann_lsh_topk", "ann_pq_topk", "mv_event_type_stats")),
+        _pairs_cached,
+        lambda spark, sf_dir: _components_cached(spark, sf_dir, "twostar"),
+        *(queries[q] for q in (
+            "lineitem_pruned_scan", "q6_pruned_scan", "q19_pruned_scan",
+            "returned_items_pruned_scan", "embedding_box_scan", "orders_point_lookup_bloom",
+            "term_search_indexed", "orders_cdf_changes", "ann_filtered_ivf_topk",
+            "jsonl_export_audit", "ann_ivfpq_topk",
+        )),
+    ]
+    # one released() scope frees what the warmups materialised
+    with released():
+        for fn in warmups:
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
 
     def _time(names, target_dir, best_of: int = 1) -> dict[str, float]:
         out: dict[str, float] = {}
@@ -650,13 +597,15 @@ def main() -> None:
                 continue
             best = None
             for _ in range(best_of):
-                _release_blocks()
-                t0 = time.perf_counter()
-                fn(spark, target_dir).write.mode("overwrite").format("noop").save()
-                dt = time.perf_counter() - t0
+                # what the key materialised is released (blocking) on
+                # exit, outside the timed region: blocks left behind
+                # inflate every key timed later in the run.
+                with released():
+                    t0 = time.perf_counter()
+                    fn(spark, target_dir).write.mode("overwrite").format("noop").save()
+                    dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             out[name] = round(best, 3)
-        _release_blocks()
         return out
 
     # Contention canary (r05 post-mortem): the driver's single-shot
@@ -742,7 +691,8 @@ def main() -> None:
             "bm25_ingest_audit",  # cold two-batch BM25 ingest build
             "hybrid_filtered_indexed",  # cold label-attr BM25+SQ8 builds
         ):
-            queries[q](spark, sf1_dir).write.mode("overwrite").format("noop").save()
+            with released():
+                queries[q](spark, sf1_dir).write.mode("overwrite").format("noop").save()
         sf1_names = [
             n
             for n in (*HEADLINE, *EXTRA_VOLUME)

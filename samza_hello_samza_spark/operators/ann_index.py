@@ -42,7 +42,9 @@ from pyspark.sql.types import LongType
 
 from ..functions import binary_sig
 from ..functions import sq8 as sq8_codec
-from ..session import index_base_dir, load_table, read_parquet, write_json_atomic
+from ..session import (
+    index_base_dir, load_table, materialize, read_parquet, write_json_atomic
+)
 
 #: bump when the on-disk layout or hash family changes.
 LAYOUT_VERSION = 1
@@ -1127,9 +1129,9 @@ def compact_ivf_tombstones(spark: SparkSession, index_dir: str) -> int:
     tomb = _tombstone_dir(index_dir)
     if not _is_built(tomb):
         return 0
-    t = read_parquet(spark, tomb).select("vec_id").distinct().localCheckpoint()
+    t = materialize(read_parquet(spark, tomb).select("vec_id").distinct(), "bounded")
     live = snapshot_scan(spark, os.path.join(index_dir, "corpus")).select("vec_id")
-    keep = t.join(live, "vec_id", "left_semi").localCheckpoint()
+    keep = materialize(t.join(live, "vec_id", "left_semi"), "overwrite_barrier")
     dropped = t.count() - keep.count()
     keep.coalesce(1).write.mode("overwrite").parquet(tomb)
     # the overwrite replaced the sidecar's files; commit so the
@@ -1195,7 +1197,7 @@ def upsert_ivf_vectors(spark: SparkSession, index_dir: str, vectors: DataFrame) 
             f"upsert delta lacks stored attr column(s) {missing}; the "
             f"layout at {index_dir} stores {payload} per vector"
         )
-    ids = vectors.select("vec_id").distinct().localCheckpoint()
+    ids = materialize(vectors.select("vec_id").distinct(), "bounded")
 
     # files whose rows are being replaced (URI → plain path to match
     # the manifest's os.walk paths)
@@ -1227,11 +1229,11 @@ def upsert_ivf_vectors(spark: SparkSession, index_dir: str, vectors: DataFrame) 
     # the versioned mask captured by the commit below excludes them
     tomb = _tombstone_dir(index_dir)
     if _is_built(tomb):
-        t = read_parquet(spark, tomb).select("vec_id").distinct().localCheckpoint()
+        t = materialize(read_parquet(spark, tomb).select("vec_id").distinct(), "bounded")
         overlap = t.join(F.broadcast(ids), "vec_id", "left_semi").count()
         if overlap:
-            survivors = (
-                t.join(F.broadcast(ids), "vec_id", "left_anti").localCheckpoint()
+            survivors = materialize(
+                t.join(F.broadcast(ids), "vec_id", "left_anti"), "overwrite_barrier"
             )
             survivors.coalesce(1).write.mode("overwrite").parquet(tomb)
 
@@ -1288,11 +1290,14 @@ def probe_lsh_snapshot(
     qvec: np.ndarray,
     planes: np.ndarray,
     band_bits: int,
+    man: dict | None = None,
 ) -> DataFrame:
     """``probe_lsh_index`` against the committed snapshot: identical
-    pruned (band, code) read, torn-append-proof."""
+    pruned (band, code) read, torn-append-proof. Pass ``man`` to pin a
+    version."""
     codes = band_codes(qvec, planes, band_bits)
-    man = read_index_manifest(index_dir)
+    if man is None:
+        man = read_index_manifest(index_dir)
     scan = snapshot_scan(spark, index_dir, man=man)
     hit = None
     for band, code in enumerate(codes):
@@ -1522,15 +1527,18 @@ def probe_pq_snapshot(
     index_dir: str,
     qvec: np.ndarray,
     n_candidates: int,
+    man: dict | None = None,
 ) -> DataFrame:
     """``probe_pq_index`` against the committed codes snapshot: the ADC
     scan reads exactly the manifest's file set, so a concurrent
     ``append_pq_index`` is invisible until its commit — same
     torn-append contract as ``probe_lsh_snapshot``. Codes AND
-    codebooks resolve from ONE manifest read, so a retrain commit
-    mid-probe can never pair new books with old codes."""
+    codebooks resolve from ONE manifest read (or the pinned ``man``),
+    so a retrain commit mid-probe can never pair new books with old
+    codes."""
     codes_dir = os.path.join(index_dir, "codes")
-    man = read_index_manifest(codes_dir)
+    if man is None:
+        man = read_index_manifest(codes_dir)
     if not man["files"]:
         raise FileNotFoundError(f"no committed snapshot in {codes_dir}")
     books = _load_codebooks(spark, index_dir, _codebook_dir(index_dir, man))
@@ -1988,8 +1996,7 @@ def rebalance_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     # snapshot simply omits deleted rows.
     scan = (
         _apply_tombstones(spark, index_dir, snapshot_scan(spark, corpus_dir))
-        .localCheckpoint()  # 3 downstream jobs; also breaks lineage to
-        # the files the rewrite appends next to
+        .transform(materialize, "overwrite_barrier")  # 3 downstream jobs
     )
     counts = {r.list_id: r.n for r in
               scan.groupBy("list_id").agg(F.count(F.lit(1)).alias("n")).collect()}
@@ -2027,7 +2034,7 @@ def rebalance_ivf_index(spark: SparkSession, index_dir: str) -> dict:
     assigned = (
         scan.drop("list_id")
         .withColumn("list_id", assign(F.col("v")))
-        .localCheckpoint()
+        .transform(materialize, "overwrite_barrier")
     )
     moved = (
         assigned.select("vec_id", "list_id").alias("a")

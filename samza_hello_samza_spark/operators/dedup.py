@@ -32,11 +32,10 @@ from __future__ import annotations
 
 import random
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import index_base_dir, load_table, materialize
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 N_PERMS = 24
@@ -136,10 +135,7 @@ def _doc_shingles(
         # 1-3× (counts + both self-join sides in dedup_ngram_jaccard):
         # one tokenize+distinct pass instead of one per consumer (the
         # r11 plan audit read 15 exchanges on the jaccard key).
-        # CORPUS-LINEAR (one row per distinct (doc, shingle)) →
-        # recomputable spillable persist, not an in-memory lineage cut
-        # (r12, VERDICT r11 #4 discipline).
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize, "corpus")
     )
     # hot-shingle set is tiny in absolute terms (≤ |shingle rows|/cap,
     # realistically a handful of boilerplate strings) — the anti-join
@@ -306,9 +302,7 @@ def dedup_prefix_filter(
         # BOTH verification self-join sides) — one tokenize+dedup pass
         # instead of one per consumer; the relation is the same
         # distinct (doc, shingle) set every consumer shuffles anyway.
-        # CORPUS-LINEAR → recomputable spillable persist, not an
-        # in-memory lineage cut (r12, VERDICT r11 #4 discipline).
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize, "corpus")
     )
     df_tbl = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     docs = (
@@ -316,9 +310,8 @@ def dedup_prefix_filter(
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("arr"))
         # reused by prefix explode AND size lookup; one row per doc but
-        # the arrays hold every shingle — corpus-sized in BYTES, so
-        # spillable persist, not pinned deserialized memory (r12, #4).
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # the arrays hold every shingle — corpus-sized in bytes.
+        .transform(materialize, "corpus")
     )
     n = F.size("arr")
     # τ = 1/2 prefix: p = n − ceil(n/2) + 1, integer-exact
@@ -464,19 +457,13 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band join AND both pair-side lookups (pre-r11 the band join
     # re-derived signatures from the corpus — plan-audited at 9
     # documents scans for this key; now 2: signatures + the
-    # candidate-doc tokenize below). persist(MEMORY_AND_DISK), not
-    # localCheckpoint (r12, VERDICT r11 #4): the signature relation is
-    # CORPUS-LINEAR — an eager localCheckpoint pins it deserialized in
-    # executor memory AND truncates lineage (one lost executor fails
-    # the job at 100 TB); a recomputable spillable persist pins
-    # nothing (columnar cache, evicts to disk under pressure) and
-    # survives block loss by recomputing.
-    sigs = _minhash_sigs(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # candidate-doc tokenize below).
+    sigs = materialize(_minhash_sigs(spark, sf_dir), "corpus")
     pairs = (
         _bucket_pairs(_bands_from_sigs(sigs), ["band", "sig"], "doc_id")
         .select(F.col("p.pa").alias("doc_a"), F.col("p.pb").alias("doc_b"))
         .distinct()
-        .localCheckpoint()  # candidate-pair sized; consumed 2× below
+        .transform(materialize, "bounded")  # consumed 2× below
     )
     n_match = sum(
         (F.col(f"a.m{i}") == F.col(f"b.m{i}")).cast("int") for i in range(N_PERMS)
@@ -501,7 +488,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # candidate-docs sized; consumed 3× (sizes + both self-join
         # sides) — one tokenize pass instead of three
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shd.alias("sa")
@@ -626,21 +613,17 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filter relation, ppm ratios are integer division.
 
     Scale shape: ONE signature aggregation (24 min() columns,
-    localCheckpoint'd), then per config a posexplode + band-bucket
+    materialised once), then per config a posexplode + band-bucket
     pair join — never all-pairs; the stratum bounds everything.
     """
     docs = _doc_stratum(spark, sf_dir)
     truth = (
         dedup_prefix_filter(spark, sf_dir, docs=docs)
         .select("doc_a", "doc_b")
-        .localCheckpoint()  # joined once per config
+        .transform(materialize, "bounded")  # joined once per config
     )
-    # corpus-linear signatures: recomputable spillable persist, not a
-    # lineage-truncating in-memory checkpoint (r12, VERDICT r11 #4);
     # the four config rounds below share the one materialization.
-    sigs = _minhash_sigs(spark, sf_dir, docs=docs).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sigs = materialize(_minhash_sigs(spark, sf_dir, docs=docs), "corpus")
     n_true = truth.count()
     out = None
     for n_bands, r in LSH_SWEEP_CONFIGS:
@@ -661,7 +644,7 @@ def lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             _bucket_pairs(bands, ["band", "sig"], "doc_id")
             .select(F.col("p.pa").alias("doc_a"), F.col("p.pb").alias("doc_b"))
             .distinct()
-            .localCheckpoint()  # counted AND semi-joined: one band join
+            .transform(materialize, "bounded")  # counted AND semi-joined
         )
         hits = cand.join(truth, ["doc_a", "doc_b"], "left_semi")
         row = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates")).crossJoin(
@@ -741,9 +724,7 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-principles DuckDB rebuild (exact-dup md5 groups + the
     recursive-CTE clustering).
     """
-    from ..session import load_table as _lt
-
-    total = _lt(spark, sf_dir, "documents").agg(
+    total = load_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
     ex = dedup_exact(spark, sf_dir).agg(
@@ -792,7 +773,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself. The standing corpus bands are the index side (in
     production the partitioned band table
     ``streaming/maintenance.lsh_index_updater`` maintains; derived
-    in-query here and localCheckpoint'd to stand in for the index
+    in-query here and materialised to stand in for the index
     read), and the new batch equi-joins it on (band, sig) — cost
     |new|·bands plus true collisions, NEVER corpus². Output: one row
     per (new_doc, corpus_doc) candidate pair — the new docs to drop
@@ -803,9 +784,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest additionally asserts the pairs equal the full-corpus
     minhash pairs restricted to one-new/one-existing.
     """
-    # = the standing index read; corpus-linear, so recomputable disk
-    # persist instead of an in-memory lineage cut (r12, VERDICT r11 #4)
-    bands = _minhash_bands(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # = the standing index read
+    bands = materialize(_minhash_bands(spark, sf_dir), "corpus")
     is_new = F.col("doc_id") % NEW_BATCH_MOD == 0
     new = bands.filter(is_new).select(
         "band", "sig", F.col("doc_id").alias("new_doc")
@@ -850,9 +830,7 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: md5-slice band family + exact-set Jaccard
     are both SQL-expressible.
     """
-    # corpus-linear band relation: recomputable spillable persist, same
-    # rationale as dedup_incremental's (r12, VERDICT r11 #4)
-    bands = _minhash_bands(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    bands = materialize(_minhash_bands(spark, sf_dir), "corpus")
     is_bench = F.col("doc_id") % DECON_MOD == DECON_REM
     bench = bands.filter(is_bench).select(
         "band", "sig", F.col("doc_id").alias("bench_doc")
@@ -864,7 +842,7 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         train.join(bench, ["band", "sig"])
         .select("train_doc", "bench_doc")
         .distinct()
-        .localCheckpoint()  # reused for the semi-join AND the verify
+        .transform(materialize, "bounded")  # semi-join AND verify read it
     )
     docs = load_table(spark, sf_dir, "documents")
     cand_docs = (
@@ -882,7 +860,7 @@ def contamination_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         # candidate-docs sized; consumed 3× (sizes + both verify join
         # sides) — one tokenize pass, the minhash_jaccard_estimate
         # discipline applied to the decontamination twin.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -1046,12 +1024,12 @@ def _minlabel_components(pairs: DataFrame) -> DataFrame:
     :func:`dedup_clusters` (see its docstring)."""
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
+    ).transform(materialize, "iterative")
     labels = (
         edges.select(F.col("doc_a").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
+        .transform(materialize, "iterative")
     )
     for _ in range(20):  # ≥ any realistic dup-cluster diameter
         nbr = (
@@ -1067,7 +1045,7 @@ def _minlabel_components(pairs: DataFrame) -> DataFrame:
                     F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint()
+            .transform(materialize, "iterative")
         )
         changed = (
             new_labels.alias("n")
@@ -1102,7 +1080,6 @@ def _components_cached(
     corpus serves pagerank, k-core, LPA, triangles AND clustering."""
     import os
 
-    from ..session import index_base_dir
     from .ann_index import publish_create_once
 
     def build() -> DataFrame:
@@ -1177,7 +1154,7 @@ def star_components(pairs: DataFrame) -> DataFrame:
         pairs.select(F.col("doc_a").alias("id"))
         .union(pairs.select("doc_b"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, "iterative")
     )
     # canonical child>parent edges (string order matches the oracle's)
     edges = (
@@ -1187,7 +1164,7 @@ def star_components(pairs: DataFrame) -> DataFrame:
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, "iterative")
     )
 
     def _signature(e: DataFrame) -> tuple:
@@ -1215,7 +1192,7 @@ def star_components(pairs: DataFrame) -> DataFrame:
             .filter(F.col("n") > F.col("c"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint()
+            .transform(materialize, "iterative")
         )
         # small-star: around every centre c, hook c and all its
         # SMALLER neighbours to the minimum among them
@@ -1229,7 +1206,7 @@ def star_components(pairs: DataFrame) -> DataFrame:
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
+            .transform(materialize, "iterative")
         )
         sig = _signature(edges)
         if sig == prev:
@@ -1429,7 +1406,7 @@ def dedup_window_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_incremental`` vs ``dedup_minhash_lsh``): the corpus index
     is the h → owner winner table ``streaming.maintenance
     .window_fingerprint_updater`` maintains (derived in-query here and
-    localCheckpoint'd to stand in for the index read), and the new
+    materialised to stand in for the index read), and the new
     batch's windows equi-join it on the 16-byte hash — cost
     |new|·windows + hits, NEVER corpus². Output: one row per new doc
     that has ≥1 window — its window count, how many windows hit a
@@ -1444,18 +1421,15 @@ def dedup_window_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index derivation AND the new batch's two consumers (probe join,
     # per-doc totals) — pre-r11 each consumer re-ran the corpus-wide
     # tokenize+window-hash scan.
-    # CORPUS-LINEAR (one row per token window) → recomputable
-    # spillable persist, not an in-memory lineage cut (r12, #4).
-    wins = window_fingerprints(words).persist(StorageLevel.MEMORY_AND_DISK)
+    wins = materialize(window_fingerprints(words), "corpus")
     is_new = F.col("doc_id") % NEW_BATCH_MOD == 0
     idx = (
         wins.filter(~is_new)
         .groupBy("h")
         .agg(F.min(F.struct("doc_id", "pos")).alias("first_at"))
         .select("h", F.col("first_at.doc_id").alias("owner"))
-        # = the standing index read; one row per DISTINCT window hash —
-        # still corpus-linear, so spillable persist, not pinned memory.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # = the standing index read; one row per distinct window hash
+        .transform(materialize, "corpus")
     )
     new_win = wins.filter(is_new)
     hits = new_win.join(idx, "h").groupBy("doc_id").agg(

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _SHINGLES_SQL, dedup_ngram_jaccard
+from ..session import index_base_dir, materialize
 
 PR_ITERS = 10
 PR_DAMP = 0.85
@@ -51,7 +52,6 @@ def _pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from ..session import index_base_dir
     from .ann_index import publish_create_once
 
     root = os.path.join(
@@ -82,7 +82,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # materialize (src, dst, deg) once; every iteration re-reads this
-    edges_d = edges.join(deg, "src").repartition("src").localCheckpoint()
+    edges_d = materialize(edges.join(deg, "src").repartition("src"), "iterative")
     n = edges_d.select("src").distinct().count()  # driver scalar
     ranks = (
         edges_d.select("src").distinct().withColumn("rank", F.lit(1.0 / n))
@@ -96,7 +96,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(base) + F.lit(PR_DAMP) * F.sum("c")).alias("rank")
         )
         if (it + 1) % 3 == 0:
-            ranks = ranks.localCheckpoint()  # truncate iterative lineage
+            ranks = materialize(ranks, "iterative")  # truncate iterative lineage
     return ranks.select(
         F.col("src").alias("doc_id"), F.round("rank", 6).alias("rank")
     )
@@ -184,7 +184,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             | ((F.col("deg") == F.col("deg_dst")) & (F.col("src") < F.col("dst")))
         )
         .select("src", "dst")
-        .localCheckpoint()  # oriented edges: reused by 3 join inputs
+        .transform(materialize, "bounded")  # oriented edges: reused by 3 join inputs
     )
     w1 = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     w2 = e.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -310,7 +310,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .localCheckpoint()  # reused by every round
+        .transform(materialize, "iterative")  # reused by every round
     )
     labels = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.col("src").alias("lab")
@@ -324,7 +324,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select(F.col("src").alias("node"), "lab")
-            .localCheckpoint()  # truncate iterative lineage
+            .transform(materialize, "iterative")  # truncate iterative lineage
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lab").alias("community")
@@ -412,7 +412,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .localCheckpoint()
+        .transform(materialize, "iterative")
     )
     deg0 = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
 
@@ -432,7 +432,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             surv = (
                 in_deg.filter(F.col("c") >= k)
                 .select(F.col("src").alias("node"))
-                .localCheckpoint()
+                .transform(materialize, "iterative")
             )
             # peeling shrinks monotonically (surv_{t+1} ⊆ surv_t), so
             # an unchanged COUNT means an unchanged SET — fixpoint

@@ -26,12 +26,11 @@ the hot path for repeated words (Zipf).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import _shingles, _words, explode_nonempty
 
 TOP_TRIGRAMS = 50
@@ -57,13 +56,11 @@ def trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     tri = explode_nonempty(words, [], _shingles(F.col("words"), 3), "tg")
     # trigram-vocabulary sized; consumed by the context totals AND the
     # conditional join — one corpus explode+aggregate instead of two.
-    # Distinct trigrams grow near-linearly with the corpus (most
-    # trigrams are unique), so recomputable spillable persist, not
-    # an in-memory lineage cut (r12, VERDICT r11 #4 discipline).
+    # Distinct trigrams grow near-linearly with the corpus.
     tri_counts = (
         tri.groupBy("tg")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize, "corpus")
     )
     with_ctx = tri_counts.select(
         "tg",
@@ -116,9 +113,8 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring_index("bg", " ", -1).alias("w2"),
         "c",
     )
-    # four derivations share it; distinct bigrams grow near-linearly
-    # with the corpus → spillable persist, not pinned memory (r12, #4).
-    counts = counts.persist(StorageLevel.MEMORY_AND_DISK)
+    # four derivations share it
+    counts = materialize(counts, "corpus")
     left = counts.groupBy("w1").agg(
         F.sum("c").alias("c_w1"), F.count(F.lit(1)).alias("n_follow")
     )

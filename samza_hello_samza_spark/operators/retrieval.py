@@ -27,12 +27,11 @@ kept as strings here so the DuckDB oracle shares the grouping key.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import _words, explode_nonempty
 from .text_analysis import SEARCH_TERMS, _WORDS_SQL
 
@@ -193,13 +192,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = explode_nonempty(docs, ["doc_id"], _words(F.col("text")), "word")
     # (doc, word) counts consumed TWICE (df + the weighted join): one
-    # tokenize+aggregate pass instead of two. CORPUS-LINEAR (one row
-    # per distinct (doc, word)) → recomputable spillable persist, not
-    # an in-memory lineage cut (r12, VERDICT r11 #4 discipline).
+    # tokenize+aggregate pass instead of two.
     tf = (
         words.groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize, "corpus")
     )
     df = tf.groupBy("word").agg(F.count(F.lit(1)).cast("double").alias("df"))
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
@@ -254,13 +251,7 @@ def bigram_lm_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.expr("CAST(array() AS ARRAY<STRUCT<w1: STRING, bigram: STRING>>)"))
     occ = explode_nonempty(tokenized, ["doc_id"], occ_arr, "o").select(
         "doc_id", "o.w1", "o.bigram"
-    ).persist(
-        # consumed 3× (pair counts, prefix counts, scoring join); the
-        # occurrence relation is CORPUS-LINEAR (one row per token), so
-        # recomputable spillable persist, not an in-memory lineage cut
-        # (r12, VERDICT r11 #4)
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ).transform(materialize, "corpus")  # pair counts, prefix counts, scoring join
     pair_cnt = occ.groupBy("bigram").agg(F.count(F.lit(1)).alias("pair_cnt"))
     prefix_cnt = occ.groupBy("w1").agg(F.count(F.lit(1)).alias("prefix_cnt"))
     return (

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import _words
 
 # ---------------------------------------------------------------------------
@@ -80,7 +80,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # languages-sized; consumed by its own min AND the rate table —
     # one docs aggregation instead of two.
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")).localCheckpoint()
+    counts = materialize(docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")), "bounded")
     min_n = counts.agg(F.min(F.col("n_docs")).alias("min_n"))
     rates = (
         counts.crossJoin(F.broadcast(min_n))  # languages-sized: ≤ dozens of rows
@@ -159,7 +159,7 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.count_distinct("lang").alias("n_langs"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    ).localCheckpoint()  # sources-sized; feeds the totals AND the report
+    ).transform(materialize, "bounded")  # sources-sized; totals AND report
     # corpus totals = exact integer sums of the per-source sums — no
     # second corpus scan (same integers → same doubles).
     totals = per_src.agg(
@@ -353,7 +353,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # sources-sized; consumed by the weight total AND the quota
         # rows — one tokenize scan instead of two.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     tot = per_src.agg(F.sum("w").alias("w_total"))
     return (
@@ -402,9 +402,9 @@ def domain_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     sw = (
         words.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c_sw"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
-    w = sw.groupBy("word").agg(F.sum("c_sw").alias("c_w")).localCheckpoint()
+    w = materialize(sw.groupBy("word").agg(F.sum("c_sw").alias("c_w")), "bounded")
     s_tot = sw.groupBy("source").agg(F.sum("c_sw").alias("n_s"))
     n_tot = w.agg(F.sum("c_w").alias("n_total"))
     p_s = F.col("c_sw") / F.col("n_s")
@@ -484,19 +484,19 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_feat = (
         feat.groupBy("doc_id", "is_target", "b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     # B-bounded (≤DSIR_BUCKETS rows) distributions, each consumed
     # twice (the bucket join AND its own total): materialize so the
     # corpus-sized doc_feat aggregation runs ONCE per distribution —
     # the plan audit showed each groupBy("b") shuffle running again
     # under its total's aggregate (4 corpus-sized passes, now 2).
-    raw = doc_feat.groupBy("b").agg(F.sum("c").alias("c_r")).localCheckpoint()
+    raw = materialize(doc_feat.groupBy("b").agg(F.sum("c").alias("c_r")), "bounded")
     tgt = (
         doc_feat.filter(F.col("is_target") == 1)
         .groupBy("b")
         .agg(F.sum("c").alias("c_t"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     n_t = tgt.agg(F.sum("c_t").alias("n_t"))
     n_r = raw.agg(F.sum("c_r").alias("n_r"))
@@ -584,7 +584,7 @@ def export_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("total_chars"),
             F.countDistinct("lang").alias("n_langs"),
         )
-        .localCheckpoint()  # N_SHARDS rows; feeds the total AND the report
+        .transform(materialize, "bounded")  # N_SHARDS rows; total AND report
     )
     # corpus total = sum of the per-shard counts — no second corpus scan
     total = per_shard.agg(F.sum("n_docs").alias("n_total"))
@@ -642,7 +642,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("total_chars"),
             F.countDistinct("lang").cast("long").alias("n_langs"),
         )
-        .localCheckpoint()  # 3 rows; feeds the total AND the report
+        .transform(materialize, "bounded")  # 3 rows; feeds the total AND the report
     )
     # corpus total = sum of the per-split counts — no second corpus scan
     total = per_split.agg(F.sum("n_docs").alias("n_total"))
@@ -697,7 +697,7 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("gid").cast("long").alias("n_groups"),
         )
-        .localCheckpoint()  # 3 rows; feeds the total AND the report
+        .transform(materialize, "bounded")  # 3 rows; feeds the total AND the report
     )
     # corpus total = sum of the per-split counts — skips re-running the
     # docs ⋈ clusters join a second time just to count rows
@@ -1170,7 +1170,7 @@ def train_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias(c)
             for c in QC_FEATURES
         ],
-    ).localCheckpoint()
+    ).transform(materialize, "iterative")
 
     w = {c: 0.0 for c in QC_FEATURES}
     bias = 0.0

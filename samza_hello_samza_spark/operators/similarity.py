@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import binary_sig as _bsig
 from ..functions import sq8 as _sq8
-from ..session import load_table, read_parquet
+from ..session import load_table, materialize, read_parquet
 
 TOP_K = 10
 QUERY_VEC_ID = 0
@@ -257,7 +257,7 @@ def lsh_multiprobe_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     out = None
     for name, cand in variants:
-        cand = cand.filter(F.col("vec_id") != QUERY_VEC_ID).localCheckpoint()
+        cand = materialize(cand.filter(F.col("vec_id") != QUERY_VEC_ID), "bounded")
         topk = _rerank(cand, qvec).select("vec_id")
         row = (
             cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
@@ -2093,7 +2093,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (float iterative, like kmeans/pca); numpy-parity +
     farthest-point property pytests.
     """
-    e = _embeddings(spark, sf_dir).localCheckpoint()
+    e = _embeddings(spark, sf_dir).transform(materialize, "iterative")
     center = [
         float(x)
         for x in e.filter(F.col("vec_id") == QUERY_VEC_ID).collect()[0].v
@@ -2109,7 +2109,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state = state.withColumn(
             "mind", F.least(F.col("mind"), d)
-        ).localCheckpoint()
+        ).transform(materialize, "iterative")
         far = state.agg(
             F.max(
                 F.struct(

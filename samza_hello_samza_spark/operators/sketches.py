@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, materialize
 
 #: sketch geometry: D independent hash rows × W buckets.
 CMS_D = 4
@@ -247,7 +247,7 @@ def audience_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact counts, the type list, and both exact-intersection join
     # sides): one events scan + distinct shuffle instead of one per
     # consumer — the plan audit read 14 exchanges on this key.
-    du = ev.select("event_type", "user_id").distinct().localCheckpoint()
+    du = ev.select("event_type", "user_id").distinct().transform(materialize, "bounded")
     hashed = du.select(
         "event_type", "user_id", _user_hash(F.col("user_id")).alias("h")
     )
@@ -256,7 +256,7 @@ def audience_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= KMV_SET_K)
         .drop("rnk")
-        .localCheckpoint()  # sketch-sized; reused by singles + pairs
+        .transform(materialize, "bounded")  # sketch-sized; reused by singles + pairs
     )
     singles = sk.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_sk"), F.max("h").alias("hk")

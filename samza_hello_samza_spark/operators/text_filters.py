@@ -33,12 +33,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import _shingles, _words, explode_nonempty
 from .sampling import CURRICULUM_STAGE_CASE as _CURRICULUM_STAGE_CASE
 from .sampling import CURRICULUM_STAGE_CTES as _CURRICULUM_STAGE_CTES
@@ -236,13 +235,7 @@ def text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct(
             F.transform(_shingles(F.col("words"), k=SHINGLE_K), F.md5)
         ).alias("sh"),
-    ).persist(
-        # consumed 3x (benchmark side, corpus explode, totals): one
-        # tokenize+md5 pass. Corpus-linear shingle arrays, so
-        # recomputable spillable persist, not an in-memory lineage cut
-        # (r12, VERDICT r11 #4).
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ).transform(materialize, "corpus")  # benchmark side, corpus explode, totals
     corpus = shingled.filter(F.col("doc_id") % BENCHMARK_MOD != 0)
     # explode_nonempty: the plain-explode inferred guard re-derives the
     # whole shingle pipeline twice per row (34 s → 5.7 s at sf0.1).
@@ -313,18 +306,12 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct(
             F.transform(_shingles(F.col("words"), k=SHINGLE_K), F.md5)
         ).alias("sh"),
-    ).persist(
-        # consumed 3x (benchmark side, corpus explode, totals): one
-        # tokenize+md5 pass. Corpus-linear shingle arrays, so
-        # recomputable spillable persist, not an in-memory lineage cut
-        # (r12, VERDICT r11 #4).
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ).transform(materialize, "corpus")  # benchmark side, corpus explode, totals
     corpus = shingled.filter(F.col("doc_id") % BENCHMARK_MOD != 0)
     bench_sh = explode_nonempty(
         shingled.filter(F.col("doc_id") % BENCHMARK_MOD == 0), [], F.col("sh"), "h"
     ).distinct()
-    bench_sh = bench_sh.localCheckpoint()  # bloom build + confirm join share it
+    bench_sh = materialize(bench_sh, "bounded")  # bloom build + confirm join share it
     exploded = explode_nonempty(corpus, ["doc_id"], F.col("sh"), "h")
     contaminated = (
         bloom_semi_join(exploded, bench_sh, "h")
@@ -371,7 +358,7 @@ def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_words").cast("long").alias("n_words"),
         )
-        .localCheckpoint()  # ~32 rows; feeds the total AND the report
+        .transform(materialize, "bounded")  # ~32 rows; total AND report
     )
     total = per_bucket.agg(F.sum("n_docs").alias("t"))
     return per_bucket.crossJoin(maybe_broadcast(total)).select(
@@ -411,9 +398,8 @@ def boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     sents = explode_nonempty(docs, ["doc_id"], sent_arr, "sent").select(
         "doc_id", F.md5("sent").alias("h")
     )
-    # df-table and per-doc join share it; one row per SENTENCE —
-    # corpus-linear → spillable persist, not pinned memory (r12, #4).
-    sents = sents.persist(StorageLevel.MEMORY_AND_DISK)
+    # df-table and per-doc join share it; one row per sentence
+    sents = materialize(sents, "corpus")
     df_tbl = sents.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     return (
         sents.join(df_tbl, "h")
@@ -458,14 +444,14 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         explode_nonempty(docs, [], _words(F.col("text")), "word")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     total = vocab.agg(F.sum("freq").alias("total"))
     top = vocab.orderBy(F.desc("freq"), "word").limit(max(COVERAGE_KS))
     from pyspark.sql import Window
 
     rn = F.row_number().over(Window.orderBy(F.desc("freq"), "word"))
-    ranked = top.withColumn("rn", rn).localCheckpoint()  # ≤1000 rows
+    ranked = materialize(top.withColumn("rn", rn), "bounded")  # ≤1000 rows
     per_k = None
     for k in COVERAGE_KS:
         row = ranked.agg(
@@ -543,9 +529,8 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok, ["doc_id"], F.array_distinct(_shingles(F.col("words"), 2)), "bigram"
     )
     # materialize once: the df-table and the per-doc join share it;
-    # one row per (doc, distinct bigram) — corpus-linear → spillable
-    # persist, not pinned memory (r12, #4).
-    bg = bg.persist(StorageLevel.MEMORY_AND_DISK)
+    # one row per (doc, distinct bigram)
+    bg = materialize(bg, "corpus")
     df_tbl = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("df"))
     return (
         bg.join(df_tbl, "bigram")
@@ -876,11 +861,9 @@ def corpus_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # tokenized arrays consumed by BOTH independent aggregations (word
     # explode + bigram explode): one regex tokenize pass instead of
-    # two. Corpus-sized in bytes (every token) → spillable persist,
-    # not pinned deserialized memory (r12, #4).
-    tok = docs.select("doc_id", _words(F.col("text")).alias("words")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # two.
+    tok = docs.select("doc_id", _words(F.col("text")).alias("words"))
+    tok = materialize(tok, "corpus")
     words = tok.select(F.explode("words").alias("word"))
     bigrams = explode_nonempty(tok, [], _shingles(F.col("words"), k=2), "bigram")
     w_stats = words.agg(

@@ -26,7 +26,6 @@ pure-python reference BPE trained on the same frequency table.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -37,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import _words, explode_nonempty
 
 N_MERGES = 10
@@ -150,16 +149,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
         ).alias("symbols"),
-    ).persist(
-        # the corpus scan happens exactly once, here. Recomputable
-        # spillable persist, not an in-memory lineage cut (r12, VERDICT
-        # r11 #4): this relation grows with the corpus vocabulary.
-        # The IN-LOOP localCheckpoint below stays — it truncates
-        # ITERATIVE lineage (the plan would otherwise grow by one
-        # merge-UDF layer per round), which is exactly what
-        # localCheckpoint is for (guide §5).
-        StorageLevel.MEMORY_AND_DISK
-    )
+    ).transform(materialize, "corpus")  # the one corpus scan
 
     # Batched rounds (VERDICT r04 #8): each Spark round takes the
     # top-M candidates in ONE TakeOrderedAndProject job plus one
@@ -212,7 +202,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = vocab.withColumn(
             "symbols",
             _merge_udf([(l, r) for l, r, _c in accepted])(F.col("symbols")),
-        ).localCheckpoint()
+        ).transform(materialize, "iterative")
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, pair_count long"
     )
@@ -334,7 +324,7 @@ def unigram_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-python reference on the same frequency table plus coverage /
     round-trip properties.
     """
-    vocab = _word_freq(spark, sf_dir).localCheckpoint()  # ONE corpus scan
+    vocab = materialize(_word_freq(spark, sf_dir), "iterative")  # ONE corpus scan
 
     # seed: EVERY single character from EVERY position (the coverage
     # guarantee — a char only appearing past the substring window
@@ -576,7 +566,7 @@ def unigram_train_vocab_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only for the driver (float-iterative), pytests pin exact
     pure-python parity, coverage, and a corpus marginal-likelihood
     win over the hard-EM vocabulary."""
-    vocab = _word_freq(spark, sf_dir).localCheckpoint()  # ONE corpus scan
+    vocab = materialize(_word_freq(spark, sf_dir), "iterative")  # ONE corpus scan
 
     char_col = F.expr(
         "transform(sequence(1, length(word)), i -> substring(word, i, 1))"

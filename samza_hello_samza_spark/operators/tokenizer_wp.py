@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from ..session import load_table
+from ..session import load_table, materialize
 from .dedup import explode_nonempty
 from .tokenizer import _adjacent_pairs, _word_freq
 
@@ -140,7 +140,7 @@ def wordpiece_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ELSE '##' || substring(word, i, 1) END)"
             ).alias("symbols"),
         )
-        .localCheckpoint()
+        .transform(materialize, "iterative")
     )
     merges: list[tuple[int, str, str, str, int, int, int]] = []
     for rank in range(N_WP_MERGES):
@@ -175,7 +175,7 @@ def wordpiece_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         vocab = vocab.withColumn(
             "symbols", _wp_merge_udf(l, r)(F.col("symbols"))
-        ).localCheckpoint()
+        ).transform(materialize, "iterative")
     return spark.createDataFrame(
         merges,
         "rank int, left string, right string, merged string,"

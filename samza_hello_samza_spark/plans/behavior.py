@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
 from ..operators.samza_surface import sessionized
-from ..session import load_table
+from ..session import load_table, materialize
 
 PATH_LEN = 5
 TOP_PATHS = 20
@@ -199,7 +199,7 @@ def user_recency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(day).alias("last_day"),
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,4)")).cast("decimal(18,2)").alias("ltv"),
-    ).localCheckpoint()  # users-sized; feeds the anchor AND the rollup
+    ).transform(materialize, "bounded")  # users-sized; feeds the anchor AND the rollup
     # corpus max day == max over the per-user maxima: derive the anchor
     # from the materialized per-user relation instead of a second
     # events scan (same integer, one corpus pass total).
@@ -294,7 +294,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # customers-sized; consumed by the cohort sizes AND the grid join —
     # one orders aggregation instead of one per consumer.
-    first = o.groupBy("o_custkey").agg(F.min("ym").alias("cohort")).localCheckpoint()
+    first = materialize(o.groupBy("o_custkey").agg(F.min("ym").alias("cohort")), "bounded")
     sizes = first.groupBy("cohort").agg(F.count(F.lit(1)).alias("n_customers"))
     grid = (
         o.join(first, "o_custkey")
@@ -346,7 +346,7 @@ def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # distinct (user, type) pairs consumed 3× (sizes + both self-join
     # sides): one events scan + distinct shuffle instead of three.
-    ut = ev.select("user_id", "event_type").distinct().localCheckpoint()
+    ut = ev.select("user_id", "event_type").distinct().transform(materialize, "bounded")
     sizes = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = ut.alias("a")
     b = ut.alias("b")

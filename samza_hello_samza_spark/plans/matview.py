@@ -35,7 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import index_base_dir, load_table, read_parquet
+from ..session import index_base_dir, load_table, materialize, read_parquet
 
 HLL_LGK = 12
 MEASURES = ("n_events", "sum_value", "users_hll")
@@ -90,7 +90,7 @@ def refresh_mv(spark: SparkSession, out_dir: str, delta: DataFrame) -> list[int]
     Returns the list of refreshed days. Single-writer contract per
     partition, like every Hive-style dynamic overwrite.
     """
-    delta_grain = _grain(delta).localCheckpoint()  # delta-sized; days for pruning
+    delta_grain = materialize(_grain(delta), "bounded")  # delta-sized; days for pruning
     days = [r.day for r in delta_grain.select("day").distinct().collect()]
     if not days:
         return []

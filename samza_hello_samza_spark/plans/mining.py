@@ -26,12 +26,11 @@ affect row membership).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 
 PMI_MIN_SUPPORT = 3
 PMI_TOP_K = 30
@@ -64,9 +63,8 @@ def basket_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
     # pairs + item counts + total share one derivation; one row per
-    # ORDER with the full part array — fact-linear in bytes →
-    # spillable persist, not pinned deserialized memory (r12, #4).
-    baskets = baskets.persist(StorageLevel.MEMORY_AND_DISK)
+    # order with the full part array
+    baskets = materialize(baskets, "corpus")
     pairs = (
         baskets.filter(F.size("parts") > 1)
         .select(F.expr(_PAIR_EXPR).alias("p"))
@@ -81,7 +79,7 @@ def basket_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         # parts-sized, consumed by BOTH pair-side joins (n_a and n_b):
         # materialize once so the basket explode+agg runs one time —
         # the plan audit showed it once per join side.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     total = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
     ia = items.select(F.col("part").alias("part_a"), F.col("n_item").alias("n_a"))
@@ -129,9 +127,8 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_set("l_partkey")).alias("parts")
     )
     # pairs + item counts + total share one derivation; one row per
-    # ORDER with the full part array — fact-linear in bytes →
-    # spillable persist, not pinned deserialized memory (r12, #4).
-    baskets = baskets.persist(StorageLevel.MEMORY_AND_DISK)
+    # order with the full part array
+    baskets = materialize(baskets, "corpus")
     pairs = (
         baskets.filter(F.size("parts") > 1)
         .select(F.expr(_PAIR_EXPR).alias("p"))
@@ -141,7 +138,7 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         # supported-pairs-sized, consumed by BOTH direction branches of
         # the union below: materialize once so the in-row pair explode
         # + aggregation runs one time, not once per branch.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     # both rule directions from each unordered pair
     directed = pairs.select(
@@ -157,7 +154,7 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_item"))
         # parts-sized, consumed by BOTH rule-side joins: one explode+agg
         # pass instead of one per side (same as basket_pmi).
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     ia = items.select(F.col("part").alias("antecedent"), F.col("n_item").alias("n_a"))
     ib = items.select(F.col("part").alias("consequent"), F.col("n_item").alias("n_b"))

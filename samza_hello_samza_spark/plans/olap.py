@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
@@ -334,7 +334,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     c = (
         ev.filter(F.col("event_type") == "click")
@@ -342,7 +342,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")
@@ -435,7 +435,7 @@ def parts_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-points sized; consumed by the in-bucket window, the
     # bucket maxima AND the survivor filter — one part scan+dedup
     # instead of one per consumer.
-    pts = pts.localCheckpoint()
+    pts = materialize(pts, "bounded")
     w_in = (
         Window.partitionBy("_bucket")
         .orderBy(F.asc("price"), F.desc("size"))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 
 
 def _check_row(check: str, table: str, n_bad: F.Column, n_total: F.Column):
@@ -106,7 +106,7 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(pfx(p_agg, "p"))
         .crossJoin(pfx(e_agg, "e"))
         .crossJoin(pfx(d_agg, "d"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
 
     def rows(specs: list[tuple[str, str, str, str]]) -> DataFrame:

@@ -27,12 +27,11 @@ engines (two-sum entropy form proven by text_entropy).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import load_table
+from ..session import load_table, materialize
 
 
 def revenue_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -109,7 +108,7 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(rev.alias("srev"))
         # suppliers-sized; consumed by the nation totals AND the HHI
         # aggregate — one lineitem join+reduction instead of two.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     totals = per_supp.groupBy("n_name").agg(F.sum("srev").alias("trev"))
     share = F.col("srev").cast("double") / F.col("trev").cast("double")
@@ -237,7 +236,7 @@ def segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Round in the DECIMAL domain (HALF_UP in both engines) before
         # the double cast — double-domain round() diverges on .XX50.
         F.sum("price").cast("decimal(18,2)").cast("double").alias("rev")
-    ).localCheckpoint()  # customers-sized; consumed by cuts AND assignment
+    ).transform(materialize, "bounded")  # customers-sized; cuts AND assignment
     cuts = per_cust.groupBy("period").agg(
         F.round(F.percentile("rev", 0.25), 6).alias("q1"),
         F.round(F.percentile("rev", 0.5), 6).alias("q2"),
@@ -251,7 +250,7 @@ def segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = per_cust.join(maybe_broadcast(cuts), "period").select(
         "o_custkey", "period", seg.alias("seg")
-    ).localCheckpoint()  # consumed by BOTH period sides of the matrix join
+    ).transform(materialize, "bounded")  # BOTH period sides of the matrix join
     p1 = assigned.filter(F.col("period") == 1).select(
         "o_custkey", F.col("seg").alias("seg_from")
     )
@@ -287,7 +286,7 @@ def benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()  # ≤9 rows; consumed by the total AND the report
+        .transform(materialize, "bounded")  # ≤9 rows; the total AND the report
     )
     total = counts.agg(F.sum("n").alias("total"))
     expected = F.log10(1 + 1 / F.col("digit").cast("double"))
@@ -317,12 +316,11 @@ def price_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    # 2 narrow cols; consumed by all 3 percentile passes — but one row
-    # per LINEITEM (fact-linear) → recomputable spillable persist,
-    # not an in-memory lineage cut (r12, VERDICT r11 #4 discipline).
+    # 2 narrow cols; consumed by all 3 percentile passes; one row per
+    # lineitem
     priced = li.join(maybe_broadcast(part), li.l_partkey == part.p_partkey).select(
         "p_type", F.col("l_extendedprice").alias("x")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).transform(materialize, "corpus")
     med = priced.groupBy("p_type").agg(
         F.round(F.percentile("x", 0.5), 6).alias("med")
     )
@@ -358,7 +356,7 @@ def priority_mix_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cells = orders.groupBy(
         F.year("o_orderdate").alias("yr"), F.col("o_orderpriority").alias("pr")
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
+    ).agg(F.count(F.lit(1)).alias("n")).transform(materialize, "bounded")
     # ^ years×priorities bounded; consumed by 3 marginal aggregates +
     #   the χ² join — one orders scan instead of four.
     row_tot = cells.groupBy("yr").agg(F.sum("n").alias("rn"))
@@ -420,7 +418,7 @@ def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("n_purch") >= AB_MIN_PURCHASES).cast("long")).alias(
             "n_converters"
         ),
-    ).localCheckpoint()  # 2 rows; consumed by itself AND the other-arm side
+    ).transform(materialize, "bounded")  # 2 rows; itself AND the other-arm side
     other = per_arm.select(
         (1 - F.col("arm")).alias("arm"),
         F.col("n_users").alias("o_users"),
@@ -473,7 +471,7 @@ def daily_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
     ).agg(F.sum(F.col("value").cast("decimal(18,4)")).cast("decimal(18,2)").alias("v"))
     # (type, day)-bounded; consumed by the totals AND the prefix window
-    daily = daily.localCheckpoint()
+    daily = materialize(daily, "bounded")
     totals = daily.groupBy("event_type").agg(
         F.sum("v").alias("tv"), F.count(F.lit(1)).alias("nd")
     )

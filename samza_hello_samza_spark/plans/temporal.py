@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..session import load_table
+from ..session import load_table, materialize
 
 TOP_K = 3
 DECAY_TAU_SEC = 604_800  # 7 days
@@ -230,7 +230,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = (F.unix_timestamp("ts") / 86400).cast("bigint")
     # distinct (day, user) consumed TWICE (day set + anchor fanout):
     # one events scan + distinct shuffle instead of two.
-    user_days = ev.select(day.alias("day"), "user_id").distinct().localCheckpoint()
+    user_days = materialize(ev.select(day.alias("day"), "user_id").distinct(), "bounded")
     days = user_days.select("day").distinct()
     anchors = user_days.select(
         F.explode(
@@ -265,7 +265,7 @@ def rolling_active_users_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.hll_sketch_agg("user_id").alias("sk"))
         # days-sized (~KB sketches); consumed by the day set AND the
         # anchor fanout — one events scan + sketch fold instead of two.
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     days = day_sketches.select("day")
     anchors = day_sketches.select(
@@ -1406,7 +1406,7 @@ def customer_pareto_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         # showed the lineitem⋈orders join + aggregation running once
         # per consumer (3 full fact scans)
         .agg(F.sum(term).cast("decimal(18,2)").cast("double").alias("rev"))
-        .localCheckpoint()
+        .transform(materialize, "bounded")
     )
     qs = [i / PARETO_NBUCKETS for i in range(1, PARETO_NBUCKETS)]
     cuts = rev.agg(F.percentile("rev", F.lit(qs)).alias("cuts"))

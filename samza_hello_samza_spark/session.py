@@ -21,8 +21,10 @@ import tempfile
 import threading
 import uuid
 from collections import OrderedDict
+from contextlib import contextmanager
 from urllib.parse import unquote, urlsplit
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -338,3 +340,87 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.repartition(par)
     return df
 
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint()
+
+
+def _persist(df: DataFrame) -> DataFrame:
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+#: materialisation role -> storage action (the policy is in
+#: ``materialize``'s docstring).
+ROLES = {
+    "iterative": _checkpoint,
+    "overwrite_barrier": _checkpoint,
+    "bounded": _checkpoint,
+    "corpus": _persist,
+}
+
+#: per thread, the open ``released()`` scopes, innermost last; a
+#: foreachBatch fold runs on its own thread and so in its own scope.
+_SCOPES = threading.local()
+
+
+def materialize(df: DataFrame, role: str) -> DataFrame:
+    """``df`` materialised the way its ``role`` says; every
+    ``localCheckpoint``/``persist`` in the package goes through here.
+
+    The role is a reason the caller knows and this helper cannot see:
+
+    - ``iterative`` -> ``localCheckpoint()``. Loop state and the
+      inputs every round re-reads: pagerank, kcore and label rounds,
+      BPE and WordPiece merges, k-center, the quality-classifier
+      gradient. Each round must cut the lineage, or the plan grows
+      with the round count; a persist keeps the lineage.
+    - ``overwrite_barrier`` -> ``localCheckpoint()``. The sink is the
+      path the plan reads: merge rewrites, sidecar and stats
+      refreshes, the IVF rebalance. A lazy persist would read the
+      files the write is replacing.
+    - ``bounded`` -> ``localCheckpoint()``. Entity-bounded aggregates
+      and candidate-pair sets that two or more jobs read: small, and
+      evaluated once, eagerly.
+    - ``corpus`` -> ``persist(MEMORY_AND_DISK)``. Corpus-linear
+      relations (shingles, signatures, n-gram counts, postings) and
+      drained topic batches. Lazy, so it folds into the first
+      consumer's job; spillable; never pinned deserialized in executor
+      memory; and recomputed from its lineage when a block is lost.
+
+    Inside a ``released()`` scope the handle is registered with the
+    innermost one and freed when it exits; outside any scope nothing
+    tracks it.
+    """
+    out = ROLES[role](df)
+    if getattr(_SCOPES, "stack", None):
+        _SCOPES.stack[-1].append((out, role))
+    return out
+
+
+def _release(df: DataFrame, role: str) -> None:
+    """Free ``df``'s blocks and wait for the removal to finish."""
+    if ROLES[role] is _checkpoint:
+        # PySpark exposes no handle on a localCheckpoint's RDD; the
+        # analyzed plan of the checkpointed frame is a LogicalRDD over it.
+        df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+    else:
+        df.unpersist(True)
+
+
+@contextmanager
+def released():
+    """Scope in which every ``materialize`` handle is released on exit.
+
+    Exit comes after the scope's last action: a checkpointed frame
+    used after its release fails with
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. Release blocks until the
+    blocks are gone, so no removal work leaks past the scope. Scopes
+    nest; each handle belongs to the innermost one open on its thread.
+    """
+    stack = _SCOPES.__dict__.setdefault("stack", [])
+    stack.append([])
+    try:
+        yield
+    finally:
+        for df, role in reversed(stack.pop()):
+            _release(df, role)

@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..operators.dedup import explode_nonempty
-from ..session import read_parquet, write_json_atomic
+from ..session import load_table, materialize, read_parquet, write_json_atomic
 
 BLOOM_SIDECAR_DIRNAME = "_file_blooms"
 FB_K = 3  # md5 hex slices per key — same family as functions/bloom
@@ -241,7 +241,7 @@ def refresh_merged_buckets(
     kept = (
         read_parquet(spark, out, schema=SIDECAR_SCHEMA)
         .filter(~touched_col)
-        .localCheckpoint()
+        .transform(materialize, "overwrite_barrier")
     )
     dirs = [
         os.path.join(table_dir, f"_bucket={b}")
@@ -351,7 +351,6 @@ def _date_clustered_orders(spark: SparkSession, sf_dir: str) -> str:
     it, cut into ~``_FB_FILES`` files by ``maxRecordsPerFile`` — the
     row count comes from the source footers."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "orders_bydate")
     schema = None

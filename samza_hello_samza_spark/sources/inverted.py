@@ -42,12 +42,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _words, explode_nonempty
-from ..session import read_parquet, write_json_atomic
+from ..session import load_table, materialize, read_parquet, released, write_json_atomic
 from ..streaming.sinks import applied_once, fold_stream
 
 N_TBUCKETS = 64
@@ -93,27 +92,24 @@ def append_documents(spark: SparkSession, index_dir: str, docs: DataFrame) -> in
     micro-batches a no-op via applied-batch markers. Returns the
     number of posting rows appended."""
     words = explode_nonempty(docs, ["doc_id"], _words(F.col("text")), "word")
-    postings = (
-        words.select("word", "doc_id")
-        .distinct()
-        .withColumn(
-            "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+    with released():
+        postings = (
+            words.select("word", "doc_id")
+            .distinct()
+            .withColumn(
+                "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+            )
+            # count + write without re-tokenizing
+            .transform(materialize, "corpus")
         )
-        # count + write without re-tokenizing; token-linear posting
-        # rows → recomputable spillable persist, not pinned memory (r12,
-        # VERDICT r11 #4 — the docs source outlives the build, so
-        # block loss recomputes instead of failing the ingest).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = postings.count()
-    if n:
-        (
-            postings.repartition("tbucket")
-            .write.mode("append")
-            .partitionBy("tbucket")
-            .parquet(index_dir)
-        )
-    postings.unpersist()  # streaming updaters fold many batches per process
+        n = postings.count()
+        if n:
+            (
+                postings.repartition("tbucket")
+                .write.mode("append")
+                .partitionBy("tbucket")
+                .parquet(index_dir)
+            )
     return n
 
 
@@ -205,25 +201,24 @@ def append_documents_positional(
     run ingest through ``postings_updater``-style applied-batch
     markers. Returns posting rows appended."""
     tokenized = docs.select("doc_id", _words(F.col("text")).alias("_ws"))
-    postings = (
-        tokenized.filter(F.size("_ws") > 0)
-        .select("doc_id", F.posexplode("_ws").alias("pos", "word"))
-        .withColumn(
-            "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+    with released():
+        postings = (
+            tokenized.filter(F.size("_ws") > 0)
+            .select("doc_id", F.posexplode("_ws").alias("pos", "word"))
+            .withColumn(
+                "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+            )
+            # count + write without re-tokenizing
+            .transform(materialize, "corpus")
         )
-        # count + write without re-tokenizing; token-linear (one row
-        # per position) → spillable persist, not pinned memory (r12, #4).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = postings.count()
-    if n:
-        (
-            postings.repartition("tbucket")
-            .write.mode("append")
-            .partitionBy("tbucket")
-            .parquet(index_dir)
-        )
-    postings.unpersist()  # streaming updaters fold many batches per process
+        n = postings.count()
+        if n:
+            (
+                postings.repartition("tbucket")
+                .write.mode("append")
+                .partitionBy("tbucket")
+                .parquet(index_dir)
+            )
     return n
 
 
@@ -312,7 +307,6 @@ def proximity_search_positional(
 
 def _documents_index(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "inverted_documents")
     if not _is_built(out):
@@ -333,7 +327,6 @@ def term_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _documents_positional_index(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "positional_documents")
     if not _is_built(out):
@@ -371,7 +364,6 @@ def phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``phrase_search`` — the layout changes WHERE positions are read
     from, not what the query means."""
     from ..operators.sampling import PHRASE
-    from ..session import load_table
 
     index_dir = _documents_positional_index(spark, sf_dir)
     hits = phrase_search_positional(spark, index_dir, list(PHRASE))
@@ -518,37 +510,36 @@ def build_bm25_index(
     n_docs = int(st.n_docs)
     total_dl = int(st.total_dl or 0)
     avgdl = (total_dl / n_docs) if n_docs else 1.0
-    postings = (
-        explode_nonempty(
-            words,
-            ["doc_id", F.size("words").alias("dl"), *attr_cols],
-            F.col("words"),
-            "word",
+    with released():
+        postings = (
+            explode_nonempty(
+                words,
+                ["doc_id", F.size("words").alias("dl"), *attr_cols],
+                F.col("words"),
+                "word",
+            )
+            .groupBy("word", "doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("tf"),
+                F.max("dl").alias("dl"),
+                *[F.max(a).alias(a) for a in attr_cols],
+            )
+            .withColumn(
+                "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+            )
+            .withColumn("tier", _tier_col(avgdl or 1.0))
+            # postings + impacts from ONE tokenize pass
+            .transform(materialize, "corpus")
         )
-        .groupBy("word", "doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("tf"),
-            F.max("dl").alias("dl"),
-            *[F.max(a).alias(a) for a in attr_cols],
+        (
+            postings.repartition("tbucket")
+            .sortWithinPartitions("tbucket", "tier", "word", "doc_id")
+            .write.mode("overwrite")
+            .partitionBy("tbucket", "tier")
+            .parquet(out_dir)
         )
-        .withColumn(
-            "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
-        )
-        .withColumn("tier", _tier_col(avgdl or 1.0))
-        # postings + impacts from ONE tokenize pass; token-linear →
-        # spillable persist, not pinned memory (r12, VERDICT r11 #4).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    (
-        postings.repartition("tbucket")
-        .sortWithinPartitions("tbucket", "tier", "word", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("tbucket", "tier")
-        .parquet(out_dir)
-    )
-    _write_bm25_impacts(postings, out_dir, "overwrite", attr_cols=attr_cols)
-    _write_bm25_stats(out_dir, n_docs, total_dl, attr_cols=attr_cols)
-    postings.unpersist()
+        _write_bm25_impacts(postings, out_dir, "overwrite", attr_cols=attr_cols)
+        _write_bm25_stats(out_dir, n_docs, total_dl, attr_cols=attr_cols)
     return out_dir
 
 
@@ -627,45 +618,44 @@ def append_documents_bm25(
     batch = lengths.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
     ).first()
-    postings = (
-        explode_nonempty(
-            words,
-            ["doc_id", F.size("words").alias("dl")],
-            F.col("words"),
-            "word",
+    with released():
+        postings = (
+            explode_nonempty(
+                words,
+                ["doc_id", F.size("words").alias("dl")],
+                F.col("words"),
+                "word",
+            )
+            .groupBy("word", "doc_id")
+            .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
+            .withColumn(
+                "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
+            )
+            # tier by the CURRENT sidecar avgdl — a physical placement
+            # choice only (block bounds are re-derived at query time), so
+            # batches tiered under different avgdl snapshots stay correct
+            .withColumn("tier", _tier_col(st["avgdl"] or 1.0))
+            # count + write without re-tokenizing
+            .transform(materialize, "corpus")
         )
-        .groupBy("word", "doc_id")
-        .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .withColumn(
-            "tbucket", F.pmod(F.xxhash64("word"), F.lit(N_TBUCKETS)).cast("int")
-        )
-        # tier by the CURRENT sidecar avgdl — a physical placement
-        # choice only (block bounds are re-derived at query time), so
-        # batches tiered under different avgdl snapshots stay correct
-        .withColumn("tier", _tier_col(st["avgdl"] or 1.0))
-        # count + write without re-tokenizing; token-linear → spillable
-        # persist, not pinned memory (r12, VERDICT r11 #4).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n = postings.count()
-    if int(batch.n_docs):
-        (
-            postings.repartition("tbucket")
-            .sortWithinPartitions("tbucket", "tier", "word", "doc_id")
-            .write.mode("append")
-            .partitionBy("tbucket", "tier")
-            .parquet(index_dir)
-        )
-        _write_bm25_impacts(postings, index_dir, "append")
-        # pre-r08b sidecars lack total_dl; derive it (exact for
-        # integer dl: avgdl was stored as total/n of exact ints)
-        old_total = int(st.get("total_dl", round(st["avgdl"] * st["n_docs"])))
-        _write_bm25_stats(
-            index_dir,
-            int(st["n_docs"]) + int(batch.n_docs),
-            old_total + int(batch.total_dl or 0),
-        )
-    postings.unpersist()  # streaming updaters fold many batches per process
+        n = postings.count()
+        if int(batch.n_docs):
+            (
+                postings.repartition("tbucket")
+                .sortWithinPartitions("tbucket", "tier", "word", "doc_id")
+                .write.mode("append")
+                .partitionBy("tbucket", "tier")
+                .parquet(index_dir)
+            )
+            _write_bm25_impacts(postings, index_dir, "append")
+            # pre-r08b sidecars lack total_dl; derive it (exact for
+            # integer dl: avgdl was stored as total/n of exact ints)
+            old_total = int(st.get("total_dl", round(st["avgdl"] * st["n_docs"])))
+            _write_bm25_stats(
+                index_dir,
+                int(st["n_docs"]) + int(batch.n_docs),
+                old_total + int(batch.total_dl or 0),
+            )
     return n
 
 
@@ -1492,7 +1482,7 @@ def bm25_batch_wand_topk(
         # persist, not an eager localCheckpoint: the (query, doc)
         # accumulator is corpus-linear, and the lazy persist folds its
         # materialization into the θ job below.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .transform(materialize, "corpus")
     )
     # the candidate criterion, shared by the θ pass's count and the
     # candidate filter itself (same doubles → same rows)
@@ -1593,7 +1583,7 @@ def bm25_batch_wand_topk(
         cand = (
             agg1.join(F.broadcast(qmeta), "query_id")
             .filter(survives)
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .transform(materialize, "corpus")
         )
         # the θ pass counted the candidates exactly, so the phase-2
         # semi-join's build side is sized from that runtime count
@@ -1702,7 +1692,6 @@ def _documents_positional_incremental(spark: SparkSession, sf_dir: str) -> str:
     batch's files."""
     from ..operators.dedup import _md5_slice32 as _slice32
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
 
     root = os.path.join(_index_root(), _tag(sf_dir))
     out = os.path.join(root, "positional_documents_incr")
@@ -1816,7 +1805,6 @@ def _documents_bm25_incremental(spark: SparkSession, sf_dir: str) -> str:
     forever)."""
     from ..operators.ann_index import _index_root, _tag
     from ..operators.dedup import _md5_slice32 as _slice32
-    from ..session import load_table
 
     root = os.path.join(_index_root(), _tag(sf_dir))
     out = os.path.join(root, "bm25_documents_incr")
@@ -1914,7 +1902,6 @@ def bm25_ingest_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _documents_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "bm25_documents")
     if not _bm25_built(out):
@@ -1935,7 +1922,6 @@ def _documents_bm25_label_index(spark: SparkSession, sf_dir: str) -> str:
     separate layout dir from the plain index: attribute denormalizing
     is a build-time schema choice, exactly as in production."""
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
 
     out = os.path.join(_index_root(), _tag(sf_dir), "bm25_documents_label")
     if not _bm25_built(out):

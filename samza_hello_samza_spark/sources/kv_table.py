@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.hints import maybe_broadcast
-from ..session import read_parquet
+from ..session import materialize, read_parquet, released
 from ..streaming.sinks import fold_stream
 
 
@@ -78,11 +78,11 @@ class KVTable:
 
     def compact(self) -> None:
         """Fold the upsert log into a single version."""
-        snap = self.snapshot().cache()
-        snap.count()  # materialize before deleting source versions
-        version = self._next_version()
-        snap.write.mode("overwrite").parquet(os.path.join(self.path, f"v={version}"))
-        snap.unpersist()
+        with released():
+            snap = materialize(self.snapshot(), "corpus")
+            snap.count()  # materialize before deleting source versions
+            version = self._next_version()
+            snap.write.mode("overwrite").parquet(os.path.join(self.path, f"v={version}"))
         import shutil
 
         for d in list(os.listdir(self.path)):

@@ -45,7 +45,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_parquet, write_json_atomic
+from ..session import load_table, materialize, read_parquet, write_json_atomic
 
 DEFAULT_BUCKETS = 32
 
@@ -187,7 +187,7 @@ def _merge_rows(
     # (correctly) to overwrite a path its own plan still reads.
     # The checkpoint holds touched-bucket rows only — the bound the
     # whole design exists to provide.
-    merged = merged.localCheckpoint()
+    merged = materialize(merged, "overwrite_barrier")
     counts = joined.agg(
         F.sum((matched & ~deleting).cast("long")).alias("updated"),
         F.sum((matched & deleting).cast("long")).alias("deleted"),
@@ -262,7 +262,7 @@ class MergeTable:
         """
         key = self.key_col
         _validate_merge_source(source, key)
-        src = source.withColumn("_bucket", self._bucket()).localCheckpoint()
+        src = materialize(source.withColumn("_bucket", self._bucket()), "bounded")
         touched = sorted(r._bucket for r in src.select("_bucket").distinct().collect())
         if not touched:
             return {"inserted": 0, "updated": 0, "deleted": 0, "buckets": []}
@@ -544,7 +544,7 @@ class VersionedMergeTable:
         # route the source by the CURRENT snapshot's partition spec —
         # after a rebucket the constructor's n_buckets may be stale.
         spec = self._spec(man, man["current"])
-        src = source.withColumn("_bucket", self._bucket(spec)).localCheckpoint()
+        src = materialize(source.withColumn("_bucket", self._bucket(spec)), "bounded")
         touched = sorted(
             r._bucket for r in src.select("_bucket").distinct().collect()
         )
@@ -730,8 +730,8 @@ class VersionedMergeTable:
         full = self._read_snapshot(snap, dvs=dvs)
         if full is None:
             return {"deleted": 0, "buckets": [], "version": cur}
-        doomed = (
-            full.filter(cond).select(self.key_col, "_bucket").localCheckpoint()
+        doomed = materialize(
+            full.filter(cond).select(self.key_col, "_bucket"), "bounded"
         )
         touched = sorted(
             r._bucket for r in doomed.select("_bucket").distinct().collect()
@@ -781,7 +781,7 @@ class VersionedMergeTable:
         nonce = self._claim(new_version)
         present: set[int] = set()
         if rows is not None:
-            rows = rows.localCheckpoint()
+            rows = materialize(rows, "overwrite_barrier")
             (
                 rows.repartition("_bucket")
                 .write.mode("overwrite")
@@ -1097,7 +1097,7 @@ class VersionedMergeTable:
         rows = (
             full.drop("_bucket")
             .withColumn("_bucket", self._bucket(n_buckets))
-            .localCheckpoint()  # source reads the dirs the commit supersedes
+            .transform(materialize, "overwrite_barrier")
         )
         new_version = cur + 1
         nonce = self._claim(new_version)
@@ -1180,7 +1180,7 @@ class VersionedMergeTable:
             )
             .sortWithinPartitions("_bucket", "_zblock", "_zcode")
             .drop("_zcode", "_zblock")
-            .localCheckpoint()
+            .transform(materialize, "overwrite_barrier")
         )
         new_version = cur + 1
         nonce = self._claim(new_version)
@@ -1512,7 +1512,6 @@ def _cdf_orders_table(
     from pyspark.sql import Window
 
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
 
     path = _os.path.join(_index_root(), _tag(sf_dir), name)
     tbl = VersionedMergeTable(spark, path, "o_custkey", n_buckets=16)
@@ -1743,7 +1742,6 @@ def orders_cdf_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
 
     base = _cdf_orders_table(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
@@ -1767,7 +1765,7 @@ def orders_cdf_join_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         net = (
             ch.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .localCheckpoint()  # change-batch-sized, read twice below
+            .transform(materialize, "bounded")  # change-batch-sized, read twice below
         )
         ups = (
             net.filter(F.col("_change_type") != "delete")
@@ -1837,7 +1835,6 @@ def orders_restore_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from ..operators.ann_index import _index_root, _tag
-    from ..session import load_table
     from ..streaming.maintenance import apply_cdf_to_join_mv, publish_cdf
     from .topic_log import TopicLog
 

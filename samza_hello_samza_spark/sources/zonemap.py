@@ -42,7 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import read_parquet
+from ..session import load_table, materialize, read_parquet
 
 STATS_DIRNAME = "_zonemap"
 
@@ -217,7 +217,6 @@ def _zordered_lineitem(spark: SparkSession, sf_dir: str) -> str:
     graph-edge-table discipline (builds are warmup; queries time the
     steady-state pruned read)."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
     from .zorder import write_zordered
 
     out = os.path.join(_index_root(), _tag(sf_dir), "zorder_lineitem")
@@ -304,7 +303,7 @@ def refresh_merged_buckets(
     old = read_parquet(spark, out)
     # materialize BEFORE the overwrite below — the sink is the path
     # this very plan reads from.
-    kept = old.filter(~touched_col).localCheckpoint()
+    kept = old.filter(~touched_col).transform(materialize, "overwrite_barrier")
     dirs = [
         os.path.join(table_dir, f"_bucket={b}")
         for b in buckets
@@ -338,7 +337,6 @@ def _zordered_lineitem_ship(spark: SparkSession, sf_dir: str) -> str:
     epoch-day of l_shipdate, materialized so the zone map (numeric
     min/max) can skip on a date predicate."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
     from .zorder import write_zordered
 
     out = os.path.join(_index_root(), _tag(sf_dir), "zorder_lineitem_ship")
@@ -415,7 +413,6 @@ def _zordered_lineitem_brand(spark: SparkSession, sf_dir: str) -> str:
     scanning the fact table. ``_brand_num`` is the numeric brand id
     ('Brand#12' → 12) so the zone map can box it."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
     from .zorder import write_zordered
 
     out = os.path.join(_index_root(), _tag(sf_dir), "zorder_lineitem_brand")
@@ -501,7 +498,6 @@ def _clustered_lineitem_flag(spark: SparkSession, sf_dir: str) -> str:
     tight within each flag run. Same build-once index-root discipline
     as the numeric layouts."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
     from .zorder import write_clustered
 
     out = os.path.join(_index_root(), _tag(sf_dir), "clustered_lineitem_flag")
@@ -577,7 +573,6 @@ def _zordered_embeddings(spark: SparkSession, sf_dir: str) -> str:
     (d0, d1) space — a bounding box per file — so an L∞ box probe
     prunes at file listing exactly like the lineitem layouts."""
     from ..operators.ann_index import _index_root, _is_built, _tag
-    from ..session import load_table
     from .zorder import write_zordered
 
     out = os.path.join(_index_root(), _tag(sf_dir), "zorder_embeddings")

@@ -34,13 +34,15 @@ batch primitives, so the update path IS the tested batch path:
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ann_index import append_lsh_index
-from ..session import write_json_atomic
+from ..session import materialize, released, write_json_atomic
 from ..sources.incremental import VersionedState, update_aggregate_signed
 from ..sources.topic_log import TopicLog
 from .sinks import applied_once, fold_stream
@@ -92,8 +94,6 @@ def ivf_index_updater(
     vector (derived-column recompute in ``append_ivf_index``), so the
     binary Hamming probe serves streamed vectors with no extra step.
     """
-    import os
-
     from ..operators.ann_index import append_ivf_index, commit_index_snapshot
 
     def _fold(batch: DataFrame, _batch_id: int) -> None:
@@ -118,8 +118,6 @@ def mv_refresh_job(
     nothing, and a restarted query resumes where its checkpoint says.
     ``TxnView`` folds several sources in one atomic commit.
     """
-    import os
-
     from ..plans.matview import build_mv, refresh_mv
 
     def _fold(batch: DataFrame, _batch_id: int) -> None:
@@ -314,17 +312,22 @@ def _serve_batches(out_dir: str, cols: tuple[str, ...], answerer):
 
 
 def _vector_serving_job(
-    query_stream: DataFrame, out_dir: str, checkpoint_dir: str, top_k: int, probe
+    query_stream: DataFrame, out_dir: str, checkpoint_dir: str, top_k: int, snap_dir: str, probe
 ) -> StreamingQuery:
-    """Serve a stream of (query_id, v) rows: ``probe(spark, qvec)``
-    returns the query's (vec_id, v) candidates from the committed
-    snapshot, and ``similarity._cosine_topk`` re-ranks them."""
+    """Serve a stream of (query_id, v) rows: the manifest of
+    ``snap_dir`` is read once per micro-batch, so every query of
+    the batch reads one committed snapshot; ``probe(spark, qvec, man)``
+    returns the query's (vec_id, v) candidates from it, and
+    ``similarity._cosine_topk`` re-ranks them."""
+    from ..operators.ann_index import read_index_manifest
     from ..operators.similarity import _cosine_topk
 
     def answerer(spark):
+        man = read_index_manifest(snap_dir)
+
         def answer(q):
             qvec = np.asarray(q.v)
-            return _cosine_topk(probe(spark, qvec), qvec, top_k)
+            return _cosine_topk(probe(spark, qvec, man), qvec, top_k)
 
         return answer
 
@@ -347,13 +350,14 @@ def ann_serving_job(
 
     The query side of the live-index story: ``lsh_index_updater``
     appends vectors, ``commit_index_snapshot`` publishes them, and this
-    job answers a stream of (query_id, v) rows — each query resolves
-    the CURRENT committed snapshot (manifest read per probe: queries
-    never see a torn append), probes the pruned (band, code)
+    job answers a stream of (query_id, v) rows — each micro-batch
+    resolves the CURRENT committed snapshot once (one manifest read:
+    queries never see a torn append, and a commit landing mid-batch is
+    invisible until the next batch), probes the pruned (band, code)
     partitions, exact-cosine re-ranks, and writes
     (query_id, vec_id, cosine) results to a parquet sink, exactly
     once under replay (``_write_results_idempotent``). Per-batch
-    driver work is the manifest reads + per-query band-code hashes —
+    driver work is the one manifest read + per-query band-code hashes —
     query vectors are micro-batch-sized by definition.
 
     ``n_flips`` > 0 serves MULTI-PROBE: each band probes its own
@@ -369,14 +373,14 @@ def ann_serving_job(
         probe_lsh_snapshot_multi,
     )
 
-    def probe(spark, qvec):
+    def probe(spark, qvec, man):
         if n_flips > 0:
             return probe_lsh_snapshot_multi(
-                spark, index_dir, qvec, planes, band_bits, n_flips
+                spark, index_dir, qvec, planes, band_bits, n_flips, man=man
             )
-        return probe_lsh_snapshot(spark, index_dir, qvec, planes, band_bits)
+        return probe_lsh_snapshot(spark, index_dir, qvec, planes, band_bits, man=man)
 
-    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, index_dir, probe)
 
 
 def hybrid_serving_job(
@@ -443,8 +447,8 @@ def ivf_serving_job(
 ) -> StreamingQuery:
     """Serve ANN queries from a stream via the IVF route — the third
     member of the serving trilogy (LSH bands, PQ/ADC codes, IVF
-    lists). Per micro-batch, each query resolves the CURRENT
-    committed corpus snapshot, scans only its ``nprobe`` nearest
+    lists). Each micro-batch resolves the CURRENT committed corpus
+    snapshot once; each query scans only its ``nprobe`` nearest
     lists (partition pruning inside the manifest's file set —
     ``ann_index.probe_ivf_snapshot``), exact-cosine re-ranks them,
     and writes (query_id, vec_id, cosine) results exactly once under
@@ -452,10 +456,11 @@ def ivf_serving_job(
     """
     from ..operators.ann_index import probe_ivf_snapshot
 
-    def probe(spark, qvec):
-        return probe_ivf_snapshot(spark, index_dir, qvec, nprobe)
+    def probe(spark, qvec, man):
+        return probe_ivf_snapshot(spark, index_dir, qvec, nprobe, man=man)
 
-    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
+    corpus_dir = os.path.join(index_dir, "corpus")
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, corpus_dir, probe)
 
 
 def pq_serving_job(
@@ -476,18 +481,20 @@ def pq_serving_job(
     only the ``n_candidates`` finalists against the full ``vectors``
     relation via a broadcast semi-join on vec_id — the same
     candidates→re-rank shape as batch ``similarity.ann_pq_topk``.
-    The manifest is resolved at probe time, so an in-flight
-    ``append_pq_index`` is invisible until its
-    ``commit_index_snapshot``. Per-query driver work is one codebook
-    read (m×ksub rows) + the query's lookup tables.
+    The codes manifest is resolved once per micro-batch, so an
+    in-flight ``append_pq_index`` is invisible until its
+    ``commit_index_snapshot`` and the next batch. Per-query driver
+    work is one codebook read (m×ksub rows) + the query's lookup
+    tables.
     """
     from ..operators.ann_index import probe_pq_snapshot
 
-    def probe(spark, qvec):
-        ids = probe_pq_snapshot(spark, index_dir, qvec, n_candidates).select("vec_id")
+    def probe(spark, qvec, man):
+        ids = probe_pq_snapshot(spark, index_dir, qvec, n_candidates, man=man).select("vec_id")
         return vectors.join(F.broadcast(ids), "vec_id", "left_semi")
 
-    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, probe)
+    codes_dir = os.path.join(index_dir, "codes")
+    return _vector_serving_job(query_stream, out_dir, checkpoint_dir, top_k, codes_dir, probe)
 
 
 def cms_updater(
@@ -753,42 +760,42 @@ class TxnView:
 
         Returns total records folded (0 ⇒ no state version written)."""
         offsets = self.store.manifest()["applied"] or {}
-        partials = []
-        new_offsets: dict[str, dict[str, int]] = {}
-        total = 0
-        for name, topic in self.topics.items():
-            batch = topic.read_from(offsets.get(name, {})).cache()
-            n = batch.count()
-            total += n
-            ends = {
-                str(r.partition): int(r.end)
-                for r in batch.groupBy("partition")
-                .agg((F.max("offset") + 1).alias("end"))
-                .collect()
-            }
-            new_offsets[name] = {**offsets.get(name, {}), **ends}
-            if n:
-                partials.append(
-                    parse_events_json(batch)
-                    .groupBy(*self.keys)
-                    .agg(
-                        F.count(F.lit(1)).alias("n_events"),
-                        F.sum("value").alias("sum_value"),
+        with released():
+            partials = []
+            new_offsets: dict[str, dict[str, int]] = {}
+            total = 0
+            for name, topic in self.topics.items():
+                batch = materialize(topic.read_from(offsets.get(name, {})), "corpus")
+                n = batch.count()
+                total += n
+                ends = {
+                    str(r.partition): int(r.end)
+                    for r in batch.groupBy("partition")
+                    .agg((F.max("offset") + 1).alias("end"))
+                    .collect()
+                }
+                new_offsets[name] = {**offsets.get(name, {}), **ends}
+                if n:
+                    partials.append(
+                        parse_events_json(batch)
+                        .groupBy(*self.keys)
+                        .agg(
+                            F.count(F.lit(1)).alias("n_events"),
+                            F.sum("value").alias("sum_value"),
+                        )
+                        .withColumn("topic", F.lit(name))
                     )
-                    .withColumn("topic", F.lit(name))
-                )
-            batch.unpersist()
-        if total == 0:
-            return 0
-        delta = self.store.read()
-        for p in partials:
-            delta = delta.unionByName(p)
-        new_state = delta.groupBy(*self.keys, "topic").agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").alias("sum_value"),
-        )
-        self.store.commit({"state": new_state}, new_offsets)
-        return total
+            if total == 0:
+                return 0
+            delta = self.store.read()
+            for p in partials:
+                delta = delta.unionByName(p)
+            new_state = delta.groupBy(*self.keys, "topic").agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sum_value").alias("sum_value"),
+            )
+            self.store.commit({"state": new_state}, new_offsets)
+            return total
 
     def read_view(self) -> DataFrame:
         """The committed view, finalized per (keys, topic)."""
@@ -1183,7 +1190,7 @@ def fold_growth_accounting(
             .when(prev == F.col("day") - 1, F.lit("retained"))
             .otherwise(F.lit("resurrected"))
             .alias("kind"),
-        ).localCheckpoint()  # consumed by both folds below
+        ).transform(materialize, "bounded")  # consumed by both folds below
         delta_daily = classified.groupBy("day").agg(
             F.sum((F.col("kind") == "new").cast("long")).alias("n_new"),
             F.sum((F.col("kind") == "retained").cast("long")).alias("n_retained"),
@@ -1296,10 +1303,9 @@ def publish_cdf(table, topic: TopicLog, cursor_path: str, key_col: str) -> dict:
     reads each topic record exactly once per group).
     """
     import json as _json
-    import os as _os
 
     cur = 0
-    if _os.path.exists(cursor_path):
+    if os.path.exists(cursor_path):
         with open(cursor_path) as fh:
             cur = _json.load(fh)["version"]
     current = table.manifest()["current"]
@@ -1355,8 +1361,8 @@ def fold_cdf_from_topic(
     watermark already covers. Returns records folded
     (pre-watermark-filter drain size).
     """
-    batch = topic.read_batch(group).cache()
-    try:
+    with released():
+        batch = materialize(topic.read_batch(group), "corpus")
         n = batch.count()
         if n:
             wm = VersionedState(spark, state_path).manifest()["applied"] or 0
@@ -1393,8 +1399,6 @@ def fold_cdf_from_topic(
                 .collect()
             )
             topic.commit(group, {str(r.partition): int(r.end) for r in ends})
-    finally:
-        batch.unpersist()
     return n
 
 
@@ -1438,8 +1442,8 @@ def apply_cdf_to_join_mv(
     """
     from pyspark.sql import Window
 
-    batch = topic.read_batch(group).cache()
-    try:
+    with released():
+        batch = materialize(topic.read_batch(group), "corpus")
         n = batch.count()
         if n:
             changes = (
@@ -1452,7 +1456,7 @@ def apply_cdf_to_join_mv(
             net = (
                 changes.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
-                .localCheckpoint()
+                .transform(materialize, "bounded")
             )
             vmax = net.agg(F.max("_commit_version")).first()[0]
             payload = [
@@ -1477,8 +1481,6 @@ def apply_cdf_to_join_mv(
                 .collect()
             )
             topic.commit(group, {str(r.partition): int(r.end) for r in ends})
-    finally:
-        batch.unpersist()
     return n
 
 
@@ -1526,11 +1528,9 @@ def ann_drift_maintenance(
     pq_stats = retrain_pq_index(spark, pq_index_dir, vectors)
     out = {"ivf": ivf_stats, "pq": pq_stats, "vacuumed": 0}
     if vacuum:
-        import os as _os
-
         out["vacuumed"] = vacuum_index(
-            _os.path.join(ivf_index_dir, "corpus")
-        ) + vacuum_index(_os.path.join(pq_index_dir, "codes"))
+            os.path.join(ivf_index_dir, "corpus")
+        ) + vacuum_index(os.path.join(pq_index_dir, "codes"))
     return out
 
 
@@ -1571,8 +1571,6 @@ def ann_cdc_apply(
     list, and the upsert's COW rewrite touches only files holding
     changed ids. Single-maintainer, like every index writer.
     """
-    import os as _os
-
     from pyspark.sql import Window
 
     from ..operators.ann_index import (
@@ -1582,7 +1580,7 @@ def ann_cdc_apply(
         upsert_ivf_vectors,
     )
 
-    corpus_dir = _os.path.join(index_dir, "corpus")
+    corpus_dir = os.path.join(index_dir, "corpus")
     man = read_index_manifest(corpus_dir)
     if not man["files"]:
         raise FileNotFoundError(f"no committed snapshot in {corpus_dir}")
@@ -1604,7 +1602,7 @@ def ann_cdc_apply(
         ch.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .localCheckpoint()  # two consumers below; also bounds lineage
+        .transform(materialize, "bounded")  # two consumers below; also bounds lineage
     )
 
     dels = [r[0] for r in last.filter(F.col("_change_type") == "delete").select(key).collect()]

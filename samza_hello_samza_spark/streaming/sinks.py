@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import materialize, released
+
 BATCH_COL = "batch_id"
 
 
@@ -46,11 +48,13 @@ def fold_stream(
 ) -> StreamingQuery:
     """Start ``stream``, applying ``fold(batch, batch_id)`` to every
     non-empty micro-batch; the Spark checkpoint at ``checkpoint``
-    resumes it."""
+    resumes it. Each fold runs in its own ``released()`` scope, so
+    nothing it materialises outlives its batch."""
 
     def _batch(batch: DataFrame, batch_id: int) -> None:
         if not batch.isEmpty():
-            fold(batch, batch_id)
+            with released():
+                fold(batch, batch_id)
 
     writer = stream.writeStream.foreachBatch(_batch).outputMode(output_mode)
     if available_now:
@@ -62,7 +66,12 @@ def applied_once(checkpoint: str, fold):
     """``fold`` behind the applied-batch marker gate: a batch id whose
     marker exists folds nothing; otherwise the fold runs and its marker
     is written after it returns, so a fold that raises leaves none. The
-    markers live under the query's checkpoint and survive its restarts."""
+    markers live under the query's checkpoint and survive its restarts.
+
+    Only the markers Spark could still replay are kept: after batch N's
+    marker is written, those of batches N - ``minBatchesToRetain`` and
+    older are deleted. Spark's checkpoint keeps the same window, so it
+    never redelivers a batch that old."""
     marker_dir = os.path.join(checkpoint, "_applied")
     os.makedirs(marker_dir, exist_ok=True)
 
@@ -73,6 +82,10 @@ def applied_once(checkpoint: str, fold):
         fold(batch, batch_id)
         with open(marker, "w") as fh:
             fh.write("applied")
+        retain = int(batch.sparkSession.conf.get("spark.sql.streaming.minBatchesToRetain"))
+        for name in os.listdir(marker_dir):
+            if int(name.removeprefix("batch-")) <= batch_id - retain:
+                os.remove(os.path.join(marker_dir, name))
 
     return _once
 
@@ -139,7 +152,7 @@ def write_batch_validated(
     they broke — so the operator can replay them after a fix without
     re-deriving the reason. The split is ONE pass (a boolean column
     per constraint, computed once and reused by both filters inside
-    the same localCheckpoint), and each side is a dynamic-overwrite
+    the same materialisation), and each side is a dynamic-overwrite
     by-batch-id write: replaying a batch lands both sides on top of
     their previous output, so at-least-once delivery upgrades to
     effective exactly-once INCLUDING the dead letters.
@@ -161,7 +174,7 @@ def write_batch_validated(
                 lambda x: x.isNotNull(),
             )
         ),
-    ).localCheckpoint()  # evaluate the checks once for both routes
+    ).transform(materialize, "bounded")  # evaluate the checks once for both routes
     write_batch_idempotent(
         staged.filter(F.size("_violated") == 0).drop("_violated"), batch_id, path
     )

@@ -2459,3 +2459,56 @@ def test_hybrid_serving_sees_ingested_doc_on_both_legs(
     # and the fused rank reflects both legs (top of the fused list)
     top_doc = min(got[201].values(), key=lambda r: (-r.rrf, r.doc_id))
     assert top_doc.doc_id == NEW_VEC_ID
+
+
+def test_vector_serving_reads_one_manifest_per_batch(spark, tmp_path, monkeypatch):
+    """Each vector serving route pins one committed manifest per
+    micro-batch: a two-query batch reads it once, so a commit landing
+    mid-batch cannot split the batch across two snapshots."""
+    lsh = str(tmp_path / "lsh")
+    ann_index.build_lsh_index(
+        spark, SF_DIR, similarity.PLANES, similarity.LSH_BAND_BITS, out_dir=lsh
+    )
+    ann_index.commit_index_snapshot(lsh)
+    ivf = ann_index.build_ivf_index(
+        spark, SF_DIR, similarity.IVF_NLIST, out_dir=str(tmp_path / "ivf")
+    )
+    ann_index.commit_index_snapshot(os.path.join(ivf, "corpus"))
+    pq = ann_index.build_pq_index(
+        spark, SF_DIR, similarity.PQ_M, similarity.PQ_KSUB, out_dir=str(tmp_path / "pq")
+    )
+    ann_index.commit_index_snapshot(os.path.join(pq, "codes"))
+
+    emb = similarity._embeddings(spark, SF_DIR)
+    batch = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "v"
+    )
+    reads, folds = [], []
+    read = ann_index.read_index_manifest
+    monkeypatch.setattr(
+        ann_index,
+        "read_index_manifest",
+        lambda *a, **k: reads.append(a[0]) or read(*a, **k),
+    )
+    monkeypatch.setattr(
+        maintenance, "fold_stream", lambda _s, _ck, fold, **_kw: folds.append(fold)
+    )
+    ck = str(tmp_path / "ck")
+    lsh_args = (lsh, similarity.PLANES, similarity.LSH_BAND_BITS)
+    routes = {
+        "lsh": lambda out: maintenance.ann_serving_job(batch, *lsh_args, out, ck),
+        "lsh_multiprobe": lambda out: maintenance.ann_serving_job(
+            batch, *lsh_args, out, ck, n_flips=1
+        ),
+        "ivf": lambda out: maintenance.ivf_serving_job(
+            batch, ivf, out, ck, nprobe=similarity.IVF_NPROBE
+        ),
+        "pq": lambda out: maintenance.pq_serving_job(batch, pq, emb, out, ck),
+    }
+    for name, start in routes.items():
+        out = str(tmp_path / f"out_{name}")
+        start(out)
+        reads.clear()
+        folds[-1](batch, 0)
+        assert len(reads) == 1, (name, reads)
+        assert {r.query_id for r in spark.read.parquet(out).collect()} == {0, 1}, name

@@ -153,6 +153,29 @@ def test_applied_once_marker_path(spark, tmp_path):
     assert os.listdir(os.path.join(ck, "_applied")) == ["batch-42"]
 
 
+def test_applied_once_keeps_only_the_replayable_markers(spark, tmp_path):
+    """Markers older than Spark's own ``minBatchesToRetain`` window are
+    deleted, so the marker dir stays bounded; the batches still inside
+    the window, the latest included, still fold nothing on redelivery."""
+    ck = str(tmp_path / "ck")
+    batch = spark.range(4)
+    folded = []
+    once = sinks.applied_once(ck, _counting_fold(folded))
+    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "3")
+    try:
+        for batch_id in range(10):
+            once(batch, batch_id)
+            assert len(os.listdir(os.path.join(ck, "_applied"))) <= 3
+        once(batch, 9)  # redelivery of the latest batch
+        once(batch, 8)
+    finally:
+        spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
+    assert sorted(os.listdir(os.path.join(ck, "_applied"))) == [
+        "batch-7", "batch-8", "batch-9"
+    ]
+    assert folded == [(i, 4) for i in range(10)]
+
+
 def test_serving_loop_replay_overwrites_its_own_batch_partition(spark, tmp_path):
     """Replaying a batch id through the serving loop lands on its own
     ``_batch_id`` partition; the other batch stays untouched."""

@@ -20,6 +20,7 @@ spark = (SparkSession.builder.master("local[8]")
 # the checkout this script lives in, wherever it was copied to
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod
+from samza_hello_samza_spark.session import released
 
 # 1. smoke: entry()
 df = entry_mod.entry(spark)
@@ -55,9 +56,11 @@ if only:
 fails = 0
 results = {}
 for name, fn in sorted(qs.items()):
-    sdf = fn(spark, SF)
-    cols = sorted(sdf.columns)
-    srows = sorted("|".join(norm(r[c]) for c in cols) for r in sdf.collect())
+    # what the key materialised is freed before the next key runs
+    with released():
+        sdf = fn(spark, SF)
+        cols = sorted(sdf.columns)
+        srows = sorted("|".join(norm(r[c]) for c in cols) for r in sdf.collect())
     shash = hashlib.sha256("\n".join(srows).encode()).hexdigest()[:12]
     if name in os_:
         ddf = con.execute(os_[name]).df()
