@@ -45,7 +45,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment filter → 3-way join → agg → top-10.
 
     customer is broadcast (small dim); orders⋈lineitem shuffles on
-    o_orderkey only. Date filters push to both scans.
+    o_orderkey only. Date filters push to both scans. Revenue is summed
+    as DECIMAL(15,2) money, TPC-H's own type, so an order whose exact
+    sum ends on a half cent rounds up in both engines; a double sum
+    lands on either side of the half (390294.77499999997 for one such
+    order) and the engines round it differently.
     """
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
@@ -62,8 +66,14 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
@@ -433,7 +443,9 @@ ORACLES: dict[str, str] = {
     "q3_shipping_priority": """
         SELECT l_orderkey,
                CAST(o_orderdate AS VARCHAR) AS o_orderdate,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+                    AS DOUBLE) AS revenue
         FROM customer, orders, lineitem
         WHERE c_mktsegment = 'BUILDING'
           AND c_custkey = o_custkey

@@ -24,6 +24,7 @@ from collections import OrderedDict
 from contextlib import contextmanager
 from urllib.parse import unquote, urlsplit
 
+import pyspark
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -47,6 +48,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _fs_checkpoint_manager_class() -> str:
+    """Spark's FileSystem-based ``CheckpointFileManager`` for the
+    installed Spark: 4.1 moved it into a ``checkpointing`` package, and
+    a name that does not resolve fails every streaming query at start."""
+    version = tuple(int(x) for x in pyspark.__version__.split(".")[:2])
+    pkg = "org.apache.spark.sql.execution.streaming"
+    if version >= (4, 1):
+        pkg += ".checkpointing"
+    return f"{pkg}.FileSystemBasedCheckpointFileManager"
 
 
 def get_spark(app_name: str = "samza-hello-samza-spark", cpus: int | None = None) -> SparkSession:
@@ -78,6 +90,19 @@ def get_spark(app_name: str = "samza-hello-samza-spark", cpus: int | None = None
         # convert in load_table (truncating to micros, matching what
         # DuckDB does when it reads the same files).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Every streaming checkpoint file (offsets, commits, query
+        # metadata, the file-source and file-sink _spark_metadata logs,
+        # HDFS-backed state-store deltas, RocksDB checkpoint uploads) is
+        # written through the FileSystem-based manager. On a local FS
+        # Spark picks the FileContext-based one, which without native
+        # libhadoop forks 10 processes per atomic write (8 readlink for
+        # symlink resolution, 2 chmod); this one forks the 2 chmod
+        # (median per 300 B write on a 4-vCPU VM: 29 ms vs 9 ms). With
+        # overwriteIfPossible=False it checks that the target is absent,
+        # then renames, so a concurrent update to a log is still
+        # detected. Read only when a query or state store opens its
+        # checkpoint: no batch plan changes.
+        .config("spark.sql.streaming.checkpointFileManagerClass", _fs_checkpoint_manager_class())
     )
     return builder.getOrCreate()
 
@@ -100,6 +125,10 @@ def cluster_conf(
       the plans cover the known dims.
     - shuffle service + dynamic allocation let the fleet breathe
       between stages of very different widths.
+    - the streaming checkpoint manager is left to Spark: the local
+      factory's FileSystem-based manager commits a checkpoint file by
+      rename, which is atomic on a local FS and HDFS but not on an
+      object store (S3, GCS, ABFS without hierarchical namespace).
     """
     total_cores = executors * cores_per_executor
     return {

@@ -346,10 +346,11 @@ def _date_clustered_orders(spark: SparkSession, sf_dir: str) -> str:
     an orderkey zone map CANNOT prune (every file's key interval
     spans ~the whole domain) and the Bloom sidecar can.
 
-    One sorted pass: a range partition per ``_FB_RANGE_BYTES`` of input
-    (one at bench scale, so no sampling job), sorted by date within
-    it, cut into ~``_FB_FILES`` files by ``maxRecordsPerFile`` — the
-    row count comes from the source footers."""
+    One sorted pass: a range partition per ``_FB_RANGE_BYTES`` of input,
+    sorted by date within it, cut into ~``_FB_FILES`` files by
+    ``maxRecordsPerFile`` — the row count comes from the source
+    footers. One range (every bench scale) is a ``coalesce(1)``: no
+    sampling job and no exchange."""
     from ..operators.ann_index import _index_root, _is_built, _tag
 
     out = os.path.join(_index_root(), _tag(sf_dir), "orders_bydate")
@@ -359,9 +360,13 @@ def _date_clustered_orders(spark: SparkSession, sf_dir: str) -> str:
         n_ranges = math.ceil(sum(map(os.path.getsize, src)) / _FB_RANGE_BYTES)
         per_file = math.ceil(_footer_rows(src) / _FB_FILES)
         orders = load_table(spark, sf_dir, "orders")
+        ranged = (
+            orders.repartitionByRange(n_ranges, "o_orderdate")
+            if n_ranges > 1
+            else orders.coalesce(1)
+        )
         (
-            orders.repartitionByRange(max(1, n_ranges), "o_orderdate")
-            .sortWithinPartitions("o_orderdate")
+            ranged.sortWithinPartitions("o_orderdate")
             .write.mode("overwrite")
             .option("maxRecordsPerFile", max(1, per_file))
             .parquet(out)
